@@ -1316,7 +1316,7 @@ object ServingIndex {
     * order — the exact chain the fused per-row loop used, hoisted because
     * it never varies across rows of one request.
     */
-  private[index] def queryNormSq(q: Array[Float]): Double = {
+  private[graft] def queryNormSq(q: Array[Float]): Double = {
     var nq = 0.0
     var j = 0
     while (j < q.length) { nq += q(j).toDouble * q(j).toDouble; j += 1 }

@@ -652,7 +652,7 @@ class GraftFacadeSpec extends SparkSpec {
     Segments.deleteDir(base)
   }
 
-  test("searchPqBatch: one phase-1 job + one store plan, per-query results identical to searchPq") {
+  test("searchPqBatch: one phase-1 job + one plan-free phase-2 read, per-query results identical to searchPq") {
     val base = tmp()
     val g = Graft.open(spark, base, metricCfg("ip"))
     g.upsert(metricBatch())
@@ -691,13 +691,10 @@ class GraftFacadeSpec extends SparkSpec {
     Segments.deleteDir(base)
   }
 
-  test("searchPqBatch chunks its phase-2 pair relation: a pair budget far below the batch's pool changes nothing but the plan count") {
-    // the adversarial knob product (maxBatch × maxK × deep rerank ≈
-    // 7.7M pairs at reference limits) must never driver-materialize in
-    // one piece — the chunk bound forces MANY store plans here (pair
-    // budget 7 against a ~hundreds-of-pairs batch) and the values must
-    // equal the single door exactly, chunk boundaries splitting one
-    // query's candidates notwithstanding
+  test("searchPqBatch at a deep rerank (64): per-query results equal the single door") {
+    // a deep pool puts most of the fixture in every query's phase-2
+    // lookup, so one store row serves several queries at once — the
+    // per-query values must still equal the single door exactly
     val base = tmp()
     val g = Graft.open(spark, base, metricCfg("ip"))
     g.upsert(metricBatch())
@@ -708,14 +705,97 @@ class GraftFacadeSpec extends SparkSpec {
       Array.tabulate(mdim)(d => if (d == 5) 1f else 0f),
       Array.tabulate(mdim)(d => if (d == 0) -1f else 0.1f))
     val single = qsBatch.map(q => g.searchPq(q, 10, rerank = 64).toSeq)
-    sys.props("graft.pq.batch.pairChunk") = "7"
+    val batch = g.searchPqBatch(qsBatch, 10, rerank = 64)
+    qsBatch.indices.foreach { i =>
+      assert(batch(i).toSeq === single(i), s"q#$i diverged at rerank 64")
+    }
+    g.close()
+    Segments.deleteDir(base)
+  }
+
+  /** Spark jobs submitted while `body` runs, from any thread: the
+    * listener bus delivers events in order, so counting the job starts
+    * between two marker jobs needs no access to the bus itself.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.spec.marker")))
+          .getOrElse(""))
+    }
+    // a marker query may run as several jobs (AQE stages): every job it
+    // submits carries its marker
+    def marker(m: String): Unit = {
+      sc.setLocalProperty("graft.spec.marker", m)
+      try spark.range(1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+    }
+    sc.addSparkListener(l)
     try {
-      val chunked = g.searchPqBatch(qsBatch, 10, rerank = 64)
-      qsBatch.indices.foreach { i =>
-        assert(chunked(i).toSeq === single(i),
-          s"q#$i diverged under a 7-pair phase-2 chunk")
+      marker("begin")
+      val out = body
+      marker("end")
+      var seen = List.empty[String]
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains("end") && System.nanoTime() < deadline)
+        Option(starts.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS))
+          .foreach(m => seen = seen :+ m)
+      assert(seen.contains("end"), s"marker job never reached the listener: $seen")
+      val between = seen.dropWhile(_ != "begin").dropWhile(_ == "begin")
+        .takeWhile(_ != "end")
+      (out, between.length)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("PQ doors submit ZERO Spark jobs when the driver tier serves phase 1 (plan-free phase 2)") {
+    val base = tmp()
+    val g = Graft.open(spark, base, metricCfg("l2"))
+    g.upsert(metricBatch())
+    g.compact()
+    assert(g.warmPqTier() > 0)
+    val qs: Seq[Array[Float]] = Seq(mq,
+      Array.tabulate(mdim)(d => if (d == 5) 1f else 0f),
+      Array.tabulate(mdim)(d => if (d == 0) -1f else 0.1f))
+    val local0 = g.pqDoorRoutes._1
+    val (single, singleJobs) = jobsDuring(g.searchPq(mq, 5, rerank = 16))
+    assert(g.pqDoorRoutes._1 === local0 + 1, "phase 1 was not L0-routed")
+    assert(single.nonEmpty)
+    assert(singleJobs === 0, s"searchPq submitted $singleJobs Spark jobs")
+    val (batch, batchJobs) =
+      jobsDuring(g.searchPqBatch(qs, 5, rerank = 16))
+    assert(g.pqDoorRoutes._1 === local0 + 1 + qs.length,
+      "batch phase 1 was not L0-routed")
+    assert(batchJobs === 0, s"searchPqBatch submitted $batchJobs Spark jobs")
+    assert(batch.head.toSeq === single.toSeq)
+    g.close()
+    Segments.deleteDir(base)
+  }
+
+  test("concurrent searchPq requests equal the serial answers (driver-side phase-2 reads share only the bloom cache)") {
+    val base = tmp()
+    val g = Graft.open(spark, base, metricCfg("cosine"))
+    g.upsert(metricBatch())
+    g.compact()
+    assert(g.warmPqTier() > 0)
+    val qs: Seq[Array[Float]] = (0 until 8).map(i =>
+      Array.tabulate(mdim)(d => if (d == i || d == 63 - i) 1f else 0.01f * d))
+    val serial = qs.map(q => g.searchPq(q, 5, rerank = 16).toSeq)
+    // each round drops the resident id evidence, so the concurrent
+    // requests also race to re-admit and probe it — the bloom cache is
+    // the read's only shared state
+    (0 until 4).foreach { round =>
+      Segments.invalidateBlooms(base)
+      val par = graft.operators.Parallelism.parRequests(qs, 8)(q =>
+        g.searchPq(q, 5, rerank = 16).toSeq)
+      qs.indices.foreach { i =>
+        assert(serial(i).nonEmpty)
+        assert(par(i) === serial(i), s"round $round q#$i diverged")
       }
-    } finally sys.props -= "graft.pq.batch.pairChunk"
+    }
     g.close()
     Segments.deleteDir(base)
   }

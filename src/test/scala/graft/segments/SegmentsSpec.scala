@@ -426,6 +426,118 @@ class SegmentsSpec extends SparkSpec {
     Segments.deleteDir(base)
   }
 
+  /** Three segments for the scored point lookup: stable s0 holds ids
+    * 0..119 at epoch 1 (119 with a null vec); delta d0 overwrites
+    * 60..99 and deletes 0..19 at epoch 2 (odd tombstones keep a vec);
+    * delta d1 overwrites 80..89, deletes 60..64 and resurrects 10..14
+    * at epoch 3. Live: 10..14, 20..59, 65..118.
+    */
+  private val lookupDim = 8
+  private def lookupHash(id: Long): Long = id * 0x9E3779B97F4A7C15L
+  private def lookupStore(vecType: String): String = {
+    val base = tmpBase()
+    def rows(ids: Seq[Long], epoch: Long, deleted: Boolean,
+        nullVec: Long => Boolean = _ => false) =
+      ids.map(id => (id, lookupHash(id), epoch, deleted, id % 4,
+          if (nullVec(id)) None
+          else Some(Seq.tabulate(lookupDim)(d =>
+            math.sin(id * 7.0 + d * 3.0 + epoch)))))
+        .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
+        .withColumn("vec", col("vec").cast(s"array<$vecType>"))
+    Segments.writeSegment(rows(0L to 119L, 1L, false, _ == 119L), base,
+      "s0", isStable = true)
+    Segments.writeSegment(rows(60L to 99L, 2L, false)
+      .unionByName(rows(0L to 19L, 2L, true, _ % 2 == 0)), base, "d0", false)
+    Segments.writeSegment(rows(80L to 89L, 3L, false)
+      .unionByName(rows(60L to 64L, 3L, true))
+      .unionByName(rows(10L to 14L, 3L, false)), base, "d1", false)
+    base
+  }
+
+  /** The reference the plan-free lookup replaces: the pruned scan, the
+    * Lww.latestBy plan, and the codegen kernels, one plan per query.
+    */
+  private def planScores(base: String, qs: IndexedSeq[Array[Float]],
+      askers: Map[Long, Array[Int]], metric: String): Map[(Int, Long), Long] =
+    Segments.scanForIdHashes(spark, base, askers.keys.toSeq) match {
+      case None => Map.empty
+      case Some(df) =>
+        val live = graft.operators.Lww.latestBy(df, "id_hash", "epoch")
+          .filter(!col("deleted") && col("vec").isNotNull)
+          .select(col("id_hash"), col("vec").cast("array<double>").as("vec"))
+        qs.indices.flatMap { qi =>
+          val hs = askers.collect { case (h, a) if a.contains(qi) => h }.toSeq
+          val qLit = typedlit(qs(qi).map(_.toDouble).toSeq)
+          val score = metric match {
+            case "l2" => VectorFunctions.l2SqD(qLit, col("vec"))
+            case "cosine" => VectorFunctions.cosineD(qLit, col("vec"))
+            case _ => VectorFunctions.dotD(qLit, col("vec"))
+          }
+          live.filter(col("id_hash").isin(hs: _*))
+            .select(col("id_hash"), score).collect()
+            .map(r => (qi, r.getLong(0)) ->
+              java.lang.Double.doubleToLongBits(r.getDouble(1)))
+        }.toMap
+    }
+
+  private def directScores(base: String, qs: IndexedSeq[Array[Float]],
+      askers: Map[Long, Array[Int]], metric: String): Map[(Int, Long), Long] = {
+    val out = scala.collection.mutable.Map.empty[(Int, Long), Long]
+    Segments.scoreLatestByIdHash(spark, base, qs, askers, metric) {
+      (qi, h, s) =>
+        assert(out.put((qi, h), java.lang.Double.doubleToLongBits(s)).isEmpty,
+          s"($qi, $h) emitted twice")
+    }
+    out.toMap
+  }
+
+  test("plan-free scored point lookup is bit-equal to scanForIdHashes + Lww.latestBy + the plan kernels") {
+    val qs = IndexedSeq.tabulate(3)(i =>
+      Array.tabulate(lookupDim)(d => math.cos(i * 5.0 + d).toFloat))
+    val absent = (500L until 510L).map(lookupHash)
+    def ask(ids: Seq[Long], qi: Int) = ids.map(lookupHash).map(_ -> qi)
+    val askers: Map[Long, Array[Int]] =
+      (ask(0L to 119L, 0) ++ absent.map(_ -> 0) ++
+        ask((0L to 119L).filter(_ % 2 == 0), 1) ++
+        ask(50L to 119L by 3L, 2) ++ absent.map(_ -> 2))
+        .groupBy(_._1).map { case (h, ps) => h -> ps.map(_._2).toArray }
+    val live = ((10L to 14L) ++ (20L to 59L) ++ (65L to 118L))
+      .map(lookupHash).toSet
+    Seq("float", "double").foreach { vecType =>
+      val base = lookupStore(vecType)
+      Seq("exact", "footer").foreach { evidence =>
+        Segments.invalidateBlooms(base)
+        val prev = System.getProperty("graft.bloom.exact.bytes")
+        if (evidence == "footer")
+          System.setProperty("graft.bloom.exact.bytes", "0")
+        try {
+          assert(Segments.warmIdBlooms(spark, base) > 0)
+          Seq("l2", "ip", "cosine").foreach { metric =>
+            val ctx = s"$vecType/$evidence/$metric"
+            val got = directScores(base, qs, askers, metric)
+            assert(got === planScores(base, qs, askers, metric), ctx)
+            assert(got.keySet.filter(_._1 == 0).map(_._2) === live, ctx)
+          }
+          // hashes absent everywhere: nothing to emit
+          assert(directScores(base, qs, absent.map(_ -> Array(0, 1)).toMap,
+            "ip").isEmpty)
+          // pruned to zero files: outside every zone map (catalog prune),
+          // and — with exact id sets — absent inside them (evidence prune)
+          assert(Segments.pointLookupFiles(spark, base,
+            Seq(Long.MinValue)).isEmpty)
+          if (evidence == "exact")
+            assert(Segments.pointLookupFiles(spark, base, absent).isEmpty)
+          assert(directScores(base, qs, Map(Long.MinValue -> Array(0)),
+            "l2").isEmpty)
+        } finally {
+          if (prev == null) System.clearProperty("graft.bloom.exact.bytes")
+          else System.setProperty("graft.bloom.exact.bytes", prev)
+        }
+      }
+      Segments.deleteDir(base)
+    }
+  }
+
   test("listing cache: catalog churn rotates the key; compaction interleaved with point lookups stays current") {
     val base = tmpBase()
     def seg(hs: Seq[Long], epoch0: Long) =
