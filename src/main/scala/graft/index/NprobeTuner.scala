@@ -242,7 +242,7 @@ sealed abstract class AdaptiveServingBase(lo: Int, hi: Int,
   }
 }
 
-final class AdaptiveServingIndex(idx: ServingIndex, lo: Int, hi: Int,
+final class AdaptiveServingIndex(val index: ServingIndex, lo: Int, hi: Int,
     target: Double = 0.95, window: Int = 50, margin: Double = 0.02,
     probeEvery: Int = 24, sampleEvery: Int = 10,
     start: Option[Int] = None)
@@ -251,7 +251,7 @@ final class AdaptiveServingIndex(idx: ServingIndex, lo: Int, hi: Int,
 
   def search(q: Array[Float], k: Int,
       filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
-    serveAndSample(np => idx.search(q, k, np, filter))
+    serveAndSample(np => index.search(q, k, np, filter))
 
   /** Tiered request under the controller: the live serving loop composes
     * runtime nprobe tuning with the read-your-writes overlay (and any
@@ -262,13 +262,13 @@ final class AdaptiveServingIndex(idx: ServingIndex, lo: Int, hi: Int,
     */
   def searchWithOverlay(q: Array[Float], k: Int, overlay: ServingOverlay,
       filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
-    serveAndSample(np => idx.searchWithOverlay(q, k, np, overlay, filter))
+    serveAndSample(np => index.searchWithOverlay(q, k, np, overlay, filter))
 
   /** Same, over the distributed overlay. */
   def searchWithOverlay(q: Array[Float], k: Int,
       overlay: DistributedServingOverlay,
       filter: ServingFilter): Array[(Long, Double)] =
-    serveAndSample(np => idx.searchWithOverlay(q, k, np, overlay, filter))
+    serveAndSample(np => index.searchWithOverlay(q, k, np, overlay, filter))
 }
 
 /** The runtime controller over the DRIVER-RESIDENT tier

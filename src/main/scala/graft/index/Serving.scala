@@ -487,8 +487,10 @@ object DistributedServingOverlay {
   * scheduler locality sends each probe task to the executor caching that
   * list. Refresh on flush/compaction by rebuilding from the stored layout
   * ([[ServingIndex.buildStored]]) — the index is a read-optimized snapshot,
-  * versioned by the segment tree it was built from, matching the
-  * reference's rebuild-on-flush serving design.
+  * versioned by the segment tree it was built from — or, for one
+  * batch whose epochs all sort after that snapshot, by folding the
+  * batch into it ([[patched]]), the reference's write-through latest
+  * map (`msg-buf.h:116-166`) at list granularity.
   */
 final class ServingIndex private (
     @transient private[index] val blocks: RDD[ListBlock],
@@ -497,10 +499,12 @@ final class ServingIndex private (
     private[index] val cidToPart: Map[Long, Int],
     val metric: String,
     val dim: Int,
-    private[index] val listSizes: Map[Long, Int],
+    private[graft] val listSizes: Map[Long, Int],
     val hasTenant: Boolean,
     val hasTags: Boolean,
-    val limits: ServingLimits) extends Serializable {
+    val limits: ServingLimits,
+    private[index] val vecsDouble: Boolean,
+    val maxEpoch: Long) extends Serializable {
 
   private[index] val asc = graft.operators.Knn.isAscending(metric)
 
@@ -968,6 +972,85 @@ final class ServingIndex private (
   }
 
   def unpersist(): Unit = blocks.unpersist()
+
+  /** The next generation: this one with one mutation batch folded in,
+    * in ONE Spark job and without reading a segment. Each list (one
+    * partition per centroid) drops every row whose id is in `shadow`
+    * (sorted — every `id_hash` the batch carries, tombstones included)
+    * and appends the batch's live winners `adds` (cid, id, vec) that
+    * land on it, packed in this generation's own precision; a list
+    * left empty emits no block, a list empty before gains one. The
+    * same job collects the new list sizes, so [[capProbes]] walks
+    * exactly the sizes a rebuild would.
+    *
+    * The result equals [[ServingIndex.buildStored]] over the store
+    * with the batch flushed — same rows per list, same list sizes, so
+    * bit-equal answers — ONLY when every batch epoch is strictly
+    * greater than [[maxEpoch]] (each batch row then beats every stored
+    * version of its id) and epochs are unique per id within the batch
+    * (an epoch tie keeps both rows in `Lww.latestBy`, which one winner
+    * per id cannot reproduce). Checking that gate is the caller's job
+    * (`Graft.upsert`); `batchMaxEpoch` becomes the new [[maxEpoch]].
+    *
+    * Lineage: the new blocks are `localCheckpoint`ed while they
+    * materialize (storage becomes MEMORY_AND_DISK, which a local
+    * checkpoint requires), so a generation never pins its predecessors
+    * — their blocks, their batches — and the caller unpersists this
+    * one once the new one serves. A local checkpoint cannot recompute
+    * a block lost with its executor, the caveat that gates
+    * `Parallelism.materializeSmall` by size. It does not apply to the
+    * one caller: the facade is local-only (`Graft.open` requires a
+    * `file:` store, its WAL being posix), so the blocks live in the
+    * driver's own block manager and no executor can be lost under
+    * them. Attribute-free generations only (what `buildStored` makes).
+    */
+  def patched(shadow: Array[Long], adds: Seq[(Long, Long, Array[Double])],
+      batchMaxEpoch: Long): ServingIndex = {
+    require(!hasTenant && !hasTags,
+      "patched serves attribute-free generations (buildStored's)")
+    val d = dim
+    val dbl = vecsDouble
+    // a row off the layout (cid -1: no vector) is dropped, as build does
+    val addBlocks: Map[Int, ListBlock] =
+      adds.filter(a => cidToPart.contains(a._1)).groupBy(_._1).map {
+        case (cid, rows) =>
+          val n = rows.length
+          val ids = new Array[Long](n)
+          val vf = if (dbl) null else new Array[Float](n * d)
+          val vd = if (dbl) new Array[Double](n * d) else null
+          rows.iterator.zipWithIndex.foreach { case ((_, id, v), i) =>
+            ids(i) = id
+            var j = 0
+            while (j < d) {
+              if (dbl) vd(i * d + j) = v(j) else vf(i * d + j) = v(j).toFloat
+              j += 1
+            }
+          }
+          cidToPart(cid) -> ListBlock(cid, ids, vf, d, vecsD = vd)
+      }
+    // the batch's winners ride a collection co-partitioned with the
+    // lists (element p lands in partition p), so a task ships only its
+    // own list's rows; the shadow set is broadcast once
+    val sc = blocks.sparkContext
+    val addRdd = sc.parallelize(cids.indices.map(addBlocks.get), cids.length)
+    val bc = sc.broadcast(shadow)
+    val next = blocks.zipPartitions(addRdd, preservesPartitioning = true) {
+      (oldIt, addIt) =>
+        ServingIndex.mergeList(oldIt.toArray.headOption, addIt.next(),
+          bc.value).iterator
+    }.setName(ServingIndex.GenerationName).localCheckpoint()
+    val sizes = next.map(b => (b.cid, b.ids.length)).collect().toMap
+    // checkpointing dropped the zip's closure and parents: nothing
+    // reads the broadcast or the previous generation's blocks again
+    bc.destroy()
+    withBlocks(next, sizes, math.max(maxEpoch, batchMaxEpoch))
+  }
+
+  /** This generation's layout and settings over other blocks. */
+  private def withBlocks(next: RDD[ListBlock], sizes: Map[Long, Int],
+      epoch: Long): ServingIndex =
+    new ServingIndex(next, cids, matrix, cidToPart, metric, dim, sizes,
+      hasTenant, hasTags, limits, vecsDouble, epoch)
 }
 
 /** Driver-resident serving tier — the reference's global-index memory
@@ -1286,30 +1369,83 @@ object ServingIndex {
             vecsD, tagPostings, denseTags))
         }
       }, preservesPartitioning = true)
+      .setName(GenerationName)
       .persist(StorageLevel.MEMORY_ONLY)
     // materialize the cache AND collect per-list sizes in the same pass —
     // build step, not query latency; nlist (cid, size) pairs only
     val listSizes = blocks.map(b => (b.cid, b.ids.length)).collect().toMap
     new ServingIndex(blocks, cids, matrix, cidToPart, metric, dim,
-      listSizes, hasTenant, hasTags, limits)
+      listSizes, hasTenant, hasTags, limits, isDouble, Long.MaxValue)
   }
 
   /** Build from the stored segment layout: latest-live masking first
     * (same store-wide narrow LWW as [[Ivf.searchStored]]), then pack.
-    * The serving refresh path after a flush/compaction.
+    * The serving refresh path after a flush/compaction. The catalog
+    * snapshot read here also stamps [[ServingIndex.maxEpoch]] (the
+    * highest `max_epoch` it lists — a driver-side read), the bound a
+    * later [[ServingIndex.patched]] batch must sort above; a
+    * generation from [[build]] has no store behind it and stamps
+    * `Long.MaxValue`, which no batch passes.
     */
   def buildStored(spark: SparkSession, baseDir: String, centroids: DataFrame,
       metric: String,
       limits: ServingLimits = ServingLimits.reference): ServingIndex = {
     import graft.segments.Segments
-    val all = Segments.readSegments(spark, baseDir)
+    val descs = Segments.catalogDescriptors(spark, baseDir)
+    val all = Segments.readPaths(spark, descs.map(_.file_path))
     val latestLive = graft.operators.Lww.latestBy(
         all.select(col("id_hash"), col("epoch"), col("deleted")),
         "id_hash", "epoch")
       .filter(!col("deleted"))
       .select(col("id_hash"), col("epoch"))
-    build(all.join(latestLive, Seq("id_hash", "epoch")), centroids, metric,
-      idCol = "vec_id", vecCol = "vec", limits = limits)
+    val idx = build(all.join(latestLive, Seq("id_hash", "epoch")), centroids,
+      metric, idCol = "vec_id", vecCol = "vec", limits = limits)
+    idx.withBlocks(idx.blocks, idx.listSizes,
+      descs.iterator.map(_.max_epoch).foldLeft(Long.MinValue)(math.max))
+  }
+
+  /** The RDD name every serving generation's blocks carry (the storage
+    * tab, and `SparkContext.getPersistentRDDs`, tell generations apart
+    * from other cached data by it).
+    */
+  val GenerationName = "graft serving generation"
+
+  /** One list of a [[ServingIndex.patched]] generation: `old`'s rows
+    * whose id is not in the sorted `shadow` set (the [[scanTopK]]
+    * binary-search test), then `add`'s rows (same list, same
+    * precision). An untouched list returns `old` itself — the two
+    * generations share its arrays.
+    */
+  private def mergeList(old: Option[ListBlock], add: Option[ListBlock],
+      shadow: Array[Long]): Option[ListBlock] = {
+    val keep = old.fold(Array.emptyIntArray)(b =>
+      b.ids.indices.filter(i =>
+        java.util.Arrays.binarySearch(shadow, b.ids(i)) < 0).toArray)
+    if (add.isEmpty && old.forall(_.ids.length == keep.length)) return old
+    val nAdd = add.fold(0)(_.ids.length)
+    val n = keep.length + nAdd
+    if (n == 0) return None
+    val src = old.getOrElse(add.get)
+    val d = src.dim
+    val dbl = src.vecsD != null
+    val ids = new Array[Long](n)
+    val vf = if (dbl) null else new Array[Float](n * d)
+    val vd = if (dbl) new Array[Double](n * d) else null
+    old.foreach { b =>
+      var i = 0
+      while (i < keep.length) {
+        ids(i) = b.ids(keep(i))
+        if (dbl) System.arraycopy(b.vecsD, keep(i) * d, vd, i * d, d)
+        else System.arraycopy(b.vecs, keep(i) * d, vf, i * d, d)
+        i += 1
+      }
+    }
+    add.foreach { a =>
+      System.arraycopy(a.ids, 0, ids, keep.length, nAdd)
+      if (dbl) System.arraycopy(a.vecsD, 0, vd, keep.length * d, nAdd * d)
+      else System.arraycopy(a.vecs, 0, vf, keep.length * d, nAdd * d)
+    }
+    Some(ListBlock(src.cid, ids, vf, d, vecsD = vd))
   }
 
   /** Query self-norm-squared: sequential double accumulation in index

@@ -262,6 +262,28 @@ class GraftFacadeSpec extends SparkSpec {
       .select(graft.functions.VectorFunctions.hashId(col("id")))
       .head().getLong(0)
     assert(hit.head._1 === idXhash)
+    // the served generation now stands above 5000. An explicit-epoch
+    // batch BELOW it fails the patch gate (its rows may lose LWW to
+    // stored versions), and so does one that carries an id twice at
+    // one epoch (both rows stay live); either drops the generation,
+    // and the next read rebuilds: the answers a fresh open gives
+    assert(g.servedGeneration.exists(_.maxEpoch > 5000L))
+    g.upsert(Seq(("id-X", vec(3).toSeq, 10L), ("id-Y", vec(4).toSeq, 11L))
+      .toDF("id", "vec", "epoch"))
+    assert(g.servedGeneration.isEmpty, "a below-max batch patched")
+    assert(g.search(vec(4).map(_.toFloat), 1).head._1 === hashOf("id-Y"))
+    assert(g.search(vec(2).map(_.toFloat), 1).head._1 === idXhash,
+      "the late epoch-10 write to id-X won LWW")
+    assert(g.servedGeneration.nonEmpty) // the searches rebuilt it
+    g.upsert(Seq(("id-Z", vec(5).toSeq, 9000L), ("id-Z", vec(6).toSeq, 9000L))
+      .toDF("id", "vec", "epoch"))
+    assert(g.servedGeneration.isEmpty, "an epoch-tie batch patched")
+    val g2 = Graft.open(spark, base, cfgPath)
+    for (i <- Seq(2, 3, 4, 5, 6)) {
+      val q = vec(i).map(_.toFloat)
+      assert(g.search(q, 4).toSeq === g2.search(q, 4).toSeq, s"q=vec($i)")
+    }
+    g2.close()
     g.close()
     Segments.deleteDir(base)
   }
@@ -1338,6 +1360,208 @@ class GraftFacadeSpec extends SparkSpec {
     assert(flat(g2.pqTierCodebook.get) === cb1,
       "a reopened store warmed a different codebook")
     g2.close()
+    Segments.deleteDir(base)
+  }
+
+  // ---- write-through serving patch (ServingIndex.patched) ----------
+
+  private def patchCfg(metric: String, maxTopK: Int = 100,
+      maxCandidates: Int = 10000): GraftConfig = {
+    val c = metricCfg(metric)
+    c.copy(query = c.query.copy(maxTopK = maxTopK,
+      maxCandidates = maxCandidates))
+  }
+
+  private def gaussBatch(rnd: scala.util.Random, ids: Seq[String]) =
+    ids.map(id => (id, Seq.fill(mdim)(rnd.nextGaussian()))).toDF("id", "vec")
+
+  private def gaussQuery(rnd: scala.util.Random): Array[Float] =
+    Array.fill(mdim)(rnd.nextGaussian().toFloat)
+
+  test("serving patch parity: after every batch the patched generation equals a fresh buildStored (list sizes, bit-equal answers; l2/ip/cosine; a binding max_candidates)") {
+    val cfgs = Seq(patchCfg("l2"), patchCfg("ip"), patchCfg("cosine"),
+      patchCfg("l2", maxTopK = 10, maxCandidates = 20))
+    cfgs.zipWithIndex.foreach { case (cfg, c) =>
+      val metric = cfg.collection.metric
+      val base = tmp()
+      val g = Graft.open(spark, base, cfg)
+      val rnd = new scala.util.Random(910 + c)
+      def batch(ids: Int*) = gaussBatch(rnd, ids.map(i => s"p-$i"))
+      g.upsert(batch(0 until 160: _*))
+      assert(g.search(gaussQuery(rnd), 5).nonEmpty) // builds generation 0
+      val steps: Seq[(String, () => (Long, Long))] = Seq(
+        "new ids + overwrites that move lists" ->
+          (() => g.upsert(batch((160 until 180) ++ (0 until 10): _*))),
+        "deletes" ->
+          (() => g.delete((5 until 13).map(i => s"p-$i").toDF("id"))),
+        "re-insert of deleted ids" -> (() => g.upsert(batch(6, 9, 180))),
+        "overwrite p-20" -> (() => g.upsert(batch(20, 21))),
+        "overwrite p-20 again" -> (() => g.upsert(batch(20))),
+        "one id twice in a batch" -> (() => g.upsert(batch(30, 30, 181))))
+      steps.foreach { case (what, run) =>
+        val at = s"$metric/${cfg.query.maxCandidates} $what"
+        val (_, hi) = run()
+        val gen = g.servedGeneration.getOrElse(fail(s"$at: did not patch"))
+        assert(gen.maxEpoch === hi, at)
+        val fresh = graft.index.ServingIndex.buildStored(spark, base,
+          spark.read.parquet(s"$base/centroids"), metric,
+          limits = cfg.servingLimits)
+        try {
+          assert(gen.listSizes === fresh.listSizes, at)
+          for (q <- Seq.fill(4)(gaussQuery(rnd));
+               np <- Seq(cfg.tuning.nprobeDeltaMin, cfg.tuning.nprobeDeltaMax,
+                 gen.cids.length);
+               k <- Seq(1, cfg.query.maxTopK))
+            assert(gen.search(q, k, np).toSeq === fresh.search(q, k, np).toSeq,
+              s"$at nprobe=$np k=$k")
+        } finally fresh.unpersist()
+      }
+      g.close()
+      Segments.deleteDir(base)
+    }
+  }
+
+  test("serving patch: search right after upsert submits exactly one job, and upsert no more than the rebuild-on-read write path") {
+    val base = tmp()
+    val g = Graft.open(spark, base, patchCfg("l2"))
+    val rnd = new scala.util.Random(17)
+    g.upsert(gaussBatch(rnd, (0 until 160).map(i => s"j-$i")))
+    assert(g.search(gaussQuery(rnd), 5).nonEmpty)
+    val next = gaussBatch(rnd, (150 until 200).map(i => s"j-$i"))
+    val q = next.filter(col("id") === "j-170").select("vec").head()
+      .getSeq[Double](0).map(_.toFloat).toArray
+    val (_, upsertJobs) = jobsDuring(g.upsert(next))
+    assert(g.servedGeneration.nonEmpty, "the upsert did not patch")
+    val (hit, searchJobs) = jobsDuring(g.search(q, 3))
+    assert(hit.head._1 === hashOf("j-170"))
+    assert(searchJobs === 1, s"search after upsert submitted $searchJobs jobs")
+    // 10: what this upsert submitted when every write dropped the
+    // serving index (and this search rebuilt it in 8 jobs)
+    assert(upsertJobs <= 10, s"upsert submitted $upsertJobs jobs")
+    g.close()
+    Segments.deleteDir(base)
+  }
+
+  test("serving patch: after 20 writes the block manager holds ONE serving generation; close releases it") {
+    val sc = spark.sparkContext
+    def generations = sc.getPersistentRDDs.values
+      .filter(_.name == graft.index.ServingIndex.GenerationName)
+      .map(_.id).toSet
+    val before = generations
+    val base = tmp()
+    val g = Graft.open(spark, base, patchCfg("ip"))
+    val rnd = new scala.util.Random(23)
+    g.upsert(gaussBatch(rnd, (0 until 80).map(i => s"l-$i")))
+    (0 until 20).foreach { i =>
+      i % 5 match {
+        case 3 => g.delete(Seq(s"l-$i").toDF("id"))
+        // below the served epochs: the gate refuses, the generation drops
+        case 4 => g.upsert(Seq((s"late-$i", Seq.fill(mdim)(rnd.nextGaussian()),
+          i.toLong)).toDF("id", "vec", "epoch"))
+        case _ => g.upsert(gaussBatch(rnd, Seq(s"l-$i", s"n-$i")))
+      }
+      assert(g.search(gaussQuery(rnd), 3).nonEmpty)
+      assert((generations -- before).size === 1,
+        s"write $i: ${(generations -- before).size} generations persisted")
+    }
+    g.close()
+    assert((generations -- before).isEmpty, "close left a generation cached")
+    Segments.deleteDir(base)
+  }
+
+  test("raw-door serve-under-mutation fuzz: search stays exact across interleaved upserts/deletes/explicit-epoch writes/compacts/maintains") {
+    // nprobe 1000 probes every list, so each answer is the exact top-k
+    // over the LWW model; every fifth step a freshly opened handle
+    // (a full build) must agree too
+    val cfg0 = patchCfg("ip")
+    val cfg = cfg0.copy(tuning = cfg0.tuning.copy(nprobeDeltaMin = 1000,
+      nprobeDeltaMax = 1000))
+    val base = tmp()
+    val g = Graft.open(spark, base, cfg)
+    val rnd = new scala.util.Random(4343)
+    val pool = (0 until 60).map(i => s"r-$i") ++ (0 until 40).map(i => s"x-$i")
+    val hashes = pool.toDF("id")
+      .select(col("id"), graft.functions.VectorFunctions.hashId(col("id")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // id → (epoch of its LWW winner, its vector; None = tombstone)
+    val model = scala.collection.mutable.Map.empty[String, (Long, Option[Seq[Double]])]
+    val used = scala.collection.mutable.Map.empty[String, Set[Long]]
+      .withDefaultValue(Set.empty)
+    var maxSeen = -1L
+    def record(id: String, e: Long, v: Option[Seq[Double]]): Unit = {
+      used(id) = used(id) + e
+      maxSeen = math.max(maxSeen, e)
+      if (model.get(id).forall(_._1 < e)) model(id) = (e, v)
+    }
+    def autoUpsert(ids: Seq[String]): Unit = {
+      val rows = ids.map(id => (id, Seq.fill(mdim)(rnd.nextGaussian())))
+      val (lo, _) = g.upsert(rows.toDF("id", "vec"))
+      // auto epochs ascend in id order from lo
+      rows.sortBy(_._1).zipWithIndex.foreach { case ((id, v), i) =>
+        record(id, lo + i, Some(v)) }
+    }
+    def explicitUpsert(rows: Seq[(String, Long)]): Unit = {
+      val vs = rows.map { case (id, e) =>
+        (id, Seq.fill(mdim)(rnd.nextGaussian()), e) }
+      g.upsert(vs.toDF("id", "vec", "epoch"))
+      vs.foreach { case (id, v, e) => record(id, e, Some(v)) }
+    }
+    def serveCheck(step: Int): Unit = {
+      val k = Seq(1, 5, 10, cfg.query.maxTopK)(rnd.nextInt(4))
+      val q = gaussQuery(rnd)
+      val got = g.search(q, k).toSeq
+      val topk = new graft.operators.TopK.Bounded(k, asc = false)
+      model.foreach { case (id, (_, v)) =>
+        v.foreach(vv => topk.insert(
+          graft.index.ServingIndex.scoreOne(q, vv.toArray, "ip"), hashes(id)))
+      }
+      assert(got === topk.result().toSeq, s"step=$step k=$k")
+      if (step % 5 == 0) {
+        val g2 = Graft.open(spark, base, cfg)
+        try assert(g2.search(q, k).toSeq === got, s"step=$step reopened")
+        finally g2.close()
+      }
+    }
+    autoUpsert((0 until 40).map(i => s"r-$i"))
+    serveCheck(-1)
+    // every arm five times, in a seeded order
+    rnd.shuffle(Seq.tabulate(30)(_ % 6)).zipWithIndex.foreach { case (arm, step) =>
+      val live = model.collect { case (id, (_, Some(_))) => id }.toSeq.sorted
+      // a live id a below-epoch write can lose to (room below its epoch)
+      val beatable = live.filter(id => model(id)._1 > used(id).size + 1)
+      arm match {
+        case 0 =>
+          autoUpsert(Seq.fill(1 + rnd.nextInt(4))(
+            s"r-${rnd.nextInt(60)}").distinct)
+        case 1 if live.size > 5 =>
+          val victims = rnd.shuffle(live).take(1 + rnd.nextInt(3))
+          val (lo, _) = g.delete(victims.toDF("id"))
+          victims.sorted.zipWithIndex.foreach { case (id, i) =>
+            record(id, lo + i, None) }
+        case 2 =>
+          // above every epoch so far: the batch patches and wins
+          val ids = rnd.shuffle(pool.take(60)).take(1 + rnd.nextInt(2))
+          explicitUpsert(ids.zipWithIndex.map { case (id, i) =>
+            (id, maxSeen + 1 + i) })
+        case 3 =>
+          // below the served epochs: a never-written id wins, a live id
+          // keeps its newer version; the gate falls back to a rebuild
+          val fresh = pool.drop(60).filterNot(used.contains)
+          val target =
+            if (beatable.nonEmpty && (fresh.isEmpty || rnd.nextBoolean()))
+              beatable(rnd.nextInt(beatable.size))
+            else fresh.head
+          val ceiling = model.get(target).fold(maxSeen)(_._1)
+          val e = Iterator.continually(rnd.nextInt(ceiling.toInt).toLong)
+            .find(e => !used(target).contains(e)).get
+          explicitUpsert(Seq(target -> e))
+        case 4 => g.compact()
+        case 5 => g.maintain()
+        case _ => ()
+      }
+      serveCheck(step)
+    }
+    g.close()
     Segments.deleteDir(base)
   }
 }
