@@ -35,8 +35,10 @@ import graft.streaming.{IngestPipeline, Wal, WalRecord, WalRecordFb}
   *    replays the tail past the persisted frontier into a recovery
   *    segment (T8, the reference's startup recovery);
   *  - the SEGMENT STORE ([[graft.segments.Segments]]) — one hive tree,
-  *    flushes via the W6 LWW dedupe, compaction/rebuild/checkpoint
-  *    under the catalog maintenance lease;
+  *    flushes via the W6 LWW dedupe (an [[upsert]]'s batch written on
+  *    the driver by `Segments.flushRows`, a [[startStream]] micro-batch
+  *    through Spark by `IngestPipeline.flushBatch`),
+  *    compaction/rebuild/checkpoint under the catalog maintenance lease;
   *  - the SERVING INDEX ([[graft.index.ServingIndex]]) wrapped in the
   *    ADAPTIVE NPROBE CONTROLLER ([[graft.index.AdaptiveServingIndex]],
   *    config.h:138-147 bands/target). An [[upsert]]/[[delete]] whose
@@ -107,35 +109,40 @@ final class Graft private (
     * then fold the batch into the served generation (or drop it when
     * the patch gate fails — see [[patchServing]]). Returns the epoch
     * range `[first, last]` the batch landed under.
+    *
+    * The batch is RPC-bounded (≤ `max_upsert_batch` rows), so it is
+    * collected to the driver ONCE, and those rows feed the epoch range,
+    * the WAL records, the delta segment — written on the driver by
+    * [[graft.segments.Segments.flushRows]], no Spark plan — and the
+    * serving patch. Writes of unbounded size keep Spark writers: stream
+    * micro-batches ([[startStream]], `IngestPipeline.flushBatch`), the
+    * WAL recovery segment, [[compact]] and [[rebuild]].
     */
   def upsert(batch: DataFrame): (Long, Long) = {
     val stats = IngestGuard.validateBatch(batch, config.ingestLimits,
       vecCol = "vec",
       tagsCol = if (batch.columns.contains("tags")) Some("tags") else None,
       idCol = Some("id"))
-    val prepared = prepare(batch, stats.rows).cache()
-    try {
-      // the batch's ONE driver collect feeds the epoch range, the WAL
-      // records and the serving patch
-      val rows = collectBatch(prepared)
-      require(rows.nonEmpty, "empty upsert batch")
-      val lo = rows.iterator.map(_.epoch).min
-      val hi = rows.iterator.map(_.epoch).max
-      // a batch that BRINGS its own epoch column can land above the
-      // auto-assignment counter; bump it so a later auto-epoch batch
-      // always sorts after everything already committed — otherwise LWW
-      // keeps the older explicit-epoch row and the new write is
-      // silently invisible until reopen (no-op for auto-epoch batches,
-      // where hi + 1 == the counter already)
-      nextEpoch.getAndUpdate(c => math.max(c, hi + 1))
-      appendWal(rows)
-      IngestPipeline.flushBatch(prepared, baseDir,
-        nextBatch.getAndIncrement(),
-        maxRowsPerSegment = config.segment.targetSizeVectors)
-      advanceFrontier(hi)
-      patchServing(rows, lo, hi)
-      (lo, hi)
-    } finally prepared.unpersist()
+    val prepared = prepare(batch, stats.rows)
+    val full = prepared.collect()
+    require(full.nonEmpty, "empty upsert batch")
+    val rows = batchRows(prepared.schema, full)
+    val lo = rows.iterator.map(_.epoch).min
+    val hi = rows.iterator.map(_.epoch).max
+    // a batch that BRINGS its own epoch column can land above the
+    // auto-assignment counter; bump it so a later auto-epoch batch
+    // always sorts after everything already committed — otherwise LWW
+    // keeps the older explicit-epoch row and the new write is
+    // silently invisible until reopen (no-op for auto-epoch batches,
+    // where hi + 1 == the counter already)
+    nextEpoch.getAndUpdate(c => math.max(c, hi + 1))
+    appendWal(rows)
+    Segments.flushRows(spark, baseDir,
+      f"delta-${nextBatch.getAndIncrement()}%05d", prepared.schema,
+      full.toSeq, maxRowsPerSegment = config.segment.targetSizeVectors)
+    advanceFrontier(hi)
+    patchServing(rows, lo, hi)
+    (lo, hi)
   }
 
   /** Tombstone a set of ids (W5 DELETE): an upsert of null-vector rows. */
@@ -166,28 +173,62 @@ final class Graft private (
     val hashed = withEpoch
       .withColumn("id_hash", VectorFunctions.hashId(col("id")))
       .withColumn("vec_id", col("id_hash"))
-    val cents = centroidsFor(hashed)
-    Ivf.assign(hashed, cents, vecCol = "vec")
+    val l = layoutFor(hashed)
+    Ivf.assignCollected(hashed, l.cids, l.matrix, vecCol = "vec")
       .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
   }
 
-  /** Centroids for assignment: loaded from the store tree, trained on
-    * the first vector-carrying batch when absent (nlist clamped to the
-    * data), persisted so every later batch and every reopen assigns
-    * against the SAME layout (B1 — retraining is [[rebuild]]'s job).
+  /** The layout for assignment: the store's, trained on the first
+    * vector-carrying batch when absent (nlist clamped to the data),
+    * persisted so every later batch and every reopen assigns against
+    * the SAME layout (B1 — retraining is [[rebuild]]'s job).
     */
-  private def centroidsFor(batch: DataFrame): DataFrame = {
-    if (fs.exists(new HPath(centroidsPath)))
-      return spark.read.parquet(centroidsPath)
-    val vecs = batch.filter(col("vec").isNotNull)
-      .select(col("vec").as("embedding"))
-    val nVec = vecs.count()
-    require(nVec > 0,
-      "first batch carries no vectors — cannot train the centroid layout")
-    val cents = trainCentroids(vecs, nVec)
-    cents.write.mode("overwrite").parquet(centroidsPath)
-    spark.read.parquet(centroidsPath)
+  private def layoutFor(batch: DataFrame): Graft.Layout =
+    layout().getOrElse {
+      val vecs = batch.filter(col("vec").isNotNull)
+        .select(col("vec").as("embedding"))
+      val nVec = vecs.count()
+      require(nVec > 0,
+        "first batch carries no vectors — cannot train the centroid layout")
+      trainCentroids(vecs, nVec).write.mode("overwrite")
+        .parquet(centroidsPath)
+      layout().get
+    }
+
+  // the live layout collected once per handle, keyed on the layout
+  // directory's part-file names — every Spark write of a layout (first
+  // ingest, a rebuild promote here or by another process) names its
+  // parts with a fresh UUID, so the key moves with the layout
+  @volatile private var layoutMemo: Option[Graft.Layout] = None
+
+  /** The live centroid layout (cids ascending, as
+    * [[Ivf.collectCentroids]] returns them), None before the first
+    * ingest. A directory listing per call; the layout is read and
+    * collected again only when its part files changed.
+    */
+  private def layout(): Option[Graft.Layout] = {
+    val parts =
+      try fs.listStatus(new HPath(centroidsPath)).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    if (parts.isEmpty) return None
+    val key = parts.map(_.getName).sorted
+    layoutMemo.filter(_.key == key).orElse {
+      // read exactly the listed parts, so the memo's content is the
+      // content its key names
+      val (cids, matrix) = Ivf.collectCentroids(
+        spark.read.parquet(parts.map(_.toString): _*))
+      val l = Graft.Layout(key, cids, matrix)
+      layoutMemo = Some(l)
+      Some(l)
+    }
   }
+
+  /** nlist for a corpus of `nVec` vectors: the config's, clamped to the
+    * data (≥ 4 vectors per list).
+    */
+  private def nlistFor(nVec: Long): Int =
+    math.max(1, math.min(config.delta.nlist, (nVec / 4).toInt))
 
   /** nlist clamped to the data; KMeans needs k ≥ 2, so a corpus too
     * small to cluster (the very first tiny batch) gets the trivial
@@ -196,8 +237,7 @@ final class Graft private (
     */
   private def trainCentroids(vecs: DataFrame, nVec: Long): DataFrame = {
     import spark.implicits._
-    val nlist = math.max(1, math.min(config.delta.nlist,
-      (nVec / 4).toInt))
+    val nlist = nlistFor(nVec)
     if (nlist < 2) {
       val mean = vecs.select(posexplode(col("embedding")))
         .groupBy("pos").agg(avg("col").as("m"))
@@ -218,15 +258,21 @@ final class Graft private (
     spark.read.parquet(centroidsPath)
   }
 
-  /** The prepared batch on the driver (RPC-bounded, so one collect). */
-  private def collectBatch(prepared: DataFrame): Array[Graft.BatchRow] =
-    prepared.select(col("id"), col("id_hash"), col("epoch"),
-        col("deleted"), col("centroid_id"),
-        col("vec").cast("array<double>"))
-      .collect()
-      .map(r => Graft.BatchRow(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getBoolean(3), if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        if (r.isNullAt(5)) null else r.getSeq[Double](5).toArray))
+  /** The collected prepared batch as WAL / serving-patch rows (`vec`
+    * widened to double, as a cast to array<double> would).
+    */
+  private def batchRows(schema: org.apache.spark.sql.types.StructType,
+      rows: Array[org.apache.spark.sql.Row]): Array[Graft.BatchRow] = {
+    val Seq(id, h, e, d, c, v) = Seq("id", "id_hash", "epoch", "deleted",
+      "centroid_id", "vec").map(schema.fieldIndex)
+    rows.map(r => Graft.BatchRow(r.getString(id), r.getLong(h), r.getLong(e),
+      r.getBoolean(d), if (r.isNullAt(c)) None else Some(r.getLong(c)),
+      if (r.isNullAt(v)) null
+      else r.getSeq[Any](v).iterator.map {
+        case null => 0.0 // a null element is 0 in the WAL record
+        case x => x.asInstanceOf[Number].doubleValue()
+      }.toArray))
+  }
 
   /** Group-commit the prepared batch to the WAL (W1/W2): driver-side
     * FlatBuffers encode of an RPC-bounded batch, one framed append
@@ -1446,7 +1492,7 @@ final class Graft private (
   private def layoutSkewReason(): Option[String] = {
     val live = liveView
     if (!live.columns.contains("centroid_id")) return None
-    val nlist = centroids().count().toInt
+    val nlist = layout().fold(0)(_.cids.length)
     if (nlist < 2) return None
     // Cost honesty: the LWW resolution itself (one hash-aggregate over
     // (id_hash, epoch, deleted, centroid_id) — narrow columns, map-side
@@ -1499,7 +1545,9 @@ final class Graft private (
         df => Ivf.assignBulkGemm(df, nextCents, vecCol = "vec")
           .withColumn("centroid_id",
             coalesce(col("centroid_id"), lit(-1L))),
-        rebuildId)
+        rebuildId,
+        // the relayout writes the n live vectors over the new lists
+        expectedNdvPerFile = Segments.ndvPerList(n, nlistFor(n)))
       catch {
         case e: Throwable =>
           fs.delete(new HPath(nextPath), true)
@@ -1588,20 +1636,23 @@ final class Graft private (
       .filter(_._1 > flushedFrontier)
     if (tail.nonEmpty) {
       import spark.implicits._
-      val rows = tail.map { case (_, payload) =>
+      val recs = tail.map { case (_, payload) =>
         val r = WalRecordFb.decode(payload)
         (r.id, r.idHash, r.idHash, r.epoch, r.op == 1.toByte,
           if (r.op == 1.toByte) -1L else r.centroidId.toLong,
           if (r.vector.isEmpty) null
           else r.vector.map(_.toDouble).toSeq)
-      }.toDF("id", "id_hash", "vec_id", "epoch", "deleted",
+      }
+      val rows = recs.toDF("id", "id_hash", "vec_id", "epoch", "deleted",
         "centroid_id", "vec")
       val maxEpoch = tail.map(_._1).max
       // deterministic recovery segment id → a crash DURING recovery
       // replays into the same segment idempotently
       Segments.writeSegment(
         graft.operators.Lww.latestBy(rows, "id_hash", "epoch"),
-        baseDir, s"recover-$maxEpoch", isStable = false)
+        baseDir, s"recover-$maxEpoch", isStable = false,
+        expectedNdvPerFile = Segments.ndvPerList(recs.length.toLong,
+          recs.map(_._6).distinct.length))
       advanceFrontier(maxEpoch)
     }
     // epoch/batch counters resume past everything ever seen
@@ -1743,6 +1794,12 @@ final class Graft private (
 }
 
 object Graft {
+
+  /** A collected centroid layout and the part-file names it was read
+    * from (its memo key).
+    */
+  private final case class Layout(key: Seq[String], cids: Array[Long],
+      matrix: Array[Array[Double]])
 
   /** One collected row of a prepared upsert batch (`vec` null when
     * the row carries none).

@@ -712,10 +712,15 @@ object Segments {
     * so the honest hint is rows-per-inverted-list (reference: 2M vectors /
     * 1024 lists ≈ 2k rows/file), NOT the segment total. Oversizing it
     * 1000× is pure write amplification (measured: it pushed WA from ~1.8
-    * to 2.6 at bench scale).
+    * to 2.6 at bench scale; a 2000-row, 32-list write is 5.28 MB at the
+    * 100 000 default and 1.09 MB at 63). Callers that know their input
+    * size pass [[ndvPerList]] of it: compaction (its input descriptors),
+    * the layout rebuild (the live row count and the new list count) and
+    * the WAL recovery segment (the tail's rows and lists). The default
+    * stays for writers whose row count is known only after the write.
     */
   def writeSegment(rowsIn: DataFrame, baseDir: String, segmentId: String,
-      isStable: Boolean, expectedNdvPerFile: Long = 100000L,
+      isStable: Boolean, expectedNdvPerFile: Long = DefaultNdvPerFile,
       appendDesc: Boolean = true,
       repartitionForWrite: Boolean = true): SegmentDescriptor = {
     // provenance (QueryResult.segment_id, types.h:81) is carried by the
@@ -767,16 +772,7 @@ object Segments {
       // (guide §6: commit cost scales with file count)
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .parquet(path)
-    // the one writer that can REWRITE an existing segment path in place
-    // (the recovery segment's idempotent replay) — stale cached
-    // listings over the old files must not survive it
-    invalidateListings(path)
-    // record the written data schema (all columns minus the partition
-    // key, in written order) so later reads skip footer inference
-    memoWrittenSchema(path,
-      org.apache.spark.sql.types.StructType(
-        rows.schema.filterNot(_.name == "centroid_id")),
-      Seq("centroid_id"))
+    recordSegmentWrite(path, rows.schema)
     val m = obs.get
     def longOr(k: String, d: Long): Long =
       Option(m(k)).map(_.asInstanceOf[Long]).getOrElse(d)
@@ -793,6 +789,225 @@ object Segments {
     // then never leave both generations active
     if (appendDesc) appendCatalog(spark, baseDir, Seq(desc))
     desc
+  }
+
+  /** [[writeSegment]]'s bloom hint when the caller does not know its
+    * rows per list.
+    */
+  val DefaultNdvPerFile = 100000L
+
+  /** The per-file id bloom hint for `rows` rows spread over `lists`
+    * inverted lists: twice the mean list size, so a list up to twice
+    * the mean keeps the configured fpp.
+    */
+  def ndvPerList(rows: Long, lists: Int): Long =
+    math.max(1L, 2L * ((rows + lists - 1) / math.max(1, lists)))
+
+  /** Post-write bookkeeping every segment writer shares: a write that
+    * REPLACES an existing segment path (an idempotent replay of a flush
+    * or of the recovery segment) must not leave stale cached listings
+    * or blooms over the old files, and the written data schema
+    * (all columns minus the partition key, in written order) is recorded
+    * so later reads skip footer inference.
+    */
+  private def recordSegmentWrite(path: String,
+      rowsSchema: org.apache.spark.sql.types.StructType): Unit = {
+    invalidateListings(path)
+    memoWrittenSchema(path,
+      org.apache.spark.sql.types.StructType(
+        rowsSchema.filterNot(_.name == "centroid_id")),
+      Seq("centroid_id"))
+  }
+
+  /** W4 for a batch already on the driver: the delta flush of
+    * `IngestPipeline.flushBatch` without a Spark plan, for callers that
+    * hold an RPC-bounded batch (the facade's upsert). `rows` carry
+    * `schema` (at least `id_hash`, `epoch`, `deleted`, `centroid_id`).
+    *
+    * Same contract as `flushBatch`:
+    *  - within-batch LWW exactly as [[graft.operators.Lww.latestBy]]: a
+    *    row with a null `id_hash` or `epoch` drops (the join key), the
+    *    max epoch per `id_hash` wins, and every row tied at it stays;
+    *  - each segment directory is deleted before it is written, so a
+    *    replay rewrites the same segment;
+    *  - past `maxRowsPerSegment` rows the batch splits by
+    *    `floorMod(id_hash, parts)` into `<segmentId>-PP` segments;
+    *  - nothing is visible until ONE catalog append publishes them all.
+    *
+    * Files land at `segment_id=S/centroid_id=C/part-…parquet`, one per
+    * list, written by Spark's own `ParquetWriteSupport` under the
+    * session's parquet write settings, so footers, Spark schema metadata
+    * and list encoding are those of [[writeSegment]]. Each file's
+    * `id_hash` bloom is sized to that file's row count (the fpp is
+    * parquet's default, as in [[writeSegment]]). Files are created
+    * through a `LocalFileSystem` this call owns, whose permission
+    * setting is in-process ([[InProcessChmodFs]]): the stock one forks
+    * `chmod` for every file, checksum file and directory it creates
+    * when no native Hadoop library is loaded. Bytes still count in
+    * Hadoop's `file` statistics and `.crc` files are kept. Local stores
+    * only. Returns the published descriptors (empty when no row
+    * survives).
+    */
+  private[graft] def flushRows(spark: SparkSession, baseDir: String,
+      segmentId: String, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row],
+      maxRowsPerSegment: Long): Seq[SegmentDescriptor] = {
+    require(hfs(spark, baseDir).getScheme == "file",
+      s"flushRows writes local stores only: $baseDir")
+    val hi = schema.fieldIndex("id_hash")
+    val ei = schema.fieldIndex("epoch")
+    val keyed = rows.filter(r => !r.isNullAt(hi) && !r.isNullAt(ei))
+    val maxEpoch = scala.collection.mutable.HashMap.empty[Long, Long]
+    keyed.foreach { r =>
+      val h = r.getLong(hi)
+      val e = r.getLong(ei)
+      if (maxEpoch.get(h).forall(_ < e)) maxEpoch(h) = e
+    }
+    val latest = keyed.filter(r => r.getLong(ei) == maxEpoch(r.getLong(hi)))
+    if (latest.isEmpty) {
+      deleteDir(plainPath(s"$baseDir/$StoreDir/segment_id=$segmentId"))
+      return Seq.empty
+    }
+    val n = latest.length.toLong
+    val slices =
+      if (n <= maxRowsPerSegment) Seq(segmentId -> latest)
+      else {
+        val parts = (n + maxRowsPerSegment - 1) / maxRowsPerSegment
+        (0L until parts).map(p => f"$segmentId%s-$p%02d" ->
+          latest.filter(r => java.lang.Math.floorMod(r.getLong(hi), parts) == p))
+      }
+    val descs = slices.map { case (id, rs) =>
+      writeRowsSegment(spark, baseDir, id, schema, rs)
+    }
+    appendCatalog(spark, baseDir, descs)
+    descs
+  }
+
+  /** One unpublished segment from driver rows (see [[flushRows]]). */
+  private def writeRowsSegment(spark: SparkSession, baseDir: String,
+      segmentId: String, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): SegmentDescriptor = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetOptions, ParquetUtils}
+    val path = s"$baseDir/$StoreDir/segment_id=$segmentId"
+    deleteDir(plainPath(path))
+    // writeSegment's input drops any segment_id column, then partitions
+    // by centroid_id: the data columns are the rest, in input order
+    val dataIdx = schema.fields.indices.filterNot(i =>
+      schema(i).name == "segment_id" || schema(i).name == "centroid_id")
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      dataIdx.map(schema(_)))
+    val hi = schema.fieldIndex("id_hash")
+    val ei = schema.fieldIndex("epoch")
+    val di = schema.fieldIndex("deleted")
+    val ci = schema.fieldIndex("centroid_id")
+    // the session's parquet write settings, set exactly as a Spark
+    // parquet write sets them (schema, legacy format, timestamp type,
+    // field ids, rebase modes, compression)
+    val sqlConf = spark.sessionState.conf
+    val opts = new ParquetOptions(Map.empty[String, String], sqlConf)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    ParquetUtils.prepareWrite(sqlConf, job, dataSchema, opts)
+    val conf = job.getConfiguration
+    val codec = org.apache.parquet.hadoop.metadata.CompressionCodecName
+      .fromConf(opts.compressionCodecClassName)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(dataSchema)
+    val fs = new org.apache.hadoop.fs.LocalFileSystem(new InProcessChmodFs)
+    fs.initialize(java.net.URI.create("file:///"), conf)
+    try {
+      fs.mkdirs(new HPath(path))
+      rows.groupBy { r =>
+        require(!r.isNullAt(ci), s"flushRows: null centroid_id in $segmentId")
+        r.getLong(ci)
+      }.foreach { case (cid, rs) =>
+        val file = new HPath(s"$path/centroid_id=$cid/part-00000-" +
+          s"${java.util.UUID.randomUUID()}.c000${codec.getExtension}.parquet")
+        val w = new InternalRowParquetBuilder(new FsOutputFile(fs, file))
+          .withConf(conf)
+          .withCompressionCodec(codec)
+          .withBloomFilterEnabled("id_hash", true)
+          .withBloomFilterNDV("id_hash", rs.length.toLong)
+          .build()
+        try rs.foreach(r => w.write(toCatalyst(
+            org.apache.spark.sql.Row.fromSeq(dataIdx.map(r.get)))
+          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+        finally w.close()
+      }
+    } finally fs.close()
+    recordSegmentWrite(path, dataSchema)
+    // writeSegment's observed stats: count, min/max id_hash and epoch
+    // (never null past the LWW), avg(deleted) over non-null values, and
+    // 0 where an empty input leaves an aggregate null
+    def range(i: Int) =
+      if (rows.isEmpty) (0L, 0L)
+      else (rows.iterator.map(_.getLong(i)).min,
+        rows.iterator.map(_.getLong(i)).max)
+    val (minH, maxH) = range(hi)
+    val (minE, maxE) = range(ei)
+    val dels = rows.filter(r => !r.isNullAt(di))
+    SegmentDescriptor(segmentId, path, rows.length.toLong,
+      minH, maxH, minE, maxE,
+      if (dels.isEmpty) 0.0
+      else dels.count(_.getBoolean(di)).toDouble / dels.length,
+      new java.sql.Timestamp(System.currentTimeMillis()),
+      is_stable = false, replaced_by = None)
+  }
+
+  /** A parquet-mr writer of Spark rows through Spark's own write support
+    * (reads its schema and settings from the conf `prepareWrite` filled).
+    */
+  private final class InternalRowParquetBuilder(
+      out: org.apache.parquet.io.OutputFile)
+      extends org.apache.parquet.hadoop.ParquetWriter.Builder[
+        org.apache.spark.sql.catalyst.InternalRow,
+        InternalRowParquetBuilder](out) {
+    override protected def self(): InternalRowParquetBuilder = this
+    override protected def getWriteSupport(
+        conf: org.apache.hadoop.conf.Configuration) =
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetWriteSupport()
+  }
+
+  /** A parquet output file created through a given FileSystem instance
+    * (parquet's own `HadoopOutputFile` resolves the cached one), with
+    * `HadoopOutputFile`'s buffer and no block alignment, as for `file:`.
+    */
+  private final class FsOutputFile(fs: FileSystem, p: HPath)
+      extends org.apache.parquet.io.OutputFile {
+    private def open(overwrite: Boolean) =
+      org.apache.parquet.hadoop.util.HadoopStreams.wrap(
+        fs.create(p, overwrite, 4096))
+    override def create(blockSizeHint: Long) = open(overwrite = false)
+    override def createOrOverwrite(blockSizeHint: Long) =
+      open(overwrite = true)
+    override def supportsBlockSize(): Boolean = false
+    override def defaultBlockSize(): Long = fs.getDefaultBlockSize(p)
+    override def getPath: String = p.toString
+  }
+
+  /** Hadoop's raw local filesystem with permissions set in-process.
+    * Without the native Hadoop library (Spark's distribution ships
+    * none) the stock `setPermission` forks `chmod` for every file,
+    * checksum file and directory created — about three forks per
+    * written parquet file. The mode bits are the same.
+    */
+  private final class InProcessChmodFs
+      extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def setPermission(p: HPath,
+        perm: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+      import java.nio.file.attribute.PosixFilePermission._
+      val bits = perm.toShort.toInt
+      val all = Seq(OWNER_READ -> 256, OWNER_WRITE -> 128,
+        OWNER_EXECUTE -> 64, GROUP_READ -> 32, GROUP_WRITE -> 16,
+        GROUP_EXECUTE -> 8, OTHERS_READ -> 4, OTHERS_WRITE -> 2,
+        OTHERS_EXECUTE -> 1)
+      val set = java.util.EnumSet.noneOf(
+        classOf[java.nio.file.attribute.PosixFilePermission])
+      all.foreach { case (pp, b) => if ((bits & b) != 0) set.add(pp) }
+      Files.setPosixFilePermissions(pathToFile(p).toPath, set)
+    }
   }
 
   // ---- catalog store: driver-side metadata files, never a Spark job ----
@@ -1500,8 +1715,17 @@ object Segments {
           }
         live.unionByName(kept)
       }
+    // bloom hint from the inputs: the output holds at most their rows,
+    // over at most the lists their files sit in (a driver-side listing
+    // the read above already made)
+    val inputLists = deltas.inputFiles.iterator
+      .map(f => new HPath(f).getParent.getName)
+      .filter(_.startsWith("centroid_id=")).toSet.size
     val desc = writeSegment(resolved, baseDir, stableSegmentId,
-      isStable = true, appendDesc = false)
+      isStable = true,
+      expectedNdvPerFile = ndvPerList(deltaDescs.map(_.num_vectors).sum,
+        inputLists),
+      appendDesc = false)
     // publish the stable segment AND retire its inputs in one atomic
     // append: a crash before this line leaves only the old world (the
     // orphan data directory is invisible without a descriptor), a crash
@@ -1646,17 +1870,23 @@ object Segments {
     * tombstone purge → reassign → centroid-partitioned stable write. No
     * driver-side data, no sort; at 100 TB this is the background job that
     * keeps probe pruning aligned with drifting data.
+    * `expectedNdvPerFile` is [[writeSegment]]'s bloom hint: a caller
+    * that knows the live row count and the new layout's list count
+    * passes [[ndvPerList]] of them.
     */
   def rebuildLayout(spark: SparkSession, baseDir: String,
       reassign: DataFrame => DataFrame,
-      stableSegmentId: String): Option[SegmentDescriptor] =
+      stableSegmentId: String,
+      expectedNdvPerFile: Long = DefaultNdvPerFile)
+      : Option[SegmentDescriptor] =
     withLease(spark, baseDir, s"rebuild-$stableSegmentId") {
-      rebuildLayoutUnlocked(spark, baseDir, reassign, stableSegmentId)
+      rebuildLayoutUnlocked(spark, baseDir, reassign, stableSegmentId,
+        expectedNdvPerFile)
     }
 
   private def rebuildLayoutUnlocked(spark: SparkSession, baseDir: String,
-      reassign: DataFrame => DataFrame,
-      stableSegmentId: String): Option[SegmentDescriptor] = {
+      reassign: DataFrame => DataFrame, stableSegmentId: String,
+      expectedNdvPerFile: Long): Option[SegmentDescriptor] = {
     val active = catalogDescriptors(spark, baseDir)
     if (active.isEmpty) return None
     val all = readSegments(spark, baseDir)
@@ -1664,7 +1894,8 @@ object Segments {
       .filter(!col("deleted"))
     val relaid = reassign(resolved.drop("centroid_id"))
     val desc = writeSegment(relaid, baseDir, stableSegmentId,
-      isStable = true, appendDesc = false)
+      isStable = true, expectedNdvPerFile = expectedNdvPerFile,
+      appendDesc = false)
     // single atomic append (see compact): rebuilt rows keep their
     // original (id_hash, epoch), so if BOTH generations were ever active
     // the LWW max-epoch join would keep both copies — duplicate

@@ -90,10 +90,22 @@ object IngestPipeline {
     * multiple segments, split by id_hash range (reference flush threshold
     * config.h:29 — 128 MiB per segment; here row-count as the unit). Each
     * sub-segment keeps a deterministic name so replays stay idempotent.
+    *
+    * WHICH WRITER: this Spark flush takes input of unbounded size — the
+    * stream micro-batches ([[start]], [[startWithConfig]],
+    * [[startResolved]]), where a catch-up batch can carry a whole
+    * backlog. A caller that already holds an RPC-bounded batch on the
+    * driver (the facade's `Graft.upsert`) writes it with
+    * `Segments.flushRows` instead: same contract, no Spark plan. The
+    * WAL recovery segment and compaction write through
+    * `Segments.writeSegment` directly.
+    *
+    * The id bloom keeps `Segments.writeSegment`'s default hint: the
+    * deduped row count (and so the rows per list) is known only after
+    * the write has run, from the write's own observed stats.
     */
   def flushBatch(batch: DataFrame, baseDir: String, batchId: Long,
       maxRowsPerSegment: Long = 2000000L,
-      repartitionOverride: Option[Boolean] = None,
       segmentPrefix: String = "delta"): Unit = {
     val deduped = graft.operators.Lww.latestBy(batch, "id_hash", "epoch")
     // OPTIMISTIC single-pass flush: dedupe flows straight into the
@@ -119,11 +131,8 @@ object IngestPipeline {
     // tasks×nlist small files per segment (the writeSegment contract).
     // The estimate is pre-dedupe, so it only ever errs toward keeping
     // the exchange — the safe side.
-    // repartitionOverride pins the exchange decision for A/B profiling
-    // (ProfIngestAB) — production callers leave it None
     val estBytes = deduped.queryExecution.optimizedPlan.stats.sizeInBytes
-    val repart = repartitionOverride.getOrElse(
-      estBytes > BigInt(microBatchBytesBound))
+    val repart = estBytes > BigInt(microBatchBytesBound)
     // the prefix keys the writer's id space: a streaming pipeline on a
     // baseDir that ALSO takes synchronous facade upserts must not share
     // "delta-" with the facade's own counter — identical names would

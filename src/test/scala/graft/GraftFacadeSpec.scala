@@ -1435,9 +1435,62 @@ class GraftFacadeSpec extends SparkSpec {
     val (hit, searchJobs) = jobsDuring(g.search(q, 3))
     assert(hit.head._1 === hashOf("j-170"))
     assert(searchJobs === 1, s"search after upsert submitted $searchJobs jobs")
-    // 10: what this upsert submitted when every write dropped the
-    // serving index (and this search rebuilt it in 8 jobs)
-    assert(upsertJobs <= 10, s"upsert submitted $upsertJobs jobs")
+    // 5: the guard's aggregate, the batch collect and the serving patch,
+    // plus AQE stages (the segment write and the layout read run no job)
+    assert(upsertJobs <= 5, s"upsert submitted $upsertJobs jobs")
+    g.close()
+    Segments.deleteDir(base)
+  }
+
+  test("centroid-layout memo: after rebuild(), and after another handle rebuilds the store, the next upsert assigns against the live layout") {
+    val base = tmp()
+    val cfg = patchCfg("l2")
+    val g = Graft.open(spark, base, cfg)
+    val rnd = new scala.util.Random(41)
+    def batch(tag: String, n: Int, shift: Double) =
+      (0 until n).map(i => (s"$tag-$i", Seq.tabulate(mdim)(d =>
+        rnd.nextGaussian() + (if (d == 0) shift else 0.0)))).toDF("id", "vec")
+    def layout() = graft.index.Ivf.collectCentroids(
+      spark.read.parquet(s"$base/centroids"))._2.map(_.toSeq).toSeq
+    // the newest delta segment holds exactly the last upsert's rows
+    def assignedLive(at: String): Unit = {
+      val d = Segments.catalogDescriptors(spark, base)
+        .filter(_.segment_id.startsWith("delta-")).maxBy(_.segment_id)
+      val rows = spark.read.parquet(d.file_path).select(col("id"),
+        col("vec"), col("centroid_id").cast("long").as("got"))
+      val want = graft.index.Ivf.assign(rows,
+        spark.read.parquet(s"$base/centroids"), vecCol = "vec")
+      assert(rows.count() === 40L, at)
+      val stale = want.filter(col("got") =!= col("centroid_id")).count()
+      assert(stale === 0L, s"$at: $stale rows assigned to a stale layout")
+    }
+    def sameAsFresh(at: String): Unit = {
+      val fresh = Graft.open(spark, base, cfg)
+      try Seq.fill(4)(gaussQuery(rnd)).foreach(q =>
+        assert(g.search(q, 5).toSeq === fresh.search(q, 5).toSeq, at))
+      finally fresh.close()
+    }
+    g.upsert(batch("a", 160, 0.0))
+    g.upsert(batch("b", 160, 6.0)) // assigned with the memoized layout
+    val first = layout()
+    assert(g.rebuild().nonEmpty)
+    val second = layout()
+    assert(second !== first, "the rebuild kept the layout")
+    g.upsert(batch("c", 40, 3.0))
+    assignedLive("after rebuild()")
+    sameAsFresh("after rebuild()")
+    // another handle retrains the layout under this one; the compact
+    // first drops this handle's served generation, which the foreign
+    // rewrite would leave stale
+    g.upsert(batch("d", 160, -6.0))
+    assert(g.compact().nonEmpty)
+    val h = Graft.open(spark, base, cfg)
+    assert(h.rebuild().nonEmpty)
+    h.close()
+    assert(layout() !== second, "the second rebuild kept the layout")
+    g.upsert(batch("e", 40, -3.0))
+    assignedLive("after another handle's rebuild")
+    sameAsFresh("after another handle's rebuild")
     g.close()
     Segments.deleteDir(base)
   }

@@ -904,4 +904,153 @@ class SegmentsSpec extends SparkSpec {
       segmentRows.count())
     Segments.deleteDir(base)
   }
+  /** Facade-shaped prepared rows (the columns `Graft.prepare` yields:
+    * the user's id/vec/tags, then deleted, epoch, id_hash, vec_id and
+    * centroid_id, tombstones at list -1 with a null vec).
+    */
+  private def flushBatchRows(vecType: String, rows: Seq[(Long, Long, Boolean)],
+      salt: Int) =
+    rows.map { case (id, epoch, deleted) =>
+      (s"f-$id", if (deleted) None
+        else Some(Seq.tabulate(lookupDim)(d => math.sin(id * 3.0 + d + salt))),
+        Seq((id % 5).toInt, salt), deleted, epoch, lookupHash(id),
+        lookupHash(id), if (deleted) -1L else id % 7)
+    }.toDF("id", "vec", "tags", "deleted", "epoch", "id_hash", "vec_id",
+      "centroid_id")
+      .withColumn("vec", col("vec").cast(s"array<$vecType>"))
+
+  /** Every parquet file under `dir` with its relative directory. */
+  private def partFiles(dir: String): Seq[java.io.File] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.toFile).filter(_.getName.endsWith(".parquet")).toSeq
+  }
+
+  test("driver flush (flushRows) writes what flushBatch writes: descriptors, lists, schema, rows, id evidence; blooms sized to each file") {
+    import org.apache.parquet.column.ParquetProperties
+    import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+    import scala.jdk.CollectionConverters._
+    // batch 0: 200 new rows; batch 1: overwrites 0..59, deletes 60..89,
+    // adds 200..239, carries 240..249 twice at ONE epoch (both kept) and
+    // 250 twice at two epochs (the older drops); batch 2: 130 rows over
+    // a 40-row segment target, so it splits into four -PP segments
+    val batches = Seq(
+      ((0L until 200L).map(id => (id, 1000L + id, false)), 2000000L),
+      ((0L until 60L).map(id => (id, 2000L + id, false)) ++
+        (60L until 90L).map(id => (id, 2000L + id, true)) ++
+        (200L until 250L).map(id => (id, 2000L + id, false)) ++
+        (240L until 250L).map(id => (id, 2000L + id, false)) ++
+        Seq((250L, 2100L, false), (250L, 2101L, false)), 2000000L),
+      ((100L until 230L).map(id => (id, 3000L + id, id % 9 == 0)), 40L))
+    def rel(base: String, p: String) =
+      Segments.plainPath(p).stripPrefix(Segments.plainPath(base))
+    def descs(base: String) = Segments.catalogDescriptors(spark, base)
+      .map(d => d.copy(file_path = rel(base, d.file_path), created_at = null))
+      .sortBy(_.segment_id)
+    def lists(base: String, d: Segments.SegmentDescriptor) =
+      Option(new java.io.File(Segments.plainPath(d.file_path)).listFiles())
+        .getOrElse(Array.empty[java.io.File]).filter(_.isDirectory)
+        .map(_.getName).toSet
+    def allRows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col).toSeq: _*).collect()
+        .map(_.toString).sorted.toSeq
+    Seq("float", "double").foreach { vecType =>
+      val (a, b) = (tmpBase(), tmpBase())
+      batches.zipWithIndex.foreach { case ((rs, maxRows), i) =>
+        val df = flushBatchRows(vecType, rs, i)
+        graft.streaming.IngestPipeline.flushBatch(df, a, i.toLong,
+          maxRowsPerSegment = maxRows)
+        val published = Segments.flushRows(spark, b, f"delta-$i%05d",
+          df.schema, df.collect().toSeq, maxRows)
+        assert(published.map(_.segment_id) ===
+          descs(b).map(_.segment_id).filter(_.startsWith(f"delta-$i%05d")))
+      }
+      val (da, db) = (descs(a), descs(b))
+      assert(db.map(_.segment_id) === Seq("delta-00000", "delta-00001",
+        "delta-00002-00", "delta-00002-01", "delta-00002-02",
+        "delta-00002-03"), vecType)
+      assert(db === da, vecType)
+      Segments.catalogDescriptors(spark, a).sortBy(_.segment_id)
+        .zip(Segments.catalogDescriptors(spark, b).sortBy(_.segment_id))
+        .foreach { case (x, y) =>
+          assert(lists(b, y) === lists(a, x), s"$vecType ${y.segment_id}")
+          // fresh footer inference (a plain read, no memo)
+          assert(spark.read.parquet(y.file_path).schema ===
+            spark.read.parquet(x.file_path).schema, y.segment_id)
+        }
+      // memoized schema, then every stored row and the LWW live view
+      val (sa, sb) = (Segments.readSegments(spark, a),
+        Segments.readSegments(spark, b))
+      assert(sb.schema === sa.schema, vecType)
+      assert(allRows(sb) === allRows(sa), vecType)
+      assert(allRows(graft.streaming.IngestPipeline.liveView(spark, b)) ===
+        allRows(graft.streaming.IngestPipeline.liveView(spark, a)), vecType)
+      // id evidence: equal pruning answers over present and absent ids
+      // (exact id sets), equal scored lookups under both evidence kinds
+      val present = (0L to 250L).map(lookupHash)
+      val absent = (900L until 940L).map(lookupHash)
+      val probes = Seq(present.take(3), present.slice(60, 90), absent,
+        present.takeRight(20) ++ absent.take(5))
+      def prune(base: String, hs: Seq[Long]) = {
+        val files = Segments.readPaths(spark,
+          Segments.catalogDescriptors(spark, base).map(_.file_path)).inputFiles
+        Segments.bloomPruneFiles(spark, files.toSeq, hs)
+          .map(_.map(f => rel(base, new org.apache.hadoop.fs.Path(f)
+            .getParent.toUri.getPath)).toSet)
+      }
+      val qs = IndexedSeq.tabulate(2)(q =>
+        Array.tabulate(lookupDim)(d => math.cos(q * 5.0 + d).toFloat))
+      val askers = present.map(h => h -> Array(0, 1)).toMap
+      val exact = scala.collection.mutable.Map.empty[Seq[Long], Set[String]]
+      Seq("exact", "footer").foreach { evidence =>
+        Seq(a, b).foreach(Segments.invalidateBlooms)
+        val prev = System.getProperty("graft.bloom.exact.bytes")
+        if (evidence == "footer")
+          System.setProperty("graft.bloom.exact.bytes", "0")
+        try {
+          Seq(a, b).foreach(Segments.warmIdBlooms(spark, _))
+          if (evidence == "exact") probes.foreach { hs =>
+            exact(hs) = prune(a, hs).get
+            assert(prune(b, hs) === prune(a, hs))
+          }
+          else probes.foreach { hs =>
+            // footer blooms differ in size, so only their true positives
+            // must agree: no file holding a probed id is ever pruned
+            Seq(a, b).foreach(base =>
+              assert(exact(hs).subsetOf(prune(base, hs).get)))
+          }
+          assert(directScores(b, qs, askers, "l2") ===
+            directScores(a, qs, askers, "l2"), s"$vecType/$evidence")
+        } finally {
+          if (prev == null) System.clearProperty("graft.bloom.exact.bytes")
+          else System.setProperty("graft.bloom.exact.bytes", prev)
+        }
+      }
+      // each driver-written file's id bloom is at most what parquet-mr
+      // allocates for that file's row count at the default fpp (a fully
+      // dictionary-encoded chunk carries none: its dictionary is exact)
+      val files = partFiles(b)
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath),
+            spark.sessionState.newHadoopConf()))
+        try rd.getRowGroups.asScala.foreach { bg =>
+          val cc = bg.getColumns.asScala
+            .find(_.getPath.toDotString == "id_hash").get
+          val bloom = rd.getBloomFilterDataReader(bg).readBloomFilter(cc)
+          val sized = new BlockSplitBloomFilter(
+            BlockSplitBloomFilter.optimalNumOfBits(bg.getRowCount,
+              ParquetProperties.DEFAULT_BLOOM_FILTER_FPP) / 8,
+            ParquetProperties.DEFAULT_MAX_BLOOM_FILTER_BYTES).getBitsetSize
+          if (bloom == null)
+            assert(!cc.getEncodingStats.hasNonDictionaryEncodedPages, f)
+          else assert(bloom.getBitsetSize <= sized,
+            s"$f: ${bloom.getBitsetSize} B for ${bg.getRowCount} rows")
+        } finally rd.close()
+      }
+      Seq(a, b).foreach(Segments.deleteDir)
+    }
+  }
 }
