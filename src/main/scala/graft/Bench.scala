@@ -2304,16 +2304,6 @@ object Bench {
               s"[bench] full-corpus overlay build FAILED: ${e.getMessage}")
             None
           }
-        // distributed overlay over the same 100k buffer (built while big
-        // is still cached; its packed blocks cache independently)
-        val overlayDist =
-          try Some(graft.index.DistributedServingOverlay.fromDataFrame(
-            overlayRowsDf.filter(col("vec_id") % 10 === 0), idx))
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] distributed overlay build FAILED: ${e.getMessage}")
-            None
-          }
         big.unpersist(); assigned.unpersist()
         val nprobeServ = 8
         def floorNow(): Double = floorProbe(spark, cpus.toInt)
@@ -2539,7 +2529,7 @@ object Bench {
           extras(s"${tag}_floor_after_ms") = num(floorA, 1)
         }
         overlaySection("ivf_1m_overlay", idx,
-          qv => idx.searchWithOverlay(qv, 10, nprobeServ, overlay),
+          qv => idx.search(qv, 10, nprobeServ, overlay = Some(overlay)),
           overlay.size)
         // legacy key, now sourced from the interleaved pairwise metric
         extras("overlay_rows") = overlay.size.toString
@@ -2551,27 +2541,13 @@ object Bench {
         // O(log n) shadow binary search, never O(overlay) per request)
         overlayFull.foreach { ovF =>
           try overlaySection("ivf_1m_overlay_full", idx,
-            qv => idx.searchWithOverlay(qv, 10, nprobeServ, ovF), ovF.size)
+            qv => idx.search(qv, 10, nprobeServ, overlay = Some(ovF)),
+            ovF.size)
           catch { case e: Throwable =>
             System.err.println(
               s"[bench] full-corpus overlay section FAILED: ${e.getMessage}")
           }
           ovF.destroy()
-        }
-        // DISTRIBUTED overlay (the 100x path: winners co-partitioned with
-        // the lists, scanned in the probe tasks, nothing per-request on
-        // the driver). Same interleaved A/B — its overhead should track
-        // the driver overlay's (the extra work per probe task is an
-        // O(overlay-rows-in-list) packed scan)
-        overlayDist.foreach { ovD =>
-          try overlaySection("ivf_1m_overlay_dist", idx,
-            qv => idx.searchWithOverlay(qv, 10, nprobeServ, ovD,
-              graft.index.ServingFilter.none), ovD.size)
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] distributed overlay section FAILED: ${e.getMessage}")
-          }
-          ovD.destroy()
         }
         // Q12 batch serving: the whole query set as ONE probe job
         // (searchBatch) — scheduler dispatch paid once for the batch and
@@ -2937,7 +2913,8 @@ object Bench {
         // interleaved A/B like the 1M sections
         overlay10.foreach { ov =>
           try overlaySection("ivf_10m_overlay", idx10,
-            qv => idx10.searchWithOverlay(qv, 10, nprobeServ, ov), ov.size)
+            qv => idx10.search(qv, 10, nprobeServ, overlay = Some(ov)),
+            ov.size)
           catch { case ex: Throwable =>
             System.err.println(
               s"[bench] 10M overlay FAILED: ${ex.getMessage}")

@@ -341,7 +341,7 @@ final class Graft private (
     * a fresh (cold) HNSW hot cache when the config enables it.
     */
   private def newGeneration(idx: ServingIndex): Graft.ServingGen =
-    new Graft.ServingGen(
+    new Graft.ServingGen(idx,
       new AdaptiveServingIndex(idx,
         lo = config.tuning.nprobeDeltaMin,
         hi = config.tuning.nprobeDeltaMax,
@@ -1814,11 +1814,10 @@ object Graft {
     * lineage is truncated, so a search still scanning released blocks
     * could not recompute them.
     */
-  private final class ServingGen(val adaptive: AdaptiveServingIndex,
-      val hnsw: Option[HnswHotCache]) {
+  private final class ServingGen(val index: ServingIndex,
+      val adaptive: AdaptiveServingIndex, val hnsw: Option[HnswHotCache]) {
     private var readers = 0
     private var retired = false
-    def index: ServingIndex = adaptive.index
     def tryAcquire(): Boolean = synchronized {
       if (!retired) readers += 1
       !retired

@@ -1053,8 +1053,8 @@ object SparkEntry {
         rows.filter(col("epoch") >= 2000))
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val hits = idx.searchBatch(reqs, 10, nprobe = Int.MaxValue, overlay,
-        graft.index.ServingFilter.none)
+      val hits = idx.searchBatch(reqs, 10, nprobe = Int.MaxValue,
+        overlay = Some(overlay))
       overlay.destroy()
       val out = reqs.flatMap { case (qid, _) =>
         hits(qid).map { case (id, sc) => Row(qid, id, sc) }
@@ -1083,20 +1083,34 @@ object SparkEntry {
       overlay.destroy()
       out
     }),
-    // the DISTRIBUTED overlay (Q10 at 100x): winners co-partitioned with
-    // the stored lists and scanned in the probe tasks — no winner array
-    // on the driver. Same live-view semantics, so the oracle is
-    // tiered_knn_served's SQL verbatim (probe-all)
+    // the same overlay through the DRIVER-RESIDENT tier (reference
+    // global-index memory cache, yaml:85-89): the fixture's lists fit the
+    // default budget, so each probe-all request is served on the calling
+    // thread — the shadow set read in place, the winners merged as on
+    // the job path (a probe of an uncached list falls through to the job
+    // path, value-identical). The tier must be value-invisible, so the
+    // oracle is tiered_knn_served's SQL verbatim. (The name is kept from
+    // the distributed overlay form this entry gated until the one driver
+    // overlay replaced it.)
     "tiered_knn_served_dist" -> ((s, dir) => {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
       val (idx, rows) = ServedFixture.get(s, dir)
-      val overlay = graft.index.DistributedServingOverlay.fromDataFrame(
-        rows.filter(col("epoch") >= 2000), idx)
+      val overlay = graft.index.ServingOverlay.fromDataFrame(
+        rows.filter(col("epoch") >= 2000))
+      val local = idx.toLocal()
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val out = idx.searchAllDF(s, reqs, 10, nprobe = Int.MaxValue,
-        distOverlay = Some(overlay))
+      val out = reqs.flatMap { case (qid, qv) =>
+        local.search(qv, 10, nprobe = Int.MaxValue, overlay = Some(overlay))
+          .map { case (id, sc) => Row(qid, id, sc) }
+      }
       overlay.destroy()
-      out
+      s.createDataFrame(
+        s.sparkContext.parallelize(out, 1),
+        StructType(Seq(StructField("query_id", LongType, nullable = false),
+          StructField("vec_id", LongType, nullable = false),
+          StructField("score", DoubleType, nullable = false))))
     }),
     // B1 periodic rebuild: re-cluster the stored latest-live rows under a
     // FINER centroid set (every=25 vs the ingest-time every=50) into a
@@ -2182,8 +2196,8 @@ object SparkEntry {
          |    PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rn
          |  FROM scored) t
          |WHERE rn <= 10""".stripMargin,
-    // identical semantics to tiered_knn_served — the distributed overlay
-    // must be value-invisible, so it shares the oracle verbatim
+    // identical semantics to tiered_knn_served — the driver-resident
+    // tier must be value-invisible, so it shares the oracle verbatim
     "tiered_knn_served_dist" ->
       s"""$MUTLOG,
          |qq AS (SELECT vec_id AS query_id, e AS qv FROM emb

@@ -116,6 +116,8 @@ object NprobeTuner {
   * [[NprobeTuner.resumeNprobe]] (config.h:145-146).
   *
   * Deterministic given the observation stream; O(1) control state.
+  * Thread-safe: observations, reads and drains serialize on the
+  * controller, so concurrent requests lose no sample and no decision.
   */
 final class AdaptiveNprobe(val lo: Int, val hi: Int,
     target: Double = 0.95, window: Int = 50, margin: Double = 0.02,
@@ -131,7 +133,7 @@ final class AdaptiveNprobe(val lo: Int, val hi: Int,
   private val log =
     scala.collection.mutable.ArrayBuffer.empty[NprobeDecision]
 
-  def current: Int = np
+  def current: Int = synchronized(np)
 
   /** Window-boundary decisions made so far (config.h:145
     * `persist_decisions` — the record a restart resumes from; see
@@ -140,7 +142,7 @@ final class AdaptiveNprobe(val lo: Int, val hi: Int,
     * nprobe chosen AT that boundary (i.e. the setting the next window
     * runs at).
     */
-  def decisions: Seq[NprobeDecision] = log.toSeq
+  def decisions: Seq[NprobeDecision] = synchronized(log.toSeq)
 
   /** Return the decisions recorded since the last drain and CLEAR them —
     * the incremental-persistence form: a periodic flusher calls
@@ -150,14 +152,14 @@ final class AdaptiveNprobe(val lo: Int, val hi: Int,
     * the controller's memory stays bounded across an arbitrarily long
     * serving life.
     */
-  def drainDecisions(): Seq[NprobeDecision] = {
+  def drainDecisions(): Seq[NprobeDecision] = synchronized {
     val out = log.toSeq
     log.clear()
     out
   }
 
   /** Feed one sampled recall observation (|approx ∩ reference| / k). */
-  def observe(recall: Double): Unit = {
+  def observe(recall: Double): Unit = synchronized {
     sum += recall; n += 1
     if (n >= window) {
       val avg = sum / n
@@ -192,22 +194,39 @@ final class AdaptiveNprobe(val lo: Int, val hi: Int,
 final case class NprobeDecision(window: Long, nprobe: Int,
     avgRecall: Double, met: Boolean)
 
-/** [[ServingIndex]] wrapped in the runtime controller: every
-  * `sampleEvery`-th request is re-answered at the band ceiling `hi` and
-  * the observed overlap feeds [[AdaptiveNprobe]]. The ceiling is the
-  * quality reference ON PURPOSE: the band's own upper bound is what the
-  * controller may spend, so recall-vs-ceiling is the exactly-attainable
-  * target (absolute recall belongs to the offline sweep, Q13), and the
-  * sample stays cap-safe at any corpus size. Sampling cost: one extra
-  * hi-probe request per `sampleEvery` requests.
+/** The runtime controller over a raw serving tier ([[RawServingTier]]):
+  * the job-path [[ServingIndex]], or the driver-resident
+  * [[LocalServingIndex]] (with its own fall-through to the job path for
+  * uncached lists) — whichever serves, the controller steers the
+  * latency the client actually sees. It composes the reference's tuning
+  * loop (config.h:138-147) with its global-index memory cache
+  * (yaml:85-89) exactly as the server does: the cache serves, the
+  * controller tunes, the store backs both.
+  *
+  * Every `sampleEvery`-th request is re-answered at the band ceiling
+  * `hi` THROUGH THE SAME tier, filter and overlay, and the observed
+  * overlap feeds [[AdaptiveNprobe]]. The ceiling is the quality
+  * reference ON PURPOSE: the band's own upper bound is what the
+  * controller may spend, so recall-vs-ceiling is the
+  * exactly-attainable target (absolute recall belongs to the offline
+  * sweep, Q13), and the sample stays cap-safe at any corpus size. A
+  * tiered (read-your-writes) request samples the same tiered path — a
+  * plain-path reference would score the stored world against the live
+  * one and mis-steer the controller whenever the buffer carries the
+  * true neighbors. Sampling cost: one extra hi-probe request per
+  * `sampleEvery` requests.
+  *
+  * Thread-safe: requests run concurrently and unlocked; the request
+  * counter is atomic and the controller serializes its own updates, so
+  * every `sampleEvery`-th request feeds exactly one sample.
   */
-sealed abstract class AdaptiveServingBase(lo: Int, hi: Int,
-    target: Double, window: Int, margin: Double, probeEvery: Int,
-    sampleEvery: Int, start: Option[Int]) {
-  protected val ctl = new AdaptiveNprobe(lo, hi, target, window, margin,
+final class AdaptiveServingIndex(tier: RawServingTier, lo: Int, hi: Int,
+    target: Double = 0.95, window: Int = 50, margin: Double = 0.02,
+    probeEvery: Int = 24, sampleEvery: Int = 10,
+    start: Option[Int] = None) {
+  private val ctl = new AdaptiveNprobe(lo, hi, target, window, margin,
     probeEvery, start)
-  protected val ceiling: Int = hi
-  private var reqs = 0L
+  private val reqs = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def currentNprobe: Int = ctl.current
 
@@ -222,17 +241,15 @@ sealed abstract class AdaptiveServingBase(lo: Int, hi: Int,
   def drainDecisions(): Seq[NprobeDecision] = ctl.drainDecisions()
 
   /** One controlled request: issue at the tuned nprobe, and every
-    * `sampleEvery`-th request re-issue THROUGH THE SAME `run` at the
-    * band ceiling to feed the controller — all request variants (plain,
-    * filtered, either overlay form, local tier) share this one
-    * feedback block.
+    * `sampleEvery`-th request re-issue at the band ceiling to feed the
+    * controller.
     */
-  protected def serveAndSample(
-      run: Int => Array[(Long, Double)]): Array[(Long, Double)] = {
-    val res = run(ctl.current)
-    reqs += 1
-    if (reqs % sampleEvery == 0) {
-      val ref = run(ceiling)
+  def search(q: Array[Float], k: Int,
+      filter: ServingFilter = ServingFilter.none,
+      overlay: Option[ServingOverlay] = None): Array[(Long, Double)] = {
+    val res = tier.search(q, k, ctl.current, filter, overlay)
+    if (reqs.incrementAndGet() % sampleEvery == 0) {
+      val ref = tier.search(q, k, hi, filter, overlay)
       if (ref.nonEmpty) {
         val got = res.iterator.map(_._1).toSet
         ctl.observe(ref.count(r => got(r._1)).toDouble / ref.length)
@@ -240,60 +257,4 @@ sealed abstract class AdaptiveServingBase(lo: Int, hi: Int,
     }
     res
   }
-}
-
-final class AdaptiveServingIndex(val index: ServingIndex, lo: Int, hi: Int,
-    target: Double = 0.95, window: Int = 50, margin: Double = 0.02,
-    probeEvery: Int = 24, sampleEvery: Int = 10,
-    start: Option[Int] = None)
-  extends AdaptiveServingBase(lo, hi, target, window, margin, probeEvery,
-    sampleEvery, start) {
-
-  def search(q: Array[Float], k: Int,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
-    serveAndSample(np => index.search(q, k, np, filter))
-
-  /** Tiered request under the controller: the live serving loop composes
-    * runtime nprobe tuning with the read-your-writes overlay (and any
-    * filter), so the recall sample must ride the SAME tiered path — a
-    * plain-path reference would score the stored world against the live
-    * one and mis-steer the controller whenever the buffer carries the
-    * true neighbors.
-    */
-  def searchWithOverlay(q: Array[Float], k: Int, overlay: ServingOverlay,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
-    serveAndSample(np => index.searchWithOverlay(q, k, np, overlay, filter))
-
-  /** Same, over the distributed overlay. */
-  def searchWithOverlay(q: Array[Float], k: Int,
-      overlay: DistributedServingOverlay,
-      filter: ServingFilter): Array[(Long, Double)] =
-    serveAndSample(np => index.searchWithOverlay(q, k, np, overlay, filter))
-}
-
-/** The runtime controller over the DRIVER-RESIDENT tier
-  * ([[LocalServingIndex]]): tuned requests serve locally (with the
-  * tier's own fall-through to the distributed index for uncached
-  * lists), and the recall sample rides the same local path at the band
-  * ceiling — so the controller steers the latency the client actually
-  * sees. Composes the reference's tuning loop (config.h:138-147) with
-  * its global-index memory cache (yaml:85-89) exactly as the server
-  * does: the cache serves, the controller tunes, the store backs both.
-  */
-final class AdaptiveLocalServingIndex(local: LocalServingIndex,
-    lo: Int, hi: Int,
-    target: Double = 0.95, window: Int = 50, margin: Double = 0.02,
-    probeEvery: Int = 24, sampleEvery: Int = 10,
-    start: Option[Int] = None)
-  extends AdaptiveServingBase(lo, hi, target, window, margin, probeEvery,
-    sampleEvery, start) {
-
-  def search(q: Array[Float], k: Int,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
-    serveAndSample(np => local.search(q, k, np, filter))
-
-  /** Tiered (read-your-writes) request through the local tier. */
-  def searchWithOverlay(q: Array[Float], k: Int, overlay: ServingOverlay,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
-    serveAndSample(np => local.searchWithOverlay(q, k, np, overlay, filter))
 }

@@ -139,6 +139,23 @@ final class ServingOverlay private (
     winners.groupBy(_.cid)
   /** Driver-side view of the shadowed id set (local read, no fetch). */
   private[index] def shadowed: Array[Long] = shadowBc.value
+  /** One request's overlay candidates: the live winners in its PROBED
+    * lists that pass `filter`, scored with [[ServingIndex.scoreOne]]'s
+    * arithmetic so tiered results hash-match the SQL paths. The query
+    * self-norm is loop-invariant across winners — computed once (cosine
+    * only; the accumulation order inside is unchanged, so scores stay
+    * bit-identical to the per-row form).
+    */
+  private[index] def candidates(q: Array[Float], probed: Seq[Long],
+      filter: ServingFilter, metric: String): Array[(Long, Double)] = {
+    val nqPre =
+      if (metric == "cosine") ServingIndex.queryNormSq(q) else Double.NaN
+    probed.iterator
+      .flatMap(cid => winnersByCid.getOrElse(cid, Array.empty[OverlayWinner]))
+      .filter(w => ServingIndex.passWinner(w, filter))
+      .map(w => (w.id, ServingIndex.scoreOne(q, w.vec, metric, nqPre)))
+      .toArray
+  }
   /** Drop the broadcast from executors — call when this overlay
     * generation is superseded (flush → stored-index rebuild → new
     * overlay). Blocking=false: executors GC it lazily.
@@ -151,9 +168,7 @@ object ServingOverlay {
     * in-memory buffer cap, types.h:130 — the buffer holds every
     * un-flushed mutation, not just the winners; at 1024-dim double
     * vectors: 2M × 8 KiB = 16 GiB). Yaml-tunable in the reference, a
-    * parameter here. (The distributed overlay bounds a different
-    * structure — its driver-resident shadow-id broadcast — with
-    * [[DistributedServingOverlay.defaultMaxShadowRows]].)
+    * parameter here.
     */
   val defaultMaxRows: Int = 2000000
 
@@ -183,17 +198,17 @@ object ServingOverlay {
     Integer.compare(a.length, b.length)
   }
 
-  /** Total winner order shared by the driver and distributed overlays:
-    * epoch, then live-over-deleted, then vector content (lexicographic
-    * — a CONTENT compare, not a hash, so there is no collision case),
-    * then centroid, tenant, tags. Total up to full row equality, which
-    * makes the LWW reduction commutative and associative — both
-    * overlay forms pick the same winner under ANY merge order, and the
-    * pick is reproducible run-to-run. Epoch ties cannot occur under
-    * the ingest contract (group-commit epochs are unique per id); this
-    * order is the deterministic safety net when they do anyway.
+  /** Total winner order: epoch, then live-over-deleted, then vector
+    * content (lexicographic — a CONTENT compare, not a hash, so there
+    * is no collision case), then centroid, tenant, tags. Total up to
+    * full row equality, which makes the LWW reduction commutative and
+    * associative — the same winner under ANY row order the collect
+    * returns, so the pick is reproducible run-to-run. Epoch ties cannot
+    * occur under the ingest contract (group-commit epochs are unique per
+    * id); this order is the deterministic safety net when they do
+    * anyway.
     */
-  private[index] def winnerCompare(
+  private def winnerCompare(
       aEpoch: Long, aDel: Boolean, aCid: Long, aVec: Array[Double],
       aTen: String, aTags: Array[Long],
       bEpoch: Long, bDel: Boolean, bCid: Long, bVec: Array[Double],
@@ -254,11 +269,10 @@ object ServingOverlay {
     val winners = byId.valuesIterator
       // LWW within the buffer. Epochs are unique per id by the ingest
       // contract (group-commit epochs); if a tie ever occurs anyway, the
-      // break is the TOTAL content order shared with the distributed
-      // overlay ([[winnerCompare]]) so the two forms pick the same
-      // winner and never diverge run-to-run — the batch path
-      // (Lww.latestBy) keeps all max-epoch rows, which a single-winner
-      // overlay cannot represent, so determinism is the contract here.
+      // break is the TOTAL content order [[winnerCompare]], so the pick
+      // never diverges run-to-run — the batch path (Lww.latestBy) keeps
+      // all max-epoch rows, which a single-winner overlay cannot
+      // represent, so determinism is the contract here.
       .map(_.reduce { (a, b) =>
         if (winnerCompare(a._2, a._3, a._4, a._5, a._6, a._7,
             b._2, b._3, b._4, b._5, b._6, b._7) >= 0) a else b
@@ -283,172 +297,15 @@ private final class ExactPartitioner(n: Int) extends Partitioner {
   override def getPartition(key: Any): Int = key.asInstanceOf[Int]
 }
 
-/** One packed overlay list: the buffer's live LWW winners for one
-  * centroid, co-partitioned with the stored [[ListBlock]] of the same
-  * cid. Vectors are doubles (lossless for both float and double
-  * sources) so overlay scores match the driver-overlay and SQL paths
-  * bit-for-bit.
+/** A raw-vector serving tier: the job-path [[ServingIndex]] or the
+  * driver-resident [[LocalServingIndex]] in front of it. One request
+  * signature, so the runtime nprobe controller
+  * ([[AdaptiveServingIndex]]) serves whichever tier it is given.
   */
-final case class OverlayBlock(cid: Long, ids: Array[Long],
-    vecs: Array[Double], dim: Int, tenants: Array[String] = null,
-    tags: Array[Array[Long]] = null)
-
-/** Fully distributed read-your-writes overlay (Q10/T5 at 100×): the
-  * scale path past [[ServingOverlay]]'s driver-side winner cap. The
-  * driver overlay holds the buffer's LWW winners in driver memory —
-  * bounded by [[ServingOverlay.defaultMaxRows]] (the reference's 16 GiB
-  * buffer cap, types.h:130), which forces a flush when the buffer
-  * outgrows it. This variant removes the driver from the data path
-  * entirely: winners live as packed [[OverlayBlock]]s co-partitioned
-  * with the stored index's inverted lists (same [[ExactPartitioner]],
-  * same cid → partition map), so a request's probe tasks scan the
-  * stored list AND its overlay rows in the SAME task via a
-  * zip-partitions stitch over the two cached RDDs — no per-request
-  * driver scan, no winner array whose size is a driver liability.
-  *
-  * What stays on the driver: nothing per-request. What stays broadcast:
-  * the shadowed-id set (sorted primitive Array[Long], 8 B/entry) —
-  * necessarily global, because an upsert can MOVE a vector between
-  * centroids, so the stored row it shadows lives in a list the overlay
-  * row does not. The zipped `tiered` RDD is built ONCE per overlay
-  * generation (both parents cached; the stitch recomputes per request
-  * as two cache hits + iterator packing — no data copy, no extra cache).
-  *
-  * Result contract: identical to [[ServingIndex.searchWithOverlay]]
-  * with a [[ServingOverlay]] built from the same buffer — same LWW
-  * winner tie-break, same filter semantics, same score arithmetic, same
-  * (score, id) rank order. ServingSpec fuzzes the equivalence;
-  * `tiered_knn_served_dist` gates it against the DuckDB oracle.
-  */
-final class DistributedServingOverlay private (
-    private[index] val shadowBc: Broadcast[Array[Long]],
-    @transient private[index] val blocks: RDD[OverlayBlock],
-    @transient private[index] val tiered:
-      RDD[(Array[ListBlock], Array[OverlayBlock])],
-    @transient private[index] val owner: ServingIndex,
-    private[index] val hasTenant: Boolean,
-    private[index] val hasTags: Boolean,
-    val size: Long) {
-  /** Drop the overlay generation: broadcast off executors, blocks
-    * uncached. Call after a flush rebuilds the stored index.
-    */
-  def destroy(): Unit = {
-    shadowBc.destroy()
-    blocks.unpersist(blocking = false)
-  }
-}
-
-object DistributedServingOverlay {
-  /** Build from buffered mutation rows (same contract as
-    * [[ServingOverlay.fromDataFrame]]: cols idCol, epoch, deleted,
-    * centroid_id, vecCol [, tenantCol, tagsCol]), co-partitioned with
-    * `index`'s inverted lists. LWW winner per id is reduced
-    * DISTRIBUTED (reduceByKey — one shuffle of the buffer, never a
-    * driver collect) with the same deterministic tie-break as the
-    * driver overlay: (epoch, live-over-deleted, vector content hash).
-    * Only the shadowed-id ARRAY ever reaches the driver (8 B/id, the
-    * same array the driver overlay broadcasts).
-    */
-  /** Shadow-set bound: the one driver-resident structure this overlay
-    * keeps is the sorted shadowed-id array (8 B/id broadcast once per
-    * generation) — 100M buffered ids ≈ 800 MB, the practical broadcast
-    * envelope. Past the bound the build throws
-    * [[OverlayCapacityExceeded]]: the ingest layer must force a flush,
-    * the same bounded-buffer contract the reference enforces
-    * (types.h:130) and the capped driver overlay signals at 2M rows.
-    */
-  val defaultMaxShadowRows: Long = 100000000L
-
-  def fromDataFrame(buffer: DataFrame, index: ServingIndex,
-      idCol: String = "vec_id", vecCol: String = "vec",
-      tenantCol: Option[String] = None,
-      tagsCol: Option[String] = None,
-      maxShadowRows: Long = defaultMaxShadowRows): DistributedServingOverlay = {
-    val hasTenant = tenantCol.isDefined
-    val hasTags = tagsCol.isDefined
-    val cols = Seq(col(idCol).cast("long"), col("epoch").cast("long"),
-        col("deleted").cast("boolean"), col("centroid_id").cast("long"),
-        col(vecCol).cast("array<double>")) ++
-      tenantCol.map(c => col(c).cast("string")) ++
-      tagsCol.map(c => col(c).cast("array<long>"))
-    val tenantIdx = 5
-    val tagsIdx = if (hasTenant) 6 else 5
-    // (epoch, deleted, cid, vec, tenant, tags) keyed by id
-    val versions: RDD[(Long, (Long, Boolean, Long, Array[Double],
-        String, Array[Long]))] =
-      buffer.select(cols: _*).rdd.map { r =>
-        (r.getLong(0), (r.getLong(1), r.getBoolean(2), r.getLong(3),
-          if (r.isNullAt(4)) null else r.getSeq[Double](4).toArray,
-          if (hasTenant && !r.isNullAt(tenantIdx)) r.getString(tenantIdx)
-          else null,
-          if (hasTags && !r.isNullAt(tagsIdx))
-            r.getSeq[Long](tagsIdx).toArray
-          else null))
-      }
-    // LWW winner per id — the SAME total content order as the driver
-    // overlay ([[ServingOverlay.winnerCompare]]): total up to full row
-    // equality, hence commutative/associative under any reduceByKey
-    // merge order, and both overlay forms pick the same winner
-    val winners = versions.reduceByKey { (a, b) =>
-      if (ServingOverlay.winnerCompare(a._1, a._2, a._3, a._4, a._5, a._6,
-          b._1, b._2, b._3, b._4, b._5, b._6) >= 0) a else b
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    // global shadow set: every buffered id (live OR tombstoned) masks
-    // its stored versions store-wide. Bounded: past maxShadowRows the
-    // generation refuses to build (force-flush signal) instead of
-    // collecting an arbitrarily large driver array.
-    val nShadow = winners.count()
-    if (nShadow > maxShadowRows) {
-      winners.unpersist(blocking = false)
-      throw new OverlayCapacityExceeded(
-        math.min(maxShadowRows, Int.MaxValue.toLong).toInt)
-    }
-    val shadow = winners.keys.collect()
-    java.util.Arrays.sort(shadow)
-    val cidToPart = index.cidToPart
-    val nParts = index.cids.length
-    val packed = winners
-      .flatMap { case (id, (_, deleted, cid, vec, ten, tg)) =>
-        if (deleted || vec == null) None
-        else cidToPart.get(cid).map(p => (p, (cid, id, vec, ten, tg)))
-      }
-      .partitionBy(new ExactPartitioner(nParts))
-      .mapPartitions({ it =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val cid = rows.head._2._1
-          val n = rows.length
-          val d = rows.head._2._3.length
-          val ids = new Array[Long](n)
-          val vecs = new Array[Double](n * d)
-          val tenants = if (hasTenant) new Array[String](n) else null
-          val tags = if (hasTags) new Array[Array[Long]](n) else null
-          var i = 0
-          while (i < n) {
-            ids(i) = rows(i)._2._2
-            System.arraycopy(rows(i)._2._3, 0, vecs, i * d, d)
-            if (hasTenant) tenants(i) = rows(i)._2._4
-            if (hasTags) tags(i) = rows(i)._2._5
-            i += 1
-          }
-          Iterator.single(OverlayBlock(cid, ids, vecs, d, tenants, tags))
-        }
-      }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_ONLY)
-    // materialize the cache and count live winners in one pass
-    val size = packed.map(_.ids.length.toLong).fold(0L)(_ + _)
-    winners.unpersist(blocking = false)
-    // stitch built once per generation: computing a zipped partition is
-    // two cache hits + two toArray ref-packs — no copy, nothing cached
-    val tiered = index.blocks.zipPartitions(packed,
-        preservesPartitioning = true) { (bIt, oIt) =>
-      Iterator.single((bIt.toArray, oIt.toArray))
-    }
-    val sc = buffer.sparkSession.sparkContext
-    new DistributedServingOverlay(sc.broadcast(shadow), packed, tiered,
-      index, hasTenant, hasTags, size)
-  }
+trait RawServingTier {
+  def search(q: Array[Float], k: Int, nprobe: Int,
+      filter: ServingFilter = ServingFilter.none,
+      overlay: Option[ServingOverlay] = None): Array[(Long, Double)]
 }
 
 /** Single-request IVF serving index (SURVEY Q6 serving path; BASELINE
@@ -504,7 +361,7 @@ final class ServingIndex private (
     val hasTags: Boolean,
     val limits: ServingLimits,
     private[index] val vecsDouble: Boolean,
-    val maxEpoch: Long) extends Serializable {
+    val maxEpoch: Long) extends RawServingTier with Serializable {
 
   private[index] val asc = graft.operators.Knn.isAscending(metric)
 
@@ -561,159 +418,55 @@ final class ServingIndex private (
     ServingIndex.capProbesWalk(probed, cid => listSizes.getOrElse(cid, 0).toLong,
       limits.maxCandidates)
 
-  /** One QueryRequest: top-k over the probed lists, optionally through
-    * the request's tenant/tags/sample predicate (evaluated in-task before
-    * scoring — filtered rows never pay a dot product). Returns (id, score)
-    * in final rank order (score best-first, ties by id asc).
+  /** One QueryRequest: [[searchBatch]]'s one-query case. Top-k over the
+    * probed lists, optionally through the request's tenant/tags/sample
+    * predicate (evaluated in-task before scoring — filtered rows never
+    * pay a dot product) and the in-flight buffer `overlay`. Returns
+    * (id, score) in final rank order (score best-first, ties by id asc).
     */
-  def search(q: Array[Float], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
-    validateFilter(filter, hasTenant, hasTags)
-    val kk = math.min(k, limits.maxK) // clamp, not reject (config.h:128)
-    if (kk <= 0) return Array.empty // degenerate size: an answer, not an error
-    val probed = capProbes(probe(q, nprobe))
-    val parts = probed.flatMap(cidToPart.get).distinct.toArray
-    if (parts.isEmpty) return Array.empty
-    val probedSet = probed.toSet
-    val m = metric
-    val ascL = asc
-    val hA = postingHitAcc
-    val mA = postingMissAcc
-    val partials: Array[Array[(Long, Double)]] =
-      ServingIndex.withDeadline(blocks.sparkContext, limits.deadlineMs) {
-        blocks.sparkContext.runJob(
-          blocks,
-          (it: Iterator[ListBlock]) =>
-            ServingIndex.scanTopK(it, q, kk, m, ascL, probedSet, filter,
-              ServingIndex.noShadow, hA, mA),
-          parts.toIndexedSeq)
-      }
-    val merged = partials.flatten.sortBy {
-      case (id, s) => (if (ascL) s else -s, id)
-    }
-    merged.take(kk)
-  }
-
-  /** Tiered request: stored index + in-flight buffer overlay with version
-    * masking — the serving-path twin of the tiered read
-    * ([[graft.operators.TieredScan.liveView]] semantics). Stored rows
-    * whose id has ANY buffered version are skipped in-task (the shadow
-    * set rides a per-overlay-generation broadcast — the probe closure
-    * carries only the handle); the overlay's live LWW winners within the
-    * probed lists join the candidate pool driver-side with the same score
-    * arithmetic and the same filter predicate. Overlay scan cost is
-    * O(overlay) per request on the driver — microseconds at the measured
-    * 2% delta fraction.
-    */
-  def searchWithOverlay(q: Array[Float], k: Int, nprobe: Int,
-      overlay: ServingOverlay,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
-    validateFilter(filter, hasTenant, hasTags)
-    validateFilter(filter, overlay.hasTenant, overlay.hasTags)
-    val kk = math.min(k, limits.maxK)
-    if (kk <= 0) return Array.empty // degenerate size: an answer, not an error
-    val probed = capProbes(probe(q, nprobe))
-    val probedSet = probed.toSet
-    val parts = probed.flatMap(cidToPart.get).distinct.toArray
-    val m = metric
-    val ascL = asc
-    val hA = postingHitAcc
-    val mA = postingMissAcc
-    val shadowBc = overlay.shadowBc // handle only — the set never ships
-    val partials: Array[Array[(Long, Double)]] =
-      if (parts.isEmpty) Array.empty
-      else ServingIndex.withDeadline(blocks.sparkContext, limits.deadlineMs) {
-        blocks.sparkContext.runJob(
-          blocks,
-          (it: Iterator[ListBlock]) =>
-            ServingIndex.scanTopK(it, q, kk, m, ascL, probedSet,
-              filter, shadowBc.value, hA, mA),
-          parts.toIndexedSeq)
-      }
-    // query self-norm is loop-invariant across overlay winners — computed
-    // once (cosine only; the accumulation order inside is unchanged, so
-    // scores stay bit-identical to the per-row form)
-    val nqPre =
-      if (m == "cosine") ServingIndex.queryNormSq(q) else Double.NaN
-    val overlayCands = probed.iterator
-      .flatMap(cid => overlay.winnersByCid.getOrElse(cid,
-        Array.empty[OverlayWinner]))
-      .filter(w => ServingIndex.passWinner(w, filter))
-      .map(w => (w.id, ServingIndex.scoreOne(q, w.vec, m, nqPre)))
-      .toArray
-    (partials.flatten ++ overlayCands)
-      .sortBy { case (id, s) => (if (ascL) s else -s, id) }
-      .take(kk)
-  }
-
-  /** Tiered request against a [[DistributedServingOverlay]]: the same
-    * semantics as the driver-overlay [[searchWithOverlay]] — store-wide
-    * shadow masking, probed-only candidacy, identical score arithmetic
-    * and rank order — but the overlay rows are scanned IN the probe
-    * tasks (zip-partitions stitch over the co-partitioned overlay
-    * blocks), so no winner ever transits the driver. Each task returns
-    * ≤ 2k rows (stored partial + overlay partial); the driver merge is
-    * unchanged.
-    */
-  def searchWithOverlay(q: Array[Float], k: Int, nprobe: Int,
-      overlay: DistributedServingOverlay,
-      filter: ServingFilter): Array[(Long, Double)] = {
-    require(overlay.owner eq this,
-      "distributed overlay was built against a different ServingIndex")
-    validateFilter(filter, hasTenant, hasTags)
-    validateFilter(filter, overlay.hasTenant, overlay.hasTags)
-    val kk = math.min(k, limits.maxK)
-    if (kk <= 0) return Array.empty // degenerate size: an answer, not an error
-    val probed = capProbes(probe(q, nprobe))
-    val probedSet = probed.toSet
-    val parts = probed.flatMap(cidToPart.get).distinct.toArray
-    if (parts.isEmpty) return Array.empty
-    val m = metric
-    val ascL = asc
-    val hA = postingHitAcc
-    val mA = postingMissAcc
-    val shadowBc = overlay.shadowBc // handle only — the set never ships
-    val partials: Array[Array[(Long, Double)]] =
-      ServingIndex.withDeadline(blocks.sparkContext, limits.deadlineMs) {
-        blocks.sparkContext.runJob(
-          overlay.tiered,
-          (it: Iterator[(Array[ListBlock], Array[OverlayBlock])]) => {
-            val (bs, os) = it.next()
-            val stored = ServingIndex.scanTopK(bs.iterator, q, kk, m,
-              ascL, probedSet, filter, shadowBc.value, hA, mA)
-            val over = ServingIndex.overlayTopK(os, q, kk, m, ascL,
-              probedSet, filter)
-            stored ++ over
-          },
-          parts.toIndexedSeq)
-      }
-    partials.flatten
-      .sortBy { case (id, s) => (if (ascL) s else -s, id) }
-      .take(kk)
-  }
+  override def search(q: Array[Float], k: Int, nprobe: Int,
+      filter: ServingFilter = ServingFilter.none,
+      overlay: Option[ServingOverlay] = None): Array[(Long, Double)] =
+    searchBatch(Seq((0L, q)), k, nprobe, filter, overlay)(0L)
 
   /** One BATCH request (Q12 on the serving path, config.h:131
-    * max_query_batch): the whole batch runs as ONE probe job instead of
-    * a job per query. Queries are inverted onto the lists they probe
-    * (each partition's task scores every query that probed its list,
-    * through the same [[ServingIndex.scanTopK]] kernel), so the batch
-    * pays one scheduler dispatch and each list is READ ONCE for all the
-    * queries probing it — at a measured ~8 ms dispatch-dominated
-    * per-request latency, the difference between batch throughput
-    * scaling with work and scaling with dispatch count. Per-query
-    * results are identical to [[search]] (same probe pick, same caps,
-    * same kernel, same (score, id) rank) — `knn_point_batched` shares
-    * `knn_point`'s oracle verbatim.
+    * max_query_batch) — THE request path every raw-tier door reaches:
+    * the whole batch runs as ONE probe job instead of a job per query.
+    * Queries are inverted onto the lists they probe (each partition's
+    * task scores every query that probed its list, through the same
+    * [[ServingIndex.scanTopK]] kernel), so the batch pays one scheduler
+    * dispatch and each list is READ ONCE for all the queries probing it
+    * — at a measured ~8 ms dispatch-dominated per-request latency, the
+    * difference between batch throughput scaling with work and scaling
+    * with dispatch count. Per-query results are independent of the
+    * batch they ride in (same probe pick, same caps, same kernel, same
+    * (score, id) rank) — `knn_point_batched` shares `knn_point`'s
+    * oracle verbatim.
+    *
+    * With an `overlay` — the live tiered world (Q10/T5, the serving-path
+    * twin of [[graft.operators.TieredScan.liveView]]): stored rows whose
+    * id has ANY buffered version are skipped in-task (the shadow set
+    * rides a per-overlay-generation broadcast — the probe closure
+    * carries only the handle), and each query's overlay winners from
+    * ITS probed lists join the candidate pool driver-side with the same
+    * score arithmetic and the same filter predicate. Overlay scan cost
+    * is O(probed fraction of the overlay) per query on the driver —
+    * microseconds at the measured 2% delta fraction.
+    * `tiered_knn_served_batch` shares `tiered_knn_served`'s oracle
+    * verbatim.
     *
     * Returns qid → ranked hits. Batches above max_query_batch are
-    * rejected; the k clamp, per-query candidate cap and deadline apply
-    * as in [[search]].
+    * rejected; k clamps to maxK (a degenerate k ≤ 0 is an empty answer,
+    * not an error), each query's probe walk is capped at maxCandidates,
+    * and the job is cancelled past the deadline.
     */
   def searchBatch(queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none):
+      filter: ServingFilter = ServingFilter.none,
+      overlay: Option[ServingOverlay] = None):
       Map[Long, Array[(Long, Double)]] = {
     validateFilter(filter, hasTenant, hasTags)
-    val kk = math.min(k, limits.maxK)
+    overlay.foreach(o => validateFilter(filter, o.hasTenant, o.hasTags))
+    val kk = math.min(k, limits.maxK) // clamp, not reject (config.h:128)
     val plan = planBatch(queries, nprobe)
     val qVecs = plan.qVecs
     val partQueries = plan.partQueries
@@ -721,6 +474,7 @@ final class ServingIndex private (
     val ascL = asc
     val hA = postingHitAcc
     val mA = postingMissAcc
+    val shadowBc = overlay.map(_.shadowBc) // handle only — the set never ships
     val probedSets = plan.probedByQuery.map(_.toSet)
     val partials: Array[Array[(Int, Array[(Long, Double)])]] =
       if (plan.parts.isEmpty || kk <= 0) Array.empty
@@ -729,19 +483,20 @@ final class ServingIndex private (
           blocks,
           (ctx: org.apache.spark.TaskContext, it: Iterator[ListBlock]) => {
             val bs = it.toArray
+            val shadow = shadowBc.fold(ServingIndex.noShadow)(_.value)
             val mine = partQueries.getOrElse(ctx.partitionId(),
               Array.emptyIntArray)
             mine.map { i =>
-              // the query's own probed set (computed once on the driver;
-              // every batch variant sources it identically)
+              // the query's own probed set (computed once on the driver)
               (i, ServingIndex.scanTopK(bs.iterator, qVecs(i), kk, m,
-                ascL, probedSets(i), filter, ServingIndex.noShadow,
-                hA, mA))
+                ascL, probedSets(i), filter, shadow, hA, mA))
             }
           },
           plan.parts.toIndexedSeq)
       }
-    mergeBatch(plan, kk, partials, _ => Array.empty)
+    mergeBatch(plan, kk, partials, i => overlay.fold(
+      Array.empty[(Long, Double)])(
+      _.candidates(qVecs(i), plan.probedByQuery(i), filter, m)))
   }
 
   // BatchPlan lives in the companion object: an inner case class's
@@ -774,15 +529,18 @@ final class ServingIndex private (
       qArr.map(_._2)) // small: batch ≤ 100 × dim floats
   }
 
-  /** Shared batch merge: accumulate the probe job's per-query partials,
-    * append each query's driver-side extras (overlay winners on the
-    * driver-overlay path), rank by the (score best, id asc) contract.
+  /** Batch merge: accumulate the probe job's per-query partials, append
+    * each query's driver-side extras (its overlay winners), rank by the
+    * (score best, id asc) contract. The extras come from the query's
+    * OWN probed lists, never from the lists the job's tasks saw: an
+    * overlay winner may live in a probed centroid whose stored list is
+    * empty (a fresh insert into an empty list), and a stored-derived
+    * set would silently drop it (a read-your-writes violation).
     */
   private def mergeBatch(plan: BatchPlan, kk: Int,
       partials: Array[Array[(Int, Array[(Long, Double)])]],
       extra: Int => Array[(Long, Double)]):
       Map[Long, Array[(Long, Double)]] = {
-    val ascL = asc
     val acc = scala.collection.mutable.HashMap
       .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Double)]]
     partials.foreach(_.foreach { case (i, hits) =>
@@ -792,118 +550,15 @@ final class ServingIndex private (
     plan.qArr.indices.map { i =>
       val stored = acc.get(i)
         .map(_.toArray).getOrElse(Array.empty[(Long, Double)])
-      plan.qArr(i)._1 -> (stored ++ extra(i))
-        .sortBy { case (id, s) => (if (ascL) s else -s, id) }
-        .take(kk)
+      plan.qArr(i)._1 -> rank(stored ++ extra(i), kk)
     }.toMap
   }
 
-  /** One BATCH request against the live tiered world (Q12 × Q10/T5 — the
-    * composition a resident server actually runs: batched queries over
-    * stored + in-flight): the whole batch is ONE probe job exactly as
-    * [[searchBatch]], with the overlay's shadow masking in-task (the
-    * broadcast handle rides the closure) and each query's overlay
-    * winners joined driver-side from ITS probed lists — per-query
-    * results identical to [[searchWithOverlay]] (ServingSpec fuzzes the
-    * equivalence; `tiered_knn_served_batch` shares `tiered_knn_served`'s
-    * oracle verbatim).
-    */
-  def searchBatch(queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      overlay: ServingOverlay,
-      filter: ServingFilter): Map[Long, Array[(Long, Double)]] = {
-    validateFilter(filter, hasTenant, hasTags)
-    validateFilter(filter, overlay.hasTenant, overlay.hasTags)
-    val kk = math.min(k, limits.maxK)
-    val plan = planBatch(queries, nprobe)
-    val qVecs = plan.qVecs
-    val partQueries = plan.partQueries
-    val m = metric
+  /** The first `kk` of `hits` in the (score best, id asc) rank order. */
+  private[index] def rank(hits: Array[(Long, Double)],
+      kk: Int): Array[(Long, Double)] = {
     val ascL = asc
-    val hA = postingHitAcc
-    val mA = postingMissAcc
-    val shadowBc = overlay.shadowBc // handle only — the set never ships
-    val probedSets = plan.probedByQuery.map(_.toSet)
-    val partials: Array[Array[(Int, Array[(Long, Double)])]] =
-      if (plan.parts.isEmpty || kk <= 0) Array.empty
-      else ServingIndex.withDeadline(blocks.sparkContext, limits.deadlineMs) {
-        blocks.sparkContext.runJob(
-          blocks,
-          (ctx: org.apache.spark.TaskContext, it: Iterator[ListBlock]) => {
-            val bs = it.toArray
-            val mine = partQueries.getOrElse(ctx.partitionId(),
-              Array.emptyIntArray)
-            mine.map { i =>
-              (i, ServingIndex.scanTopK(bs.iterator, qVecs(i), kk, m,
-                ascL, probedSets(i), filter, shadowBc.value, hA, mA))
-            }
-          },
-          plan.parts.toIndexedSeq)
-      }
-    // each query's overlay winners from ITS probed lists — the same
-    // driver-side join as searchWithOverlay, query norm hoisted
-    mergeBatch(plan, kk, partials, i => {
-      val nqPre =
-        if (m == "cosine") ServingIndex.queryNormSq(qVecs(i)) else Double.NaN
-      plan.probedByQuery(i).iterator
-        .flatMap(cid => overlay.winnersByCid.getOrElse(cid,
-          Array.empty[OverlayWinner]))
-        .filter(w => ServingIndex.passWinner(w, filter))
-        .map(w => (w.id, ServingIndex.scoreOne(qVecs(i), w.vec, m, nqPre)))
-        .toArray
-    })
-  }
-
-  /** Batch × DISTRIBUTED overlay: the batch probe job runs over the
-    * zip-partitions stitch, so each task scans the stored list AND its
-    * co-partitioned overlay rows for every query that probed it — no
-    * per-request or per-query driver scan at all. Per-query results
-    * identical to the [[DistributedServingOverlay]] [[searchWithOverlay]].
-    */
-  def searchBatch(queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      overlay: DistributedServingOverlay,
-      filter: ServingFilter): Map[Long, Array[(Long, Double)]] = {
-    require(overlay.owner eq this,
-      "distributed overlay was built against a different ServingIndex")
-    validateFilter(filter, hasTenant, hasTags)
-    validateFilter(filter, overlay.hasTenant, overlay.hasTags)
-    val kk = math.min(k, limits.maxK)
-    val plan = planBatch(queries, nprobe)
-    val qVecs = plan.qVecs
-    val partQueries = plan.partQueries
-    val m = metric
-    val ascL = asc
-    val hA = postingHitAcc
-    val mA = postingMissAcc
-    val shadowBc = overlay.shadowBc
-    val probedSets = plan.probedByQuery.map(_.toSet)
-    val partials: Array[Array[(Int, Array[(Long, Double)])]] =
-      if (plan.parts.isEmpty || kk <= 0) Array.empty
-      else ServingIndex.withDeadline(blocks.sparkContext, limits.deadlineMs) {
-        blocks.sparkContext.runJob(
-          overlay.tiered,
-          (ctx: org.apache.spark.TaskContext,
-              it: Iterator[(Array[ListBlock], Array[OverlayBlock])]) => {
-            val (bs, os) = it.next()
-            val mine = partQueries.getOrElse(ctx.partitionId(),
-              Array.emptyIntArray)
-            mine.map { i =>
-              // the query's OWN probed set — NEVER derived from the
-              // stored blocks: an overlay winner may live in a probed
-              // centroid whose stored list is empty (fresh insert into
-              // an empty list), and the stored-derived set would
-              // silently drop it (read-your-writes violation vs the
-              // single-request path)
-              val probedQ = probedSets(i)
-              val stored = ServingIndex.scanTopK(bs.iterator, qVecs(i), kk,
-                m, ascL, probedQ, filter, shadowBc.value, hA, mA)
-              val over = ServingIndex.overlayTopK(os, qVecs(i), kk, m,
-                ascL, probedQ, filter)
-              (i, stored ++ over)
-            }
-          },
-          plan.parts.toIndexedSeq)
-      }
-    mergeBatch(plan, kk, partials, _ => Array.empty)
+    hits.sortBy { case (id, s) => (if (ascL) s else -s, id) }.take(kk)
   }
 
   /** Battery/verify helper: a request loop over `queries`, results as a
@@ -915,8 +570,7 @@ final class ServingIndex private (
   def searchAllDF(spark: SparkSession, queries: Seq[(Long, Array[Float])],
       k: Int, nprobe: Int,
       filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None,
-      distOverlay: Option[DistributedServingOverlay] = None): DataFrame = {
+      overlay: Option[ServingOverlay] = None): DataFrame = {
     require(queries.size <= limits.maxBatch,
       s"query batch ${queries.size} exceeds max_query_batch ${limits.maxBatch}")
     // requests are independent — run them CONCURRENTLY (a resident server
@@ -925,12 +579,8 @@ final class ServingIndex private (
     // in request order: values identical to the sequential loop.
     val rows = graft.operators.Parallelism.parRequests(queries) {
       case (qid, qv) =>
-        val hits = (overlay, distOverlay) match {
-          case (_, Some(d)) => searchWithOverlay(qv, k, nprobe, d, filter)
-          case (Some(o), _) => searchWithOverlay(qv, k, nprobe, o, filter)
-          case _ => search(qv, k, nprobe, filter)
-        }
-        hits.map { case (id, s) => Row(qid, id, s) }
+        search(qv, k, nprobe, filter, overlay)
+          .map { case (id, s) => Row(qid, id, s) }
     }.flatten
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),
@@ -1081,7 +731,7 @@ final class ServingIndex private (
 final class LocalServingIndex private[index] (
     val owner: ServingIndex,
     cached: scala.collection.mutable.LongMap[ListBlock],
-    val cachedBytes: Long) {
+    val cachedBytes: Long) extends RawServingTier {
 
   def cachedLists: Int = cached.size
 
@@ -1136,57 +786,28 @@ final class LocalServingIndex private[index] (
     out
   }
 
-  /** One QueryRequest — [[ServingIndex.search]] semantics exactly. */
-  def search(q: Array[Float], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
-    owner.validateFilter(filter, owner.hasTenant, owner.hasTags)
-    val kk = math.min(k, owner.limits.maxK)
-    val probed = owner.capProbes(owner.probe(q, nprobe))
-    if (!probed.forall(cached.contains)) {
-      fallThroughs.incrementAndGet()
-      return owner.search(q, k, nprobe, filter)
-    }
-    localHits.incrementAndGet()
-    val probedSet = probed.toSet
-    ServingIndex.scanTopK(probed.iterator.map(cached(_)), q, kk,
-      owner.metric, owner.asc, probedSet, filter,
-      ServingIndex.noShadow, owner.postingHitAcc, owner.postingMissAcc)
-  }
-
-  /** Tiered request with the driver overlay — same semantics as
-    * [[ServingIndex.searchWithOverlay]]; the shadow set is read locally
-    * (no broadcast fetch) and overlay winners merge exactly as on the
-    * job path.
+  /** One QueryRequest — [[ServingIndex.search]] semantics exactly,
+    * overlay included: the shadow set is read locally (no broadcast
+    * fetch) and the overlay's winners merge exactly as on the job path.
     */
-  def searchWithOverlay(q: Array[Float], k: Int, nprobe: Int,
-      overlay: ServingOverlay,
-      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
+  override def search(q: Array[Float], k: Int, nprobe: Int,
+      filter: ServingFilter = ServingFilter.none,
+      overlay: Option[ServingOverlay] = None): Array[(Long, Double)] = {
     owner.validateFilter(filter, owner.hasTenant, owner.hasTags)
-    owner.validateFilter(filter, overlay.hasTenant, overlay.hasTags)
+    overlay.foreach(o => owner.validateFilter(filter, o.hasTenant, o.hasTags))
     val kk = math.min(k, owner.limits.maxK)
     val probed = owner.capProbes(owner.probe(q, nprobe))
     if (!probed.forall(cached.contains)) {
       fallThroughs.incrementAndGet()
-      return owner.searchWithOverlay(q, k, nprobe, overlay, filter)
+      return owner.search(q, k, nprobe, filter, overlay)
     }
     localHits.incrementAndGet()
-    val probedSet = probed.toSet
-    val m = owner.metric
-    val ascL = owner.asc
     val stored = ServingIndex.scanTopK(probed.iterator.map(cached(_)), q,
-      kk, m, ascL, probedSet, filter, overlay.shadowed,
+      kk, owner.metric, owner.asc, probed.toSet, filter,
+      overlay.fold(ServingIndex.noShadow)(_.shadowed),
       owner.postingHitAcc, owner.postingMissAcc)
-    val nqPre =
-      if (m == "cosine") ServingIndex.queryNormSq(q) else Double.NaN
-    val overlayCands = probed.iterator
-      .flatMap(cid => overlay.winnersByCid.getOrElse(cid,
-        Array.empty[OverlayWinner]))
-      .filter(w => ServingIndex.passWinner(w, filter))
-      .map(w => (w.id, ServingIndex.scoreOne(q, w.vec, m, nqPre)))
-      .toArray
-    (stored ++ overlayCands)
-      .sortBy { case (id, s) => (if (ascL) s else -s, id) }
-      .take(kk)
+    overlay.fold(stored)(o =>
+      owner.rank(stored ++ o.candidates(q, probed, filter, owner.metric), kk))
   }
 }
 
@@ -1197,9 +818,10 @@ object LocalServingIndex {
 
 object ServingIndex {
 
-  /** Batch inversion shared by the three `searchBatch` forms: per-query
-    * capped probe sets, and partition → query indices for the one probe
-    * job. (Companion-scoped: see the note at the use site.)
+  /** Batch inversion for [[ServingIndex.searchBatch]] (and so for
+    * every raw-tier request, `search` being its one-query case):
+    * per-query capped probe sets, and partition → query indices for the
+    * one probe job. (Companion-scoped: see the note at the use site.)
     */
   private[index] final case class BatchPlan(
       qArr: Array[(Long, Array[Float])],
@@ -1523,91 +1145,13 @@ object ServingIndex {
   }
 
   /** The bounded top-k kernel behind the stored-list scan
-    * ([[scanTopK]]), the overlay scan ([[overlayTopK]]), and the local
-    * tiers — THE shared rank/tie definition
+    * ([[scanTopK]]) on the job path and the local tiers — THE shared
+    * rank/tie definition
     * ([[graft.operators.TopK.Bounded]]): one implementation of the
     * (score best, id asc) contract across every path the oracle
     * equivalences compare.
     */
   private[index] type BoundedTopK = graft.operators.TopK.Bounded
-
-  /** In-task overlay scan: bounded top-k over a partition's packed
-    * [[OverlayBlock]]s (cid ∈ probed), with [[passWinner]]'s predicate
-    * semantics (sample → tenant → tags, cheapest first) and
-    * [[scoreOne]]'s arithmetic (sequential double accumulation, cosine
-    * query norm hoisted). Overlay rows are never shadow-tested — the
-    * overlay IS the shadowing tier.
-    */
-  private[index] def overlayTopK(os: Array[OverlayBlock], q: Array[Float],
-      k: Int, metric: String, asc: Boolean, probed: Set[Long],
-      filter: ServingFilter): Array[(Long, Double)] = {
-    if (os.isEmpty) return Array.empty
-    val wantTenant = filter.tenant.orNull
-    val wantTags = filter.tagsAny.map(_.toArray).orNull
-    val sampleP = filter.sampleP.getOrElse(-1)
-    val nqPre = if (metric == "cosine") queryNormSq(q) else Double.NaN
-    val topk = new BoundedTopK(k, asc)
-    var bi = 0
-    while (bi < os.length) {
-      val b = os(bi)
-      if (probed.contains(b.cid)) {
-        val d = b.dim
-        val n = b.ids.length
-        val v = b.vecs
-        var r = 0
-        while (r < n) {
-          var ok = true
-          if (sampleP >= 0) {
-            val m = (b.ids(r) * 2654435761L) % 100L
-            if ((if (m < 0) m + 100L else m) >= sampleP) ok = false
-          }
-          if (ok && wantTenant != null &&
-            (b.tenants == null || b.tenants(r) != wantTenant)) ok = false
-          if (ok && wantTags != null) {
-            val rowTags = if (b.tags == null) null else b.tags(r)
-            if (rowTags == null) ok = false
-            else {
-              var hit = false
-              var i = 0
-              while (!hit && i < wantTags.length) {
-                var j = 0
-                while (!hit && j < rowTags.length) {
-                  if (rowTags(j) == wantTags(i)) hit = true
-                  j += 1
-                }
-                i += 1
-              }
-              if (!hit) ok = false
-            }
-          }
-          if (ok) {
-            val off = r * d
-            var s = 0.0
-            var i = 0
-            if (metric == "l2") {
-              while (i < d) {
-                val diff = q(i).toDouble - v(off + i); s += diff * diff
-                i += 1
-              }
-            } else {
-              while (i < d) { s += q(i).toDouble * v(off + i); i += 1 }
-              if (metric == "cosine") {
-                var nv = 0.0; var j = 0
-                while (j < d) {
-                  val x = v(off + j); nv += x * x; j += 1
-                }
-                s = s / (math.sqrt(nqPre) * math.sqrt(nv))
-              }
-            }
-            topk.insert(s, b.ids(r))
-          }
-          r += 1
-        }
-      }
-      bi += 1
-    }
-    topk.result()
-  }
 
   /** Per-task probe scan: tight loop over a packed list, bounded top-k
     * with (score, id-asc) tie-break. Double accumulation over float reads

@@ -37,15 +37,9 @@ object Parallelism {
     * independent of partitioning (joins with broadcast sides, per-row
     * scoring, partial top-k with total-order ties).
     */
-  // dev-only A/B hook (graft.dev.ProfWiden): overrides the widen target
-  // partition count so the cost curve over targets can be measured in
-  // ONE JVM; never set by library or bench code
-  @volatile private[graft] var devTargetOverride: Option[Int] = None
-
   def widen(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val p = devTargetOverride
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    val p = spark.sparkContext.defaultParallelism
     if (p <= 1) df
     else {
       val bytes = df.queryExecution.analyzed.stats.sizeInBytes

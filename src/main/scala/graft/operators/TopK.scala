@@ -159,7 +159,7 @@ object TopK {
 
   /** THE bounded best-first top-k kernel with the engine-wide
     * (score best, id ascending) tie contract — single definition shared
-    * by the serving scans (`ServingIndex.scanTopK`/`overlayTopK`), the
+    * by the serving scan (`ServingIndex.scanTopK`), the
     * local cache tiers, and the bulk exact-KNN kernel, so the rank
     * order every oracle equivalence depends on cannot silently diverge
     * between paths. Insertion-sorted arrays: k is small (reference

@@ -56,8 +56,8 @@ class LocalServingSpec extends SparkSpec {
         col("centroid_id"), col("vec"))
     val overlay = ServingOverlay.fromDataFrame(buffer)
     for ((_, qv) <- queries.take(6); np <- Seq(2, 4)) {
-      val got = local.searchWithOverlay(qv, 10, np, overlay).toSeq
-      val want = idx.searchWithOverlay(qv, 10, np, overlay).toSeq
+      val got = local.search(qv, 10, np, overlay = Some(overlay)).toSeq
+      val want = idx.search(qv, 10, np, overlay = Some(overlay)).toSeq
       assert(got === want, s"np=$np")
     }
     overlay.destroy()

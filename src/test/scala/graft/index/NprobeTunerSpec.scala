@@ -123,37 +123,34 @@ class NprobeTunerSpec extends SparkSpec {
       val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
       val buffer = entries.filter(col("epoch") >= 2000)
       val ovDriver = ServingOverlay.fromDataFrame(buffer)
-      val ovDist = DistributedServingOverlay.fromDataFrame(buffer, idx)
       val qs = Knn.defaultQueries(emb).collect()
         .map(r => r.getSeq[Float](1).toArray)
       val hi = cents.count().toInt
       val adaptive = new AdaptiveServingIndex(idx, lo = 1, hi = hi,
         target = 0.95, window = 5, sampleEvery = 1)
       (0 until 10).foreach(_ =>
-        qs.foreach(q => adaptive.searchWithOverlay(q, 10, ovDriver)))
+        qs.foreach(q => adaptive.search(q, 10, overlay = Some(ovDriver))))
       val settled = adaptive.currentNprobe
       assert(settled >= 1 && settled <= hi)
       // at the settled nprobe, the adaptive tiered answer IS the direct
       // tiered answer — the controller only picks nprobe, never alters
-      // results — and the distributed-overlay route agrees
+      // results
       qs.take(4).foreach { q =>
-        val want = idx.searchWithOverlay(q, 10, settled, ovDriver).toSeq
-        assert(adaptive.searchWithOverlay(q, 10, ovDriver).toSeq === want
+        val want = idx.search(q, 10, settled, overlay = Some(ovDriver)).toSeq
+        assert(adaptive.search(q, 10, overlay = Some(ovDriver)).toSeq === want
           || adaptive.currentNprobe != settled) // controller may step
-        assert(adaptive.searchWithOverlay(q, 10, ovDist,
-          ServingFilter.none).nonEmpty)
       }
       // tiered recall at the settled nprobe meets the target vs ceiling
       val recallAt = qs.map { q =>
-        val ref = idx.searchWithOverlay(q, 10, hi, ovDriver)
+        val ref = idx.search(q, 10, hi, overlay = Some(ovDriver))
           .map(_._1).toSet
-        val got = idx.searchWithOverlay(q, 10, settled, ovDriver)
+        val got = idx.search(q, 10, settled, overlay = Some(ovDriver))
           .map(_._1)
         got.count(ref).toDouble / ref.size
       }
       assert(recallAt.sum / recallAt.length >= 0.95,
         s"settled=$settled recall=${recallAt.sum / recallAt.length}")
-      ovDriver.destroy(); ovDist.destroy(); idx.unpersist()
+      ovDriver.destroy(); idx.unpersist()
     } finally {
       entries.unpersist()
       graft.segments.Segments.deleteDir(dir)
@@ -169,7 +166,7 @@ class NprobeTunerSpec extends SparkSpec {
       tenantCol = Some("tenant"), tagsCol = Some("tags"))
     val local = idx.toLocal()
     val hi = 8
-    val adaptive = new AdaptiveLocalServingIndex(local, 2, hi,
+    val adaptive = new AdaptiveServingIndex(local, 2, hi,
       window = 5, sampleEvery = 2)
     val qs = graft.operators.Knn.defaultQueries(emb)
       .collect().map(_.getSeq[Float](1).toArray)
@@ -189,7 +186,7 @@ class NprobeTunerSpec extends SparkSpec {
     if (adaptive.decisions.nonEmpty) {
       NprobeTuner.persistDecisions(spark, p, adaptive.decisions, 5000L)
       val seed = NprobeTuner.resumeNprobe(spark, p, 6000L)
-      val resumed = new AdaptiveLocalServingIndex(local, 2, hi,
+      val resumed = new AdaptiveServingIndex(local, 2, hi,
         start = seed)
       assert(resumed.currentNprobe === seed.getOrElse(2))
     }
@@ -228,5 +225,50 @@ class NprobeTunerSpec extends SparkSpec {
       t1 + 2 * 3600000L, windowMs = 3600000).isEmpty)
     // no log at all → cold start, not an error
     assert(NprobeTuner.resumeNprobe(spark, path + "-nope", t1).isEmpty)
+  }
+
+  test("concurrent requests on one controller: every sample counted, windows contiguous, drained + remaining decisions = all") {
+    // a driver-side stub tier: the tuned answer drops a seeded share of
+    // the ceiling answer's ids, so the observed recall varies and the
+    // controller moves; every call is counted
+    val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+    val hi = 16
+    val stub = new RawServingTier {
+      def search(q: Array[Float], k: Int, nprobe: Int,
+          filter: ServingFilter = ServingFilter.none,
+          overlay: Option[ServingOverlay] = None): Array[(Long, Double)] = {
+        calls.incrementAndGet()
+        val seed = q(0).toLong
+        val rnd = new scala.util.Random(seed * 31 + nprobe)
+        (0 until k).filter(_ =>
+            nprobe >= hi || rnd.nextInt(hi) < nprobe + 4)
+          .map(i => (seed * 100 + i, 1.0 / (i + 1))).toArray
+      }
+    }
+    val sampleEvery = 4
+    val window = 5
+    val n = 20000
+    val adaptive = new AdaptiveServingIndex(stub, 1, hi, window = window,
+      sampleEvery = sampleEvery)
+    val rnd = new scala.util.Random(42)
+    val qs = Seq.fill(n)(Array(rnd.nextInt(1000).toFloat, 0.0f))
+    val drained =
+      new java.util.concurrent.ConcurrentLinkedQueue[NprobeDecision]()
+    graft.operators.Parallelism.parRequests(qs.indices, threads = 8) { i =>
+      adaptive.search(qs(i), 10)
+      // a flusher draining mid-run must lose no decision
+      if (i % 997 == 0) adaptive.drainDecisions().foreach(drained.add)
+    }
+    val samples = n / sampleEvery
+    // one call per request plus one ceiling call per sample
+    assert(calls.get() === n + samples)
+    val all = drained.toArray(Array.empty[NprobeDecision]).toSeq ++
+      adaptive.decisions
+    // every sample reached the controller: samples / window decisions
+    assert(samples % window === 0)
+    assert(all.length === samples / window)
+    // window indices contiguous from 0, each exactly once
+    assert(all.map(_.window).sorted === (0L until all.length.toLong))
+    assert(all.forall(d => d.nprobe >= 1 && d.nprobe <= hi))
   }
 }

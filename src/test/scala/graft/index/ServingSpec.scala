@@ -188,7 +188,7 @@ class ServingSpec extends SparkSpec {
         (9L, 19L, 200L, false, 0L, Seq(1.0, 0.0)))
         .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
       val overlay = ServingOverlay.fromDataFrame(buffer)
-      val got = idx.searchWithOverlay(Array(1.0f, 0.0f), 10, 1, overlay)
+      val got = idx.search(Array(1.0f, 0.0f), 10, 1, overlay = Some(overlay))
       // id 9 (buffer insert, score 1.0) first; id 3 stored 0.8; id 1's
       // BUFFERED version scores 0.0 (not the stored 1.0); id 2 gone
       assert(got.map(_._1).toSeq === Seq(9L, 3L, 1L))
@@ -234,7 +234,7 @@ class ServingSpec extends SparkSpec {
         entries.filter(col("epoch") >= cut))
       val k = 5 + rnd.nextInt(20)
       val (qid, qv) = queries(rnd.nextInt(queries.length))
-      val got = idx.searchWithOverlay(qv, k, Int.MaxValue, overlay).toSeq
+      val got = idx.search(qv, k, Int.MaxValue, overlay = Some(overlay)).toSeq
       // brute force: LWW per id over the WHOLE log, live only
       val live = all.groupBy(_._1).values.map(_.maxBy(_._2))
         .filter(v => !v._3 && v._5 != null)
@@ -290,8 +290,8 @@ class ServingSpec extends SparkSpec {
       val nprobe = 1 + rnd.nextInt(4)
       val pOpt = Seq(None, Some(30), Some(60), Some(90))(rnd.nextInt(4))
       val (qid, qv) = queries(rnd.nextInt(queries.length))
-      val got = idx.searchWithOverlay(qv, k, nprobe, overlay,
-        ServingFilter(sampleP = pOpt)).toSeq
+      val got = idx.search(qv, k, nprobe,
+        ServingFilter(sampleP = pOpt), Some(overlay)).toSeq
       // driver-side brute force of the tiered + pruned semantics:
       val probed = idx.probe(qv, nprobe).toSet
       val buffered = all.filter(_._2 >= cut)
@@ -321,50 +321,7 @@ class ServingSpec extends SparkSpec {
     graft.segments.Segments.deleteDir(dir0)
   }
 
-  test("distributed overlay equals the driver overlay across fuzzed splits, probes and filters") {
-    // the scale path (winners co-partitioned with the lists, scanned
-    // in-task) must be value-identical to the driver-winner path on the
-    // same buffer — randomized over epoch cut, nprobe, k, and sample p
-    val dir0 = java.nio.file.Files
-      .createTempDirectory("graft-dist-overlay-fuzz-").toString
-    import graft.segments.Segments
-    val log = graft.ingest.MutationLog.deterministicLog(emb)
-    val entries = Ivf.assign(
-        log.withColumn("id_hash",
-            graft.functions.VectorFunctions.hashId(col("id")))
-          .withColumn("deleted", col("op") === "DELETE"),
-        cents, vecCol = "vec")
-      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
-      .select("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
-      .cache()
-    (1 to 5).foreach { seed =>
-      val rnd = new scala.util.Random(seed * 13 + 7)
-      val cut = 1500 + rnd.nextInt(2000)
-      val dir = s"$dir0/t$seed"
-      Segments.writeSegment(entries.filter(col("epoch") < cut), dir,
-        "delta-000", isStable = false)
-      val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
-      val buffer = entries.filter(col("epoch") >= cut)
-      val driver = ServingOverlay.fromDataFrame(buffer)
-      val dist = DistributedServingOverlay.fromDataFrame(buffer, idx)
-      assert(dist.size === driver.size, s"seed=$seed winner counts differ")
-      (1 to 3).foreach { _ =>
-        val k = 3 + rnd.nextInt(12)
-        val nprobe = Seq(1 + rnd.nextInt(4), Int.MaxValue)(rnd.nextInt(2))
-        val f = ServingFilter(
-          sampleP = Seq(None, Some(30), Some(75))(rnd.nextInt(3)))
-        val (qid, qv) = queries(rnd.nextInt(queries.length))
-        val want = idx.searchWithOverlay(qv, k, nprobe, driver, f).toSeq
-        val got = idx.searchWithOverlay(qv, k, nprobe, dist, f).toSeq
-        assert(got === want, s"seed=$seed cut=$cut k=$k nprobe=$nprobe q=$qid")
-      }
-      driver.destroy(); dist.destroy(); idx.unpersist()
-    }
-    entries.unpersist()
-    graft.segments.Segments.deleteDir(dir0)
-  }
-
-  test("searchBatch x overlay: one batch job equals the per-request tiered results, driver and distributed") {
+  test("searchBatch x overlay: one batch job equals the per-request tiered results") {
     val dir0 = java.nio.file.Files
       .createTempDirectory("graft-batch-overlay-").toString
     import graft.segments.Segments
@@ -383,30 +340,26 @@ class ServingSpec extends SparkSpec {
     val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
     val buffer = entries.filter(col("epoch") >= 2000)
     val driver = ServingOverlay.fromDataFrame(buffer)
-    val dist = DistributedServingOverlay.fromDataFrame(buffer, idx)
     val batch = queries.toSeq
     for {
       nprobe <- Seq(2, Int.MaxValue)
       f <- Seq(ServingFilter.none, ServingFilter(sampleP = Some(60)))
     } {
       val wantByQ = batch.map { case (qid, qv) =>
-        qid -> idx.searchWithOverlay(qv, 7, nprobe, driver, f).toSeq
+        qid -> idx.search(qv, 7, nprobe, f, Some(driver)).toSeq
       }.toMap
-      val gotDriver = idx.searchBatch(batch, 7, nprobe, driver, f)
-      val gotDist = idx.searchBatch(batch, 7, nprobe, dist, f)
+      val gotDriver = idx.searchBatch(batch, 7, nprobe, f, Some(driver))
       batch.foreach { case (qid, _) =>
         assert(gotDriver(qid).toSeq === wantByQ(qid),
           s"driver batch nprobe=$nprobe f=$f q=$qid")
-        assert(gotDist(qid).toSeq === wantByQ(qid),
-          s"dist batch nprobe=$nprobe f=$f q=$qid")
       }
     }
-    driver.destroy(); dist.destroy(); idx.unpersist()
+    driver.destroy(); idx.unpersist()
     entries.unpersist()
     Segments.deleteDir(dir0)
   }
 
-  test("batch x distributed overlay: a fresh insert into a centroid with an EMPTY stored list is returned (probed set never derived from stored blocks)") {
+  test("overlay: a fresh insert into a centroid with an EMPTY stored list is returned by search, searchBatch and the local tier (probed set never derived from stored blocks)") {
     // stored world: one vector, all in centroid 0; centroid 1 exists in
     // the layout but holds NO stored rows
     val stored = Seq((1L, Seq(1.0, 0.0)))
@@ -415,79 +368,33 @@ class ServingSpec extends SparkSpec {
     val c = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "cv")
     val idx = ServingIndex.build(stored, c, "ip",
       idCol = "vec_id", vecCol = "vec")
+    val local = idx.toLocal()
     // buffer: a fresh insert assigned to the EMPTY centroid 1
     val buffer = Seq((5L, 1L, false, 1L, Seq(0.0, 1.0)))
       .toDF("vec_id", "epoch", "deleted", "centroid_id", "vec")
-    val dist = DistributedServingOverlay.fromDataFrame(buffer, idx)
+    val overlay = ServingOverlay.fromDataFrame(buffer)
     val q = Array(0.0f, 1.0f)
-    // single-request path finds it
-    val single = idx.searchWithOverlay(q, 2, 2, dist, ServingFilter.none)
-    assert(single.map(_._1).toSeq === Seq(5L, 1L))
-    // the batch path must agree — the task for centroid 1 has an empty
-    // stored block array, so a stored-derived probed set would silently
-    // drop the overlay winner (read-your-writes violation)
-    val batch = idx.searchBatch(Seq((0L, q)), 2, 2, dist, ServingFilter.none)
-    assert(batch(0L).toSeq === single.toSeq)
-    dist.destroy()
+    // nprobe 2: both lists probed, the winner ranks above the stored row
+    // on every path
+    assert(idx.search(q, 2, 2, overlay = Some(overlay)).map(_._1).toSeq
+      === Seq(5L, 1L))
+    assert(idx.searchBatch(Seq((0L, q)), 2, 2, overlay = Some(overlay))(0L)
+      .map(_._1).toSeq === Seq(5L, 1L))
+    assert(local.search(q, 2, 2, overlay = Some(overlay)).map(_._1).toSeq
+      === Seq(5L, 1L))
+    // nprobe 1: only the EMPTY list is probed, so no stored row is a
+    // candidate — the probe task for centroid 1 sees an empty block
+    // array, and a stored-derived probed set would silently drop the
+    // overlay winner (read-your-writes violation)
+    assert(idx.probe(q, 1) === Seq(1L))
+    assert(idx.search(q, 2, 1, overlay = Some(overlay)).toSeq
+      === Seq((5L, 1.0)))
+    assert(idx.searchBatch(Seq((0L, q)), 2, 1, overlay = Some(overlay))(0L)
+      .toSeq === Seq((5L, 1.0)))
+    assert(local.search(q, 2, 1, overlay = Some(overlay)).toSeq
+      === Seq((5L, 1.0)))
+    overlay.destroy()
     idx.unpersist()
-  }
-
-  test("distributed overlay: composite filter, tenant-changing upsert, index ownership") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dist-overlay-filter-").toString
-    try {
-      import graft.segments.Segments
-      // same trap fixture as the driver-overlay composite test: id 2's
-      // buffered version changes tenant (stored passes the filter, live
-      // must not), id 9 inserted under the wanted tenant
-      val stored = Seq(
-        (1L, 11L, 100L, false, 0L, Seq(1.0, 0.0), "t1", Seq(3L)),
-        (2L, 12L, 100L, false, 0L, Seq(0.9, 0.1), "t1", Seq(3L)),
-        (3L, 13L, 100L, false, 0L, Seq(0.8, 0.2), "t2", Seq(5L)))
-        .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id",
-          "vec", "tenant", "tags")
-      Segments.writeSegment(stored, dir, "delta-000", isStable = false)
-      val c = Seq((0L, Seq(0.5, 0.5))).toDF("cid", "cv")
-      val all = Segments.readSegments(spark, dir)
-      val idx = ServingIndex.build(all.filter(!col("deleted")), c, "ip",
-        idCol = "vec_id", vecCol = "vec",
-        tenantCol = Some("tenant"), tagsCol = Some("tags"))
-      val buffer = Seq(
-        (2L, 12L, 200L, false, 0L, Seq(0.95, 0.0), "t2", Seq(5L)),
-        (9L, 19L, 200L, false, 0L, Seq(0.7, 0.0), "t1", Seq(3L)))
-        .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id",
-          "vec", "tenant", "tags")
-      val dist = DistributedServingOverlay.fromDataFrame(buffer, idx,
-        tenantCol = Some("tenant"), tagsCol = Some("tags"))
-      val got = idx.searchWithOverlay(Array(1.0f, 0.0f), 10, 1, dist,
-        ServingFilter(tenant = Some("t1")))
-      assert(got.map(_._1).toSeq === Seq(1L, 9L))
-      // searchAllDF routes through the distributed path
-      val viaDf = idx.searchAllDF(spark, Seq((0L, Array(1.0f, 0.0f))), 10, 1,
-          filter = ServingFilter(tenant = Some("t1")),
-          distOverlay = Some(dist))
-        .select("vec_id").as[Long].collect().toSeq
-      assert(viaDf === Seq(1L, 9L))
-      // attribute-blind overlay rejects an attribute filter explicitly
-      val blind = DistributedServingOverlay.fromDataFrame(buffer, idx)
-      intercept[IllegalArgumentException] {
-        idx.searchWithOverlay(Array(1.0f, 0.0f), 10, 1, blind,
-          ServingFilter(tenant = Some("t1")))
-      }
-      // an overlay is bound to the index whose partitions it mirrors
-      val other = ServingIndex.build(all.filter(!col("deleted")), c, "ip",
-        idCol = "vec_id", vecCol = "vec")
-      intercept[IllegalArgumentException] {
-        other.searchWithOverlay(Array(1.0f, 0.0f), 10, 1, dist,
-          ServingFilter.none)
-      }
-      // the shadow bound is a force-flush signal, not a silent truncation
-      intercept[OverlayCapacityExceeded] {
-        DistributedServingOverlay.fromDataFrame(buffer, idx,
-          maxShadowRows = 1L)
-      }
-      idx.unpersist(); other.unpersist(); dist.destroy(); blind.destroy()
-    } finally graft.segments.Segments.deleteDir(dir)
   }
 
   test("overlay + filter: composite QueryRequest with read-your-writes applies the predicate to BOTH tiers") {
@@ -519,8 +426,8 @@ class ServingSpec extends SparkSpec {
           "vec", "tenant", "tags")
       val overlay = ServingOverlay.fromDataFrame(buffer,
         tenantCol = Some("tenant"), tagsCol = Some("tags"))
-      val got = idx.searchWithOverlay(Array(1.0f, 0.0f), 10, 1, overlay,
-        ServingFilter(tenant = Some("t1")))
+      val got = idx.search(Array(1.0f, 0.0f), 10, 1,
+        ServingFilter(tenant = Some("t1")), Some(overlay))
       // t1 live world: stored 1 (1.0), buffered 9 (0.7); stored 2 is
       // shadowed and its live version is t2; stored 3 is t2
       assert(got.map(_._1).toSeq === Seq(1L, 9L))
@@ -534,8 +441,8 @@ class ServingSpec extends SparkSpec {
       // is an explicit rejection, not a silent empty result
       val blindOverlay = ServingOverlay.fromDataFrame(buffer)
       intercept[IllegalArgumentException] {
-        idx.searchWithOverlay(Array(1.0f, 0.0f), 10, 1, blindOverlay,
-          ServingFilter(tenant = Some("t1")))
+        idx.search(Array(1.0f, 0.0f), 10, 1,
+          ServingFilter(tenant = Some("t1")), Some(blindOverlay))
       }
       idx.unpersist(); overlay.destroy(); blindOverlay.destroy()
     } finally graft.segments.Segments.deleteDir(dir)
@@ -563,7 +470,7 @@ class ServingSpec extends SparkSpec {
       val overlay1 = ServingOverlay.fromDataFrame(
         entries.filter(col("epoch") >= cut))
       val qv = queries.head._2
-      val before = idx1.searchWithOverlay(qv, 10, Int.MaxValue, overlay1)
+      val before = idx1.search(qv, 10, Int.MaxValue, overlay = Some(overlay1))
         .toSeq
       // flush: buffer becomes a segment, the index refreshes from the
       // store, the overlay generation is drained (destroyed) and replaced
@@ -574,14 +481,14 @@ class ServingSpec extends SparkSpec {
       val idx2 = ServingIndex.buildStored(spark, dir, cents, "ip")
       val overlay2 = ServingOverlay.fromDataFrame(
         entries.filter(lit(false)))
-      val after = idx2.searchWithOverlay(qv, 10, Int.MaxValue, overlay2)
+      val after = idx2.search(qv, 10, Int.MaxValue, overlay = Some(overlay2))
         .toSeq
       assert(after === before)
       // plain search (no overlay) over the flushed store agrees too
       assert(idx2.search(qv, 10, Int.MaxValue).toSeq === before)
       // the destroyed generation cannot be silently reused
       intercept[Exception] {
-        idx2.searchWithOverlay(qv, 10, Int.MaxValue, overlay1)
+        idx2.search(qv, 10, Int.MaxValue, overlay = Some(overlay1))
       }
       idx2.unpersist(); overlay2.destroy()
       entries.unpersist()

@@ -198,10 +198,11 @@ class IngestPipelineSpec extends SparkSpec {
   test("streamed ingest feeds the serving tier: stored index + in-flight overlay serve the live world (T5 x Q10)") {
     // the full write->serve loop: wave 1 flushed BY THE STREAM, wave 2
     // still in flight; the serving tier = stored index over the stream's
-    // segments + an overlay (driver AND distributed) over the buffer.
-    // Both must serve exactly the full-log live world; after the stream
-    // drains wave 2 and the index rebuilds, a PLAIN search serves the
-    // same world and the drained overlay generation is destroyed.
+    // segments + an overlay over the buffer, through the job path and
+    // the local tier. Both must serve exactly the full-log live world;
+    // after the stream drains wave 2 and the index rebuilds, a PLAIN
+    // search serves the same world and the drained overlay generation
+    // is destroyed.
     val src = tmp("graft-serve-src-")
     val base = tmp("graft-serve-base-")
     val ckpt = tmp("graft-serve-ckpt-")
@@ -213,8 +214,6 @@ class IngestPipelineSpec extends SparkSpec {
     val buffer = rows.filter(col("epoch") >= 2000)
     val idx = graft.index.ServingIndex.buildStored(spark, base, cents, "ip")
     val ovDriver = graft.index.ServingOverlay.fromDataFrame(buffer)
-    val ovDist =
-      graft.index.DistributedServingOverlay.fromDataFrame(buffer, idx)
     // ground truth: LWW over the WHOLE log, live rows only, exact dot
     val liveRows = graft.ingest.MutationLog
       .live(graft.ingest.MutationLog.deterministicLog(emb))
@@ -235,18 +234,16 @@ class IngestPipelineSpec extends SparkSpec {
     val local = idx.toLocal()
     queries.foreach { qv =>
       val want = expectTop(qv, 10)
-      assert(idx.searchWithOverlay(qv, 10, Int.MaxValue, ovDriver).toSeq
-        === want)
-      assert(idx.searchWithOverlay(qv, 10, Int.MaxValue, ovDist,
-        graft.index.ServingFilter.none).toSeq === want)
-      assert(local.searchWithOverlay(qv, 10, Int.MaxValue, ovDriver).toSeq
-        === want)
+      assert(idx.search(qv, 10, Int.MaxValue, overlay = Some(ovDriver))
+        .toSeq === want)
+      assert(local.search(qv, 10, Int.MaxValue, overlay = Some(ovDriver))
+        .toSeq === want)
     }
     // flush: the stream drains wave 2; rebuild; plain search = same world
     rows.filter(col("epoch") >= 2000).coalesce(1).write.mode("append")
       .parquet(src)
     IngestPipeline.runOnce(spark, src, base, ckpt)
-    ovDriver.destroy(); ovDist.destroy(); idx.unpersist()
+    ovDriver.destroy(); idx.unpersist()
     val idx2 = graft.index.ServingIndex.buildStored(spark, base, cents, "ip")
     val local2 = idx2.toLocal()
     queries.foreach { qv =>
