@@ -4,11 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType,
+  StringType, StructField, StructType}
 
-import graft.functions.VectorFunctions
 import graft.index.{AdaptiveServingIndex, HnswHotCache, Ivf, ServingIndex}
 import graft.ingest.IngestGuard
 import graft.segments.Segments
@@ -110,23 +110,113 @@ final class Graft private (
     * the patch gate fails — see [[patchServing]]). Returns the epoch
     * range `[first, last]` the batch landed under.
     *
-    * The batch is RPC-bounded (≤ `max_upsert_batch` rows), so it is
-    * collected to the driver ONCE, and those rows feed the epoch range,
-    * the WAL records, the delta segment — written on the driver by
-    * [[graft.segments.Segments.flushRows]], no Spark plan — and the
-    * serving patch. Writes of unbounded size keep Spark writers: stream
-    * micro-batches ([[startStream]], `IngestPipeline.flushBatch`), the
-    * WAL recovery segment, [[compact]] and [[rebuild]].
+    * The batch is read with ONE Spark job, which also runs the guard
+    * ([[graft.ingest.IngestGuard.collectBatch]]; a second job only for
+    * a batch skewed onto few partitions): a batch over a size cap is
+    * rejected without being pulled onto the driver, and a null
+    * key (`id`, the delete flag's column, a brought `epoch`) is
+    * rejected before any epoch is reserved or WAL byte written. Every
+    * later step runs on the driver over the collected rows — epoch
+    * numbering, `id_hash`, nearest-centroid assignment ([[prepare]]),
+    * the WAL records, the delta segment
+    * ([[graft.segments.Segments.flushRows]]) — and only the serving
+    * patch runs a job. Writes of unbounded size keep Spark writers:
+    * stream micro-batches ([[startStream]], `IngestPipeline.flushBatch`),
+    * the WAL recovery segment, [[compact]] and [[rebuild]].
     */
   def upsert(batch: DataFrame): (Long, Long) = {
-    val stats = IngestGuard.validateBatch(batch, config.ingestLimits,
+    val in = IngestGuard.collectBatch(batch, config.ingestLimits,
       vecCol = "vec",
       tagsCol = if (batch.columns.contains("tags")) Some("tags") else None,
-      idCol = Some("id"))
-    val prepared = prepare(batch, stats.rows)
-    val full = prepared.collect()
-    require(full.nonEmpty, "empty upsert batch")
-    val rows = batchRows(prepared.schema, full)
+      idCol = Some("id"), notNull = Graft.keyColumns(batch.schema))
+    require(in.nonEmpty, "empty upsert batch")
+    val (schema, full) = prepare(batch, in)
+    commit(schema, full)
+  }
+
+  /** Tombstone a set of ids (W5 DELETE): an upsert of null-vector rows. */
+  def delete(ids: DataFrame): (Long, Long) =
+    upsert(ids.select(col("id"),
+      lit(null).cast("array<double>").as("vec"),
+      lit(true).as("deleted")))
+
+  /** Normalize the collected rows of `batch` (its schema, input order)
+    * to the engine's mutation shape, on the driver. Columns follow
+    * `withColumn`: `deleted` (from `op == "DELETE"` when only `op` is
+    * present, else false), `epoch`, `id_hash`, `vec_id` and
+    * `centroid_id` replace a same-named column in place or are
+    * appended, in that order.
+    *
+    * Without an `epoch` column the batch reserves `n` epochs and row r
+    * gets `base + rank`, its rank in a STABLE sort by id in Spark's
+    * string order (UTF-8 bytes), and the rows come back in that order;
+    * with one, they keep input order. `id_hash` (and `vec_id`) is
+    * seed-0 xxhash64 of the id's UTF-8 bytes, as
+    * [[graft.functions.VectorFunctions.hashId]] computes it;
+    * `centroid_id` is [[graft.functions.expr.NearestIndex]]'s argmin
+    * over the live layout, -1 for a null `vec`.
+    */
+  private def prepare(batch: DataFrame,
+      in: Array[org.apache.spark.sql.catalyst.InternalRow])
+      : (StructType, Array[Row]) = {
+    val src = batch.schema
+    val vi = src.fieldIndex("vec")
+    val ii = src.fieldIndex("id")
+    def at(c: String) = Some(src.fieldNames.indexOf(c)).filter(_ >= 0)
+    val ei = at("epoch")
+    val di = at("deleted")
+    val oi = if (di.isEmpty) at("op") else None
+    val l = layoutFor(if (ei.isDefined) batch else batch.coalesce(1),
+      in.count(!_.isNullAt(vi)).toLong)
+    val n = in.length
+    val ids = in.map(_.getUTF8String(ii))
+    val (order, epochOf) = ei match {
+      case Some(e) => (Array.range(0, n), (i: Int, _: Int) => in(i).getLong(e))
+      case None =>
+        val base = reserveEpochs(n)
+        ((0 until n).sortWith((a, b) => ids(a).binaryCompare(ids(b)) < 0)
+          .toArray, (_: Int, rank: Int) => base + rank)
+    }
+    var schema = src
+    def put(f: StructField): Unit = schema =
+      if (schema.fieldNames.contains(f.name))
+        StructType(schema.map(x => if (x.name == f.name) f else x))
+      else schema.add(f)
+    if (di.isEmpty) put(StructField("deleted", BooleanType,
+      nullable = oi.exists(src(_).nullable)))
+    if (ei.isEmpty) put(StructField("epoch", LongType, nullable = false))
+    Seq("id_hash", "vec_id", "centroid_id")
+      .foreach(c => put(StructField(c, LongType, nullable = false)))
+    val Seq(dOut, eOut, hOut, vOut, cOut) = Seq("deleted", "epoch",
+      "id_hash", "vec_id", "centroid_id").map(schema.fieldIndex)
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(src)
+    val nearest = new graft.functions.expr.NearestIndex.Kernel(l.matrix,
+      src(vi).dataType)
+    val delete = org.apache.spark.unsafe.types.UTF8String.fromString("DELETE")
+    val rows = order.zipWithIndex.map { case (i, rank) =>
+      val r = in(i)
+      val out = new Array[Any](schema.length)
+      toScala(r).asInstanceOf[Row].toSeq.copyToArray(out)
+      out(dOut) = di.map(r.getBoolean)
+        .getOrElse(oi.exists(r.getUTF8String(_) == delete))
+      out(eOut) = epochOf(i, rank)
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashUTF8String(ids(i), 0L)
+      out(hOut) = h
+      out(vOut) = h
+      out(cOut) = if (r.isNullAt(vi)) -1L else l.cids(nearest(r.getArray(vi)))
+      new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
+    }
+    (schema, rows)
+  }
+
+  /** Admit a prepared batch: WAL, delta segment, flushed frontier,
+    * serving patch.
+    */
+  private[graft] def commit(schema: StructType,
+      full: Array[Row]): (Long, Long) = {
+    val rows = batchRows(schema, full)
     val lo = rows.iterator.map(_.epoch).min
     val hi = rows.iterator.map(_.epoch).max
     // a batch that BRINGS its own epoch column can land above the
@@ -138,56 +228,26 @@ final class Graft private (
     nextEpoch.getAndUpdate(c => math.max(c, hi + 1))
     appendWal(rows)
     Segments.flushRows(spark, baseDir,
-      f"delta-${nextBatch.getAndIncrement()}%05d", prepared.schema,
+      f"delta-${nextBatch.getAndIncrement()}%05d", schema,
       full.toSeq, maxRowsPerSegment = config.segment.targetSizeVectors)
     advanceFrontier(hi)
     patchServing(rows, lo, hi)
     (lo, hi)
   }
 
-  /** Tombstone a set of ids (W5 DELETE): an upsert of null-vector rows. */
-  def delete(ids: DataFrame): (Long, Long) =
-    upsert(ids.select(col("id"),
-      lit(null).cast("array<double>").as("vec"),
-      lit(true).as("deleted")))
+  /** Reserve `n` auto-assigned epochs; returns the first. */
+  private[graft] def reserveEpochs(n: Long): Long = nextEpoch.getAndAdd(n)
 
-  /** Normalize a user batch of `n` rows (the guard's count) to the
-    * engine's mutation shape. Epochs, when absent, are assigned
-    * monotonically; the batch is RPC-bounded
-    * (≤ max_upsert_batch), so the single-partition row_number is
-    * driver-cheap and deterministic (ordered by id).
+  /** The layout for assignment: the store's, or — when absent —
+    * trained on the non-null `vec`s of `train` (the first batch; `nVec`
+    * of them, nlist clamped to the data) and persisted, so every later
+    * batch and every reopen assigns against the SAME layout (B1 —
+    * retraining is [[rebuild]]'s job).
     */
-  private def prepare(batch: DataFrame, n: Long): DataFrame = {
-    val withDeleted =
-      if (batch.columns.contains("deleted")) batch
-      else if (batch.columns.contains("op"))
-        batch.withColumn("deleted", col("op") === "DELETE")
-      else batch.withColumn("deleted", lit(false))
-    val withEpoch =
-      if (withDeleted.columns.contains("epoch")) withDeleted
-      else {
-        val base = nextEpoch.getAndAdd(n)
-        withDeleted.coalesce(1).withColumn("epoch",
-          lit(base) + row_number().over(Window.orderBy("id")) - 1)
-      }
-    val hashed = withEpoch
-      .withColumn("id_hash", VectorFunctions.hashId(col("id")))
-      .withColumn("vec_id", col("id_hash"))
-    val l = layoutFor(hashed)
-    Ivf.assignCollected(hashed, l.cids, l.matrix, vecCol = "vec")
-      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
-  }
-
-  /** The layout for assignment: the store's, trained on the first
-    * vector-carrying batch when absent (nlist clamped to the data),
-    * persisted so every later batch and every reopen assigns against
-    * the SAME layout (B1 — retraining is [[rebuild]]'s job).
-    */
-  private def layoutFor(batch: DataFrame): Graft.Layout =
+  private[graft] def layoutFor(train: DataFrame, nVec: Long): Graft.Layout =
     layout().getOrElse {
-      val vecs = batch.filter(col("vec").isNotNull)
+      val vecs = train.filter(col("vec").isNotNull)
         .select(col("vec").as("embedding"))
-      val nVec = vecs.count()
       require(nVec > 0,
         "first batch carries no vectors — cannot train the centroid layout")
       trainCentroids(vecs, nVec).write.mode("overwrite")
@@ -1798,8 +1858,24 @@ object Graft {
   /** A collected centroid layout and the part-file names it was read
     * from (its memo key).
     */
-  private final case class Layout(key: Seq[String], cids: Array[Long],
+  private[graft] final case class Layout(key: Seq[String], cids: Array[Long],
       matrix: Array[Array[Double]])
+
+  /** The columns an upsert batch keys on, which must hold no null:
+    * `id`, the column a row's delete flag is read from (`deleted`, else
+    * `op`) and a brought `epoch`. Their types are checked here.
+    */
+  private def keyColumns(schema: StructType): Seq[String] = {
+    def typed(c: String, t: DataType): Option[String] =
+      schema.find(_.name == c).map { f =>
+        require(f.dataType == t,
+          s"upsert batch: column '$c' must be ${t.simpleString}, " +
+            s"got ${f.dataType.simpleString}")
+        c
+      }
+    val flag = typed("deleted", BooleanType).orElse(typed("op", StringType))
+    typed("id", StringType).toSeq ++ flag ++ typed("epoch", LongType)
+  }
 
   /** One collected row of a prepared upsert batch (`vec` null when
     * the row carries none).

@@ -27,11 +27,7 @@ case class NearestIndex(child: Expression, matrix: Array[Array[Double]])
     extends UnaryExpression {
 
   // c·c per codeword, precomputed once (sequential order, same as oracle)
-  private lazy val norms: Array[Double] = matrix.map { row =>
-    var s = 0.0; var i = 0
-    while (i < row.length) { s += row(i) * row(i); i += 1 }
-    s
-  }
+  private lazy val norms: Array[Double] = NearestIndex.norms(matrix)
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (NumericArrays.ok(child.dataType)) TypeCheckResult.TypeCheckSuccess
@@ -40,64 +36,11 @@ case class NearestIndex(child: Expression, matrix: Array[Array[Double]])
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val read = NumericArrays.reader(child.dataType)
+  @transient private lazy val kernel =
+    new NearestIndex.Kernel(matrix, child.dataType)
 
-  // scratch row buffer, reused across rows of one task (grown on demand):
-  // the input vector is read out of ArrayData ONCE per row instead of once
-  // per (row, centroid) — at nlist=1024 that is 1024x fewer virtual reads.
-  // The float->double element conversion is exact, so buffering does not
-  // change any computed value.
-  @transient private var evalBuf: Array[Double] = _
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (evalBuf == null || evalBuf.length < n) evalBuf = new Array[Double](n)
-    val buf = evalBuf
-    var vv = 0.0
-    var i = 0
-    while (i < n) { val x = read(v, i); buf(i) = x; vv += x * x; i += 1 }
-    var best = -1
-    var bestD = Double.PositiveInfinity
-    // four interleaved accumulator chains: each (row, centroid) dot is
-    // still the SAME sequential sum over i (bit-identical d values); the
-    // interleave only hides FP-add latency across independent centroids.
-    // Candidates are compared in ascending-c order (d0..d3 in sequence),
-    // so the strict-< lowest-index tie-break is unchanged.
-    var c = 0
-    val lim4 = matrix.length - 3
-    while (c < lim4) {
-      val r0 = matrix(c); val r1 = matrix(c + 1)
-      val r2 = matrix(c + 2); val r3 = matrix(c + 3)
-      var vc0 = 0.0; var vc1 = 0.0; var vc2 = 0.0; var vc3 = 0.0
-      i = 0
-      while (i < n) {
-        val x = buf(i)
-        vc0 += x * r0(i); vc1 += x * r1(i)
-        vc2 += x * r2(i); vc3 += x * r3(i)
-        i += 1
-      }
-      val d0 = vv - 2 * vc0 + norms(c)
-      if (d0 < bestD) { bestD = d0; best = c }
-      val d1 = vv - 2 * vc1 + norms(c + 1)
-      if (d1 < bestD) { bestD = d1; best = c + 1 }
-      val d2 = vv - 2 * vc2 + norms(c + 2)
-      if (d2 < bestD) { bestD = d2; best = c + 2 }
-      val d3 = vv - 2 * vc3 + norms(c + 3)
-      if (d3 < bestD) { bestD = d3; best = c + 3 }
-      c += 4
-    }
-    while (c < matrix.length) {
-      val row = matrix(c)
-      var vc = 0.0
-      i = 0
-      while (i < n) { vc += buf(i) * row(i); i += 1 }
-      val d = vv - 2 * vc + norms(c)
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
+  override def nullSafeEval(input: Any): Any =
+    kernel(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val mat = ctx.addReferenceObj("mat", matrix, "double[][]")
@@ -172,6 +115,87 @@ case class NearestIndex(child: Expression, matrix: Array[Array[Double]])
   }
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
+}
+
+object NearestIndex {
+
+  /** c·c per row of `matrix`, each a sequential double sum. */
+  def norms(matrix: Array[Array[Double]]): Array[Double] = matrix.map { row =>
+    var s = 0.0; var i = 0
+    while (i < row.length) { s += row(i) * row(i); i += 1 }
+    s
+  }
+
+  /** The argmin [[NearestIndex]] evaluates, for callers that hold a
+    * catalyst array of `arrayType` outside a plan (the facade's upsert
+    * assigns its collected rows with it): index of the `matrix` row
+    * nearest the input in expanded-form L2, ties → lowest index, -1 for
+    * an empty matrix. Owns a scratch buffer, so one kernel serves one
+    * thread.
+    */
+  final class Kernel(matrix: Array[Array[Double]], arrayType: DataType) {
+    private val norms = NearestIndex.norms(matrix)
+    private val read = NumericArrays.reader(arrayType)
+    // the input vector is read out of ArrayData ONCE per row instead of
+    // once per (row, centroid) — at nlist=1024 that is 1024x fewer
+    // virtual reads; the float->double conversion is exact, so
+    // buffering does not change any computed value
+    private var buf = new Array[Double](0)
+
+    def apply(v: ArrayData): Int = {
+      val n = v.numElements()
+      if (buf.length < n) buf = new Array[Double](n)
+      var i = 0
+      while (i < n) { buf(i) = read(v, i); i += 1 }
+      argmin(buf, n)
+    }
+
+    private def argmin(buf: Array[Double], n: Int): Int = {
+      var vv = 0.0
+      var i = 0
+      while (i < n) { vv += buf(i) * buf(i); i += 1 }
+      var best = -1
+      var bestD = Double.PositiveInfinity
+      // four interleaved accumulator chains: each (row, centroid) dot is
+      // still the SAME sequential sum over i (bit-identical d values); the
+      // interleave only hides FP-add latency across independent centroids.
+      // Candidates are compared in ascending-c order (d0..d3 in sequence),
+      // so the strict-< lowest-index tie-break is unchanged.
+      var c = 0
+      val lim4 = matrix.length - 3
+      while (c < lim4) {
+        val r0 = matrix(c); val r1 = matrix(c + 1)
+        val r2 = matrix(c + 2); val r3 = matrix(c + 3)
+        var vc0 = 0.0; var vc1 = 0.0; var vc2 = 0.0; var vc3 = 0.0
+        i = 0
+        while (i < n) {
+          val x = buf(i)
+          vc0 += x * r0(i); vc1 += x * r1(i)
+          vc2 += x * r2(i); vc3 += x * r3(i)
+          i += 1
+        }
+        val d0 = vv - 2 * vc0 + norms(c)
+        if (d0 < bestD) { bestD = d0; best = c }
+        val d1 = vv - 2 * vc1 + norms(c + 1)
+        if (d1 < bestD) { bestD = d1; best = c + 1 }
+        val d2 = vv - 2 * vc2 + norms(c + 2)
+        if (d2 < bestD) { bestD = d2; best = c + 2 }
+        val d3 = vv - 2 * vc3 + norms(c + 3)
+        if (d3 < bestD) { bestD = d3; best = c + 3 }
+        c += 4
+      }
+      while (c < matrix.length) {
+        val row = matrix(c)
+        var vc = 0.0
+        i = 0
+        while (i < n) { vc += buf(i) * row(i); i += 1 }
+        val d = vv - 2 * vc + norms(c)
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      best
+    }
+  }
 }
 
 /** S8 `pq_adc_score(codes, lut)`: Σ_j lut(j)(codes(j)), summed in subspace

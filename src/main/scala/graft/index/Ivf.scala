@@ -67,14 +67,6 @@ object Ivf {
   def assign(data: DataFrame, centroids: DataFrame,
       vecCol: String = "embedding"): DataFrame = {
     val (cids, matrix) = collectCentroids(centroids)
-    assignCollected(data, cids, matrix, vecCol)
-  }
-
-  /** [[assign]] against a layout already collected by
-    * [[collectCentroids]] (no centroid read, no job).
-    */
-  def assignCollected(data: DataFrame, cids: Array[Long],
-      matrix: Array[Array[Double]], vecCol: String): DataFrame = {
     val idx = IndexExpressions.nearestIndex(col(vecCol), matrix)
     data.withColumn("centroid_id",
       element_at(typedlit(cids.toSeq), idx + 1))

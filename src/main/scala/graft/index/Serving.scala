@@ -618,6 +618,10 @@ final class ServingIndex private (
         parts.toIndexedSeq)
     val byCid = scala.collection.mutable.LongMap.empty[ListBlock]
     fetched.foreach(_.foreach(b => byCid(b.cid) = b))
+    // an admitted list that holds no rows has no block to fetch: cache
+    // it empty, so a request probing it still serves locally
+    adm.foreach(c => if (listSizes.getOrElse(c, 0) == 0)
+      byCid(c) = ListBlock(c, Array.emptyLongArray, Array.emptyFloatArray, dim))
     new LocalServingIndex(this, byCid, bytes)
   }
 
@@ -802,7 +806,8 @@ final class LocalServingIndex private[index] (
       return owner.search(q, k, nprobe, filter, overlay)
     }
     localHits.incrementAndGet()
-    val stored = ServingIndex.scanTopK(probed.iterator.map(cached(_)), q,
+    val stored = ServingIndex.scanTopK(
+      probed.iterator.map(cached(_)).filter(_.ids.nonEmpty), q,
       kk, owner.metric, owner.asc, probed.toSet, filter,
       overlay.fold(ServingIndex.noShadow)(_.shadowed),
       owner.postingHitAcc, owner.postingMissAcc)

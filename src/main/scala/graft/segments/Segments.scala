@@ -835,7 +835,8 @@ object Segments {
     *  - nothing is visible until ONE catalog append publishes them all.
     *
     * Files land at `segment_id=S/centroid_id=C/part-…parquet`, one per
-    * list, written by Spark's own `ParquetWriteSupport` under the
+    * list, written concurrently on a bounded pool the call owns
+    * ([[DriverFileThreads]] writers) by Spark's own `ParquetWriteSupport` under the
     * session's parquet write settings, so footers, Spark schema metadata
     * and list encoding are those of [[writeSegment]]. Each file's
     * `id_hash` bloom is sized to that file's row count (the fpp is
@@ -918,10 +919,12 @@ object Segments {
     fs.initialize(java.net.URI.create("file:///"), conf)
     try {
       fs.mkdirs(new HPath(path))
-      rows.groupBy { r =>
+      val lists = rows.groupBy { r =>
         require(!r.isNullAt(ci), s"flushRows: null centroid_id in $segmentId")
         r.getLong(ci)
-      }.foreach { case (cid, rs) =>
+      }.toSeq
+      // one file per list, written concurrently on a pool this call owns
+      Parallelism.parRequests(lists, DriverFileThreads) { case (cid, rs) =>
         val file = new HPath(s"$path/centroid_id=$cid/part-00000-" +
           s"${java.util.UUID.randomUUID()}.c000${codec.getExtension}.parquet")
         val w = new InternalRowParquetBuilder(new FsOutputFile(fs, file))
@@ -1397,7 +1400,7 @@ object Segments {
     * id_hash to the indices of the `queries` that asked for it. The
     * pruned files ([[pointLookupFiles]]) are read straight through
     * parquet-mr, driver-side on a small pool the call owns
-    * ([[LookupReadThreads]] readers), projected to `id_hash`, `epoch`,
+    * ([[DriverFileThreads]] readers), projected to `id_hash`, `epoch`,
     * `deleted` and `vec` (`array<float>` or `array<double>`), with an
     * `id_hash IN (…)` filter that skips row groups (stats, dictionary,
     * bloom), pages (column index) and records that cannot match. No
@@ -1475,7 +1478,7 @@ object Segments {
     // files read concurrently on a small bounded pool (each read is a
     // footer plus a few pages of IO); per-file winners merge by epoch
     val latest = new java.util.HashMap[Long, LookupWinner](hashes.length * 2)
-    Parallelism.parRequests(files, LookupReadThreads)(readFile).foreach(
+    Parallelism.parRequests(files, DriverFileThreads)(readFile).foreach(
       _.forEach { (h, w) =>
         val prev = latest.get(h)
         if (prev == null || w.epoch > prev.epoch) latest.put(h, w)
@@ -1489,11 +1492,12 @@ object Segments {
     }
   }
 
-  /** Concurrent file reads per scored point lookup. Measured on the
-    * facade benchmark's serve workload (4 vCPUs): 4 readers cut the
-    * 16-query batch door's phase 2 about 1.7x against one.
+  /** Concurrent driver-side file IO per call: the readers of a scored
+    * point lookup and the per-list writers of [[flushRows]]. Measured
+    * on the facade benchmark's serve workload (4 vCPUs): 4 readers cut
+    * the 16-query batch door's phase 2 about 1.7x against one.
     */
-  private val LookupReadThreads = 4
+  private val DriverFileThreads = 4
 
   private final case class LookupWinner(epoch: Long, scores: Array[Double])
 

@@ -1435,9 +1435,301 @@ class GraftFacadeSpec extends SparkSpec {
     val (hit, searchJobs) = jobsDuring(g.search(q, 3))
     assert(hit.head._1 === hashOf("j-170"))
     assert(searchJobs === 1, s"search after upsert submitted $searchJobs jobs")
-    // 5: the guard's aggregate, the batch collect and the serving patch,
-    // plus AQE stages (the segment write and the layout read run no job)
-    assert(upsertJobs <= 5, s"upsert submitted $upsertJobs jobs")
+    // 2: the input job (guard and collect in one) and the serving
+    // patch; epochs, hashes, assignment, the WAL, the segment write and
+    // the layout read run on the driver
+    assert(upsertJobs <= 2, s"upsert submitted $upsertJobs jobs")
+    g.close()
+    Segments.deleteDir(base)
+  }
+
+  /** The DataFrame prepare the facade ran before its driver kernels
+    * (coalesce(1) + row_number epochs, `hashId`, the `nearestIndex`
+    * projection), committed through the same WAL / flush / patch path:
+    * the oracle of the collect-first parity spec.
+    */
+  private def oracleUpsert(g: Graft, batch: org.apache.spark.sql.DataFrame)
+      : (Long, Long) = {
+    val stats = graft.ingest.IngestGuard.validateBatch(batch,
+      g.config.ingestLimits, vecCol = "vec",
+      tagsCol = if (batch.columns.contains("tags")) Some("tags") else None,
+      idCol = Some("id"))
+    val withDeleted =
+      if (batch.columns.contains("deleted")) batch
+      else if (batch.columns.contains("op"))
+        batch.withColumn("deleted", col("op") === "DELETE")
+      else batch.withColumn("deleted", lit(false))
+    val withEpoch =
+      if (withDeleted.columns.contains("epoch")) withDeleted
+      else {
+        val base = g.reserveEpochs(stats.rows)
+        withDeleted.coalesce(1).withColumn("epoch", lit(base) +
+          row_number().over(org.apache.spark.sql.expressions.Window
+            .orderBy("id")) - 1)
+      }
+    val hashed = withEpoch
+      .withColumn("id_hash", graft.functions.VectorFunctions.hashId(col("id")))
+      .withColumn("vec_id", col("id_hash"))
+    val l = g.layoutFor(hashed, hashed.filter(col("vec").isNotNull).count())
+    val prepared = hashed
+      .withColumn("centroid_id", element_at(typedlit(l.cids.toSeq),
+        graft.functions.expr.IndexExpressions.nearestIndex(col("vec"),
+          l.matrix) + 1))
+      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
+    g.commit(prepared.schema, prepared.collect())
+  }
+
+  test("collect-first upsert: the driver kernels equal the DataFrame prepare (layouts, epochs, id_hash, centroid_id, row order, WAL bytes, descriptors, stored rows and footers)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(606)
+    def gv(): Seq[Double] = Seq.fill(mdim)(rnd.nextGaussian())
+    def frame(schema: StructType, parts: Int)(rows: Seq[Row]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, parts),
+        schema)
+    val id = StructField("id", StringType, nullable = false)
+    val dbl = StructField("vec", ArrayType(DoubleType, containsNull = false))
+    val flt = StructField("vec", ArrayType(FloatType, containsNull = false))
+    val tags = StructField("tags", ArrayType(IntegerType, containsNull = false))
+    val deleted = StructField("deleted", BooleanType, nullable = false)
+    val epoch = StructField("epoch", LongType, nullable = false)
+    val op = StructField("op", StringType, nullable = false)
+    // UTF-8 order differs from UTF-16 order: U+FFFD (EF BF BD) sorts
+    // before U+1F600 (F0 9F 98 80) in bytes, after it in chars
+    val tricky = Seq("\uFFFD", "\uD83D\uDE00", "k\uFFFD", "k\uD83D\uDE00",
+      "é", "z")
+    def f32(v: Seq[Double]) = v.map(_.toFloat)
+    // auto epochs, double vec, tombstones, a twice-carried id, tricky
+    // ids over four partitions: the first batch trains the layout on
+    // batch.coalesce(1)
+    val autoFirst = frame(StructType(Seq(id, dbl)), 4)(
+      (0 until 150).map(i => Row(s"a-$i", gv())) ++
+        tricky.map(t => Row(t, gv())) ++
+        (0 until 4).map(i => Row(s"t-$i", null)) ++
+        Seq(Row("a-7", gv())))
+    // explicit epochs + deleted + tags + float vec, an id at two epochs
+    val explicitDeleted = frame(StructType(Seq(epoch, id, flt, deleted, tags)), 3)(
+      (0 until 20).map(i => Row(5000L + i, s"a-$i", f32(gv()), false,
+        Seq(i, i + 1))) ++
+        (0 until 5).map(i => Row(5100L + i, s"a-${30 + i}", null, true, null)) ++
+        Seq(Row(5200L, "a-3", f32(gv()), false, Seq(7)),
+          Row(5201L, "\uFFFD", f32(gv()), false, Seq.empty[Int])))
+    // op form, auto epochs, tags, an id carried twice, tricky ids again
+    val autoOp = frame(StructType(Seq(id, op, dbl, tags)), 3)(
+      (0 until 12).map(i => Row(s"a-${40 + i}", "UPSERT", gv(), Seq(i))) ++
+        Seq(Row("a-41", "DELETE", null, null),
+          Row("a-41", "UPSERT", gv(), Seq(1)),
+          Row("\uD83D\uDE00", "DELETE", null, Seq.empty[Int])) ++
+        tricky.take(4).map(t => Row(t + "-2", "UPSERT", gv(), null)))
+    // explicit epochs in shuffled order first (the layout trains on the
+    // batch itself), then an auto-epoch op batch
+    val explicitFirst = frame(StructType(Seq(id, flt, epoch, op)), 4)(
+      scala.util.Random.shuffle((0 until 140).toList).map(i =>
+        Row(s"e-$i", f32(gv()), 10L + i, "UPSERT")) ++
+        Seq(Row("e-999", null, 9L, "DELETE")))
+    val autoDouble = frame(StructType(Seq(id, dbl)), 2)(
+      (0 until 30).map(i => Row(s"e-${i * 3}", gv())) ++ tricky.map(Row(_, gv())))
+    val scenarios = Seq(
+      "auto-epoch first" -> Seq(autoFirst, explicitDeleted, autoOp),
+      "explicit-epoch first" -> Seq(explicitFirst, autoDouble))
+    val conf = spark.sessionState.newHadoopConf()
+    def layoutBits(base: String) = {
+      val (cids, m) = graft.index.Ivf.collectCentroids(
+        spark.read.parquet(s"$base/centroids"))
+      (cids.toSeq, m.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq)
+    }
+    def walBytes(base: String) = new java.io.File(s"$base/wal").listFiles()
+      .filter(_.isFile).sortBy(_.getName)
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+      .toSeq
+    def descriptors(base: String) = Segments.catalogDescriptors(spark, base)
+      .map(d => d.copy(file_path = d.file_path.replace(base, ""),
+        created_at = null)).sortBy(_.segment_id)
+    // every list file of every segment, in directory order: its footer
+    // (parquet schema + key-value metadata) and its rows in file order
+    def stored(base: String) = Segments.catalogDescriptors(spark, base)
+      .sortBy(_.segment_id).flatMap { d =>
+        new java.io.File(new java.net.URI(
+            if (d.file_path.startsWith("file:")) d.file_path
+            else "file://" + d.file_path)).listFiles()
+          .filter(_.getName.startsWith("centroid_id=")).sortBy(_.getName)
+          .map { dir =>
+            val file = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+              .toSeq match { case Seq(f) => f }
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                new org.apache.hadoop.fs.Path(file.toURI), conf))
+            val footer =
+              try {
+                val m = r.getFooter.getFileMetaData
+                (m.getSchema.toString, m.getKeyValueMetaData.toString)
+              } finally r.close()
+            (d.segment_id, dir.getName, footer,
+              spark.read.parquet(file.getPath).collect().map(_.toString).toSeq)
+          }
+      }
+    scenarios.foreach { case (name, batches) =>
+      val (baseK, baseO) = (tmp(), tmp())
+      val (gk, go) = (Graft.open(spark, baseK, patchCfg("l2")),
+        Graft.open(spark, baseO, patchCfg("l2")))
+      batches.zipWithIndex.foreach { case (b, i) =>
+        val at = s"$name batch $i"
+        assert(gk.upsert(b) === oracleUpsert(go, b), at)
+        assert(layoutBits(baseK) === layoutBits(baseO), s"$at: layout")
+        assert(walBytes(baseK) === walBytes(baseO), s"$at: WAL bytes")
+        assert(descriptors(baseK) === descriptors(baseO), s"$at: descriptors")
+        val (sk, so) = (stored(baseK), stored(baseO))
+        assert(sk.map(_._2).nonEmpty && sk === so, s"$at: stored files")
+      }
+      assert(layoutBits(baseK)._1.length > 1, s"$name: one-list layout")
+      gk.close(); go.close()
+      Segments.deleteDir(baseK); Segments.deleteDir(baseO)
+    }
+  }
+
+  /** The summed task `resultSize` of every job `body` submits, and
+    * `body`'s outcome.
+    */
+  private def shippedDuring[A](body: => A): (scala.util.Try[A], Long) = {
+    val sc = spark.sparkContext
+    val events = new java.util.concurrent.LinkedBlockingQueue[Either[Long, String]]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        events.put(Left(Option(e.taskMetrics).fold(0L)(_.resultSize)))
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        events.put(Right(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.spec.marker")))
+          .getOrElse("")))
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = scala.util.Try(body)
+      // a marker job: its start follows every earlier task end on the bus
+      sc.setLocalProperty("graft.spec.marker", "end")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+      var shipped = 0L
+      var done = false
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!done && System.nanoTime() < deadline)
+        Option(events.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS))
+          .foreach {
+            case Left(bytes) => shipped += bytes
+            case Right(m) => done = m == "end"
+          }
+      assert(done, "marker job never reached the listener")
+      (out, shipped)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("guard before ship: an over-limit batch is rejected with its true row count, its collect job ships none of its rows however it is partitioned, and no WAL byte, segment or epoch is consumed") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", StringType, nullable = false),
+      StructField("vec", ArrayType(DoubleType, containsNull = false))))
+    val rnd = new scala.util.Random(77)
+    def rows(n: Int) =
+      (0 until n).map(i => Row(f"g-$i%04d", Seq.fill(mdim)(rnd.nextGaussian())))
+    def batch(n: Int, parts: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows(n), parts), schema)
+    val rowBytes = mdim * 8L + 6 + 64 // vector slots + id octets + fixed
+    val cfg0 = patchCfg("l2")
+    val rowCap = cfg0.copy(limits = cfg0.limits.copy(maxUpsertBatch = 100))
+    val byteCap = cfg0.copy(limits = cfg0.limits.copy(maxRequestBytes = 100000L))
+    // (cap, config, rows, partitions, message): 4 partitions each over
+    // the cap on its own, and 40 partitions each under it whose sum is over
+    val cases = Seq(
+      ("max_upsert_batch", rowCap, 1000, 4,
+        "upsert batch 1000 rows exceeds max_upsert_batch 100"),
+      ("max_upsert_batch", rowCap, 2000, 40,
+        "upsert batch 2000 rows exceeds max_upsert_batch 100"),
+      ("max_request_size_bytes", byteCap, 1000, 4,
+        s"request ~${1000 * rowBytes} bytes exceeds max_request_size_bytes 100000"),
+      ("max_request_size_bytes", byteCap, 2000, 40,
+        s"request ~${2000 * rowBytes} bytes exceeds max_request_size_bytes 100000"))
+    cases.foreach { case (cap, cfg, n, parts, message) =>
+      val what = s"$cap, $n rows in $parts partitions"
+      val base = tmp()
+      val g = Graft.open(spark, base, cfg)
+      val b = batch(n, parts)
+      val (out, shipped) = shippedDuring(g.upsert(b))
+      val e = out.failed.get
+      assert(e.isInstanceOf[graft.ingest.IngestRejected], s"$what: $e")
+      assert(e.getMessage === message, what)
+      // the batch's vectors alone are n · mdim · 8 bytes
+      assert(shipped < n * mdim * 8L / 10,
+        s"$what: tasks shipped $shipped bytes of a ${n * mdim * 8L}-byte batch")
+      val wal = new java.io.File(s"$base/wal")
+      assert(!wal.exists() || wal.listFiles().forall(_.length() == 0L),
+        s"$what: WAL written")
+      assert(Segments.catalogDescriptors(spark, base).isEmpty, what)
+      assert(!new java.io.File(s"$base/centroids").exists(), what)
+      // no epoch was reserved: the next batch starts at 0
+      assert(g.upsert(batch(30, 4)) === ((0L, 29L)), what)
+      g.close()
+      Segments.deleteDir(base)
+    }
+    // control: the same shape within the limits ships its rows
+    val base = tmp()
+    val g = Graft.open(spark, base, cfg0)
+    val (out, shipped) = shippedDuring(g.upsert(batch(1000, 4)))
+    assert(out.isSuccess && shipped > 1000L * mdim * 8L, s"control shipped $shipped")
+    g.close()
+    Segments.deleteDir(base)
+    // a within-limit batch skewed onto one partition (97 + 1 + 1 + 1 rows
+    // against a per-task share of 25): that partition is fetched again,
+    // and every row lands in input order
+    val skewBase = tmp()
+    val gs = Graft.open(spark, skewBase, rowCap)
+    val all = rows(100)
+    val slices = Seq(all.take(97), all.slice(97, 98), all.slice(98, 99), all.drop(99))
+    val skewed = spark.createDataFrame(
+      spark.sparkContext.parallelize(slices, 4).flatMap(identity), schema)
+    assert(gs.upsert(skewed) === ((0L, 99L)))
+    val stored = gs.liveView.select("id", "epoch").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._2).toSeq
+    assert(stored === all.map(_.getString(0)).zipWithIndex.map {
+      case (id, i) => id -> i.toLong })
+    gs.close()
+    Segments.deleteDir(skewBase)
+  }
+
+  test("null keys: a null id, deleted, op or epoch is rejected naming the column, before any epoch, WAL byte or segment is consumed") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val base = tmp()
+    val g = Graft.open(spark, base, patchCfg("l2"))
+    val rnd = new scala.util.Random(5)
+    def v = Seq.fill(mdim)(rnd.nextGaussian())
+    val id = StructField("id", StringType)
+    val vec = StructField("vec", ArrayType(DoubleType, containsNull = false))
+    def frame(fields: StructField*)(rows: Row*) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+        StructType(fields))
+    val cases = Seq(
+      "id" -> frame(id, vec)(Row("a", v), Row(null, v)),
+      "deleted" -> frame(id, vec, StructField("deleted", BooleanType))(
+        Row("a", v, false), Row("b", null, null)),
+      "op" -> frame(id, vec, StructField("op", StringType))(
+        Row("a", v, "UPSERT"), Row("b", null, null)),
+      "epoch" -> frame(id, vec, StructField("epoch", LongType))(
+        Row("a", v, 3L), Row("b", v, null)))
+    cases.foreach { case (c, b) =>
+      val e = intercept[IllegalArgumentException](g.upsert(b))
+      assert(e.getMessage.contains(s"column '$c' is null in 1 of 2 rows"),
+        e.getMessage)
+    }
+    val wal = new java.io.File(s"$base/wal")
+    assert(!wal.exists() || wal.listFiles().forall(_.length() == 0L))
+    assert(Segments.catalogDescriptors(spark, base).isEmpty)
+    // a null op beside a deleted column is not a key: admitted, and the
+    // first admitted batch starts at epoch 0
+    val ok = frame(id, vec, StructField("deleted", BooleanType),
+      StructField("op", StringType))(
+      (0 until 40).map(i => Row(s"k-$i", v, false, null)): _*)
+    assert(g.upsert(ok) === ((0L, 39L)))
     g.close()
     Segments.deleteDir(base)
   }

@@ -393,6 +393,10 @@ class ServingSpec extends SparkSpec {
       .toSeq === Seq((5L, 1.0)))
     assert(local.search(q, 2, 1, overlay = Some(overlay)).toSeq
       === Seq((5L, 1.0)))
+    // the empty list is cached (empty), so both local requests served
+    // locally instead of falling through to a probe job
+    assert(local.localServes === 2 && local.fallThroughServes === 0,
+      s"local=${local.localServes} fallThrough=${local.fallThroughServes}")
     overlay.destroy()
     idx.unpersist()
   }

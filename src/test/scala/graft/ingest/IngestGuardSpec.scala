@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Write-side limits (config.h:177-182, :122-123): one aggregate pass,
+/** Write-side limits (config.h:177-182, :122-123): one statistics pass,
   * whole-batch rejection, tombstone-tolerant dim check.
   */
 class IngestGuardSpec extends SparkSpec {
