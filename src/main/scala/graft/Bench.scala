@@ -642,6 +642,9 @@ object Bench {
       // p50 166 ms serial); the pool turns it latency-bound again
       val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
       extras("ivf_100m_worker_threads") = "16"
+      // phase-1 ADC on the driver tier, fanned out over the pool
+      def adcPar(q: Array[Float], n: Int, np: Int): Array[(Long, Double)] =
+        local.searchProbed(local.probeFor(q, np), q, n, pool = Some(pool))
       // Two-phase at an explicit operating point. Phase-2 rerank fans
       // out over the SAME worker pool once the candidate pool is deep
       // (the tuned points rerank thousands of candidates; each costs a
@@ -653,7 +656,7 @@ object Bench {
       // per-candidate map, order-insensitive before the final sort.
       def twoPhaseAt(q: Array[Float], k: Int, np: Int,
           rr: Int): Array[(Long, Double)] = {
-        val cand = local.searchAdcParallel(q, k * rr, np, pool)
+        val cand = adcPar(q, k * rr, np)
         val scored =
           if (cand.length <= 256)
             cand.map { case (id, _) => (id, dotF(q, regen(id))) }
@@ -721,7 +724,8 @@ object Bench {
         extras("ivf_100m_dist_build_sec") =
           num((System.nanoTime() - tD0) / 1e9, 1)
         def distTwoPhase(qv: Array[Float]): Unit = {
-          val cand = dist.searchAdc(qv, 10 * rerank100, nprobe100)
+          val cand =
+            dist.searchBatch(Seq(qv), 10 * rerank100, nprobe100).head
           cand.map { case (id, _) => (id, dotF(qv, regen(id))) }
             .sortBy { case (id, s) => (-s, id) }.take(10)
           ()
@@ -754,9 +758,8 @@ object Bench {
           num(pctl(distSteady.values.toSeq.sorted, 99), 1)
         // value parity with the driver tier on this very corpus — the
         // two cache levels must be interchangeable
-        val a = dist.searchAdc(qOut.head._2, 40, nprobe100).toSeq
-        val b = local.searchAdcParallel(qOut.head._2, 40, nprobe100,
-          pool).toSeq
+        val a = dist.searchBatch(Seq(qOut.head._2), 40, nprobe100).head.toSeq
+        val b = adcPar(qOut.head._2, 40, nprobe100).toSeq
         extras("ivf_100m_dist_parity") = (a == b).toString
         // ---- TIERED ROUTER (PqTieredServing): the fall-through order
         // a request actually takes — driver tier when it covers the
@@ -765,33 +768,40 @@ object Bench {
         // 1076 ms parquet twin on the same box — the route matters).
         // Counters record which path served; the forced-cold-L0 twin
         // proves the route choice is value-invisible. ----
-        val storedRoute = (qv: Array[Float], k: Int, np: Int,
-            metric: String) => {
-          require(metric == "ip", "bench stored route is the ip twin")
-          import spark.implicits._
-          val probed = local.probe(qv, np)
-          val qdf = Seq((0L, qv.toSeq)).toDF("query_id", "qv")
-          graft.index.Pq.adcScores(
-              codesDf.filter(
-                col("centroid_id").isin(cidVals(probed): _*)), cb, qdf)
-            .orderBy(col("approx_score").desc, col("vec_id").asc)
-            .limit(k).select(col("vec_id"), col("approx_score"))
-            .collect().map(r => (r.getLong(0), r.getDouble(1)))
-        }
+        // the stored level: one declarative ADC plan per (query,
+        // probe set) — a probe SUBSET on a mixed serve
+        val storedRoute: graft.index.PqTieredServing.StoredSearch =
+          (work, k, metric) => {
+            require(metric == "ip", "bench stored route is the ip twin")
+            import spark.implicits._
+            work.map { case (qv, probed) =>
+              val qdf = Seq((0L, qv.toSeq)).toDF("query_id", "qv")
+              graft.index.Pq.adcScores(
+                  codesDf.filter(
+                    col("centroid_id").isin(cidVals(probed): _*)), cb, qdf)
+                .orderBy(col("approx_score").desc, col("vec_id").asc)
+                .limit(k).select(col("vec_id"), col("approx_score"))
+                .collect().map(r => (r.getLong(0), r.getDouble(1)))
+            }
+          }
+        val storedProbe = (qv: Array[Float], np: Int, metric: String) =>
+          local.probeFor(qv, np, metric)
+        def route(r: graft.index.PqTieredServing,
+            qv: Array[Float]): Array[(Long, Double)] =
+          r.search(IndexedSeq(qv), 10, nprobe100).head
         val router = new graft.index.PqTieredServing(
-          Some(local), Some(dist), storedRoute, limits100)
+          Some(local), Some(dist), storedRoute, storedProbe)
         val routed = qOut.take(25).map { case (_, qv) =>
-          router.searchAdc(qv, 10, nprobe100).toSeq
+          route(router, qv).toSeq
         }
         extras("ivf_100m_route_local_serves") = router.localServes.toString
         extras("ivf_100m_route_dist_serves") = router.distServes.toString
         extras("ivf_100m_route_stored_serves") =
           router.storedServes.toString
         val coldL0 = new graft.index.PqTieredServing(
-          None, Some(dist), storedRoute, limits100)
+          None, Some(dist), storedRoute, storedProbe)
         val fallParity = qOut.take(25).zip(routed).forall {
-          case ((_, qv), want) =>
-            coldL0.searchAdc(qv, 10, nprobe100).toSeq == want
+          case ((_, qv), want) => route(coldL0, qv).toSeq == want
         }
         extras("ivf_100m_route_fallthrough_dist_serves") =
           coldL0.distServes.toString
@@ -816,10 +826,9 @@ object Bench {
           extras("ivf_100m_mixed_starved_lists") =
             starved.cachedLists.toString
           val mixedRouter = new graft.index.PqTieredServing(
-            Some(starved), Some(dist), storedRoute, limits100)
+            Some(starved), Some(dist), storedRoute, storedProbe)
           val mixedParity = qOut.take(25).zip(routed).forall {
-            case ((_, qv), want) =>
-              mixedRouter.searchAdc(qv, 10, nprobe100).toSeq == want
+            case ((_, qv), want) => route(mixedRouter, qv).toSeq == want
           }
           extras("ivf_100m_route_mixed_serves") =
             mixedRouter.mixedServes.toString
@@ -834,25 +843,12 @@ object Bench {
           // the warm-route answers proves the split is value-invisible
           // on the coldest path too; the p50 delta vs the pure-stored
           // twin below is the latency the driver budget buys there.
-          val storedOnProbed = (qv: Array[Float], probed: Seq[Long],
-              k: Int, metric: String) => {
-            require(metric == "ip", "bench stored route is the ip twin")
-            import spark.implicits._
-            val qdf = Seq((0L, qv.toSeq)).toDF("query_id", "qv")
-            graft.index.Pq.adcScores(
-                codesDf.filter(
-                  col("centroid_id").isin(cidVals(probed): _*)), cb, qdf)
-              .orderBy(col("approx_score").desc, col("vec_id").asc)
-              .limit(k).select(col("vec_id"), col("approx_score"))
-              .collect().map(r => (r.getLong(0), r.getDouble(1)))
-          }
           val mixedStoredRouter = new graft.index.PqTieredServing(
-            Some(starved), None, storedRoute, limits100,
-            storedOnProbed = Some(storedOnProbed))
+            Some(starved), None, storedRoute, storedProbe)
           val pureStoredRouter = new graft.index.PqTieredServing(
-            None, None, storedRoute, limits100)
-          mixedStoredRouter.searchAdc(qOut.head._2, 10, nprobe100) // warm
-          pureStoredRouter.searchAdc(qOut.head._2, 10, nprobe100)
+            None, None, storedRoute, storedProbe)
+          route(mixedStoredRouter, qOut.head._2) // warm
+          route(pureStoredRouter, qOut.head._2)
           val msLat = scala.collection.mutable.ArrayBuffer.empty[Double]
           val psLat = scala.collection.mutable.ArrayBuffer.empty[Double]
           // map THEN forall (ADVICE r14): a short-circuiting forall
@@ -862,10 +858,10 @@ object Bench {
           val msParity = qOut.take(10).zip(routed.take(10)).map {
             case ((_, qv), want) =>
               val tM0 = System.nanoTime()
-              val got = mixedStoredRouter.searchAdc(qv, 10, nprobe100)
+              val got = route(mixedStoredRouter, qv)
               msLat += (System.nanoTime() - tM0) / 1e6
               val tP0 = System.nanoTime()
-              pureStoredRouter.searchAdc(qv, 10, nprobe100)
+              route(pureStoredRouter, qv)
               psLat += (System.nanoTime() - tP0) / 1e6
               got.toSeq == want
           }.forall(identity)
@@ -903,7 +899,7 @@ object Bench {
                     // GC landing inside the measurement window)
         qOut.foreach { case (qid, qv) =>
           val tA0 = System.nanoTime()
-          local.searchAdcParallel(qv, 10, nprobe100, pool)
+          adcPar(qv, 10, nprobe100)
           adcLat += (System.nanoTime() - tA0) / 1e6
           val tF0 = System.nanoTime()
           twoPhase(qv, 10)
@@ -935,7 +931,7 @@ object Bench {
       // relative order is an iid-noise ranking, so the default pool of
       // 4×k can rank the query's own row below 40 near-tied neighbors
       val selfHits32 = qSelf.count { case (id, qv) =>
-        val cand = local.searchAdcParallel(qv, 32, nprobe100, pool)
+        val cand = adcPar(qv, 32, nprobe100)
         cand.map { case (cid2, _) => (cid2, dotF(qv, regen(cid2))) }
           .sortBy { case (cid2, s) => (-s, cid2) }.headOption
           .exists(_._1 == id)
@@ -1076,7 +1072,7 @@ object Bench {
           System.gc()
           qOut.foreach { case (qid, qv) =>
             val tA0 = System.nanoTime()
-            local.searchAdcParallel(qv, 10 * tunedRr, tunedNp, pool)
+            adcPar(qv, 10 * tunedRr, tunedNp)
             tAdc += (System.nanoTime() - tA0) / 1e6
             val t0 = System.nanoTime()
             twoPhaseAt(qv, 10, tunedNp, tunedRr)
@@ -2926,13 +2922,14 @@ object Bench {
         pqTier.foreach { pqLocal =>
         try {
           if (pqLocal.cachedLists == nlistServ) {
+            def pqAdc(qv: Array[Float]): Array[(Long, Double)] =
+              pqLocal.searchProbed(pqLocal.probeFor(qv, nprobeServ), qv, 10)
             System.gc()
-            (0 until 5).foreach(_ =>
-              pqLocal.searchAdc(qRows.head, 10, nprobeServ))
+            (0 until 5).foreach(_ => pqAdc(qRows.head))
             val latPq = (0 until 3).flatMap { _ =>
               qRows.map { qv =>
                 val t0 = System.nanoTime()
-                pqLocal.searchAdc(qv, 10, nprobeServ)
+                pqAdc(qv)
                 (System.nanoTime() - t0) / 1e6
               }
             }.sorted
@@ -2949,8 +2946,7 @@ object Bench {
             val rec = qRows.take(40).map { qv =>
               val ref = idx10.search(qv, 10, nprobeServ)
                 .map(_._1 / reps10).toSet
-              val got = pqLocal.searchAdc(qv, 10, nprobeServ)
-                .map(_._1 / reps10).distinct
+              val got = pqAdc(qv).map(_._1 / reps10).distinct
               if (ref.isEmpty) 1.0 else got.count(ref).toDouble / ref.size
             }
             extras("local_pq_10m_base_recall_vs_ivf") =

@@ -520,7 +520,6 @@ final class Graft private (
     */
   private final case class PqTierState(
       dist: Option[graft.index.PqServingIndex],
-      local: Option[graft.index.LocalPqIndex],
       router: graft.index.PqTieredServing,
       stored: StoredAdc,
       cb: graft.index.Pq.Codebook)
@@ -544,13 +543,12 @@ final class Graft private (
   private[graft] def pqTierCodebook: Option[graft.index.Pq.Codebook] =
     pqTier.map(_.cb)
 
-  /** PQ-door phase-1 route counters (driver, distributed, stored) —
-    * observability for the cache hierarchy. Covers BOTH doors: the
-    * batch door accounts its per-query routes here too. Mixed L0/L1
-    * serves ([[pqDoorMixedServes]]) count under the driver column —
-    * they exist only on the SINGLE door; the batch door routes a query
-    * to L0 all-or-nothing (its L1 work amortizes into one job, so a
-    * per-probe split would fragment that job for marginal gain).
+  /** PQ-door phase-1 route counters (driver, distributed, stored), one
+    * count per query — observability for the cache hierarchy. Both
+    * doors share one router, so a query counts the same whichever door
+    * sent it. Mixed L0/L1 serves ([[pqDoorMixedServes]]) count under
+    * the driver column, mixed L0/stored serves
+    * ([[pqDoorMixedStoredServes]]) under the stored column.
     */
   def pqDoorRoutes: (Long, Long, Long) = pqTier match {
     case Some(st) =>
@@ -560,19 +558,17 @@ final class Graft private (
     case None => (0L, 0L, 0L)
   }
 
-  /** Requests the single door served part-L0/part-L1 (split probe set,
-    * merged pools — [[graft.index.PqTieredServing]] mixed serving).
-    * Always 0 for batch-door traffic (see [[pqDoorRoutes]]).
+  /** Queries served part-L0/part-L1 (split probe set, merged pools —
+    * [[graft.index.PqTieredServing]] mixed serving), on either door:
+    * a batch's L1 misses join its one distributed-tier job.
     */
   def pqDoorMixedServes: Long = pqTier.map(_.router.mixedServes).getOrElse(0L)
 
-  /** Requests served part-L0/part-STORED (distributed tier evicted,
+  /** Queries served part-L0/part-STORED (distributed tier evicted,
     * driver tier holding some probed lists): resident lists scan at
-    * driver speed, only the misses pay the parquet plan. BOTH doors —
-    * the batch door scans its queries' resident lists driver-side and
-    * sends only the misses into the one batched stored plan, merging
-    * per query after the job. Counted under the stored column of
-    * [[pqDoorRoutes]].
+    * driver speed, only the misses pay the parquet plan — on a batch,
+    * the misses of every query join one stored call. Counted under the
+    * stored column of [[pqDoorRoutes]].
     */
   def pqDoorMixedStoredServes: Long =
     pqTier.map(_.router.mixedStoredServes).getOrElse(0L)
@@ -801,9 +797,8 @@ final class Graft private (
             }
             val stored = new StoredAdc(codesPath, cents, cb, sizes)
             val router = new graft.index.PqTieredServing(local,
-              Some(dist), stored.search, config.servingLimits,
-              storedOnProbed = Some(stored.searchOnProbed))
-            PqTierState(Some(dist), local, router, stored, cb)
+              Some(dist), stored.searchBatch, stored.probeFor)
+            PqTierState(Some(dist), router, stored, cb)
           } catch { case e: Throwable => dist.unpersist(); throw e }
         } catch {
           case e: Throwable =>
@@ -1002,11 +997,10 @@ final class Graft private (
     * value-identical to the cache levels by construction: the probe
     * set is the same metric-aware ranking + max_candidates walk, the
     * per-query LUT is THE shared [[graft.index.Pq.lutForMetric]]
-    * (carried as exact doubles — a plan literal on the single door, a
-    * broadcast relation on the batch door), the scan is the shared
-    * byte-code lookup-sum kernel with sequential double accumulation,
-    * and the top-n keeps the (score desc, id asc) contract — only n
-    * (id, score) pairs per query reach the driver. Slow by design
+    * (carried as exact doubles in a broadcast relation), the scan is
+    * the shared byte-code lookup-sum kernel with sequential double
+    * accumulation, and the top-n keeps the (score desc, id asc)
+    * contract — only n (id, score) pairs per query reach the driver. Slow by design
     * (parquet decode per request, ~0.3-5 s at the 100M geometry on
     * local[32]); the architecture's promise is DEGRADE, not refuse.
     */
@@ -1034,7 +1028,7 @@ final class Graft private (
         cid => sizes.getOrElse(cid, 0L), lim.maxCandidates)
 
     /** The single-request L2 plan, unexecuted — separated from
-      * [[search]] so the partition-pruning spec can assert the scan
+      * [[searchBatch]] so the partition-pruning spec can assert the scan
       * carries a real PartitionFilter (a literal-type regression would
       * silently turn the cold path into a full-tree read).
       */
@@ -1065,55 +1059,45 @@ final class Graft private (
         .limit(n))
     }
 
-    /** Single-request L2: partition-pruned scan + broadcast LUT +
-      * in-plan TakeOrderedAndProject (ONE stage for a point request).
+    /** L2 for the router ([[graft.index.PqTieredServing.StoredSearch]]):
+      * each query's top-n over ITS probe set (a subset on a mixed
+      * L0/stored serve — the union of the pools ranks identically to a
+      * full stored scan because the top-n contract is shared). A
+      * one-query call runs [[planOnProbed]], the single-stage plan
+      * (partition-pruned scan + broadcast LUT + in-plan
+      * TakeOrderedAndProject). More queries share ONE plan — the scan
+      * statically prunes to the UNION of their probed lists, a
+      * broadcast (qi, centroid_id) pair relation restricts each query
+      * to its own lists, per-query LUTs ride a broadcast relation as
+      * exact doubles, and the map-side-combined top-k aggregator cuts
+      * to n per query before anything reaches the driver. Per-query
+      * values are equal either way (same LUT doubles, same kernel, same
+      * ranking contract) — a sequential per-query plan here would pay
+      * the full parquet scan per query (~0.3-5 s × batch at the 100M
+      * geometry).
       */
-    def search(q: Array[Float], n: Int, nprobe: Int,
-        metric: String): Array[(Long, Double)] =
-      exec(plan(q, n, nprobe, metric))
-
-    /** L2 restricted to a probe SUBSET the router already partitioned
-      * (the mixed L0/stored serve: resident lists scan driver-side,
-      * only these misses pay the parquet plan). Same plan shape as
-      * [[search]] — the union of the two pools ranks identically to a
-      * full stored scan because the per-list top-n contract is shared.
-      */
-    def searchOnProbed(q: Array[Float], probed: Seq[Long], n: Int,
-        metric: String): Array[(Long, Double)] =
-      exec(planOnProbed(q, probed, n, metric))
-
-    private def exec(p: Option[DataFrame]): Array[(Long, Double)] =
-      p match {
-        case None => Array.empty
-        case Some(df) =>
-          df.collect().map(r => (r.getLong(0), r.getDouble(1)))
-      }
-
-    /** Batched L2 (the evicted-tier batch door): ONE plan serves every
-      * uncovered query — the scan statically prunes to the UNION of
-      * the batch's probed lists, a broadcast (qi, centroid_id) pair
-      * relation restricts each query to its own lists, per-query LUTs
-      * ride a broadcast relation as exact doubles, and the map-side-
-      * combined top-k aggregator cuts to n per query before anything
-      * reaches the driver. Per-query values equal [[search]] exactly
-      * (same LUT doubles, same kernel, same ranking contract) — a
-      * sequential per-query fall-back here would pay the full parquet
-      * plan per query (~0.3-5 s × batch at the 100M geometry).
-      */
-    def searchBatch(queries: IndexedSeq[(Int, Array[Float], Seq[Long])],
-        n: Int, metric: String): Map[Int, Array[(Long, Double)]] = {
+    def searchBatch(work: IndexedSeq[(Array[Float], Seq[Long])], n: Int,
+        metric: String): IndexedSeq[Array[(Long, Double)]] = {
       import spark.implicits._
-      val live = queries.filter(_._3.nonEmpty)
-      if (n <= 0 || live.isEmpty) return Map.empty
-      val union = live.flatMap(_._3).distinct
-      val pairs0 = live.flatMap { case (qi, _, probed) =>
-        probed.map(cid => (qi, cid)) }.toDF("qi", "centroid_id")
+      val out = Array.fill(work.length)(Array.empty[(Long, Double)])
+      val live = work.indices.filter(qi => work(qi)._2.nonEmpty)
+      if (n <= 0 || live.isEmpty) return out.toIndexedSeq
+      if (live.length == 1) {
+        val qi = live.head
+        planOnProbed(work(qi)._1, work(qi)._2, n, metric).foreach { df =>
+          out(qi) = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
+        }
+        return out.toIndexedSeq
+      }
+      val union = live.flatMap(qi => work(qi)._2).distinct
+      val pairs0 = live.flatMap { qi =>
+        work(qi)._2.map(cid => (qi, cid)) }.toDF("qi", "centroid_id")
       val pairs =
         if (cidIsLong) pairs0
         else pairs0.withColumn("centroid_id",
           col("centroid_id").cast("int"))
-      val luts = live.map { case (qi, q, _) =>
-        (qi, graft.index.Pq.lutForMetric(cb, q, metric)
+      val luts = live.map { qi =>
+        (qi, graft.index.Pq.lutForMetric(cb, work(qi)._1, metric)
           .map(_.toSeq).toSeq)
       }.toDF("qi", "__lut")
       val scored = storedCodes
@@ -1128,73 +1112,43 @@ final class Graft private (
         .viaAggregator(scored, "qi", "vec_id", "approx_score", n)
         .collect()
         .groupBy(_.getLong(0).toInt)
-        .map { case (qi, rows) =>
-          (qi, rows.map(r => (r.getLong(1), r.getDouble(2)))
+        .foreach { case (qi, rows) =>
+          out(qi) = rows.map(r => (r.getLong(1), r.getDouble(2)))
             .sortBy { case (id, s) => (s, id) }(Ordering.Tuple2(
-              Ordering[Double].reverse, Ordering[Long])))
+              Ordering[Double].reverse, Ordering[Long]))
         }
+      out.toIndexedSeq
     }
   }
 
-  /** Two-phase stable-tier search: phase 1 is the cache hierarchy's
-    * ADC over only the probed lists (`index.stable.nprobe`) — the
-    * driver tier at memory speed when it covers the probes, the
-    * distributed tier's in-task scan otherwise
-    * ([[graft.index.PqTieredServing]]) — under the collection's METRIC
-    * ([[graft.index.Pq.lutForMetric]] — ip verbatim, l2 negated
-    * expanded-L2, cosine normalized-IP over the normalize-at-admission
-    * codes), with the UNCLAMPED rerank·k internal candidate budget
-    * (config.h:93 — an internal pool, not a client k). Phase 2
-    * re-scores candidates EXACTLY: buffered rows resolve against the
-    * streaming overlay snapshot (a buffered DELETE masks its candidate,
-    * a buffered upsert re-scores its current vector — deleted rows
-    * never surface, including deletes still inside the micro-batch
-    * window); the rest resolve last-writer-wins against the store
-    * through ONE plan-free point lookup
-    * ([[graft.segments.Segments.scoreLatestByIdHash]]: zone-map and
-    * id-evidence file prune, then a direct driver-side `id_hash IN`
-    * Parquet read) scored with the plan kernels' arithmetic — no
-    * Spark job, so a request whose phase 1 the driver tier serves
-    * submits none at all. It is [[searchPqBatch]]'s phase 2 for a
-    * one-query batch. Refuses when the tier is cold
-    * ([[warmPqTier]] is the admission pass); an EVICTED distributed
-    * tier is not cold — the router degrades phase 1 to the durable
-    * codes tree (the [[StoredAdc]] bundle in [[PqTierState]]) with
-    * identical values.
+  /** Two-phase stable-tier search for ONE query: the one-query case of
+    * [[searchPqBatch]] (same routing, same counters, same values).
+    * Refuses when the tier is cold ([[warmPqTier]] is the admission
+    * pass); a non-positive k is an empty answer.
     */
   def searchPq(q: Array[Float], k: Int,
-      rerank: Int = config.stable.rerankFactor): Array[(Long, Double)] = {
-    val st = pqTier.getOrElse(throw new IllegalStateException(
-      "PQ tier cold — warmPqTier() is the stable-tier admission pass"))
-    val kk = math.min(k, config.servingLimits.maxK)
-    if (kk <= 0) return Array.empty
-    val metric = config.collection.metric
-    // phase 1 through the cache-hierarchy router: the driver tier
-    // serves covered probes with ZERO scheduler dispatch, the
-    // distributed tier takes the rest — values identical either way
-    // (PqTieredServingSpec pins per-metric parity)
-    val cand = st.router
-      .searchAdcUnclamped(q, kk * rerank, config.stable.nprobe, metric)
-      .map(_._1)
-    if (cand.isEmpty) return Array.empty
-    rerankExact(IndexedSeq(q), Array(cand), kk).head
-  }
+      rerank: Int = config.stable.rerankFactor): Array[(Long, Double)] =
+    searchPqBatch(Seq(q), k, rerank).head
 
-  /** [[searchPq]] for a QUERY BATCH (Q12, ≤ `query.max_batch`,
-    * config.h:180): phase 1 is ONE scheduler job over the union of the
-    * batch's probed lists ([[graft.index.PqServingIndex
-    * .searchAdcBatch]] — the per-request dispatch floor is paid once
-    * per batch, not once per query; an EVICTED distributed tier
-    * degrades per query to the durable codes tree like the single
-    * door), phase 2 is ONE plan-free point lookup for the whole batch
-    * (the union of the queries' store candidates, pruned and read
-    * driver-side exactly as the single door's — each fetched row is
-    * scored only against the queries that pooled it, and only (epoch,
-    * scores) is kept per candidate, never its vector), and k winners
-    * per query come back. Per-query results are IDENTICAL to
-    * [[searchPq]] (GraftFacadeSpec pins it); overlay consultation is
-    * per query, same as the single door. Every request is accounted in
-    * [[pqDoorRoutes]] (the batch door bumps the router's counters).
+  /** Two-phase stable-tier search for a QUERY BATCH (Q12, ≤
+    * `query.max_batch`, config.h:180); [[searchPq]] is its one-query
+    * case. The door owns the client contract: the batch guard and the
+    * `min(k, max_k)` clamp apply here, before routing, so behavior can
+    * never depend on which level serves. Phase 1 is the cache
+    * hierarchy's ADC ([[graft.index.PqTieredServing.search]]) over
+    * only the probed lists (`index.stable.nprobe`) under the
+    * collection's METRIC ([[graft.index.Pq.lutForMetric]]), at the
+    * UNCLAMPED rerank·k internal candidate budget (config.h:93): a
+    * query the driver tier covers scans at memory speed with zero
+    * scheduler dispatch, a partly covered one serves mixed, and all
+    * distributed-tier work of the batch shares ONE scheduler job; an
+    * EVICTED distributed tier degrades to the durable codes tree (the
+    * [[StoredAdc]] bundle in [[PqTierState]]) with identical values.
+    * Phase 2 ([[rerankExact]]) re-scores every query's candidates
+    * EXACTLY through ONE plan-free point lookup for the whole batch,
+    * consulting the streaming overlay per query — so a batch the
+    * driver tier serves submits no Spark job at all. Every query is
+    * accounted in [[pqDoorRoutes]].
     */
   def searchPqBatch(qs: Seq[Array[Float]], k: Int,
       rerank: Int = config.stable.rerankFactor)
@@ -1202,114 +1156,15 @@ final class Graft private (
     val st = pqTier.getOrElse(throw new IllegalStateException(
       "PQ tier cold — warmPqTier() is the stable-tier admission pass"))
     val qArr = qs.toIndexedSeq
-    // the Q12 guardrail is a CLIENT contract (config.h:180) — enforced
-    // at the door, before routing, so behavior can never depend on
-    // which cache level would have served
     require(qArr.length <= config.servingLimits.maxBatch,
       s"query batch ${qArr.length} exceeds max_query_batch " +
         s"${config.servingLimits.maxBatch}")
     val kk = math.min(k, config.servingLimits.maxK)
     if (kk <= 0 || qArr.isEmpty)
       return IndexedSeq.fill(qArr.length)(Array.empty)
-    val metric = config.collection.metric
-    // phase 1 routed per query: driver-tier-covered queries serve at
-    // memory speed (zero dispatch), the rest share ONE scheduler job
-    // through the batch door — so a batch pays at most one dispatch
-    // floor, and none at all when the driver tier covers every query.
-    // Each query's metric-aware probe set is ranked ONCE and shared by
-    // the coverage check and whichever tier scans it.
-    val nBudget = kk * rerank
-    val pools = new Array[Array[(Long, Double)]](qArr.length)
-    val probeTier: Array[Float] => Seq[Long] = q =>
-      st.local.map(_.probeFor(q, config.stable.nprobe, metric))
-        .orElse(st.dist.map(_.probeFor(q, config.stable.nprobe, metric)))
-        .getOrElse(st.stored.probeFor(q, config.stable.nprobe, metric))
-    val uncovered = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Long])]
-    val storedQs = scala.collection.mutable
-      .ArrayBuffer.empty[(Int, Array[Float], Seq[Long])]
-    // per-query L0 partial pools for MIXED L0/stored serves (the batch
-    // door's analogue of the single door's split): resident lists scan
-    // driver-side here, the misses join the ONE batched stored plan,
-    // and the pools merge after that job returns
-    val l0Pools = new Array[Array[(Long, Double)]](qArr.length)
-    var pi = 0
-    while (pi < qArr.length) {
-      val probed = probeTier(qArr(pi))
-      st.local.filter(_.coversProbes(probed)) match {
-        case Some(l) =>
-          st.router.noteLocalServe()
-          pools(pi) = l.searchAdcOnProbed(probed, qArr(pi), nBudget, metric)
-        case None if st.dist.exists(d =>
-            d.resident && d.coversProbes(probed)) =>
-          uncovered += ((pi, probed))
-        case None =>
-          // distributed tier evicted ([[releasePqDistTier]] / memory
-          // pressure): DEGRADE to the durable codes tree — gathered
-          // and served as ONE batched stored plan below (a sequential
-          // per-query plan here would pay the full parquet scan cost
-          // times the batch size). The cache tiers and the stored
-          // bundle share the probe contract (same centroid ranking,
-          // same max_candidates walk over the same catalog sizes), so
-          // the probe set already in hand is THE probe set. A RESIDENT
-          // tier landing here is a coverage regression, not an
-          // eviction — counted apart, same as the single door.
-          if (st.dist.exists(_.resident))
-            st.router.noteAnomalousResidentRoute()
-          st.local.map(l => (l, l.partitionResident(probed))) match {
-            case Some((l, (res, miss))) if res.nonEmpty =>
-              l0Pools(pi) =
-                l.searchAdcOnProbed(res, qArr(pi), nBudget, metric)
-              if (miss.nonEmpty) storedQs += ((pi, qArr(pi), miss))
-              else {
-                // defensively unreachable: miss.isEmpty implies
-                // coversProbes, which served as a LOCAL hit above — if
-                // coverage semantics ever diverge, a fully-resident
-                // serve is still a local serve, so count it as one
-                // (ADVICE r14: a mixedStored count here would desync
-                // the route counters' meanings from the single door)
-                st.router.noteLocalServe()
-                pools(pi) = l0Pools(pi)
-              }
-            case _ =>
-              storedQs += ((pi, qArr(pi), probed))
-          }
-      }
-      pi += 1
-    }
-    if (uncovered.nonEmpty) {
-      // uncovered is only populated when the distributed tier is
-      // resident and covers the probes — .get is total here
-      val sub = st.dist.get.searchAdcBatchUnclamped(
-        uncovered.map { case (i, _) => qArr(i) }.toIndexedSeq, nBudget,
-        config.stable.nprobe, metric,
-        knownProbes = Some(uncovered.map(_._2).toIndexedSeq))
-      var si = 0
-      while (si < uncovered.length) {
-        st.router.noteDistServe()
-        pools(uncovered(si)._1) = sub(si)
-        si += 1
-      }
-    }
-    if (storedQs.nonEmpty) {
-      val sub = st.stored.searchBatch(storedQs.toIndexedSeq, nBudget,
-        metric)
-      storedQs.foreach { case (qi, _, _) =>
-        val storedPool =
-          sub.getOrElse(qi, Array.empty[(Long, Double)])
-        pools(qi) = l0Pools(qi) match {
-          case null =>
-            st.router.noteStoredServe()
-            storedPool
-          case l0 =>
-            // mixed L0/stored: merge under the shared ranking contract
-            // — top-n of the union equals top-n of the full probe set
-            st.router.noteMixedStoredServe()
-            graft.index.PqTieredServing.mergeTopN(l0, storedPool,
-              nBudget)
-        }
-      }
-    }
-    rerankExact(qArr, pools.map(_.map(_._1)), kk)
+    val pools = st.router.search(qArr, kk * rerank, config.stable.nprobe,
+      config.collection.metric)
+    rerankExact(qArr, pools.map(_.map(_._1)).toArray, kk)
   }
 
   /** Phase 2 of both PQ doors: re-score each query's phase-1 candidate
@@ -1805,9 +1660,8 @@ final class Graft private (
                 val stored = new StoredAdc(dirStr, cents.get, cb,
                   sizes)
                 val router = new graft.index.PqTieredServing(None, None,
-                  stored.search, config.servingLimits,
-                  storedOnProbed = Some(stored.searchOnProbed))
-                pqTier = Some(PqTierState(None, None, router, stored, cb))
+                  stored.searchBatch, stored.probeFor)
+                pqTier = Some(PqTierState(None, router, stored, cb))
                 // reproduce the prior session's admission policy: a
                 // pinned quantizer stays pinned (its codebook must
                 // never short-circuit an unpinned warm's training)

@@ -793,16 +793,17 @@ object SparkEntry {
       val nlist = cents.count().toInt
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      // one probe job per request against the distributed tier —
-      // independent requests served concurrently (§2.6), order preserved
-      val rows = graft.operators.Parallelism.parRequests(reqs.toIndexedSeq) {
-        case (qid, qv) =>
-          val cand = dist.searchAdc(qv, 10 * 40, nprobe = nlist).map(_._1)
+      // ONE probe job serves every request against the distributed tier
+      val pools = dist.searchBatch(reqs.map(_._2).toSeq, 10 * 40,
+        nprobe = nlist)
+      val rows = reqs.toIndexedSeq.zip(pools).flatMap {
+        case ((qid, qv), pool) =>
+          val cand = pool.map(_._1)
           val exact = raw.scoreIds(qv, cand)
           cand.map(id => (id, exact(id)))
             .sortBy { case (id, sc) => (-sc, id) }.take(10)
             .map { case (id, sc) => Row(qid, id, sc) }.toIndexedSeq
-      }.flatten
+      }
       dist.unpersist()
       idx.unpersist()
       s.createDataFrame(

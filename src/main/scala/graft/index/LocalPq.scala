@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * the CODED hot set is nearly an order of magnitude larger.
   *
   * Serving semantics mirror the declarative stored path bit-for-bit:
-  * phase 1 is the ADC sum Σ_j lut(j)(codes(j)) with the same
+  * phase 1 ([[searchProbed]], the tier's one request kernel) is the
+  * shared ADC scan [[Pq.adcTopN]] — Σ_j lut(j)(codes(j)) with the same
   * sequential-in-j double accumulation as the codegen kernel
   * (`IndexExpressions.pqAdcSum`) and the same per-query LUT arithmetic
   * as `IndexExpressions.pqLut` (sequential dot per codeword); ranking
@@ -30,8 +31,9 @@ import org.apache.spark.sql.functions._
   * uncovered path is the DISTRIBUTED codes tier ([[PqServingIndex]])
   * when warm, and the declarative stored IVF-PQ query
   * (`Pq.twoPhaseSearch` over the segment layout) only when both cache
-  * levels are cold. [[PqTieredServing]] is that routing, pre-checked
-  * via [[coversRequest]] so the refusal never surfaces to a routed
+  * levels are cold. [[PqTieredServing]] is that routing: it checks
+  * [[coversProbes]] (or splits with [[partitionResident]]) on the probe
+  * set it computed once, so the refusal never surfaces to a routed
   * caller.
   */
 final class LocalPqIndex private (
@@ -118,221 +120,49 @@ final class LocalPqIndex private (
       metric: String = "ip"): Seq[Long] =
     capProbes(probe(Pq.probeQuery(q, metric), nprobe))
 
-  /** Would THIS request serve from the tier? — the router's pre-check
-    * ([[PqTieredServing]]): same probe ranking + max_candidates walk as
-    * the scan itself, so a `true` here never turns into the coverage
-    * refusal inside [[searchAdc]].
+  /** Phase-1 ADC top-n over a probe set the caller computed via
+    * [[probeFor]] — THIS tier's one request kernel. The probed lists
+    * split into `chunkRows`-row work units, each ranked by the shared
+    * kernel ([[Pq.adcTopN]]), and the unit winners merge under the
+    * (score desc, id asc) contract ([[Pq.mergeTopN]]); top-n is
+    * scan-order-insensitive, so results do not depend on the split.
+    * With a `pool` the units fan out over it — the reference's
+    * `worker_threads` request parallelism (config.h:171) applied to the
+    * one place a 100M-geometry request is compute-bound (~0.5M
+    * candidates × m lookups); the LUT ([[Pq.lutForMetric]]) is built
+    * once per request and shared read-only. `n` is the caller's
+    * candidate budget, never clamped here (a two-phase pool is rerank·k,
+    * an internal budget, config.h:93; the client clamp lives at the
+    * door). A probe set this tier does not cover is refused — the
+    * router only sends covered sets or resident subsets.
     */
-  def coversRequest(q: Array[Float], nprobe: Int,
-      metric: String = "ip"): Boolean =
-    coversProbes(probeFor(q, nprobe, metric))
-
-  /** Per-query LUT — THE shared definition ([[Pq.lutForMetric]]: ip
-    * verbatim [[Pq.lutFor]], l2 negated expanded-L2, cosine
-    * normalized-IP; every variant is higher-is-better so the scan
-    * kernels are metric-blind).
-    */
-  private def lut(q: Array[Float], metric: String): Array[Array[Double]] =
-    Pq.lutForMetric(cb, q, metric)
-
-  /** Phase 1: ADC top-k over the probed lists (approx score, higher =
-    * better for every metric's LUT). Equals `Pq.adcScores` + the top-k
-    * aggregate on the same rows for ip (the PQ path default,
-    * config.h:84-94); `metric` picks the LUT exactly like the
-    * distributed tier's [[PqServingIndex.searchAdc]].
-    */
-  def searchAdc(q: Array[Float], k: Int, nprobe: Int,
-      metric: String = "ip"): Array[(Long, Double)] =
-    adcTopN(q, math.min(k, limits.maxK), nprobe, metric) // clamp (config.h:128)
-
-  /** Internal phase-1 ranking for a TWO-PHASE caller: `n` is the
-    * rerank·k candidate budget — an internal pool size, not a client k,
-    * so deliberately NOT clamped by maxK (the reference rerank_factor
-    * contract, config.h:93; the distributed tier's
-    * [[PqServingIndex.searchAdcUnclamped]] twin).
-    */
-  private[graft] def searchAdcUnclamped(q: Array[Float], n: Int,
-      nprobe: Int, metric: String = "ip"): Array[(Long, Double)] =
-    adcTopN(q, n, nprobe, metric)
-
-  /** [[searchAdcUnclamped]] on a probe set the caller already computed
-    * via [[probeFor]] — the router's entry (one probe per request).
-    */
-  private[graft] def searchAdcOnProbed(probed: Seq[Long],
-      q: Array[Float], n: Int,
-      metric: String = "ip"): Array[(Long, Double)] =
-    adcTopNOnProbed(probed, q, n, metric)
-
-  /** Internal phase-1 ranking: `n` may exceed max_top_k — the rerank
-    * candidate pool is rerank·k, an internal budget, not a client k.
-    */
-  /** Above this fetch depth phase 1 switches from the insertion-array
-    * kernel (optimal at serving k ≲ 100) to gather-then-quickselect
-    * ([[graft.operators.TopK.selectTopN]]): a deep-rerank fetch asks
-    * for thousands of candidates out of a pool only ~40× larger, where
-    * most scanned rows qualify and each insertion shifts O(n) slots —
-    * measured 268 ms of a 284 ms tuned-point query at n=7680 before
-    * the switch, ~O(pool) after. Results are IDENTICAL (same
-    * (score desc, id asc) contract; LocalPqSpec pins deep-fetch ==
-    * serial shallow ranking).
-    */
-  private val deepFetchThreshold = 256
-
-  private def adcTopN(q: Array[Float], n: Int, nprobe: Int,
-      metric: String = "ip"): Array[(Long, Double)] =
-    adcTopNOnProbed(probeFor(q, nprobe, metric), q, n, metric)
-
-  private def adcTopNOnProbed(probed: Seq[Long], q: Array[Float],
-      n: Int, metric: String): Array[(Long, Double)] = {
+  def searchProbed(probed: Seq[Long], q: Array[Float], n: Int,
+      metric: String = "ip",
+      pool: Option[java.util.concurrent.ExecutorService] = None,
+      chunkRows: Int = 65536): Array[(Long, Double)] = {
     require(coversProbes(probed),
       "probed list not cached — serve via the distributed PQ tier " +
         "(PqTieredServing routes there when warm; the declarative " +
         "stored IVF-PQ path is the cold fallback)")
-    val l = lut(q, metric)
-    val m = cb.m
-    if (n > deepFetchThreshold) {
-      // deep fetch: score everything into primitive buffers, one
-      // selection at the end
-      var total = 0
-      probed.foreach(cid => total += lists.get(cid)
-        .map(_._1.length).getOrElse(0))
-      val outIds = new Array[Long](total)
-      val outScores = new Array[Double](total)
-      var w = 0
-      probed.foreach { cid =>
-        val (ids, codes) = lists.getOrElse(cid,
-          (Array.emptyLongArray, Array.emptyByteArray))
-        var r = 0
-        while (r < ids.length) {
-          val off = r * m
-          var s = 0.0
-          var j = 0
-          while (j < m) { s += l(j)(codes(off + j) & 0xFF); j += 1 }
-          outIds(w) = ids(r); outScores(w) = s; w += 1
-          r += 1
-        }
-      }
-      val len = graft.operators.TopK.selectTopN(
-        outIds, outScores, total, n, asc = false)
-      Array.tabulate(len)(i => (outIds(i), outScores(i)))
-    } else {
-      val topk = new ServingIndex.BoundedTopK(n, asc = false)
-      probed.foreach { cid =>
-        // empty lists pass coverage but have no cached rows to scan
-        val (ids, codes) = lists.getOrElse(cid,
-          (Array.emptyLongArray, Array.emptyByteArray))
-        var r = 0
-        while (r < ids.length) {
-          val off = r * m
-          var s = 0.0
-          var j = 0
-          // codes are uint8 packed as JVM bytes — mask back to 0..255
-          while (j < m) { s += l(j)(codes(off + j) & 0xFF); j += 1 }
-          topk.insert(s, ids(r))
-          r += 1
-        }
-      }
-      topk.result()
-    }
-  }
-
-  /** [[searchAdc]] with the scan fanned out over a worker pool — the
-    * reference's `worker_threads` request parallelism (config.h:171)
-    * applied to the one place a 100M-geometry request is compute-bound:
-    * the ADC scan of ~0.5M candidates × m lookups. Probed lists split
-    * into ~`chunkRows` work units; each unit ranks into its own
-    * bounded top-k and the unit winners merge under the shared
-    * (score desc, id asc) contract — top-k is scan-order-insensitive,
-    * so results are IDENTICAL to the serial scan (LocalPqSpec pins it).
-    * The LUT is built once per request and shared read-only.
-    */
-  def searchAdcParallel(q: Array[Float], k: Int, nprobe: Int,
-      pool: java.util.concurrent.ExecutorService,
-      chunkRows: Int = 65536,
-      metric: String = "ip"): Array[(Long, Double)] =
-    adcTopNParallel(q, math.min(k, limits.maxK), nprobe, pool, chunkRows,
-      metric)
-
-  private def adcTopNParallel(q: Array[Float], n: Int, nprobe: Int,
-      pool: java.util.concurrent.ExecutorService,
-      chunkRows: Int, metric: String = "ip"): Array[(Long, Double)] = {
-    val probed = probeFor(q, nprobe, metric)
-    require(coversProbes(probed),
-      "probed list not cached — serve via the distributed PQ tier " +
-        "(PqTieredServing routes there when warm; the declarative " +
-        "stored IVF-PQ path is the cold fallback)")
-    val l = lut(q, metric)
-    val m = cb.m
-    val units = probed.flatMap { cid =>
-      val (ids, _) = lists.getOrElse(cid,
-        (Array.emptyLongArray, Array.emptyByteArray))
-      (0 until ids.length by chunkRows).map(s =>
-        (cid, s, math.min(ids.length, s + chunkRows)))
-    }
-    if (n > deepFetchThreshold) {
-      // deep fetch ([[deepFetchThreshold]]): each unit scores its rows
-      // into primitive buffers (no per-candidate ranking work at all),
-      // the driver thread concatenates and runs ONE quickselect — the
-      // per-unit insertion heaps are O(rows·n) in this regime
-      val futs = units.map { case (cid, from, until) =>
-        pool.submit(new java.util.concurrent.Callable[
-            (Array[Long], Array[Double])] {
-          override def call(): (Array[Long], Array[Double]) = {
-            val (ids, codes) = lists(cid)
-            val cnt = until - from
-            val uIds = new Array[Long](cnt)
-            val uScores = new Array[Double](cnt)
-            var r = from
-            var w = 0
-            while (r < until) {
-              val off = r * m
-              var s = 0.0
-              var j = 0
-              while (j < m) { s += l(j)(codes(off + j) & 0xFF); j += 1 }
-              uIds(w) = ids(r); uScores(w) = s; w += 1
-              r += 1
-            }
-            (uIds, uScores)
-          }
-        })
-      }
-      val parts = futs.map(_.get())
-      val total = parts.iterator.map(_._1.length).sum
-      val allIds = new Array[Long](total)
-      val allScores = new Array[Double](total)
-      var w = 0
-      parts.foreach { case (uIds, uScores) =>
-        System.arraycopy(uIds, 0, allIds, w, uIds.length)
-        System.arraycopy(uScores, 0, allScores, w, uScores.length)
-        w += uIds.length
-      }
-      val len = graft.operators.TopK.selectTopN(
-        allIds, allScores, total, n, asc = false)
-      Array.tabulate(len)(i => (allIds(i), allScores(i)))
-    } else {
-      val futs = units.map { case (cid, from, until) =>
-        pool.submit(new java.util.concurrent.Callable[
+    if (n <= 0) return Array.empty
+    val lut = Pq.lutForMetric(cb, q, metric)
+    // empty lists pass coverage but have no cached rows to scan
+    val units = for {
+      cid <- probed
+      (ids, codes) <- lists.get(cid).toSeq
+      from <- 0 until ids.length by chunkRows
+    } yield (ids, codes, from, math.min(ids.length, from + chunkRows))
+    def scan(u: (Array[Long], Array[Byte], Int, Int)) =
+      Pq.adcTopN(u._1, u._2, u._3, u._4, lut, n)
+    val parts = pool match {
+      case Some(p) =>
+        units.map(u => p.submit(new java.util.concurrent.Callable[
             Array[(Long, Double)]] {
-          override def call(): Array[(Long, Double)] = {
-            val (ids, codes) = lists(cid)
-            val topk = new ServingIndex.BoundedTopK(n, asc = false)
-            var r = from
-            while (r < until) {
-              val off = r * m
-              var s = 0.0
-              var j = 0
-              while (j < m) { s += l(j)(codes(off + j) & 0xFF); j += 1 }
-              topk.insert(s, ids(r))
-              r += 1
-            }
-            topk.result()
-          }
-        })
-      }
-      val merged = new ServingIndex.BoundedTopK(n, asc = false)
-      futs.foreach(_.get().foreach { case (id, s) => merged.insert(s, id) })
-      merged.result()
+          override def call(): Array[(Long, Double)] = scan(u)
+        })).map(_.get())
+      case None => units.map(scan)
     }
+    if (parts.length == 1) parts.head else Pq.mergeTopN(parts, n)
   }
 
   /** Two-phase: phase-1 top-(rerank·k) → exact dot re-score against the
@@ -342,7 +172,8 @@ final class LocalPqIndex private (
   def search(q: Array[Float], k: Int, nprobe: Int, rerank: Int,
       raw: LocalServingIndex): Array[(Long, Double)] = {
     val kk = math.min(k, limits.maxK)
-    val candidates = adcTopN(q, kk * rerank, nprobe).map(_._1)
+    val candidates =
+      searchProbed(probeFor(q, nprobe), q, kk * rerank).map(_._1)
     val exact = raw.scoreIds(q, candidates)
     // the expected configuration is a PQ tier WIDER than the raw tier
     // (that is the compression's point), so a candidate may well live in

@@ -188,6 +188,70 @@ object Pq {
       s"unknown metric '$other' (ip | l2 | cosine)")
   }
 
+  /** Above this fetch depth the ADC top-n switches from the insertion
+    * array ([[TopK.Bounded]], optimal at serving k ≲ 100) to
+    * score-then-quickselect ([[TopK.selectTopN]]): a deep-rerank fetch
+    * asks for thousands of candidates out of a pool only ~40× larger,
+    * where most scanned rows qualify and each insertion shifts O(n)
+    * slots — measured 268 ms of a 284 ms tuned-point query at n=7680
+    * before the switch, ~O(pool) after. Results are IDENTICAL (same
+    * (score desc, id asc) contract; LocalPqSpec pins deep == shallow
+    * ranking against the declarative oracle).
+    */
+  private[index] val DeepFetchThreshold = 256
+
+  /** THE phase-1 ADC kernel of both PQ cache tiers: score rows
+    * `[from, until)` of one packed list (`m` code bytes a row, uint8 as
+    * JVM bytes) as Σ_j lut(j)(code_j) with sequential double
+    * accumulation — the codegen kernel's order
+    * (`IndexExpressions.pqAdcSum`) — and keep the top `n` under the
+    * (score desc, id asc) contract. Every LUT variant is
+    * higher-is-better ([[lutForMetric]]), so the kernel is metric-blind.
+    */
+  private[index] def adcTopN(ids: Array[Long], codes: Array[Byte],
+      from: Int, until: Int, lut: Array[Array[Double]],
+      n: Int): Array[(Long, Double)] = {
+    val m = lut.length
+    val deep = n > DeepFetchThreshold
+    val cnt = until - from
+    val outIds = if (deep) new Array[Long](cnt) else null
+    val outScores = if (deep) new Array[Double](cnt) else null
+    val topk = if (deep) null else new TopK.Bounded(n, asc = false)
+    var r = from
+    while (r < until) {
+      val off = r * m
+      var s = 0.0
+      var j = 0
+      while (j < m) { s += lut(j)(codes(off + j) & 0xFF); j += 1 }
+      if (deep) { outIds(r - from) = ids(r); outScores(r - from) = s }
+      else topk.insert(s, ids(r))
+      r += 1
+    }
+    if (!deep) topk.result()
+    else {
+      val len = TopK.selectTopN(outIds, outScores, cnt, n, asc = false)
+      Array.tabulate(len)(i => (outIds(i), outScores(i)))
+    }
+  }
+
+  /** Merge per-unit top-n pools (scan units, tiers, levels) into one
+    * top-n under the same contract — top-n of a union equals top-n of
+    * the per-part top-ns, so a split scan ranks bit-identically to one
+    * scan of the whole probe set.
+    */
+  private[index] def mergeTopN(parts: Iterable[Array[(Long, Double)]],
+      n: Int): Array[(Long, Double)] = {
+    val total = parts.iterator.map(_.length).sum
+    val ids = new Array[Long](total)
+    val scores = new Array[Double](total)
+    var w = 0
+    parts.foreach(_.foreach { case (id, s) =>
+      ids(w) = id; scores(w) = s; w += 1
+    })
+    val len = TopK.selectTopN(ids, scores, total, n, asc = false)
+    Array.tabulate(len)(i => (ids(i), scores(i)))
+  }
+
   /** Oracle-reproducible codebook: for subspace j (0-based), codewords are
     * `slice(embedding, j*dsub+1, dsub)` of rows with vec_id % every == 0,
     * in vec_id order.

@@ -22,20 +22,19 @@ final case class PqListBlock(cid: Long, ids: Array[Long],
   * are 32× smaller than the raw floats they stand in for), partitioned
   * ONE INVERTED LIST PER PARTITION exactly like [[ServingIndex]].
   *
-  * A request is `sc.runJob(blocks, adcScan, probedPartitions)`:
-  * scheduler-level pruning — a list outside the probe set never
-  * schedules a task, so per-request work is nprobe tasks of in-memory
-  * ADC over packed bytes, not a Catalyst plan + parquet decode per
-  * query (the `ivf_100m_stored_*` path this tier replaces costs ~3×
-  * the 150 ms budget on local[32] re-reading the probed files each
-  * request). At 1000 executors the same request shape holds: nprobe
-  * tasks, each local to its cached list.
-  *
-  * Scoring is the shared ADC contract: [[Pq.lutFor]] LUT (driver, once
-  * per request, rides the closure — m×256 doubles), sequential
-  * double accumulation per row, (score desc, id asc) ranking via the
-  * shared kernels — results are IDENTICAL to [[LocalPqIndex]] on the
-  * same lists (PqServingSpec pins it).
+  * A request is one `sc.runJob` over the probed partitions
+  * ([[searchBatch]], the tier's one request kernel; a single query is
+  * a one-query batch): scheduler-level pruning — a list outside the
+  * probe set never schedules a task, so per-request work is nprobe
+  * tasks of in-memory ADC over packed bytes, not a Catalyst plan +
+  * parquet decode per query (the `ivf_100m_stored_*` path this tier
+  * replaces costs ~3× the 150 ms budget on local[32] re-reading the
+  * probed files each request). At 1000 executors the same request
+  * shape holds: nprobe tasks, each local to its cached list. Scoring
+  * is the shared ADC contract: [[Pq.lutForMetric]] LUTs (driver, once per query,
+  * broadcast), the shared scan kernel [[Pq.adcTopN]] in each task,
+  * (score desc, id asc) ranking — results are IDENTICAL to
+  * [[LocalPqIndex]] on the same lists (PqServingSpec pins it).
   */
 final class PqServingIndex private (
     blocks: RDD[PqListBlock],
@@ -88,126 +87,40 @@ final class PqServingIndex private (
     probed.forall(cid =>
       cidToPart.contains(cid) || listSizes.getOrElse(cid, 0L) == 0L)
 
-  /** Would THIS request serve from the tier? — the router's pre-check
-    * ([[PqTieredServing]]): same probe ranking + max_candidates walk
-    * + residency rule as the scan itself, so a `true` here never turns
-    * into the coverage refusal inside [[searchAdc]].
+  /** Phase 1 over the distributed tier for a QUERY BATCH (Q12,
+    * config.h:180) — THIS tier's one request kernel: ONE scheduler job
+    * serves the whole batch. Each probed partition is scheduled once,
+    * and its task scans the packed list once per query that probed it
+    * with the shared kernel ([[Pq.adcTopN]]), so the per-request
+    * job-dispatch floor (~14 ms on local[32], the dominant cost of a
+    * cache-tier request) is paid once per batch; a one-query batch is
+    * the single request. Per-query LUTs ([[Pq.lutForMetric]] — every
+    * variant higher-is-better) ride a broadcast (batch × m × 256
+    * doubles — ~20 MB at the reference geometry, too big for a task
+    * closure), and the driver merges each query's partials under the
+    * (score desc, id asc) contract ([[Pq.mergeTopN]]) — results equal
+    * the driver tier's on the same lists (PqServingSpec pins it). `n`
+    * is the caller's candidate budget, never clamped here (the client
+    * clamp and the batch guard live at the door). A routing caller
+    * that already ranked the centroids passes `knownProbes` (one probe
+    * per query per request).
     */
-  def coversRequest(q: Array[Float], nprobe: Int,
-      metric: String = "ip"): Boolean =
-    coversProbes(probeFor(q, nprobe, metric))
-
-  /** Phase 1 over the distributed tier: ADC top-k of the probed lists,
-    * one task per probed list, driver merge. The CLIENT-facing entry —
-    * `k` is clamped by maxK like every tier's client k. `metric` picks
-    * the LUT ([[Pq.lutForMetric]] — ip verbatim, l2 negated expanded-L2,
-    * cosine normalized-IP over normalize-at-admission codes); every
-    * variant is higher-is-better so the scan kernels are unchanged.
-    */
-  def searchAdc(q: Array[Float], k: Int, nprobe: Int,
-      metric: String = "ip"): Array[(Long, Double)] =
-    adcTopN(q, math.min(k, limits.maxK), nprobe, metric)
-
-  /** Internal phase-1 ranking for a TWO-PHASE caller: `n` is the rerank
-    * candidate budget (rerank · k) — an internal pool size, not a
-    * client k, so it is deliberately NOT clamped by maxK (mirroring
-    * [[LocalPqIndex]]'s adcTopN; the reference's rerank_factor contract
-    * config.h:93 — clamping here would silently shrink the rerank pool
-    * to rerank·k ≤ maxK and degrade recall at large k).
-    */
-  private[graft] def searchAdcUnclamped(q: Array[Float], n: Int,
-      nprobe: Int, metric: String = "ip"): Array[(Long, Double)] =
-    adcTopN(q, n, nprobe, metric)
-
-  /** [[searchAdcUnclamped]] on a probe set the caller already computed
-    * via [[probeFor]] — the router's entry (one probe per request).
-    */
-  private[graft] def searchAdcOnProbed(probed: Seq[Long],
-      q: Array[Float], n: Int,
-      metric: String = "ip"): Array[(Long, Double)] =
-    adcTopNOnProbed(probed, q, n, metric)
-
-  private def adcTopN(q: Array[Float], n: Int, nprobe: Int,
-      metric: String): Array[(Long, Double)] =
-    adcTopNOnProbed(probeFor(q, nprobe, metric), q, n, metric)
-
-  private def adcTopNOnProbed(probed: Seq[Long], q: Array[Float],
-      n: Int, metric: String): Array[(Long, Double)] = {
-    if (n <= 0) return Array.empty
-    // coverage contract (same as the driver tier's): a probed list with
-    // rows but no resident partition must REFUSE, never silently drop
-    // its candidates from the top-k (a partial packed file could
-    // otherwise serve subtly wrong results); empty lists are covered
-    require(coversProbes(probed),
-      "probed list not resident in the distributed tier — serve via " +
-        "the declarative stored path")
-    val parts = probed.flatMap(cidToPart.get).distinct.toArray
-    if (parts.isEmpty) return Array.empty
-    val lut = Pq.lutForMetric(cb, q, metric)
-    val m = cb.m
-    val partials: Array[Array[(Long, Double)]] =
-      ServingIndex.withDeadline(blocks.sparkContext, limits.deadlineMs) {
-        blocks.sparkContext.runJob(
-          blocks,
-          (it: Iterator[PqListBlock]) =>
-            PqServingIndex.adcScanTopN(it, lut, m, n),
-          parts.toIndexedSeq)
-      }
-    // driver merge under the shared contract; the deep-fetch regime
-    // (n × nprobe partials) goes through the same quickselect the
-    // tiers' scans use
-    val total = partials.iterator.map(_.length).sum
-    val ids = new Array[Long](total)
-    val scores = new Array[Double](total)
-    var w = 0
-    partials.foreach(_.foreach { case (id, s) =>
-      ids(w) = id; scores(w) = s; w += 1
-    })
-    val len = graft.operators.TopK.selectTopN(ids, scores, total, n,
-      asc = false)
-    Array.tabulate(len)(i => (ids(i), scores(i)))
-  }
-
-  /** Q12 batching over the distributed tier (config.h:180): ONE
-    * scheduler job serves the whole batch — each probed partition is
-    * scheduled once, and its task scans the packed list once per query
-    * that probed it — so the per-request job-dispatch floor (~14 ms on
-    * local[32], the dominant cost of a cache-tier request) is paid once
-    * per batch instead of once per query. Per-query LUTs ride a
-    * broadcast (batch × m × 256 doubles — ~20 MB at the reference
-    * geometry, too big for a task closure). Results are IDENTICAL to
-    * per-query [[searchAdc]]: same LUTs, same kernels, same
-    * (score best, id asc) merge (PqServingSpec pins it).
-    */
-  def searchAdcBatch(qs: Seq[Array[Float]], k: Int, nprobe: Int,
-      metric: String = "ip"): IndexedSeq[Array[(Long, Double)]] =
-    adcTopNBatch(qs, math.min(k, limits.maxK), nprobe, metric)
-
-  /** [[searchAdcBatch]] at the two-phase caller's INTERNAL candidate
-    * budget — unclamped like [[searchAdcUnclamped]].
-    */
-  private[graft] def searchAdcBatchUnclamped(qs: Seq[Array[Float]],
-      n: Int, nprobe: Int, metric: String = "ip",
-      knownProbes: Option[IndexedSeq[Seq[Long]]] = None)
-      : IndexedSeq[Array[(Long, Double)]] =
-    adcTopNBatch(qs, n, nprobe, metric, knownProbes)
-
-  private def adcTopNBatch(qs: Seq[Array[Float]], n: Int, nprobe: Int,
-      metric: String,
+  def searchBatch(qs: Seq[Array[Float]], n: Int, nprobe: Int,
+      metric: String = "ip",
       knownProbes: Option[IndexedSeq[Seq[Long]]] = None)
       : IndexedSeq[Array[(Long, Double)]] = {
-    require(qs.size <= limits.maxBatch,
-      s"query batch ${qs.size} exceeds max_query_batch ${limits.maxBatch}")
     val qArr = qs.toArray
     if (n <= 0 || qArr.isEmpty)
       return IndexedSeq.fill(qArr.length)(Array.empty)
-    // per-query probe sets: a routing caller that already ranked the
-    // centroids passes them through (one probe per query per request)
     val probedByQuery = knownProbes
       .map(_.toArray)
       .getOrElse(qArr.map(q => probeFor(q, nprobe, metric)))
     require(probedByQuery.length == qArr.length,
       "knownProbes length != batch size")
+    // coverage contract (same as the driver tier's): a probed list with
+    // rows but no resident partition must REFUSE, never silently drop
+    // its candidates from the top-k (a partial packed file could
+    // otherwise serve subtly wrong results); empty lists are covered
     probedByQuery.foreach { probed =>
       require(coversProbes(probed),
         "probed list not resident in the distributed tier — serve via " +
@@ -231,7 +144,6 @@ final class PqServingIndex private (
     val bcLuts = sc.broadcast(luts)
     val partQueries = byPart.map { case (p, is) => (p, is.toArray) }.toMap
     val parts = byPart.keys.toArray.sorted
-    val m = cb.m
     val partials: Array[Array[(Int, Array[(Long, Double)])]] =
       try ServingIndex.withDeadline(sc, limits.deadlineMs) {
         sc.runJob(
@@ -244,80 +156,23 @@ final class PqServingIndex private (
               Array.empty[(Int, Array[(Long, Double)])]
             else {
               val block = it.next()
-              mine.map(i => (i,
-                PqServingIndex.adcScanBlockTopN(block,
-                  bcLuts.value(i), m, n)))
+              mine.map(i => (i, Pq.adcTopN(block.ids, block.codes, 0,
+                block.ids.length, bcLuts.value(i), n)))
             }
           },
           parts.toIndexedSeq)
       } finally bcLuts.destroy()
     // per-query driver merge under the shared contract
     val acc = Array.fill(qArr.length)(
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Double)])
-    partials.foreach(_.foreach { case (i, hits) => acc(i) ++= hits })
-    acc.iterator.map { hits =>
-      val total = hits.length
-      val ids = new Array[Long](total)
-      val scores = new Array[Double](total)
-      var w = 0
-      hits.foreach { case (id, s) => ids(w) = id; scores(w) = s; w += 1 }
-      val len = graft.operators.TopK.selectTopN(ids, scores, total, n,
-        asc = false)
-      Array.tabulate(len)(i => (ids(i), scores(i)))
-    }.toIndexedSeq
+      scala.collection.mutable.ArrayBuffer.empty[Array[(Long, Double)]])
+    partials.foreach(_.foreach { case (i, hits) => acc(i) += hits })
+    acc.iterator.map(Pq.mergeTopN(_, n)).toIndexedSeq
   }
 
   def unpersist(): Unit = { blocks.unpersist(); () }
 }
 
 object PqServingIndex {
-
-  /** In-task ADC scan of one packed list: LUT-sum every row, rank into
-    * the regime-appropriate kernel (insertion array at serving k,
-    * gather+quickselect at deep fetch) — the same switch the driver
-    * tier makes.
-    */
-  private[index] def adcScanTopN(it: Iterator[PqListBlock],
-      lut: Array[Array[Double]], m: Int,
-      n: Int): Array[(Long, Double)] = {
-    if (!it.hasNext) return Array.empty
-    adcScanBlockTopN(it.next(), lut, m, n)
-  }
-
-  private[index] def adcScanBlockTopN(block: PqListBlock,
-      lut: Array[Array[Double]], m: Int,
-      n: Int): Array[(Long, Double)] = {
-    val ids = block.ids
-    val codes = block.codes
-    if (n > 256) {
-      val outIds = new Array[Long](ids.length)
-      val outScores = new Array[Double](ids.length)
-      var r = 0
-      while (r < ids.length) {
-        val off = r * m
-        var s = 0.0
-        var j = 0
-        while (j < m) { s += lut(j)(codes(off + j) & 0xFF); j += 1 }
-        outIds(r) = ids(r); outScores(r) = s
-        r += 1
-      }
-      val len = graft.operators.TopK.selectTopN(outIds, outScores,
-        ids.length, n, asc = false)
-      Array.tabulate(len)(i => (outIds(i), outScores(i)))
-    } else {
-      val topk = new ServingIndex.BoundedTopK(n, asc = false)
-      var r = 0
-      while (r < ids.length) {
-        val off = r * m
-        var s = 0.0
-        var j = 0
-        while (j < m) { s += lut(j)(codes(off + j) & 0xFF); j += 1 }
-        topk.insert(s, ids(r))
-        r += 1
-      }
-      topk.result()
-    }
-  }
 
   /** Build from a PACKED TIER FILE ([[LocalPqIndex.savePacked]]'s
     * format): the driver scans the file's table of contents (one pass

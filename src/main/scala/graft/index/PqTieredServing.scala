@@ -2,9 +2,12 @@ package graft.index
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable.ArrayBuffer
+
 /** Cache-hierarchy ROUTER for the stable PQ tier — the wiring between
   * the reference's memory-cache split (configs/woved-default.yaml:85-89
-  * `memory_cache_mb`) and its stable IVF-PQ store (config.h:84-94):
+  * `memory_cache_mb`) and its stable IVF-PQ store (config.h:84-94). It
+  * is the ONLY code that picks a tier for a PQ request:
   *
   *   L0  [[LocalPqIndex]]     driver-resident packed codes — zero
   *                            scheduler dispatch, sub-ms at reference
@@ -18,53 +21,52 @@ import java.util.concurrent.atomic.AtomicLong
   *                            PqServingIndex.resident]] after an
   *                            unpersist so eviction DEGRADES to L2
   *                            instead of throwing.
-  *   L2  `stored`             the declarative stored path (partition-
-  *                            pruned parquet ADC) — the true COLD
-  *                            layer (measured p99 ~1-5 s at 100M on
-  *                            local[32]; an executor count divides it
-  *                            on a real cluster). Never a throw: this
+  *   L2  `stored`             the stored level: a batch closure over
+  *                            (query, probe set) pairs plus that
+  *                            level's own probe (`storedProbe`, used
+  *                            only when neither cache level exists) —
+  *                            the true COLD layer (partition-pruned
+  *                            parquet ADC, measured p99 ~1-5 s at 100M
+  *                            on local[32]). Never a throw: this
   *                            closure must ANSWER ([[graft.Graft
   *                            .warmPqTier]] wires the real codes-tree
   *                            plan).
   *
-  * A request serves from the SHALLOWEST level that covers every probed
-  * list ([[LocalPqIndex.coversProbes]] / [[PqServingIndex
-  * .coversProbes]] — the same probe ranking + max_candidates walk the
-  * scans themselves run, so routing never turns into a coverage
-  * refusal mid-serve). When L0 holds only SOME of the probed lists, the
-  * request serves MIXED: resident lists scan driver-side, the misses
-  * scan as L1 tasks, and the two pools merge under the shared
-  * (score desc, id asc) contract — at a scale where the driver budget
-  * holds a fraction of the lists, L0 keeps earning its bytes instead
-  * of going dead weight behind an all-or-nothing coverage check. The
-  * same split applies against L2 (`storedOnProbed`, when wired): with
-  * the distributed tier EVICTED, L0's resident lists still scan
-  * driver-side and only the misses pay the parquet plan — the coldest
-  * path is exactly where driver-memory lists help most.
-  * All levels share the ADC contract ([[Pq.lutForMetric]] LUT,
-  * sequential double accumulation, (score desc, id asc) ranking), so
-  * WHICH level serves is invisible in the values — PqTieredServingSpec
-  * pins route-choice and mixed-serve parity — and only visible in
-  * latency and in the per-level counters below (bench observability:
-  * `ivf_100m_route_*`).
+  * [[search]] takes a query batch (a single request is a one-query
+  * batch) and ranks each query's centroids ONCE. A query serves from
+  * the SHALLOWEST level that covers its probed lists
+  * ([[LocalPqIndex.coversProbes]] / [[PqServingIndex.coversProbes]] —
+  * the same probe ranking + max_candidates walk the scans themselves
+  * run, so routing never turns into a coverage refusal mid-serve). When
+  * L0 holds only SOME of the probed lists, the query serves MIXED:
+  * resident lists scan driver-side, only the misses go one level
+  * deeper (L1 when it is resident and covers the query, the store
+  * otherwise), and the pools merge under the shared (score desc, id
+  * asc) contract — at a scale where the driver budget holds a fraction
+  * of the lists, L0 keeps earning its bytes, and on the coldest path
+  * driver-memory lists help most. All L1 work of a batch (whole queries
+  * and mixed-serve misses) is ONE scheduler job, all stored work ONE
+  * stored call. All levels share the ADC contract ([[Pq.adcTopN]] over
+  * [[Pq.lutForMetric]] LUTs), so WHICH level serves is invisible in the
+  * values — PqTieredServingSpec pins route-choice and mixed-serve
+  * parity — and only visible in latency and in the per-level counters
+  * below (bench observability: `ivf_100m_route_*`).
   *
   * The levels must be built over the SAME corpus snapshot, codebook,
   * and serving limits — the router routes, it does not reconcile
   * generations (that is the admission passes' job, like every cache
-  * pair in the engine). `limits` is the ONE client-k clamp applied at
-  * the door regardless of which level serves (route-invisible
-  * clamping; the tiers' own maxK fields never see the client k).
+  * pair in the engine). `n` is a candidate budget, never a client k:
+  * the client clamp and the batch guard live at the door
+  * ([[graft.Graft.searchPqBatch]]).
   *
   * Thread-safe: routing reads immutable tier state; counters are
-  * atomics.
+  * atomics, one count per query.
   */
 final class PqTieredServing(
     local: Option[LocalPqIndex],
     dist: Option[PqServingIndex],
-    stored: (Array[Float], Int, Int, String) => Array[(Long, Double)],
-    limits: ServingLimits,
-    storedOnProbed: Option[(Array[Float], Seq[Long], Int, String) =>
-      Array[(Long, Double)]] = None) {
+    stored: PqTieredServing.StoredSearch,
+    storedProbe: (Array[Float], Int, String) => Seq[Long]) {
 
   private val localN = new AtomicLong(0L)
   private val mixedN = new AtomicLong(0L)
@@ -73,18 +75,17 @@ final class PqTieredServing(
   private val mixedStoredN = new AtomicLong(0L)
   private val anomalousN = new AtomicLong(0L)
 
-  /** Requests served wholly by the driver tier. */
+  /** Queries served wholly by the driver tier. */
   def localServes: Long = localN.get()
-  /** Requests served part-L0/part-L1 (split probe set, merged pools). */
+  /** Queries served part-L0/part-L1 (split probe set, merged pools). */
   def mixedServes: Long = mixedN.get()
-  /** Requests that fell through to the distributed tier alone. */
+  /** Queries that fell through to the distributed tier alone. */
   def distServes: Long = distN.get()
-  /** Requests that fell through past both cache levels to the store. */
+  /** Queries that fell through past both cache levels to the store. */
   def storedServes: Long = storedN.get()
-  /** Requests served part-L0/part-STORED (L1 evicted, driver tier
+  /** Queries served part-L0/part-STORED (L1 evicted, driver tier
     * holding some probed lists — resident lists at driver speed, only
-    * the misses pay the parquet plan). Requires the `storedOnProbed`
-    * closure; without it such requests serve pure-stored.
+    * the misses pay the parquet plan).
     */
   def mixedStoredServes: Long = mixedStoredN.get()
   /** Stored routes taken while the distributed tier WAS resident — a
@@ -95,116 +96,80 @@ final class PqTieredServing(
     */
   def anomalousResidentRoutes: Long = anomalousN.get()
 
-  // the batch door ([[graft.Graft.searchPqBatch]]) routes per query but
-  // scans the L1 subset as ONE job — it accounts its requests here so
-  // the counters cover EVERY request through the hierarchy, not just
-  // the single-query door
-  private[graft] def noteLocalServe(): Unit = { localN.incrementAndGet(); () }
-  private[graft] def noteDistServe(): Unit = { distN.incrementAndGet(); () }
-  private[graft] def noteStoredServe(): Unit = { storedN.incrementAndGet(); () }
-  private[graft] def noteMixedStoredServe(): Unit = {
-    mixedStoredN.incrementAndGet(); ()
-  }
-  private[graft] def noteAnomalousResidentRoute(): Unit = {
+  private def noteAnomalousResidentRoute(): Unit = {
     if (anomalousN.getAndIncrement() == 0L)
       System.err.println("[graft] PQ router: resident distributed " +
         "tier does not cover the probe walk — serving from the " +
         "store; see anomalousResidentRoutes")
   }
 
-  /** Phase-1 ADC top-k through the hierarchy (client-facing). The
-    * client k clamps against the ROUTER's limits — one clamp, every
-    * route, so the stored fall-through can never see a larger k than
-    * the cache levels would have (route-invisible behavior).
+  /** Phase-1 ADC top-`n` for each query of a batch through the
+    * hierarchy — `n` is the two-phase caller's rerank·k candidate
+    * budget, unclamped on every level (config.h:93). One probe per
+    * query, one L1 job and one stored call per batch; results come back
+    * in query order.
     */
-  def searchAdc(q: Array[Float], k: Int, nprobe: Int,
-      metric: String = "ip"): Array[(Long, Double)] =
-    searchAdcUnclamped(q, math.min(k, limits.maxK), nprobe, metric)
-
-  /** Phase-1 ranking at a two-phase caller's INTERNAL rerank·k budget
-    * — unclamped on every level (`n` is a candidate-pool size, not a
-    * client k; the `stored` closure receives it as its k and must
-    * treat it as an internal budget too). The centroid ranking +
-    * max_candidates walk runs ONCE here and the probe set is passed
-    * through to the serving tier (the tiers share one layout by the
-    * router's construction contract), so routing costs one probe, not
-    * two or three.
-    */
-  private[graft] def searchAdcUnclamped(q: Array[Float], n: Int,
-      nprobe: Int, metric: String = "ip"): Array[(Long, Double)] = {
-    val probed = local.map(_.probeFor(q, nprobe, metric))
-      .orElse(dist.map(_.probeFor(q, nprobe, metric)))
-    probed match {
-      case Some(p) if local.exists(_.coversProbes(p)) =>
-        localN.incrementAndGet()
-        local.get.searchAdcOnProbed(p, q, n, metric)
-      case Some(p) if dist.exists(d => d.resident && d.coversProbes(p)) =>
-        // per-probe MIXED serve: L0's resident lists scan at driver
-        // memory speed, only the misses pay L1 tasks — the pools merge
-        // under the one ranking contract, so values equal a pure-L1
-        // scan of the full probe set (top-n of a union == top-n of the
-        // per-part top-ns)
-        local.map(l => (l, l.partitionResident(p))) match {
-          case Some((l, (res, miss))) if res.nonEmpty =>
-            mixedN.incrementAndGet()
-            PqTieredServing.mergeTopN(
-              l.searchAdcOnProbed(res, q, n, metric),
-              dist.get.searchAdcOnProbed(miss, q, n, metric), n)
-          case _ =>
-            distN.incrementAndGet()
-            dist.get.searchAdcOnProbed(p, q, n, metric)
-        }
-      case Some(p) =>
-        // a RESIDENT tier landing here means the probe walk asked for
-        // lists the tier doesn't hold — not an eviction, a coverage
-        // regression (the tiers are built over one layout)
-        if (dist.exists(_.resident)) noteAnomalousResidentRoute()
-        // MIXED L0/stored serve (the coldest path is exactly where
-        // driver-memory lists help most): resident lists scan
-        // driver-side, only the misses pay the parquet plan — same
-        // merge contract as the L0/L1 mixed serve above. A pure-stored
-        // serve with the probed closure wired reuses the probe set
-        // already in hand (one probe per request, even on the cold
-        // path); only a closure-less router re-derives it inside
-        // `stored`.
-        (local.map(l => (l, l.partitionResident(p))), storedOnProbed) match {
-          case (Some((l, (res, miss))), Some(sp)) if res.nonEmpty =>
-            mixedStoredN.incrementAndGet()
-            PqTieredServing.mergeTopN(
-              l.searchAdcOnProbed(res, q, n, metric),
-              if (miss.isEmpty) Array.empty[(Long, Double)]
-              else sp(q, miss, n, metric), n)
-          case (_, Some(sp)) =>
-            storedN.incrementAndGet()
-            sp(q, p, n, metric)
-          case _ =>
-            storedN.incrementAndGet()
-            stored(q, n, nprobe, metric)
-        }
-      case None =>
-        storedN.incrementAndGet()
-        stored(q, n, nprobe, metric)
+  def search(qs: IndexedSeq[Array[Float]], n: Int, nprobe: Int,
+      metric: String = "ip"): IndexedSeq[Array[(Long, Double)]] = {
+    val pools = Array.fill(qs.length)(Array.empty[(Long, Double)])
+    if (n <= 0) return pools.toIndexedSeq
+    val l1Resident = dist.exists(_.resident)
+    // (query index, probe subset) still to serve below L0
+    val l1Work = ArrayBuffer.empty[(Int, Seq[Long])]
+    val storedWork = ArrayBuffer.empty[(Int, Seq[Long])]
+    qs.indices.foreach { qi =>
+      val q = qs(qi)
+      // the tiers share one layout (construction contract), so the
+      // shallowest present level's probe set is THE probe set
+      val probed = local.map(_.probeFor(q, nprobe, metric))
+        .orElse(dist.map(_.probeFor(q, nprobe, metric)))
+        .getOrElse(storedProbe(q, nprobe, metric))
+      local.filter(_.coversProbes(probed)) match {
+        case Some(l) =>
+          localN.incrementAndGet()
+          pools(qi) = l.searchProbed(probed, q, n, metric)
+        case None =>
+          val (res, miss) = local.map(_.partitionResident(probed))
+            .getOrElse((Seq.empty[Long], probed))
+          if (res.nonEmpty)
+            pools(qi) = local.get.searchProbed(res, q, n, metric)
+          val toL1 = l1Resident && dist.get.coversProbes(probed)
+          // a RESIDENT tier that misses the walk is a coverage
+          // regression, not an eviction (the tiers share one layout)
+          if (!toL1 && l1Resident) noteAnomalousResidentRoute()
+          (if (toL1) { if (res.nonEmpty) mixedN else distN }
+            else { if (res.nonEmpty) mixedStoredN else storedN })
+            .incrementAndGet()
+          if (miss.nonEmpty)
+            (if (toL1) l1Work else storedWork) += ((qi, miss))
+      }
     }
+    def mergeInto(work: ArrayBuffer[(Int, Seq[Long])],
+        got: IndexedSeq[Array[(Long, Double)]]): Unit =
+      work.indices.foreach { w =>
+        val qi = work(w)._1
+        pools(qi) =
+          if (pools(qi).isEmpty) got(w)
+          else Pq.mergeTopN(Seq(pools(qi), got(w)), n)
+      }
+    if (l1Work.nonEmpty)
+      mergeInto(l1Work, dist.get.searchBatch(
+        l1Work.map(w => qs(w._1)).toIndexedSeq, n, nprobe, metric,
+        knownProbes = Some(l1Work.map(_._2).toIndexedSeq)))
+    if (storedWork.nonEmpty)
+      mergeInto(storedWork, stored(
+        storedWork.map { case (qi, p) => (qs(qi), p) }.toIndexedSeq, n,
+        metric))
+    pools.toIndexedSeq
   }
 }
 
 object PqTieredServing {
 
-  /** Merge two per-level phase-1 pools into the request's top-n under
-    * the engine-wide (score desc, id asc) contract — the same
-    * quickselect kernel the deep-fetch scans use, so a mixed serve
-    * ranks bit-identically to a single-level scan of the union.
+  /** The stored level: top-`n` ADC (under `metric`) of each query over
+    * ITS probe set, in input order. The router passes probe SUBSETS on
+    * a mixed serve, so the closure must scan exactly the lists given.
     */
-  private[graft] def mergeTopN(a: Array[(Long, Double)],
-      b: Array[(Long, Double)], n: Int): Array[(Long, Double)] = {
-    val total = a.length + b.length
-    val ids = new Array[Long](total)
-    val scores = new Array[Double](total)
-    var w = 0
-    a.foreach { case (id, s) => ids(w) = id; scores(w) = s; w += 1 }
-    b.foreach { case (id, s) => ids(w) = id; scores(w) = s; w += 1 }
-    val len = graft.operators.TopK.selectTopN(ids, scores, total, n,
-      asc = false)
-    Array.tabulate(len)(i => (ids(i), scores(i)))
-  }
+  type StoredSearch = (IndexedSeq[(Array[Float], Seq[Long])], Int,
+    String) => IndexedSeq[Array[(Long, Double)]]
 }

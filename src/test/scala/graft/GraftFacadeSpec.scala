@@ -1003,6 +1003,93 @@ class GraftFacadeSpec extends SparkSpec {
     Segments.deleteDir(base)
   }
 
+  test("PQ doors clamp the client k to max_top_k at the door, whichever cache level serves") {
+    val base = tmp()
+    val maxK = 5
+    val cfg0 = metricCfg("ip")
+    val g = Graft.open(spark, base, cfg0.copy(query =
+      cfg0.query.copy(maxTopK = maxK, defaultTopK = maxK)))
+    g.upsert(metricBatch())
+    g.compact()
+    val q2 = Array.tabulate(mdim)(d => if (d == 5) 1f else 0f)
+    // default budget: L0 covers every query; zero budget: L1 serves all
+    for (budget <- Seq(-1L, 0L)) {
+      assert(g.warmPqTier(localBudgetBytes = budget) > 0)
+      val at = g.searchPq(mq, maxK).toSeq
+      assert(at.length === maxK)
+      // an unclamped k would also widen the rerank pool (k × rerank),
+      // so past-maxK answers equal the maxK answers only if the door
+      // clamps before routing
+      assert(g.searchPq(mq, maxK + 5).toSeq === at, s"budget=$budget")
+      val batchAt = g.searchPqBatch(Seq(mq, q2), maxK).map(_.toSeq)
+      assert(batchAt.head === at)
+      assert(g.searchPqBatch(Seq(mq, q2), maxK + 5).map(_.toSeq) ===
+        batchAt, s"budget=$budget")
+      val (loc, dist, stored) = g.pqDoorRoutes
+      if (budget < 0) assert(loc === 6 && dist === 0, g.pqDoorRoutes)
+      else assert(loc === 0 && dist === 6, g.pqDoorRoutes)
+      assert(stored === 0)
+    }
+    g.close()
+    Segments.deleteDir(base)
+  }
+
+  test("batch door serves mixed L0/L1 like the single door: one phase-1 job, per-query results equal searchPq, mixed serves counted the same") {
+    val base = tmp()
+    val cfg0 = metricCfg("ip")
+    // a narrow probe (2 lists) over 16 well-separated groups of 4 rows,
+    // so with half the lists resident some queries fall wholly inside
+    // the starved driver tier, some split, some miss it
+    val g = Graft.open(spark, base,
+      cfg0.copy(stable = cfg0.stable.copy(nprobe = 2)))
+    def unit(d: Int) = Array.tabulate(mdim)(i => if (i == d) 1f else 0f)
+    g.upsert((for (grp <- 0 until 16; j <- 0 until 4) yield
+      (s"g$grp-$j", Array.tabulate(mdim)(d =>
+        if (d == 4 * grp) 1.0 else if (d == 4 * grp + 1) 0.01 * j
+        else 0.0).toSeq)).toDF("id", "vec"))
+    g.compact()
+    val rows = g.liveView.count()
+    assert(g.warmPqTier(localBudgetBytes = rows * (8L + 8L) / 2) > 0)
+    // classify candidate queries by the route their single-door serve
+    // takes: (local, mixed, dist) counter deltas
+    def routes = {
+      val (l, d, _) = g.pqDoorRoutes
+      val mx = g.pqDoorMixedServes
+      (l - mx, mx, d)
+    }
+    // a query between groups a and b probes their two lists
+    val cands = for (a <- 0 until 16; b <- Seq((a + 1) % 16, (a + 8) % 16))
+      yield unit(4 * a).zip(unit(4 * b)).map { case (x, y) => x + 0.5f * y }
+    val classified = cands.map { q =>
+      val before = routes
+      val want = g.searchPq(q, 5).toSeq
+      val after = routes
+      val cls =
+        if (after._2 > before._2) "mixed"
+        else if (after._3 > before._3) "l1"
+        else "local"
+      (q, want, cls)
+    }
+    val byCls = classified.groupBy(_._3)
+    assert(Seq("local", "mixed", "l1").forall(byCls.contains),
+      s"fixture degenerate: ${byCls.view.mapValues(_.length).toMap}")
+    val picked = Seq("local", "mixed", "l1").flatMap(c => byCls(c).take(2))
+    val before = routes
+    val (got, jobs) = jobsDuring(g.searchPqBatch(picked.map(_._1), 5))
+    val after = routes
+    picked.zip(got).foreach { case ((_, want, cls), pool) =>
+      assert(pool.toSeq === want, s"$cls query diverged from searchPq")
+    }
+    assert(jobs === 1, s"batch door submitted $jobs Spark jobs")
+    // the batch door counts each query exactly as the single door did
+    def count(c: String) = picked.count(_._3 == c).toLong
+    assert((after._1 - before._1, after._2 - before._2,
+      after._3 - before._3) === ((count("local"), count("mixed"),
+      count("l1"))), s"before=$before after=$after")
+    g.close()
+    Segments.deleteDir(base)
+  }
+
   test("PQ door L2: an evicted distributed tier DEGRADES to the durable codes tree — same values, stored-serve counters, both doors") {
     val base = tmp()
     val g = Graft.open(spark, base, metricCfg("ip"))

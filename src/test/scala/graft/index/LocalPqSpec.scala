@@ -21,6 +21,11 @@ class LocalPqSpec extends SparkSpec {
     .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
   private lazy val nlist = cents.count().toInt
 
+  /** Phase-1 ADC of one query over its own probe set. */
+  private def adc(pq: LocalPqIndex, q: Array[Float], n: Int,
+      nprobe: Int): Array[(Long, Double)] =
+    pq.searchProbed(pq.probeFor(q, nprobe), q, n)
+
   test("probe-all ADC equals the declarative adcScores + top-k aggregate") {
     val pq = LocalPqIndex.build(codes, cents, cb)
     assert(pq.cachedLists === nlist)
@@ -33,7 +38,7 @@ class LocalPqSpec extends SparkSpec {
       .view.mapValues(_.map(t => (t._2, t._3))
         .sortBy { case (id, s) => (-s, id) }.toSeq).toMap
     qRows.take(5).foreach { case (qid, qv) =>
-      val got = pq.searchAdc(qv, 20, nprobe = nlist).toSeq
+      val got = adc(pq, qv, 20, nlist).toSeq
       assert(got === want(qid), s"q=$qid")
     }
   }
@@ -45,9 +50,9 @@ class LocalPqSpec extends SparkSpec {
       qRows.take(8).foreach { case (qid, qv) =>
         // tiny chunkRows forces many work units per list — the merge
         // path is exercised, not bypassed
-        val par = pq.searchAdcParallel(qv, 20, nprobe = 3, pool,
-          chunkRows = 7).toSeq
-        val ser = pq.searchAdc(qv, 20, nprobe = 3).toSeq
+        val par = pq.searchProbed(pq.probeFor(qv, 3), qv, 20,
+          pool = Some(pool), chunkRows = 7).toSeq
+        val ser = adc(pq, qv, 20, 3).toSeq
         assert(par === ser, s"q=$qid")
       }
     } finally pool.shutdown()
@@ -76,9 +81,9 @@ class LocalPqSpec extends SparkSpec {
         .view.mapValues(_.map(t => (t._2, t._3))
           .sortBy { case (id, s) => (-s, id) }.toSeq).toMap
       qRows.take(4).foreach { case (qid, qv) =>
-        val ser = pq.searchAdc(qv, 300, nprobe = nlist).toSeq
-        val par = pq.searchAdcParallel(qv, 300, nprobe = nlist, pool,
-          chunkRows = 7).toSeq
+        val ser = adc(pq, qv, 300, nlist).toSeq
+        val par = pq.searchProbed(pq.probeFor(qv, nlist), qv, 300,
+          pool = Some(pool), chunkRows = 7).toSeq
         assert(ser === want(qid), s"serial q=$qid")
         assert(par === want(qid), s"parallel q=$qid")
       }
@@ -98,7 +103,7 @@ class LocalPqSpec extends SparkSpec {
           "query_id", "vec_id", "approx_score", 10)
         .collect().map(r => (r.getLong(1), r.getDouble(2)))
         .sortBy { case (id, s) => (-s, id) }.toSeq
-      assert(pq.searchAdc(qv, 10, 4).toSeq === want, s"q=$qid")
+      assert(adc(pq, qv, 10, 4).toSeq === want, s"q=$qid")
     }
   }
 
@@ -135,8 +140,8 @@ class LocalPqSpec extends SparkSpec {
     assert(loaded.get.cachedBytes === pq.cachedBytes)
     // serving identity: every query's probe-all ADC ranking matches
     qRows.take(5).foreach { case (_, qv) =>
-      assert(loaded.get.searchAdc(qv, 20, nlist).toSeq ===
-        pq.searchAdc(qv, 20, nlist).toSeq)
+      assert(adc(loaded.get, qv, 20, nlist).toSeq ===
+        adc(pq, qv, 20, nlist).toSeq)
     }
     // a different stamp (new store generation / budget) must refuse
     assert(LocalPqIndex.loadPacked(path, "stamp-b", cents, cb,
@@ -156,7 +161,7 @@ class LocalPqSpec extends SparkSpec {
     assert(half.cachedLists > 0 && half.cachedLists < nlist)
     assert(!half.coversProbes(half.probe(qRows.head._2, nlist)))
     intercept[IllegalArgumentException] {
-      half.searchAdc(qRows.head._2, 10, nlist)
+      adc(half, qRows.head._2, 10, nlist)
     }
     // the code tier really is ~8x denser than raw (dim 64 vs m 8, both
     // pricing ids at 8 B): the whole-corpus codes fit well under the
@@ -207,8 +212,8 @@ class LocalPqSpec extends SparkSpec {
     assert(viaSidecar.cachedLists === viaScan.cachedLists)
     assert(viaSidecar.cachedBytes === viaScan.cachedBytes)
     qRows.take(3).foreach { case (qid, qv) =>
-      assert(viaSidecar.searchAdc(qv, 10, 4).toSeq ===
-        viaScan.searchAdc(qv, 10, 4).toSeq, s"q=$qid")
+      assert(adc(viaSidecar, qv, 10, 4).toSeq ===
+        adc(viaScan, qv, 10, 4).toSeq, s"q=$qid")
     }
     // a tight budget admits the same subset either way — the sizes map
     // is the only admission input, so identical sizes ⇒ identical cut
@@ -237,9 +242,9 @@ class LocalPqSpec extends SparkSpec {
     assert(pq.cachedLists === nlist) // the empty list holds no fragments
     // probe-all necessarily includes the empty centroid
     assert(pq.coversProbes(pq.probe(qRows.head._2, nlist + 1)))
-    val got = pq.searchAdc(qRows.head._2, 10, nprobe = nlist + 1)
+    val got = adc(pq, qRows.head._2, 10, nlist + 1)
     // identical answers to the index without the empty list
     val base = LocalPqIndex.build(codes, cents, cb)
-    assert(got.toSeq === base.searchAdc(qRows.head._2, 10, nlist).toSeq)
+    assert(got.toSeq === adc(base, qRows.head._2, 10, nlist).toSeq)
   }
 }

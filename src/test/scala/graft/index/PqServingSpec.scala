@@ -22,6 +22,16 @@ class PqServingSpec extends SparkSpec {
   private lazy val wide =
     ServingLimits(maxK = 4096, maxCandidates = 100000)
 
+  /** Phase-1 ADC of one query: the one-query batch on the distributed
+    * tier, the query's own probe set on the driver tier.
+    */
+  private def adc(d: PqServingIndex, q: Array[Float], n: Int,
+      nprobe: Int, metric: String = "ip"): Array[(Long, Double)] =
+    d.searchBatch(Seq(q), n, nprobe, metric).head
+  private def adc(l: LocalPqIndex, q: Array[Float], n: Int,
+      nprobe: Int): Array[(Long, Double)] =
+    l.searchProbed(l.probeFor(q, nprobe), q, n)
+
   test("distributed ADC == driver-tier ADC, shallow and deep fetch, probed and probe-all") {
     val dist = PqServingIndex.build(codes, cents, cb, wide)
     val local = LocalPqIndex.build(codes, cents, cb, limits = wide)
@@ -29,8 +39,8 @@ class PqServingSpec extends SparkSpec {
       assert(dist.cachedLists === nlist)
       qRows.take(5).foreach { case (qid, qv) =>
         for ((k, np) <- Seq((20, 3), (20, nlist), (300, 4), (300, nlist))) {
-          val d = dist.searchAdc(qv, k, np).toSeq
-          val l = local.searchAdc(qv, k, np).toSeq
+          val d = adc(dist, qv, k, np).toSeq
+          val l = adc(local, qv, k, np).toSeq
           assert(d === l, s"q=$qid k=$k nprobe=$np")
         }
       }
@@ -51,7 +61,7 @@ class PqServingSpec extends SparkSpec {
             "query_id", "vec_id", "approx_score", 10)
           .collect().map(r => (r.getLong(1), r.getDouble(2)))
           .sortBy { case (id, s) => (-s, id) }.toSeq
-        assert(dist.searchAdc(qv, 10, 4).toSeq === want, s"q=$qid")
+        assert(adc(dist, qv, 10, 4).toSeq === want, s"q=$qid")
       }
     } finally dist.unpersist()
   }
@@ -70,8 +80,8 @@ class PqServingSpec extends SparkSpec {
     try {
       qRows.take(4).foreach { case (qid, qv) =>
         for ((k, np) <- Seq((20, 3), (300, nlist))) {
-          assert(fromFile.get.searchAdc(qv, k, np).toSeq ===
-            shuffled.searchAdc(qv, k, np).toSeq, s"q=$qid k=$k np=$np")
+          assert(adc(fromFile.get, qv, k, np).toSeq ===
+            adc(shuffled, qv, k, np).toSeq, s"q=$qid k=$k np=$np")
         }
       }
       assert(PqServingIndex.buildFromPacked(spark, path, "other stamp",
@@ -91,26 +101,26 @@ class PqServingSpec extends SparkSpec {
         val (qid, qv) = qRows(rnd.nextInt(qRows.length))
         val k = 1 + rnd.nextInt(600)
         val np = 1 + rnd.nextInt(nlist)
-        assert(dist.searchAdc(qv, k, np).toSeq ===
-          local.searchAdc(qv, k, np).toSeq, s"draw=$i q=$qid k=$k np=$np")
+        assert(adc(dist, qv, k, np).toSeq ===
+          adc(local, qv, k, np).toSeq, s"draw=$i q=$qid k=$k np=$np")
       }
     } finally dist.unpersist()
   }
 
-  test("searchAdcUnclamped serves the full internal rerank budget past maxK; searchAdc clamps") {
+  test("the tier serves the full internal rerank budget past maxK (the client clamp lives at the door)") {
     val tight = ServingLimits(maxK = 10, maxCandidates = 100000)
     val dist = PqServingIndex.build(codes, cents, cb, tight)
+    val local = LocalPqIndex.build(codes, cents, cb, limits = tight)
     try {
       val (_, qv) = qRows.head
-      val clamped = dist.searchAdc(qv, 50, nlist)
-      assert(clamped.length === 10, "client k must clamp to maxK")
       // the TWO-PHASE caller's candidate budget is internal (the
       // reference's rerank_factor contract, config.h:93) — clamping it
-      // to maxK would silently shrink the rerank pool at large k
-      val pool = dist.searchAdcUnclamped(qv, 50, nlist)
+      // to maxK would silently shrink the rerank pool at large k; the
+      // client-k clamp is GraftFacadeSpec's door spec
+      val pool = adc(dist, qv, 50, nlist)
       assert(pool.length === 50, s"internal budget clamped: ${pool.length}")
-      assert(pool.take(10).toSeq === clamped.toSeq,
-        "the two entries must share one ranking contract")
+      assert(adc(local, qv, 50, nlist).toSeq === pool.toSeq,
+        "the two tiers must share one budget and ranking contract")
     } finally dist.unpersist()
   }
 
@@ -141,7 +151,7 @@ class PqServingSpec extends SparkSpec {
         val wantL2 = raw.map { case (id, v) =>
           (id, ServingIndex.scoreOne(qv, v, "l2")) }
           .sortBy { case (id, s) => (s, id) }.take(15).toSeq
-        val gotL2 = l2Dist.searchAdcUnclamped(qv, 15, nlist, "l2").toSeq
+        val gotL2 = adc(l2Dist, qv, 15, nlist, "l2").toSeq
         assert(gotL2.map(_._1) === wantL2.map(_._1), s"q=$qid l2 ids")
         gotL2.zip(wantL2).foreach { case ((_, g), (_, w)) =>
           assert(math.abs(-g - w) < 1e-9, s"q=$qid l2 score -$g vs $w") }
@@ -149,8 +159,7 @@ class PqServingSpec extends SparkSpec {
         val wantCos = raw.map { case (id, v) =>
           (id, ServingIndex.scoreOne(qv, v, "cosine")) }
           .sortBy { case (id, s) => (-s, id) }.take(15).toSeq
-        val gotCos = cosDist
-          .searchAdcUnclamped(qv, 15, nlist, "cosine").toSeq
+        val gotCos = adc(cosDist, qv, 15, nlist, "cosine").toSeq
         assert(gotCos.map(_._1) === wantCos.map(_._1), s"q=$qid cos ids")
         gotCos.zip(wantCos).foreach { case ((_, g), (_, w)) =>
           assert(math.abs(g - w) < 1e-9, s"q=$qid cos score $g vs $w") }
@@ -167,42 +176,38 @@ class PqServingSpec extends SparkSpec {
     val idx = PqServingIndex.buildFromPacked(spark, path, "v1",
       cents, cb, wide).get
     val (_, qv) = qRows.head
-    val before = idx.searchAdc(qv, 20, nlist).toSeq
+    val before = adc(idx, qv, 20, nlist).toSeq
     // eviction + recompute with the file untouched: identical serve
     idx.unpersist()
-    assert(idx.searchAdc(qv, 20, nlist).toSeq === before)
+    assert(adc(idx, qv, 20, nlist).toSeq === before)
     // the file atomically REPLACED by a later save (same length,
     // different stamp): recompute must fail loudly, never range-read
     // the new file at the old TOC offsets
     idx.unpersist()
     LocalPqIndex.savePacked(local, path, "v2")
-    val ex = intercept[Exception] { idx.searchAdc(qv, 20, nlist) }
+    val ex = intercept[Exception] { adc(idx, qv, 20, nlist) }
     def msgs(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
     assert(msgs(ex).contains("stale TOC"), msgs(ex))
   }
 
-  test("searchAdcBatch: one job serves the batch, per-query results identical to searchAdc") {
+  test("searchBatch: one job serves the batch, per-query results identical to the one-query case") {
     val dist = PqServingIndex.build(codes, cents, cb, wide)
     try {
       val qvs = qRows.take(8).map(_._2).toSeq
       for ((k, np, metric) <- Seq((20, 3, "ip"), (300, nlist, "ip"),
           (15, 4, "l2"), (15, nlist, "cosine"))) {
-        val batch = dist.searchAdcBatch(qvs, k, np, metric)
+        val batch = dist.searchBatch(qvs, k, np, metric)
         assert(batch.length === qvs.length)
         qvs.zipWithIndex.foreach { case (qv, i) =>
-          assert(batch(i).toSeq === dist.searchAdc(qv, k, np, metric).toSeq,
+          assert(batch(i).toSeq === adc(dist, qv, k, np, metric).toSeq,
             s"q#$i k=$k np=$np metric=$metric")
         }
       }
-      // empty batch and the reference's max_query_batch rejection
-      assert(dist.searchAdcBatch(Seq.empty, 10, 3).isEmpty)
-      val tiny = ServingLimits(maxBatch = 2)
-      val small = PqServingIndex.build(codes, cents, cb, tiny)
-      try intercept[IllegalArgumentException] {
-        small.searchAdcBatch(qvs.take(3), 10, 3)
-      } finally small.unpersist()
+      // empty batch (the max_query_batch rejection is the door's:
+      // GraftFacadeSpec's cache-hierarchy spec)
+      assert(dist.searchBatch(Seq.empty, 10, 3).isEmpty)
     } finally dist.unpersist()
   }
 
@@ -213,8 +218,8 @@ class PqServingSpec extends SparkSpec {
     val distInt = PqServingIndex.build(codes, cents, cb, wide)
     try {
       qRows.take(3).foreach { case (qid, qv) =>
-        assert(distBin.searchAdc(qv, 20, 5).toSeq ===
-          distInt.searchAdc(qv, 20, 5).toSeq, s"q=$qid")
+        assert(adc(distBin, qv, 20, 5).toSeq ===
+          adc(distInt, qv, 20, 5).toSeq, s"q=$qid")
       }
     } finally { distBin.unpersist(); distInt.unpersist() }
   }

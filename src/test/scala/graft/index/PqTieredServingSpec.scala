@@ -29,9 +29,24 @@ class PqTieredServingSpec extends SparkSpec {
     * stored path is oracle-gated by `knn_pq_stored`); counters prove
     * WHICH level the router picked, values prove it doesn't matter.
     */
-  private def storedPath(q: Array[Float], k: Int, np: Int,
+  private val storedPath: PqTieredServing.StoredSearch =
+    (work, n, metric) => work.map { case (q, probed) =>
+      fullLocal.searchProbed(probed, q, n, metric) }
+  private val storedProbe = (q: Array[Float], np: Int, metric: String) =>
+    fullLocal.probeFor(q, np, metric)
+
+  /** Phase-1 ADC of one query through each tier's one request kernel. */
+  private def adc(l: LocalPqIndex, q: Array[Float], n: Int, np: Int,
+      metric: String = "ip"): Array[(Long, Double)] =
+    l.searchProbed(l.probeFor(q, np, metric), q, n, metric)
+  private def adc(d: PqServingIndex, q: Array[Float], n: Int, np: Int,
       metric: String): Array[(Long, Double)] =
-    fullLocal.searchAdc(q, k, np, metric)
+    d.searchBatch(Seq(q), n, np, metric).head
+  private def adc(r: PqTieredServing, q: Array[Float], n: Int, np: Int,
+      metric: String): Array[(Long, Double)] =
+    r.search(IndexedSeq(q), n, np, metric).head
+  private def adc(r: PqTieredServing, q: Array[Float], n: Int,
+      np: Int): Array[(Long, Double)] = adc(r, q, n, np, "ip")
 
   test("route choice: starved L0 serves covered probes, distributed L1 takes the rest, L2 only when both are cold") {
     // ~half the lists admitted: 16 B/row fixture geometry, budget sized
@@ -48,18 +63,18 @@ class PqTieredServingSpec extends SparkSpec {
     try {
       val np = 3
       val covered = qRows.filter { case (_, qv) =>
-        starved.coversRequest(qv, np) }
+        starved.coversProbes(starved.probeFor(qv, np)) }
       val uncovered = qRows.filter { case (_, qv) =>
-        !starved.coversRequest(qv, np) }
+        !starved.coversProbes(starved.probeFor(qv, np)) }
       assert(covered.nonEmpty && uncovered.nonEmpty,
         s"fixture degenerate: covered=${covered.length} " +
           s"uncovered=${uncovered.length}")
 
       val router = new PqTieredServing(Some(starved), Some(dist),
-        storedPath, wide)
+        storedPath, storedProbe)
       (covered.take(3) ++ uncovered.take(3)).foreach { case (qid, qv) =>
-        val got = router.searchAdc(qv, 10, np).toSeq
-        assert(got === fullLocal.searchAdc(qv, 10, np).toSeq,
+        val got = adc(router, qv, 10, np).toSeq
+        assert(got === adc(fullLocal, qv, 10, np).toSeq,
           s"q=$qid: routed result must equal the full-coverage answer")
       }
       assert(router.localServes === math.min(3, covered.length))
@@ -71,14 +86,16 @@ class PqTieredServingSpec extends SparkSpec {
         s"mixed=${router.mixedServes} dist=${router.distServes}")
       assert(router.storedServes === 0)
 
-      // L1 cold too → the store serves
+      // L1 cold too → the store serves (only the misses when the
+      // starved tier holds some of the probed lists)
       val coldRouter =
-        new PqTieredServing(Some(starved), None, storedPath, wide)
+        new PqTieredServing(Some(starved), None, storedPath, storedProbe)
       uncovered.take(2).foreach { case (qid, qv) =>
-        assert(coldRouter.searchAdc(qv, 10, np).toSeq ===
-          fullLocal.searchAdc(qv, 10, np).toSeq, s"q=$qid")
+        assert(adc(coldRouter, qv, 10, np).toSeq ===
+          adc(fullLocal, qv, 10, np).toSeq, s"q=$qid")
       }
-      assert(coldRouter.storedServes === math.min(2, uncovered.length))
+      assert(coldRouter.storedServes + coldRouter.mixedStoredServes ===
+        math.min(2, uncovered.length))
     } finally dist.unpersist()
   }
 
@@ -86,17 +103,17 @@ class PqTieredServingSpec extends SparkSpec {
     val dist = PqServingIndex.build(codes, cents, cb, wide)
     try {
       val r0 = new PqTieredServing(Some(fullLocal), Some(dist),
-        storedPath, wide)
-      val r1 = new PqTieredServing(None, Some(dist), storedPath, wide)
-      val r2 = new PqTieredServing(None, None, storedPath, wide)
+        storedPath, storedProbe)
+      val r1 = new PqTieredServing(None, Some(dist), storedPath, storedProbe)
+      val r2 = new PqTieredServing(None, None, storedPath, storedProbe)
       qRows.take(4).foreach { case (qid, qv) =>
         for {
           (k, np) <- Seq((10, 2), (300, nlist))
           metric <- Seq("ip", "l2", "cosine")
         } {
-          val a = r0.searchAdc(qv, k, np, metric).toSeq
-          val b = r1.searchAdc(qv, k, np, metric).toSeq
-          val c = r2.searchAdc(qv, k, np, metric).toSeq
+          val a = adc(r0, qv, k, np, metric).toSeq
+          val b = adc(r1, qv, k, np, metric).toSeq
+          val c = adc(r2, qv, k, np, metric).toSeq
           assert(a === b, s"q=$qid k=$k np=$np $metric: L0 vs L1")
           assert(b === c, s"q=$qid k=$k np=$np $metric: L1 vs L2")
         }
@@ -112,22 +129,23 @@ class PqTieredServingSpec extends SparkSpec {
     // construction), so the stored level's end-to-end shape is pinned
     // here with the actual declarative path: probe-restricted codes
     // relation → Pq.adcScores → in-plan TakeOrderedAndProject
-    val stored = (q: Array[Float], k: Int, np: Int, metric: String) => {
+    val stored: PqTieredServing.StoredSearch = (work, k, metric) => {
       require(metric == "ip", "spec stored closure is the ip twin")
-      val probed = fullLocal.probe(q, np)
-      val qid = qRows.find(_._2.sameElements(q)).get._1
-      val oneQ = graft.operators.Knn.defaultQueries(emb)
-        .filter(col("query_id") === qid)
-      Pq.adcScores(
-          codes.filter(col("centroid_id").isin(probed: _*)), cb, oneQ)
-        .orderBy(col("approx_score").desc, col("vec_id").asc)
-        .limit(k).select(col("vec_id"), col("approx_score"))
-        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      work.map { case (q, probed) =>
+        val qid = qRows.find(_._2.sameElements(q)).get._1
+        val oneQ = graft.operators.Knn.defaultQueries(emb)
+          .filter(col("query_id") === qid)
+        Pq.adcScores(
+            codes.filter(col("centroid_id").isin(probed: _*)), cb, oneQ)
+          .orderBy(col("approx_score").desc, col("vec_id").asc)
+          .limit(k).select(col("vec_id"), col("approx_score"))
+          .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      }
     }
-    val r = new PqTieredServing(None, None, stored, wide)
+    val r = new PqTieredServing(None, None, stored, storedProbe)
     qRows.take(3).foreach { case (qid, qv) =>
-      assert(r.searchAdc(qv, 10, 3).toSeq ===
-        fullLocal.searchAdc(qv, 10, 3).toSeq, s"q=$qid")
+      assert(adc(r, qv, 10, 3).toSeq ===
+        adc(fullLocal, qv, 10, 3).toSeq, s"q=$qid")
     }
     assert(r.storedServes === 3 && r.localServes === 0 &&
       r.distServes === 0)
@@ -167,14 +185,14 @@ class PqTieredServingSpec extends SparkSpec {
       assert(Ivf.probePick(q, cids, matrix, 1).head === 1L,
         "fixture lost its raw-probe misranking")
       assert(localT.probeFor(q, 1, "cosine").head === 2L)
-      val got = localT.searchAdc(q, 2, 1, "cosine")
+      val got = adc(localT, q, 2, 1, "cosine")
       assert(got.map(_._1).toSeq === Seq(7L, 3L),
         s"aligned row missing or misranked in the cosine pool: ${got.toSeq}")
-      assert(distT.searchAdc(q, 2, 1, "cosine").toSeq === got.toSeq)
+      assert(adc(distT, q, 2, 1, "cosine").toSeq === got.toSeq)
       // cosine is an ANGLE metric: query magnitude must not change
       // which lists are probed or which ids come back
       val scaled = q.map(_ * 0.01f)
-      assert(localT.searchAdc(scaled, 2, 1, "cosine").map(_._1).toSeq ===
+      assert(adc(localT, scaled, 2, 1, "cosine").map(_._1).toSeq ===
         got.map(_._1).toSeq, "query magnitude changed the result set")
     } finally distT.unpersist()
   }
@@ -184,8 +202,8 @@ class PqTieredServingSpec extends SparkSpec {
     try {
       qRows.take(5).foreach { case (qid, qv) =>
         Seq("ip", "l2", "cosine").foreach { metric =>
-          assert(fullLocal.searchAdc(qv, 20, nlist, metric).toSeq ===
-            dist.searchAdc(qv, 20, nlist, metric).toSeq,
+          assert(adc(fullLocal, qv, 20, nlist, metric).toSeq ===
+            adc(dist, qv, 20, nlist, metric).toSeq,
             s"q=$qid $metric")
         }
       }
@@ -194,8 +212,8 @@ class PqTieredServingSpec extends SparkSpec {
       // disagree for at least one query — otherwise the parity above
       // proves nothing about the l2 LUT
       val differs = qRows.exists { case (_, qv) =>
-        fullLocal.searchAdc(qv, 10, nlist, "ip").map(_._1).toSeq !=
-          fullLocal.searchAdc(qv, 10, nlist, "l2").map(_._1).toSeq
+        adc(fullLocal, qv, 10, nlist, "ip").map(_._1).toSeq !=
+          adc(fullLocal, qv, 10, nlist, "l2").map(_._1).toSeq
       }
       assert(differs, "ip and l2 pools identical corpus-wide — fixture " +
         "cannot distinguish the LUTs")
@@ -217,19 +235,24 @@ class PqTieredServingSpec extends SparkSpec {
         !starved.coversProbes(p) && starved.partitionResident(p)._1.nonEmpty
       }
       assert(splitQs.nonEmpty, "fixture degenerate: no split request")
-      val pureL1 = new PqTieredServing(None, Some(dist), storedPath, wide)
+      val pureL1 = new PqTieredServing(None, Some(dist), storedPath, storedProbe)
       val mixed = new PqTieredServing(Some(starved), Some(dist),
-        storedPath, wide)
-      splitQs.take(4).foreach { case (qid, qv) =>
-        for ((k, metric) <- Seq((10, "ip"), (300, "l2"), (25, "cosine")))
-          assert(mixed.searchAdc(qv, k, np, metric).toSeq ===
-            pureL1.searchAdc(qv, k, np, metric).toSeq,
+        storedPath, storedProbe)
+      // ONE batch per (k, metric): the split queries next to arbitrary
+      // ones — each query's pool must equal its one-query pure-L1 serve
+      val batch = (splitQs.take(4) ++ qRows.take(4)).toIndexedSeq
+      for ((k, metric) <- Seq((10, "ip"), (300, "l2"), (25, "cosine"))) {
+        val got = mixed.search(batch.map(_._2), k, np, metric)
+        assert(got.length === batch.length)
+        batch.zip(got).foreach { case ((qid, qv), pool) =>
+          assert(pool.toSeq === adc(pureL1, qv, k, np, metric).toSeq,
             s"q=$qid k=$k $metric: mixed serve diverged from pure L1")
+        }
       }
       // the ip requests split by construction; cosine/l2 probe sets may
       // land fully resident or fully missing (metric-aware probing) —
-      // every request is accounted by exactly one cache-level counter
-      val total = math.min(4, splitQs.length) * 3
+      // every query is accounted by exactly one cache-level counter
+      val total = batch.length * 3
       assert(mixed.mixedServes >= math.min(4, splitQs.length),
         s"mixed=${mixed.mixedServes} local=${mixed.localServes} " +
           s"dist=${mixed.distServes}")
@@ -255,19 +278,18 @@ class PqTieredServingSpec extends SparkSpec {
       // the stored closure records the lists it is asked to scan — the
       // split contract is that NO resident list ever pays the cold path
       val askedLists = scala.collection.mutable.Set.empty[Long]
-      val storedSub = (q: Array[Float], probed: Seq[Long], n: Int,
-          metric: String) => {
-        askedLists ++= probed
-        fullLocal.searchAdcOnProbed(probed, q, n, metric)
+      val storedSub: PqTieredServing.StoredSearch = (work, n, metric) => {
+        work.foreach(askedLists ++= _._2)
+        storedPath(work, n, metric)
       }
-      val pureStored = new PqTieredServing(None, None, storedPath, wide)
+      val pureStored = new PqTieredServing(None, None, storedPath, storedProbe)
       val mixed = new PqTieredServing(Some(starved), Some(dist),
-        storedPath, wide, storedOnProbed = Some(storedSub))
+        storedSub, storedProbe)
       dist.unpersist() // L1 evicted mid-session
       splitQs.take(4).foreach { case (qid, qv) =>
         for ((k, metric) <- Seq((10, "ip"), (300, "l2"), (25, "cosine")))
-          assert(mixed.searchAdc(qv, k, np, metric).toSeq ===
-            pureStored.searchAdc(qv, k, np, metric).toSeq,
+          assert(adc(mixed, qv, k, np, metric).toSeq ===
+            adc(pureStored, qv, k, np, metric).toSeq,
             s"q=$qid k=$k $metric: mixed L0/stored diverged from pure stored")
       }
       assert(mixed.mixedStoredServes >= math.min(4, splitQs.length),
@@ -307,10 +329,10 @@ class PqTieredServingSpec extends SparkSpec {
     try {
       assert(dist.resident)
       val r = new PqTieredServing(Some(zeroLocal), Some(dist),
-        storedPath, wide)
+        storedPath, storedProbe)
       val (qid, qv) = qRows.head
-      assert(r.searchAdc(qv, 10, nlist).toSeq ===
-        fullLocal.searchAdc(qv, 10, nlist).toSeq, s"q=$qid")
+      assert(adc(r, qv, 10, nlist).toSeq ===
+        adc(fullLocal, qv, 10, nlist).toSeq, s"q=$qid")
       assert(r.storedServes === 1 && r.anomalousResidentRoutes === 1,
         s"stored=${r.storedServes} anomalous=${r.anomalousResidentRoutes}")
     } finally dist.unpersist()
@@ -318,13 +340,13 @@ class PqTieredServingSpec extends SparkSpec {
 
   test("eviction degrades to L2: an unpersisted distributed tier routes to the stored closure, never an exception") {
     val dist = PqServingIndex.build(codes, cents, cb, wide)
-    val r = new PqTieredServing(None, Some(dist), storedPath, wide)
+    val r = new PqTieredServing(None, Some(dist), storedPath, storedProbe)
     val (qid, qv) = qRows.head
-    val want = r.searchAdc(qv, 10, 3).toSeq
+    val want = adc(r, qv, 10, 3).toSeq
     assert(r.distServes === 1 && r.storedServes === 0)
     dist.unpersist() // mid-session demotion (memory-pressure stand-in)
     assert(!dist.resident)
-    assert(r.searchAdc(qv, 10, 3).toSeq === want,
+    assert(adc(r, qv, 10, 3).toSeq === want,
       s"q=$qid: stored fall-through changed the values")
     assert(r.storedServes === 1,
       s"expected a stored serve after eviction, got ${r.storedServes}")

@@ -81,7 +81,8 @@ class PqTrainSpec extends SparkSpec {
     val li = LocalPqIndex.build(assignedInt, cents, cb)
     val lb = LocalPqIndex.build(assignedBin, cents, cb)
     val qv = qs.collect().head.getSeq[Float](1).toArray
-    assert(li.searchAdc(qv, 10, 4).toSeq === lb.searchAdc(qv, 10, 4).toSeq)
+    assert(li.searchProbed(li.probeFor(qv, 4), qv, 10).toSeq ===
+      lb.searchProbed(lb.probeFor(qv, 4), qv, 10).toSeq)
     assert(li.cachedBytes === lb.cachedBytes)
   }
 

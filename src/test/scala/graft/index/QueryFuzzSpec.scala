@@ -208,7 +208,8 @@ class QueryFuzzSpec extends SparkSpec {
       Pq.codesColumn(cb).as("codes"))
     val pq = LocalPqIndex.build(codes, cents, cb)
     intercept[IllegalArgumentException] {
-      pq.searchAdc(Array.fill(dim - 3)(1f), 10, 3)
+      val q = Array.fill(dim - 3)(1f)
+      pq.searchProbed(pq.probeFor(q, 3), q, 10)
     }
     // HNSW graph: both a mismatched query and a mismatched insert
     val g = new Hnsw(metric = "ip")
