@@ -40,14 +40,10 @@ import graft.index.Ivf
   *    immediately after a timing (external contention, not engine cost).
   *
   * Self-adjudication (every serving section, not just the plain loop):
-  * filtered/posting/overlay/10M sections each emit raw p99, steady p99
+  * filtered/posting/10M sections each emit raw p99, steady p99
   * (per-query minima), and bracketing dispatch floors ALWAYS, so a
   * drifting box is distinguishable from a systematic regression in the
-  * record itself. Overlay overhead is measured by INTERLEAVING plain and
-  * overlay requests in one loop and differencing per-query minima
-  * pairwise — immune to the between-section drift that made r4's
-  * subtraction-of-old-baseline metric read 36.7 ms of weather as
-  * overlay cost. A `calib_*_sec` series (one constant reference query at
+  * record itself. A `calib_*_sec` series (one constant reference query at
   * every section boundary) lets round-over-round diffs normalize for
   * machine weather, and the full JSON line is also written to
   * BENCH_FULL.json (the driver's log capture truncates long lines).
@@ -2276,30 +2272,6 @@ object Bench {
               lit(10L) + (col("vec_id") % 5).cast("long"))),
           servCents, "ip",
           tenantCol = Some("tenant"), tagsCol = Some("tags"))
-        // read-your-writes overlay at the reference's buffered envelope:
-        // ~100k in-flight rows over the 1M corpus (10%), built BEFORE big
-        // is dropped. The overhead metric below must be independent of
-        // overlay size — the shadow set rides a broadcast, never the
-        // per-request closure.
-        val overlayRowsDf = Ivf.assign(big, servCents)
-          .select(col("vec_id"), lit(1L).as("epoch"),
-            lit(false).as("deleted"), col("centroid_id"),
-            col("embedding").cast("array<double>").as("vec"))
-        val overlay = graft.index.ServingOverlay.fromDataFrame(
-          overlayRowsDf.filter(col("vec_id") % 10 === 0))
-        // overlay-size invariance probe: the FULL 1M-row corpus as the
-        // in-flight buffer (every stored row shadowed). Per-request cost
-        // must stay flat: a request touches only the probed lists'
-        // winners, and the shadow test is a broadcast binary search.
-        // Built here (big still cached), measured after the 100k section;
-        // optional — a failure loses only its own extras.
-        val overlayFull =
-          try Some(graft.index.ServingOverlay.fromDataFrame(overlayRowsDf))
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] full-corpus overlay build FAILED: ${e.getMessage}")
-            None
-          }
         big.unpersist(); assigned.unpersist()
         val nprobeServ = 8
         def floorNow(): Double = floorProbe(spark, cpus.toInt)
@@ -2447,104 +2419,10 @@ object Bench {
         // misses; the posting loop wants tag 3 (sparse) → all hits.
         extras("bitmap_cache_hits") = idx.postingHits.toString
         extras("bitmap_cache_misses") = idx.postingMisses.toString
-        // (Q12 batch serving is measured ONCE, below the overlay
-        // sections, as serving_batch_* — an earlier near-duplicate block
-        // emitted the same measurement under ivf_1m_batch_* keys and two
-        // diverging numbers for one metric only invite misreading)
-        // read-your-writes overlay, INTERLEAVED A/B: each attempt times
-        // plain-then-overlay back to back for the same query; the
-        // overhead is the p50 of per-query (overlay min − plain min)
-        // deltas. r4 differenced overlay-steady against the main loop's
-        // p50 measured minutes earlier — on a drifting box that measures
-        // the drift, not the overlay (driver 36.7 ms vs clean 0.30).
-        // Pairwise minima cancel both stalls and drift by construction.
-        def overlaySection(tag: String, servIdx: graft.index.ServingIndex,
-            ovSearch: Array[Float] => Unit, ovRows: Long): Unit = {
-          System.gc()
-          servIdx.search(qRows.head, 10, nprobeServ) // warm both paths
-          ovSearch(qRows.head)
-          val nq = qRows.length
-          def roundAB(): (Seq[Double], Array[Double], Array[Double]) = {
-            val plainMin = Array.fill(nq)(Double.MaxValue)
-            val ovMin = Array.fill(nq)(Double.MaxValue)
-            val rawOv = Seq.newBuilder[Double]
-            (0 until 3).foreach { _ =>
-              var i = 0
-              while (i < nq) {
-                val qv = qRows(i)
-                val t0 = System.nanoTime()
-                servIdx.search(qv, 10, nprobeServ)
-                val tPlain = (System.nanoTime() - t0) / 1e6
-                val t1 = System.nanoTime()
-                ovSearch(qv)
-                val tOv = (System.nanoTime() - t1) / 1e6
-                if (tPlain < plainMin(i)) plainMin(i) = tPlain
-                if (tOv < ovMin(i)) ovMin(i) = tOv
-                rawOv += tOv
-                i += 1
-              }
-            }
-            (rawOv.result().sorted, ovMin, plainMin)
-          }
-          var floorB = floorNow()
-          var r = roundAB()
-          var floorA = floorNow()
-          val firstFloor = math.max(floorB, floorA)
-          var floorTries = 0
-          while ((floorB > 15.0 || floorA > 15.0) && floorTries < 2) {
-            System.err.println(
-              s"[bench] $tag timed under a sick dispatch floor " +
-                s"(${num(floorB, 1)}/${num(floorA, 1)} ms) — rerunning")
-            System.gc()
-            Thread.sleep(2000) // let a transient contention window pass
-            floorB = floorNow(); r = roundAB(); floorA = floorNow()
-            floorTries += 1
-          }
-          if (floorTries > 0)
-            extras(s"${tag}_floor_first_ms") = num(firstFloor, 1)
-          val first = pctl(r._1, 99)
-          var spikes = 0
-          while (pctl(r._1, 99) >
-              5.0 * math.max(1.0, pctl(r._2.toSeq.sorted, 99)) &&
-              spikes < 2) {
-            System.err.println(s"[bench] $tag raw p99 stall spike — rerunning")
-            System.gc()
-            r = roundAB(); spikes += 1
-          }
-          if (spikes > 0) extras(s"${tag}_p99_first_ms") = num(first, 1)
-          val (rawOv, ovMin, plainMin) = r
-          val deltas = ovMin.indices.map(i => ovMin(i) - plainMin(i))
-            .sorted.toSeq
-          extras(s"${tag}_rows") = ovRows.toString
-          extras(s"${tag}_p50_ms") = num(pctl(rawOv, 50), 1)
-          extras(s"${tag}_p99_ms") = num(pctl(rawOv, 99), 1)
-          extras(s"${tag}_p99_steady_ms") =
-            num(pctl(ovMin.toSeq.sorted, 99), 1)
-          extras(s"${tag}_overhead_ms") = num(pctl(deltas, 50), 2)
-          extras(s"${tag}_floor_before_ms") = num(floorB, 1)
-          extras(s"${tag}_floor_after_ms") = num(floorA, 1)
-        }
-        overlaySection("ivf_1m_overlay", idx,
-          qv => idx.search(qv, 10, nprobeServ, overlay = Some(overlay)),
-          overlay.size)
-        // legacy key, now sourced from the interleaved pairwise metric
-        extras("overlay_rows") = overlay.size.toString
-        extras("overlay_request_overhead_ms") =
-          extras("ivf_1m_overlay_overhead_ms")
-        overlay.destroy()
-        // overlay-size invariance: the same corpus with the FULL 1M-row
-        // buffer — overhead must stay flat (probed-fraction winner scan +
-        // O(log n) shadow binary search, never O(overlay) per request)
-        overlayFull.foreach { ovF =>
-          try overlaySection("ivf_1m_overlay_full", idx,
-            qv => idx.search(qv, 10, nprobeServ, overlay = Some(ovF)),
-            ovF.size)
-          catch { case e: Throwable =>
-            System.err.println(
-              s"[bench] full-corpus overlay section FAILED: ${e.getMessage}")
-          }
-          ovF.destroy()
-        }
+        // (Q12 batch serving is measured ONCE, below, as serving_batch_*
+        // — an earlier near-duplicate block emitted the same measurement
+        // under ivf_1m_batch_* keys and two diverging numbers for one
+        // metric only invite misreading)
         // Q12 batch serving: the whole query set as ONE probe job
         // (searchBatch) — scheduler dispatch paid once for the batch and
         // each probed list read once for every query probing it, vs one
@@ -2822,12 +2700,12 @@ object Bench {
                 .otherwise(x)).as("embedding"))
           .repartition(cpus.toInt)
         // attrs synthesized with the same formulas as the 1M index so the
-        // 10M probe composes with filters and an overlay — the two
-        // compositions that regressed at 1M in the r4 driver run must be
-        // proven invariant at 10x, not just the plain probe
-        // cached: consumed twice (index build + the overlay's 1% sample)
-        // — uncached, the overlay build would replay the whole 10M-row
-        // explode+assign lineage for a 100k-row fetch
+        // 10M probe composes with filters — a composition that regressed
+        // at 1M in the r4 driver run must be proven invariant at 10x, not
+        // just the plain probe
+        // cached: consumed twice (index build + the PQ tier's codes) —
+        // uncached, the PQ build would replay the whole 10M-row
+        // explode+assign lineage
         val assigned10 = Ivf.assign(big10, servCents)
           .withColumn("tenant", concat(lit("t"), col("vec_id") % 3))
           .withColumn("tags", array((col("vec_id") % 7).cast("long"),
@@ -2842,22 +2720,11 @@ object Bench {
         try {
         extras("ivf_10m_build_sec") = num((System.nanoTime() - t10) / 1e9, 1)
         extras("ivf_10m_rows") = (reps10.toLong * n0).toString
-        // build EVERY 10M fixture up front (overlay + PQ tier), then
+        // build EVERY 10M fixture up front (index + PQ tier), then
         // release the multi-GB cached corpus BEFORE any timed loop: in
         // the r5 record this section's closing floor (142 ms) showed it
         // timing under self-inflicted cache+GC pressure — the headline
         // nearest its budget must not carry that handicap
-        val overlay10 =
-          try Some(graft.index.ServingOverlay.fromDataFrame(
-            assigned10.filter(col("vec_id") % 100 === 0)
-              .select(col("vec_id"), lit(1L).as("epoch"),
-                lit(false).as("deleted"), col("centroid_id"),
-                col("embedding").cast("array<double>").as("vec"))))
-          catch { case ex: Throwable =>
-            System.err.println(
-              s"[bench] 10M overlay build FAILED: ${ex.getMessage}")
-            None
-          }
         // DRIVER-RESIDENT IVF-PQ tier at 10M (reference stable-tier shape
         // in the memory cache): the RAW 10M corpus is ~2.6 GB — past any
         // driver cache budget — but its PQ codes (m=8) are ~400 MB, so
@@ -2904,18 +2771,6 @@ object Bench {
             num(pctl(f10Steady, 99), 1)
         } catch { case ex: Throwable =>
           System.err.println(s"[bench] 10M filtered FAILED: ${ex.getMessage}")
-        }
-        // overlay at 10M: ~100k buffered rows (1%) over the 10x corpus,
-        // interleaved A/B like the 1M sections
-        overlay10.foreach { ov =>
-          try overlaySection("ivf_10m_overlay", idx10,
-            qv => idx10.search(qv, 10, nprobeServ, overlay = Some(ov)),
-            ov.size)
-          catch { case ex: Throwable =>
-            System.err.println(
-              s"[bench] 10M overlay FAILED: ${ex.getMessage}")
-          }
-          ov.destroy()
         }
         // compressed tier's ADC latency and its recall against the raw
         // probe path on the same probed lists

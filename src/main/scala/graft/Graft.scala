@@ -231,7 +231,7 @@ final class Graft private (
       f"delta-${nextBatch.getAndIncrement()}%05d", schema,
       full.toSeq, maxRowsPerSegment = config.segment.targetSizeVectors)
     advanceFrontier(hi)
-    patchServing(rows, lo, hi)
+    patchServing(rows, lo)
     (lo, hi)
   }
 
@@ -421,17 +421,14 @@ final class Graft private (
     * generation is built, every batch epoch sorts after it, and no id
     * carries one epoch twice — else drop the generation.
     */
-  private def patchServing(rows: Array[Graft.BatchRow], lo: Long,
-      hi: Long): Unit = servingLock.synchronized {
-    val byId = rows.groupBy(_.idHash)
+  private def patchServing(rows: Array[Graft.BatchRow],
+      lo: Long): Unit = servingLock.synchronized {
     servingGen match {
-      case Some(cur) if lo > cur.index.maxEpoch && byId.forall {
-            case (_, rs) => rs.map(_.epoch).distinct.length == rs.length } =>
-        val adds = byId.values.map(_.maxBy(_.epoch))
-          .filter(w => !w.deleted && w.vec != null)
-          .map(w => (w.centroidId.getOrElse(-1L), w.idHash, w.vec)).toSeq
+      case Some(cur) if lo > cur.index.maxEpoch &&
+          rows.map(r => (r.idHash, r.epoch)).distinct.length == rows.length =>
         val next =
-          try cur.index.patched(byId.keys.toArray.sorted, adds, hi)
+          try cur.index.patched(rows.toSeq.map(r => (r.idHash, r.epoch,
+            r.deleted, r.centroidId.getOrElse(-1L), r.vec)))
           catch { case e: Throwable => invalidateServing(); throw e }
         servingGen = Some(newGeneration(next))
         cur.retire()

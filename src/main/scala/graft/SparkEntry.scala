@@ -95,21 +95,22 @@ object SparkEntry {
       })
   }
 
-  /** Shared serving fixture for the tiered_knn_served* family: ONE
-    * assigned mutation log, ONE flushed segment tree (epoch < 2000) and
-    * ONE stored ServingIndex per sfDir — the deployment shape (an index
-    * is built once per flush generation and serves many requests), so
-    * the battery doesn't re-pay the same build per entry. Each entry
-    * still builds its OWN overlay generation from the buffered rows.
-    * The fixture is never unpersisted: it lives for the session, like
-    * [[SegTree]].
+  /** Shared serving fixture for the tiered_knn_served* family, one per
+    * sfDir: the stored ServingIndex over a flushed segment tree (the
+    * assigned mutation log's epoch < 2000 rows) with the still-buffered
+    * rows (epoch >= 2000) folded in ONCE by
+    * [[graft.index.ServingIndex.patched]] — the write-through generation
+    * the facade serves after an upsert. Every entry serves this one
+    * live generation. The patch gate holds by construction: the stored
+    * generation's maxEpoch is below 2000 and `deterministicLog` epochs
+    * are unique per id. The fixture is never unpersisted: it lives for
+    * the session, like [[SegTree]].
     */
   private object ServedFixture {
     import graft.segments.Segments
     private val cache = scala.collection.concurrent.TrieMap
-      .empty[String, (graft.index.ServingIndex, DataFrame)]
-    def get(s: SparkSession, dir: String):
-        (graft.index.ServingIndex, DataFrame) =
+      .empty[String, graft.index.ServingIndex]
+    def get(s: SparkSession, dir: String): graft.index.ServingIndex =
       cache.getOrElseUpdate(dir, {
         val e = emb(s, dir)
         val cents = Ivf.deterministicCentroids(e, 50)
@@ -126,7 +127,16 @@ object SparkEntry {
           .createTempDirectory("graft-served-fixture-").toString
         Segments.writeSegment(rows.filter(col("epoch") < 2000), base,
           "delta-000", isStable = false)
-        (graft.index.ServingIndex.buildStored(s, base, cents, "ip"), rows)
+        val stored = graft.index.ServingIndex.buildStored(s, base, cents, "ip")
+        val buffer = rows.filter(col("epoch") >= 2000)
+          .select("vec_id", "epoch", "deleted", "centroid_id", "vec")
+          .collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
+            r.getBoolean(2), r.getLong(3),
+            if (r.isNullAt(4)) null else r.getSeq[Double](4).toArray))
+        rows.unpersist()
+        val live = stored.patched(buffer)
+        stored.unpersist()
+        live
       })
   }
 
@@ -1025,38 +1035,29 @@ object SparkEntry {
           dotD(col("qv"), col("vec")).as("score"))
       TopK.viaAggregator(scored, "query_id", "vec_id", "score", 10)
     }),
-    // tiered read on the SERVING path: stored index + in-flight buffer
-    // overlay with version masking (shadow set ships with the probe job,
-    // overlay winners join driver-side) — same live-view semantics as
-    // tiered_knn, probe-all so the oracle is identical
+    // tiered read on the SERVING path: the stored index with the
+    // in-flight buffer folded in by a patched generation (buffered ids
+    // shadow their stored versions, tombstones mask, live winners join
+    // their lists) — same live-view semantics as tiered_knn, probe-all
+    // so the oracle is identical
     "tiered_knn_served" -> ((s, dir) => {
-      val (idx, rows) = ServedFixture.get(s, dir)
-      val overlay = graft.index.ServingOverlay.fromDataFrame(
-        rows.filter(col("epoch") >= 2000))
+      val idx = ServedFixture.get(s, dir)
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val out = idx.searchAllDF(s, reqs, 10, nprobe = Int.MaxValue,
-        overlay = Some(overlay))
-      overlay.destroy()
-      out
+      idx.searchAllDF(s, reqs, 10, nprobe = Int.MaxValue)
     }),
-    // the batch serving path COMPOSED with the overlay (Q12 × Q10/T5 —
-    // batched queries against the live tiered world, the resident
-    // server's actual request shape): one probe job for the whole batch,
-    // shadow masking in-task, per-query overlay winners driver-side.
+    // the batch serving path over the patched generation (Q12 × Q10/T5
+    // — batched queries against the live tiered world, the resident
+    // server's actual request shape): one probe job for the whole batch.
     // Probe-all, so the oracle is tiered_knn_served's SQL verbatim — the
     // batching must be value-invisible
     "tiered_knn_served_batch" -> ((s, dir) => {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
-      val (idx, rows) = ServedFixture.get(s, dir)
-      val overlay = graft.index.ServingOverlay.fromDataFrame(
-        rows.filter(col("epoch") >= 2000))
+      val idx = ServedFixture.get(s, dir)
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val hits = idx.searchBatch(reqs, 10, nprobe = Int.MaxValue,
-        overlay = Some(overlay))
-      overlay.destroy()
+      val hits = idx.searchBatch(reqs, 10, nprobe = Int.MaxValue)
       val out = reqs.flatMap { case (qid, _) =>
         hits(qid).map { case (id, sc) => Row(qid, id, sc) }
       }
@@ -1066,47 +1067,39 @@ object SparkEntry {
           StructField("vec_id", LongType, nullable = false),
           StructField("score", DoubleType, nullable = false))))
     }),
-    // the overlay COMPOSED with probe pruning (nprobe=3): the interesting
-    // case probe-all cannot exercise — a stale stored version in a probed
-    // list masked by a buffered winner whose own list is NOT probed must
-    // vanish entirely (shadowing is store-wide; candidacy is probed-only).
-    // Oracle mirrors the split: stored tier = epoch < 2000 with its own
-    // LWW + per-row centroid assignment, buffer = epoch >= 2000, probed
-    // top-3 lists per query
+    // the patched generation under probe pruning (nprobe=3): the
+    // interesting case probe-all cannot exercise — a stale stored
+    // version in a probed list masked by a buffered winner whose own list
+    // is NOT probed must vanish entirely (the patch drops it store-wide;
+    // candidacy is probed-only). The fixture's lists hold far fewer rows
+    // than max_candidates, so the patched list sizes never truncate a
+    // probe walk. Oracle mirrors the split: stored tier = epoch < 2000
+    // with its own LWW + per-row centroid assignment, buffer =
+    // epoch >= 2000, probed top-3 lists per query
     "tiered_knn_served_pruned" -> ((s, dir) => {
-      val (idx, rows) = ServedFixture.get(s, dir)
-      val overlay = graft.index.ServingOverlay.fromDataFrame(
-        rows.filter(col("epoch") >= 2000))
+      val idx = ServedFixture.get(s, dir)
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val out = idx.searchAllDF(s, reqs, 10, nprobe = 3,
-        overlay = Some(overlay))
-      overlay.destroy()
-      out
+      idx.searchAllDF(s, reqs, 10, nprobe = 3)
     }),
-    // the same overlay through the DRIVER-RESIDENT tier (reference
+    // the patched generation through the DRIVER-RESIDENT tier (reference
     // global-index memory cache, yaml:85-89): the fixture's lists fit the
     // default budget, so each probe-all request is served on the calling
-    // thread — the shadow set read in place, the winners merged as on
-    // the job path (a probe of an uncached list falls through to the job
-    // path, value-identical). The tier must be value-invisible, so the
-    // oracle is tiered_knn_served's SQL verbatim. (The name is kept from
-    // the distributed overlay form this entry gated until the one driver
-    // overlay replaced it.)
+    // thread (a probe of an uncached list falls through to the job path,
+    // value-identical). The tier must be value-invisible, so the oracle
+    // is tiered_knn_served's SQL verbatim. (The name is kept from the
+    // distributed form this entry gated before the driver tier
+    // replaced it.)
     "tiered_knn_served_dist" -> ((s, dir) => {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types._
-      val (idx, rows) = ServedFixture.get(s, dir)
-      val overlay = graft.index.ServingOverlay.fromDataFrame(
-        rows.filter(col("epoch") >= 2000))
-      val local = idx.toLocal()
+      val local = ServedFixture.get(s, dir).toLocal()
       val reqs = q(s, dir).collect().sortBy(_.getLong(0))
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
       val out = reqs.flatMap { case (qid, qv) =>
-        local.search(qv, 10, nprobe = Int.MaxValue, overlay = Some(overlay))
+        local.search(qv, 10, nprobe = Int.MaxValue)
           .map { case (id, sc) => Row(qid, id, sc) }
       }
-      overlay.destroy()
       s.createDataFrame(
         s.sparkContext.parallelize(out, 1),
         StructType(Seq(StructField("query_id", LongType, nullable = false),

@@ -204,16 +204,15 @@ final case class NprobeDecision(window: Long, nprobe: Int,
   * controller tunes, the store backs both.
   *
   * Every `sampleEvery`-th request is re-answered at the band ceiling
-  * `hi` THROUGH THE SAME tier, filter and overlay, and the observed
+  * `hi` THROUGH THE SAME tier and filter, and the observed
   * overlap feeds [[AdaptiveNprobe]]. The ceiling is the quality
   * reference ON PURPOSE: the band's own upper bound is what the
   * controller may spend, so recall-vs-ceiling is the
   * exactly-attainable target (absolute recall belongs to the offline
-  * sweep, Q13), and the sample stays cap-safe at any corpus size. A
-  * tiered (read-your-writes) request samples the same tiered path — a
-  * plain-path reference would score the stored world against the live
-  * one and mis-steer the controller whenever the buffer carries the
-  * true neighbors. Sampling cost: one extra hi-probe request per
+  * sweep, Q13), and the sample stays cap-safe at any corpus size. Over
+  * a [[ServingIndex.patched]] generation the reference is that same
+  * live world, so read-your-writes requests tune like any other.
+  * Sampling cost: one extra hi-probe request per
   * `sampleEvery` requests.
   *
   * Thread-safe: requests run concurrently and unlocked; the request
@@ -245,11 +244,10 @@ final class AdaptiveServingIndex(tier: RawServingTier, lo: Int, hi: Int,
     * controller.
     */
   def search(q: Array[Float], k: Int,
-      filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None): Array[(Long, Double)] = {
-    val res = tier.search(q, k, ctl.current, filter, overlay)
+      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
+    val res = tier.search(q, k, ctl.current, filter)
     if (reqs.incrementAndGet() % sampleEvery == 0) {
-      val ref = tier.search(q, k, hi, filter, overlay)
+      val ref = tier.search(q, k, hi, filter)
       if (ref.nonEmpty) {
         val got = res.iterator.map(_._1).toSet
         ctl.observe(ref.count(r => got(r._1)).toDouble / ref.length)

@@ -3,7 +3,6 @@ package graft.index
 import java.util.concurrent.TimeUnit
 
 import org.apache.spark.{Partitioner, SparkContext}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -74,224 +73,6 @@ final class ServingDeadlineExceeded(val deadlineMs: Long, cause: Throwable)
   extends RuntimeException(
     s"serving request exceeded its ${deadlineMs} ms deadline", cause)
 
-/** One overlay candidate: the buffer's LWW winner for an id, with the
-  * attribute columns (if the overlay carries them) needed to apply a
-  * QueryRequest filter driver-side.
-  */
-final case class OverlayWinner(id: Long, cid: Long, vec: Array[Double],
-    tenant: String = null, tags: Array[Long] = null)
-
-/** Raised when the in-flight buffer exceeds the overlay's capacity cap —
-  * the serving tier's signal that a flush must run before the next
-  * overlay generation (reference buffer cap: 16 GiB, types.h:130).
-  */
-final class OverlayCapacityExceeded(val maxRows: Int)
-  extends RuntimeException(
-    s"buffered mutations exceed the overlay cap ($maxRows rows) — " +
-      "force a flush and rebuild the stored index before the next " +
-      "overlay generation")
-
-/** In-flight buffer tier for the serving path (T5/Q10 read-your-writes on
-  * serving; reference msg-buf.h:220-262 buffer scan + latest-by-id
-  * masking): the mutations accepted since the index was last rebuilt.
-  * Winners are held driver-side (delta-fraction small — measured ~2%),
-  * grouped by centroid so a request scans only the probed fraction; the
-  * shadow id set is BROADCAST once per overlay generation as a SORTED
-  * PRIMITIVE Array[Long] — 8 B/entry, cheap to (de)serialize if an
-  * executor ever rehydrates it, probed by binary search in-task. A
-  * request's probe-task closure carries only the broadcast handle. At
-  * the reference envelope (5% of 100M vectors buffered) that is 40 MB
-  * shipped per executor once per overlay generation instead of per
-  * request — the difference between a 150 ms p99 holding and dying on
-  * closure serialization.
-  *
-  * Capacity is CAPPED ([[ServingOverlay.defaultMaxRows]], the row
-  * analogue of the reference's 16 GiB buffer cap, types.h:130): a
-  * buffer beyond the cap throws [[OverlayCapacityExceeded]] — the
-  * ingest layer must force a flush (stored-index rebuild) instead of
-  * letting the driver-side winner tier grow unboundedly. This is the
-  * same contract the reference enforces: the buffer tier is bounded,
-  * the stored tier is not.
-  *
-  * Lifecycle: build once per refresh interval from the current buffer;
-  * after a flush rebuilds the stored index, build the next overlay and
-  * `destroy()` this one (drops the broadcast from executors). The class
-  * is deliberately NOT Serializable — accidentally capturing it in a
-  * task closure is a bug and fails fast.
-  *
-  * Semantics match [[graft.operators.TieredScan.liveView]]: any overlay
-  * version of an id SHADOWS the stored version (buffer epochs are ≥
-  * flushed epochs by construction), the overlay's own LWW winner
-  * represents the id, and tombstoned winners mask without becoming
-  * candidates.
-  */
-final class ServingOverlay private (
-    private[index] val shadowBc: Broadcast[Array[Long]],
-    private[index] val winners: Array[OverlayWinner],
-    private[index] val hasTenant: Boolean,
-    private[index] val hasTags: Boolean) {
-  def size: Int = winners.length
-  /** Winners grouped by centroid, built once per generation: a request
-    * scans only the PROBED lists' winners — O(probed fraction of the
-    * overlay), not O(overlay) — matching the stored side's pruning.
-    */
-  private[index] val winnersByCid: Map[Long, Array[OverlayWinner]] =
-    winners.groupBy(_.cid)
-  /** Driver-side view of the shadowed id set (local read, no fetch). */
-  private[index] def shadowed: Array[Long] = shadowBc.value
-  /** One request's overlay candidates: the live winners in its PROBED
-    * lists that pass `filter`, scored with [[ServingIndex.scoreOne]]'s
-    * arithmetic so tiered results hash-match the SQL paths. The query
-    * self-norm is loop-invariant across winners — computed once (cosine
-    * only; the accumulation order inside is unchanged, so scores stay
-    * bit-identical to the per-row form).
-    */
-  private[index] def candidates(q: Array[Float], probed: Seq[Long],
-      filter: ServingFilter, metric: String): Array[(Long, Double)] = {
-    val nqPre =
-      if (metric == "cosine") ServingIndex.queryNormSq(q) else Double.NaN
-    probed.iterator
-      .flatMap(cid => winnersByCid.getOrElse(cid, Array.empty[OverlayWinner]))
-      .filter(w => ServingIndex.passWinner(w, filter))
-      .map(w => (w.id, ServingIndex.scoreOne(q, w.vec, metric, nqPre)))
-      .toArray
-  }
-  /** Drop the broadcast from executors — call when this overlay
-    * generation is superseded (flush → stored-index rebuild → new
-    * overlay). Blocking=false: executors GC it lazily.
-    */
-  def destroy(): Unit = shadowBc.destroy()
-}
-
-object ServingOverlay {
-  /** Buffer cap in BUFFERED VERSIONS (≈ the reference's 16 GiB
-    * in-memory buffer cap, types.h:130 — the buffer holds every
-    * un-flushed mutation, not just the winners; at 1024-dim double
-    * vectors: 2M × 8 KiB = 16 GiB). Yaml-tunable in the reference, a
-    * parameter here.
-    */
-  val defaultMaxRows: Int = 2000000
-
-  private def lexD(a: Array[Double], b: Array[Double]): Int = {
-    if (a == null || b == null)
-      return java.lang.Boolean.compare(a != null, b != null)
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val c = java.lang.Double.compare(a(i), b(i))
-      if (c != 0) return c
-      i += 1
-    }
-    Integer.compare(a.length, b.length)
-  }
-
-  private def lexL(a: Array[Long], b: Array[Long]): Int = {
-    if (a == null || b == null)
-      return java.lang.Boolean.compare(a != null, b != null)
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val c = java.lang.Long.compare(a(i), b(i))
-      if (c != 0) return c
-      i += 1
-    }
-    Integer.compare(a.length, b.length)
-  }
-
-  /** Total winner order: epoch, then live-over-deleted, then vector
-    * content (lexicographic — a CONTENT compare, not a hash, so there
-    * is no collision case), then centroid, tenant, tags. Total up to
-    * full row equality, which makes the LWW reduction commutative and
-    * associative — the same winner under ANY row order the collect
-    * returns, so the pick is reproducible run-to-run. Epoch ties cannot
-    * occur under the ingest contract (group-commit epochs are unique per
-    * id); this order is the deterministic safety net when they do
-    * anyway.
-    */
-  private def winnerCompare(
-      aEpoch: Long, aDel: Boolean, aCid: Long, aVec: Array[Double],
-      aTen: String, aTags: Array[Long],
-      bEpoch: Long, bDel: Boolean, bCid: Long, bVec: Array[Double],
-      bTen: String, bTags: Array[Long]): Int = {
-    val c0 = java.lang.Long.compare(aEpoch, bEpoch)
-    if (c0 != 0) return c0
-    val c1 = java.lang.Boolean.compare(!aDel, !bDel)
-    if (c1 != 0) return c1
-    val c2 = lexD(aVec, bVec)
-    if (c2 != 0) return c2
-    val c3 = java.lang.Long.compare(aCid, bCid)
-    if (c3 != 0) return c3
-    val c4 =
-      if (aTen == null || bTen == null)
-        java.lang.Boolean.compare(aTen != null, bTen != null)
-      else aTen.compareTo(bTen)
-    if (c4 != 0) return c4
-    lexL(aTags, bTags)
-  }
-
-  /** Build from buffered mutation rows
-    * (cols: idCol, epoch, deleted, centroid_id, vecCol [, tenantCol,
-    * tagsCol]). Vectors are held as doubles — exact for float sources,
-    * lossless for double sources — so overlay scores match the SQL paths
-    * bit-for-bit. Pass `tenantCol`/`tagsCol` when requests will combine
-    * an overlay with a tenant/tags filter (the attributes are needed to
-    * gate overlay winners driver-side). Throws
-    * [[OverlayCapacityExceeded]] past `maxRows` buffered versions — the
-    * collect is bounded by `limit(maxRows + 1)`, so an over-cap buffer
-    * costs one truncated fetch, never an unbounded driver collect.
-    */
-  def fromDataFrame(buffer: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "vec", tenantCol: Option[String] = None,
-      tagsCol: Option[String] = None,
-      maxRows: Int = defaultMaxRows): ServingOverlay = {
-    val hasTenant = tenantCol.isDefined
-    val hasTags = tagsCol.isDefined
-    val cols = Seq(col(idCol).cast("long"), col("epoch").cast("long"),
-        col("deleted").cast("boolean"), col("centroid_id").cast("long"),
-        col(vecCol).cast("array<double>")) ++
-      tenantCol.map(c => col(c).cast("string")) ++
-      tagsCol.map(c => col(c).cast("array<long>"))
-    val tenantIdx = 5
-    val tagsIdx = if (hasTenant) 6 else 5
-    val fetch = buffer.select(cols: _*)
-    val rows = (if (maxRows == Int.MaxValue) fetch
-      else fetch.limit(maxRows + 1))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getLong(3),
-        if (r.isNullAt(4)) null else r.getSeq[Double](4).toArray,
-        if (hasTenant && !r.isNullAt(tenantIdx)) r.getString(tenantIdx)
-        else null,
-        if (hasTags && !r.isNullAt(tagsIdx))
-          r.getSeq[Long](tagsIdx).toArray
-        else null))
-    if (rows.length > maxRows) throw new OverlayCapacityExceeded(maxRows)
-    val byId = rows.groupBy(_._1)
-    val winners = byId.valuesIterator
-      // LWW within the buffer. Epochs are unique per id by the ingest
-      // contract (group-commit epochs); if a tie ever occurs anyway, the
-      // break is the TOTAL content order [[winnerCompare]], so the pick
-      // never diverges run-to-run — the batch path (Lww.latestBy) keeps
-      // all max-epoch rows, which a single-winner overlay cannot
-      // represent, so determinism is the contract here.
-      .map(_.reduce { (a, b) =>
-        if (winnerCompare(a._2, a._3, a._4, a._5, a._6, a._7,
-            b._2, b._3, b._4, b._5, b._6, b._7) >= 0) a else b
-      })
-      .collect { case (id, _, deleted, cid, vec, ten, tg)
-        if !deleted && vec != null => OverlayWinner(id, cid, vec, ten, tg)
-      }
-      .toArray
-    // sorted primitive shadow: 8 B/entry on the wire and in executor
-    // memory (a boxed Set[Long] is ~50 B/entry and slow to rehydrate
-    // under cache eviction); membership = binary search, no boxing
-    val shadow = byId.keySet.toArray
-    java.util.Arrays.sort(shadow)
-    val sc = buffer.sparkSession.sparkContext
-    new ServingOverlay(sc.broadcast(shadow), winners, hasTenant,
-      hasTags)
-  }
-}
-
 private final class ExactPartitioner(n: Int) extends Partitioner {
   override def numPartitions: Int = n
   override def getPartition(key: Any): Int = key.asInstanceOf[Int]
@@ -300,12 +81,14 @@ private final class ExactPartitioner(n: Int) extends Partitioner {
 /** A raw-vector serving tier: the job-path [[ServingIndex]] or the
   * driver-resident [[LocalServingIndex]] in front of it. One request
   * signature, so the runtime nprobe controller
-  * ([[AdaptiveServingIndex]]) serves whichever tier it is given.
+  * ([[AdaptiveServingIndex]]) serves whichever tier it is given. A
+  * tier serves one generation; writes reach reads through the next
+  * generation ([[ServingIndex.patched]]), never through a request
+  * argument.
   */
 trait RawServingTier {
   def search(q: Array[Float], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None): Array[(Long, Double)]
+      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)]
 }
 
 /** Single-request IVF serving index (SURVEY Q6 serving path; BASELINE
@@ -347,7 +130,10 @@ trait RawServingTier {
   * versioned by the segment tree it was built from — or, for one
   * batch whose epochs all sort after that snapshot, by folding the
   * batch into it ([[patched]]), the reference's write-through latest
-  * map (`msg-buf.h:116-166`) at list granularity.
+  * map (`msg-buf.h:116-166`) at list granularity. A patched generation
+  * is the one way a batch of writes reaches this tier's reads (the
+  * facade's upsert and the `tiered_knn_served*` battery entries both
+  * take it); requests carry no buffer of their own.
   */
 final class ServingIndex private (
     @transient private[index] val blocks: RDD[ListBlock],
@@ -399,12 +185,11 @@ final class ServingIndex private (
     * silently reject every row (the SQL twin fails analysis instead) —
     * reject the request explicitly.
     */
-  private[index] def validateFilter(filter: ServingFilter,
-      tenantOk: Boolean, tagsOk: Boolean): Unit = {
-    require(filter.tenant.isEmpty || tenantOk,
-      "tenant filter on an index/overlay built without a tenant column")
-    require(filter.tagsAny.isEmpty || tagsOk,
-      "tags filter on an index/overlay built without a tags column")
+  private[index] def validateFilter(filter: ServingFilter): Unit = {
+    require(filter.tenant.isEmpty || hasTenant,
+      "tenant filter on an index built without a tenant column")
+    require(filter.tagsAny.isEmpty || hasTags,
+      "tags filter on an index built without a tags column")
   }
 
   /** max_candidates cap (config.h:129): walk the probe ranking in order,
@@ -421,13 +206,12 @@ final class ServingIndex private (
   /** One QueryRequest: [[searchBatch]]'s one-query case. Top-k over the
     * probed lists, optionally through the request's tenant/tags/sample
     * predicate (evaluated in-task before scoring — filtered rows never
-    * pay a dot product) and the in-flight buffer `overlay`. Returns
-    * (id, score) in final rank order (score best-first, ties by id asc).
+    * pay a dot product). Returns (id, score) in final rank order (score
+    * best-first, ties by id asc).
     */
   override def search(q: Array[Float], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None): Array[(Long, Double)] =
-    searchBatch(Seq((0L, q)), k, nprobe, filter, overlay)(0L)
+      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] =
+    searchBatch(Seq((0L, q)), k, nprobe, filter)(0L)
 
   /** One BATCH request (Q12 on the serving path, config.h:131
     * max_query_batch) — THE request path every raw-tier door reaches:
@@ -441,19 +225,10 @@ final class ServingIndex private (
     * with dispatch count. Per-query results are independent of the
     * batch they ride in (same probe pick, same caps, same kernel, same
     * (score, id) rank) — `knn_point_batched` shares `knn_point`'s
-    * oracle verbatim.
-    *
-    * With an `overlay` — the live tiered world (Q10/T5, the serving-path
-    * twin of [[graft.operators.TieredScan.liveView]]): stored rows whose
-    * id has ANY buffered version are skipped in-task (the shadow set
-    * rides a per-overlay-generation broadcast — the probe closure
-    * carries only the handle), and each query's overlay winners from
-    * ITS probed lists join the candidate pool driver-side with the same
-    * score arithmetic and the same filter predicate. Overlay scan cost
-    * is O(probed fraction of the overlay) per query on the driver —
-    * microseconds at the measured 2% delta fraction.
-    * `tiered_knn_served_batch` shares `tiered_knn_served`'s oracle
-    * verbatim.
+    * oracle verbatim. The live tiered world (Q10/T5, the serving-path
+    * twin of [[graft.operators.TieredScan.liveView]]) is a [[patched]]
+    * generation served like any other — `tiered_knn_served_batch`
+    * shares `tiered_knn_served`'s oracle verbatim.
     *
     * Returns qid → ranked hits. Batches above max_query_batch are
     * rejected; k clamps to maxK (a degenerate k ≤ 0 is an empty answer,
@@ -461,11 +236,9 @@ final class ServingIndex private (
     * and the job is cancelled past the deadline.
     */
   def searchBatch(queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None):
+      filter: ServingFilter = ServingFilter.none):
       Map[Long, Array[(Long, Double)]] = {
-    validateFilter(filter, hasTenant, hasTags)
-    overlay.foreach(o => validateFilter(filter, o.hasTenant, o.hasTags))
+    validateFilter(filter)
     val kk = math.min(k, limits.maxK) // clamp, not reject (config.h:128)
     val plan = planBatch(queries, nprobe)
     val qVecs = plan.qVecs
@@ -474,7 +247,6 @@ final class ServingIndex private (
     val ascL = asc
     val hA = postingHitAcc
     val mA = postingMissAcc
-    val shadowBc = overlay.map(_.shadowBc) // handle only — the set never ships
     val probedSets = plan.probedByQuery.map(_.toSet)
     val partials: Array[Array[(Int, Array[(Long, Double)])]] =
       if (plan.parts.isEmpty || kk <= 0) Array.empty
@@ -483,20 +255,17 @@ final class ServingIndex private (
           blocks,
           (ctx: org.apache.spark.TaskContext, it: Iterator[ListBlock]) => {
             val bs = it.toArray
-            val shadow = shadowBc.fold(ServingIndex.noShadow)(_.value)
             val mine = partQueries.getOrElse(ctx.partitionId(),
               Array.emptyIntArray)
             mine.map { i =>
               // the query's own probed set (computed once on the driver)
               (i, ServingIndex.scanTopK(bs.iterator, qVecs(i), kk, m,
-                ascL, probedSets(i), filter, shadow, hA, mA))
+                ascL, probedSets(i), filter, hA, mA))
             }
           },
           plan.parts.toIndexedSeq)
       }
-    mergeBatch(plan, kk, partials, i => overlay.fold(
-      Array.empty[(Long, Double)])(
-      _.candidates(qVecs(i), plan.probedByQuery(i), filter, m)))
+    mergeBatch(plan, kk, partials)
   }
 
   // BatchPlan lives in the companion object: an inner case class's
@@ -529,17 +298,12 @@ final class ServingIndex private (
       qArr.map(_._2)) // small: batch ≤ 100 × dim floats
   }
 
-  /** Batch merge: accumulate the probe job's per-query partials, append
-    * each query's driver-side extras (its overlay winners), rank by the
-    * (score best, id asc) contract. The extras come from the query's
-    * OWN probed lists, never from the lists the job's tasks saw: an
-    * overlay winner may live in a probed centroid whose stored list is
-    * empty (a fresh insert into an empty list), and a stored-derived
-    * set would silently drop it (a read-your-writes violation).
+  /** Batch merge: accumulate the probe job's per-query partials and
+    * rank each query's by the (score best, id asc) contract. A query
+    * whose probed lists are all empty gets an empty answer.
     */
   private def mergeBatch(plan: BatchPlan, kk: Int,
-      partials: Array[Array[(Int, Array[(Long, Double)])]],
-      extra: Int => Array[(Long, Double)]):
+      partials: Array[Array[(Int, Array[(Long, Double)])]]):
       Map[Long, Array[(Long, Double)]] = {
     val acc = scala.collection.mutable.HashMap
       .empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Double)]]
@@ -550,12 +314,12 @@ final class ServingIndex private (
     plan.qArr.indices.map { i =>
       val stored = acc.get(i)
         .map(_.toArray).getOrElse(Array.empty[(Long, Double)])
-      plan.qArr(i)._1 -> rank(stored ++ extra(i), kk)
+      plan.qArr(i)._1 -> rank(stored, kk)
     }.toMap
   }
 
   /** The first `kk` of `hits` in the (score best, id asc) rank order. */
-  private[index] def rank(hits: Array[(Long, Double)],
+  private def rank(hits: Array[(Long, Double)],
       kk: Int): Array[(Long, Double)] = {
     val ascL = asc
     hits.sortBy { case (id, s) => (if (ascL) s else -s, id) }.take(kk)
@@ -569,8 +333,7 @@ final class ServingIndex private (
     */
   def searchAllDF(spark: SparkSession, queries: Seq[(Long, Array[Float])],
       k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None): DataFrame = {
+      filter: ServingFilter = ServingFilter.none): DataFrame = {
     require(queries.size <= limits.maxBatch,
       s"query batch ${queries.size} exceeds max_query_batch ${limits.maxBatch}")
     // requests are independent — run them CONCURRENTLY (a resident server
@@ -579,7 +342,7 @@ final class ServingIndex private (
     // in request order: values identical to the sequential loop.
     val rows = graft.operators.Parallelism.parRequests(queries) {
       case (qid, qv) =>
-        search(qv, k, nprobe, filter, overlay)
+        search(qv, k, nprobe, filter)
           .map { case (id, s) => Row(qid, id, s) }
     }.flatten
     spark.createDataFrame(
@@ -628,12 +391,13 @@ final class ServingIndex private (
   def unpersist(): Unit = blocks.unpersist()
 
   /** The next generation: this one with one mutation batch folded in,
-    * in ONE Spark job and without reading a segment. Each list (one
-    * partition per centroid) drops every row whose id is in `shadow`
-    * (sorted — every `id_hash` the batch carries, tombstones included)
-    * and appends the batch's live winners `adds` (cid, id, vec) that
-    * land on it, packed in this generation's own precision; a list
-    * left empty emits no block, a list empty before gains one. The
+    * in ONE Spark job and without reading a segment. `batch` holds the
+    * batch's versions `(id, epoch, deleted, cid, vec)`. Each list (one
+    * partition per centroid) drops every row whose id the batch carries
+    * (tombstones included) and appends each id's max-epoch version when
+    * it is live and lands on it, packed in this generation's own
+    * precision; a list left empty emits no block, a list empty before
+    * gains one. The
     * same job collects the new list sizes, so [[capProbes]] walks
     * exactly the sizes a rebuild would.
     *
@@ -644,7 +408,8 @@ final class ServingIndex private (
     * version of its id) and epochs are unique per id within the batch
     * (an epoch tie keeps both rows in `Lww.latestBy`, which one winner
     * per id cannot reproduce). Checking that gate is the caller's job
-    * (`Graft.upsert`); `batchMaxEpoch` becomes the new [[maxEpoch]].
+    * (`Graft.upsert`); the batch's max epoch becomes the new
+    * [[maxEpoch]].
     *
     * Lineage: the new blocks are `localCheckpoint`ed while they
     * materialize (storage becomes MEMORY_AND_DISK, which a local
@@ -658,13 +423,19 @@ final class ServingIndex private (
     * driver's own block manager and no executor can be lost under
     * them. Attribute-free generations only (what `buildStored` makes).
     */
-  def patched(shadow: Array[Long], adds: Seq[(Long, Long, Array[Double])],
-      batchMaxEpoch: Long): ServingIndex = {
+  def patched(
+      batch: Seq[(Long, Long, Boolean, Long, Array[Double])]): ServingIndex = {
     require(!hasTenant && !hasTags,
       "patched serves attribute-free generations (buildStored's)")
     val d = dim
     val dbl = vecsDouble
-    // a row off the layout (cid -1: no vector) is dropped, as build does
+    val byId = batch.groupBy(_._1)
+    val shadow = byId.keys.toArray.sorted
+    // (cid, id, vec) per id's winner; a tombstone adds nothing, and a
+    // row off the layout (cid -1: no vector) is dropped, as build does
+    val adds = byId.values.map(_.maxBy(_._2)).collect {
+      case (id, _, false, cid, vec) if vec != null => (cid, id, vec)
+    }.toSeq
     val addBlocks: Map[Int, ListBlock] =
       adds.filter(a => cidToPart.contains(a._1)).groupBy(_._1).map {
         case (cid, rows) =>
@@ -697,7 +468,8 @@ final class ServingIndex private (
     // checkpointing dropped the zip's closure and parents: nothing
     // reads the broadcast or the previous generation's blocks again
     bc.destroy()
-    withBlocks(next, sizes, math.max(maxEpoch, batchMaxEpoch))
+    withBlocks(next, sizes,
+      batch.iterator.map(_._2).foldLeft(maxEpoch)(math.max))
   }
 
   /** This generation's layout and settings over other blocks. */
@@ -727,6 +499,10 @@ final class ServingIndex private (
   * Admission is whole-list, deterministic (ascending cid until the
   * budget); the hit-count-driven hot-set variant is
   * [[HnswHotCache]]'s role.
+  *
+  * It caches one generation: built over a [[ServingIndex.patched]]
+  * generation it serves that generation's live world, and the next
+  * generation needs its own `toLocal`.
   *
   * Thread-safe: serving state is immutable after build; concurrent
   * callers share nothing mutable (the posting-observability counters
@@ -790,29 +566,21 @@ final class LocalServingIndex private[index] (
     out
   }
 
-  /** One QueryRequest — [[ServingIndex.search]] semantics exactly,
-    * overlay included: the shadow set is read locally (no broadcast
-    * fetch) and the overlay's winners merge exactly as on the job path.
-    */
+  /** One QueryRequest — [[ServingIndex.search]] semantics exactly. */
   override def search(q: Array[Float], k: Int, nprobe: Int,
-      filter: ServingFilter = ServingFilter.none,
-      overlay: Option[ServingOverlay] = None): Array[(Long, Double)] = {
-    owner.validateFilter(filter, owner.hasTenant, owner.hasTags)
-    overlay.foreach(o => owner.validateFilter(filter, o.hasTenant, o.hasTags))
+      filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
+    owner.validateFilter(filter)
     val kk = math.min(k, owner.limits.maxK)
     val probed = owner.capProbes(owner.probe(q, nprobe))
     if (!probed.forall(cached.contains)) {
       fallThroughs.incrementAndGet()
-      return owner.search(q, k, nprobe, filter, overlay)
+      return owner.search(q, k, nprobe, filter)
     }
     localHits.incrementAndGet()
-    val stored = ServingIndex.scanTopK(
+    ServingIndex.scanTopK(
       probed.iterator.map(cached(_)).filter(_.ids.nonEmpty), q,
       kk, owner.metric, owner.asc, probed.toSet, filter,
-      overlay.fold(ServingIndex.noShadow)(_.shadowed),
       owner.postingHitAcc, owner.postingMissAcc)
-    overlay.fold(stored)(o =>
-      owner.rank(stored ++ o.candidates(q, probed, filter, owner.metric), kk))
   }
 }
 
@@ -1038,8 +806,8 @@ object ServingIndex {
   val GenerationName = "graft serving generation"
 
   /** One list of a [[ServingIndex.patched]] generation: `old`'s rows
-    * whose id is not in the sorted `shadow` set (the [[scanTopK]]
-    * binary-search test), then `add`'s rows (same list, same
+    * whose id is not in the sorted `shadow` set (binary-search
+    * membership), then `add`'s rows (same list, same
     * precision). An untouched list returns `old` itself — the two
     * generations share its arrays.
     */
@@ -1086,23 +854,10 @@ object ServingIndex {
     nq
   }
 
-  /** Driver-side mirror of [[scanTopK]]'s per-row predicate for overlay
-    * winners — same cheapest-first order, same sample arithmetic.
-    */
-  private[index] def passWinner(w: OverlayWinner,
-      filter: ServingFilter): Boolean = {
-    filter.sampleP.forall { p =>
-      val m = (w.id * 2654435761L) % 100L
-      (if (m < 0) m + 100L else m) < p
-    } &&
-    filter.tenant.forall(t => w.tenant != null && w.tenant == t) &&
-    filter.tagsAny.forall(ts =>
-      w.tags != null && ts.exists(t => w.tags.contains(t)))
-  }
-
   /** Single-vector score with the exact kernel arithmetic of [[scanTopK]]
-    * (sequential double accumulation) — used for driver-side overlay
-    * candidates so tiered results hash-match the SQL paths. `nqPre` is
+    * (sequential double accumulation) — used for driver-side candidates
+    * (buffered PQ re-scores, point lookups) so their results hash-match
+    * the SQL paths. `nqPre` is
     * the precomputed query norm-squared ([[queryNormSq]]) for cosine;
     * NaN recomputes it here.
     */
@@ -1126,8 +881,6 @@ object ServingIndex {
     }
     s
   }
-
-  private[index] val noShadow: Array[Long] = Array.emptyLongArray
 
   /** The ONE max_candidates probe-cap walk (config.h:129), shared by
     * the job-path index and the local tiers: keep probes in ranking
@@ -1166,8 +919,7 @@ object ServingIndex {
     * so scores are bit-identical to the fused form — and cosine stops
     * paying ~1.5× the flops of ip).
     *
-    * `shadow` is the overlay's sorted shadowed-id array (binary-search
-    * membership); empty = no overlay. When every wanted tag is sparse in
+    * When every wanted tag is sparse in
     * a block (posted at build time, [[ListBlock.tagPostings]]), the scan
     * walks only the posting union instead of testing each row — the
     * serving analogue of the stored sparse path
@@ -1178,7 +930,6 @@ object ServingIndex {
   private[index] def scanTopK(it: Iterator[ListBlock], q: Array[Float],
       k: Int, metric: String, asc: Boolean, probed: Set[Long],
       filter: ServingFilter = ServingFilter.none,
-      shadow: Array[Long] = noShadow,
       postingHitAcc: org.apache.spark.util.LongAccumulator = null,
       postingMissAcc: org.apache.spark.util.LongAccumulator = null)
       : Array[(Long, Double)] = {
@@ -1193,8 +944,6 @@ object ServingIndex {
     // `checkTags=false` on the posting path: membership in the posting
     // union IS the tags-ANY predicate, already proven.
     def pass(b: ListBlock, r: Int, checkTags: Boolean): Boolean = {
-      if (shadow.length > 0 &&
-        java.util.Arrays.binarySearch(shadow, b.ids(r)) >= 0) return false
       if (sampleP >= 0) {
         val m = (b.ids(r) * 2654435761L) % 100L
         if ((if (m < 0) m + 100L else m) >= sampleP) return false

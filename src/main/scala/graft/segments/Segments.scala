@@ -1028,18 +1028,31 @@ object Segments {
   private[graft] def hfs(spark: SparkSession, dir: String): FileSystem =
     new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def encode(d: SegmentDescriptor): String = {
+  /** One catalog line. A `file_path` under `baseDir` is written relative
+    * to it, so the catalog's bytes do not depend on where the store
+    * lives and a moved store still resolves its segments ([[decode]]).
+    */
+  private def encode(baseDir: String, d: SegmentDescriptor): String = {
     require(!(d.segment_id + d.file_path + d.replaced_by.getOrElse(""))
       .exists(c => c == '\t' || c == '\n'), s"descriptor fields: $d")
-    Seq(d.segment_id, d.file_path, d.num_vectors, d.min_id_hash,
+    val path =
+      if (d.file_path.startsWith(s"$baseDir/"))
+        d.file_path.substring(baseDir.length + 1)
+      else d.file_path
+    Seq(d.segment_id, path, d.num_vectors, d.min_id_hash,
       d.max_id_hash, d.min_epoch, d.max_epoch, d.tombstone_ratio,
       d.created_at.getTime, d.is_stable, d.replaced_by.getOrElse(""))
       .mkString("\t")
   }
 
-  private def decode(line: String): SegmentDescriptor = {
+  /** [[encode]]'s inverse: a relative `file_path` resolves against
+    * `baseDir`; an absolute one (every line written before paths were
+    * stored relative) reads as written.
+    */
+  private def decode(baseDir: String, line: String): SegmentDescriptor = {
     val f = line.split("\t", -1)
-    SegmentDescriptor(f(0), f(1), f(2).toLong, f(3).toLong, f(4).toLong,
+    val path = if (new HPath(f(1)).isAbsolute) f(1) else s"$baseDir/${f(1)}"
+    SegmentDescriptor(f(0), path, f(2).toLong, f(3).toLong, f(4).toLong,
       f(5).toLong, f(6).toLong, f(7).toDouble,
       new java.sql.Timestamp(f(8).toLong), f(9).toBoolean,
       if (f(10).isEmpty) None else Some(f(10)))
@@ -1089,13 +1102,14 @@ object Segments {
 
   private[graft] def appendCatalog(spark: SparkSession, baseDir: String,
       descs: Seq[SegmentDescriptor]): Unit =
-    appendLines(spark, s"$baseDir/$CatalogDir", "desc", descs.map(encode))
+    appendLines(spark, s"$baseDir/$CatalogDir", "desc",
+      descs.map(encode(baseDir, _)))
 
   /** Every descriptor row ever appended, in append order — the full
     * manifest history (write-amplification accounting, debugging).
     */
   def allDescriptors(spark: SparkSession, baseDir: String): Seq[SegmentDescriptor] =
-    readLines(spark, s"$baseDir/$CatalogDir", "desc").map(decode)
+    readLines(spark, s"$baseDir/$CatalogDir", "desc").map(decode(baseDir, _))
 
   /** A1: latest catalog state — one row per segment_id (last append wins),
     * dropping segments superseded by compaction. Driver-side: no Spark job.
@@ -1851,7 +1865,7 @@ object Segments {
             try scala.io.Source.fromInputStream(in, "UTF-8")
               .getLines().filter(_.nonEmpty)
               .foreach { line =>
-                val d = decode(line); latest(d.segment_id) = d
+                val d = decode(baseDir, line); latest(d.segment_id) = d
               }
             finally in.close()
           }
@@ -1859,7 +1873,7 @@ object Segments {
           val name =
             files.last.getName.stripSuffix(".tsv") + "x-ckpt.tsv"
           writeLinesNamed(spark, dir, name,
-            latest.values.map(encode).toSeq)
+            latest.values.map(encode(baseDir, _)).toSeq)
           files.foreach(f => fs.delete(f, false))
         }
       }

@@ -1996,4 +1996,55 @@ class GraftFacadeSpec extends SparkSpec {
     g.close()
     Segments.deleteDir(base)
   }
+
+  test("catalog paths are relative to the store: two stores under different names write the same catalog lines, and a renamed store reopens serving the same answers") {
+    val root = tmp()
+    val bases = Seq(s"$root/s", s"$root/store-with-a-longer-name")
+    def writes(g: Graft): Unit = {
+      val rnd = new scala.util.Random(31)
+      g.upsert(gaussBatch(rnd, (0 until 60).map(i => s"c-$i")))
+      g.upsert(gaussBatch(rnd, (40 until 90).map(i => s"c-$i")))
+      g.delete((0 until 60 by 7).map(i => s"c-$i").toDF("id"))
+    }
+    bases.foreach { b =>
+      val g = Graft.open(spark, b, patchCfg("ip"))
+      writes(g)
+      g.close()
+    }
+    // every descriptor line, created_at (field 8, wall clock) aside
+    def catalogLines(base: String): Seq[String] = {
+      val dir = java.nio.file.Paths.get(s"$base/${Segments.CatalogDir}")
+      java.nio.file.Files.list(dir).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("desc-"))
+        .sortBy(_.getFileName.toString)
+        .flatMap(f => java.nio.file.Files.readAllLines(f).toArray.toSeq)
+        .map(l => l.toString.split("\t", -1).updated(8, "").mkString("\t"))
+    }
+    val lines = catalogLines(bases(0))
+    assert(lines.nonEmpty && lines === catalogLines(bases(1)))
+    assert(lines.forall(!_.contains(root)), lines.head)
+    // the answers of a fresh open at the original path ...
+    val qs = {
+      val rnd = new scala.util.Random(5)
+      Seq.fill(4)(gaussQuery(rnd))
+    }
+    def answers(base: String) = {
+      val g = Graft.open(spark, base, patchCfg("ip"))
+      try (g.liveView.select("id", "epoch", "vec").as[(String, Long, Seq[Double])]
+          .collect().sortBy(_._1).toSeq,
+        qs.map(q => g.search(q, 5).toSeq))
+      finally g.close()
+    }
+    val want = answers(bases(0))
+    assert(want._1.length === 90 - 9)
+    // ... equal those after the store moves
+    val moved = s"$root/moved"
+    java.nio.file.Files.move(java.nio.file.Paths.get(bases(0)),
+      java.nio.file.Paths.get(moved))
+    val got = answers(moved)
+    assert(got._1 === want._1)
+    assert(got._2 === want._2)
+    Segments.deleteDir(root)
+  }
 }

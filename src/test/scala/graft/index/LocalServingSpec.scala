@@ -41,27 +41,26 @@ class LocalServingSpec extends SparkSpec {
   }
 
   test("tiered (overlay) requests match the job path, shadow and winners included") {
-    val idx = ServingIndex.build(entries, cents, "ip",
-      tenantCol = Some("tenant"), tagsCol = Some("tags"))
-    val local = idx.toLocal()
-    // buffer: upsert some stored ids (shadow), insert brand-new ids,
-    // tombstone a few — the full overlay semantics surface
+    val idx = ServingIndex.build(entries, cents, "ip")
+    // buffer: re-upsert some stored ids with moved vectors and
+    // tombstone a third of them — folded into the next generation by
+    // patched
     val buffer = entries.limit(200)
       .select(col("vec_id"), (col("vec_id") % 3 === 0).as("deleted"),
         col("centroid_id"),
         transform(col("embedding"), x => x * lit(1.5f))
           .cast("array<double>").as("vec"))
       .withColumn("epoch", lit(100L) + col("vec_id"))
-      .select(col("vec_id"), col("epoch"), col("deleted"),
-        col("centroid_id"), col("vec"))
-    val overlay = ServingOverlay.fromDataFrame(buffer)
+    val live = Patches.fold(idx, buffer)
+    idx.unpersist()
+    val local = live.toLocal()
     for ((_, qv) <- queries.take(6); np <- Seq(2, 4)) {
-      val got = local.search(qv, 10, np, overlay = Some(overlay)).toSeq
-      val want = idx.search(qv, 10, np, overlay = Some(overlay)).toSeq
+      val got = local.search(qv, 10, np).toSeq
+      val want = live.search(qv, 10, np).toSeq
       assert(got === want, s"np=$np")
     }
-    overlay.destroy()
-    idx.unpersist()
+    assert(local.localServes > 0 && local.fallThroughServes === 0)
+    live.unpersist()
   }
 
   test("a budget smaller than the corpus admits a prefix of lists and falls through when probing past it") {

@@ -120,37 +120,36 @@ class NprobeTunerSpec extends SparkSpec {
       graft.segments.Segments.writeSegment(
         entries.filter(col("epoch") < 2000), dir, "delta-000",
         isStable = false)
-      val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
-      val buffer = entries.filter(col("epoch") >= 2000)
-      val ovDriver = ServingOverlay.fromDataFrame(buffer)
+      val stored = ServingIndex.buildStored(spark, dir, cents, "ip")
+      // the live tiered world: the buffered rows folded in by patched
+      val idx = Patches.fold(stored, entries.filter(col("epoch") >= 2000))
+      stored.unpersist()
       val qs = Knn.defaultQueries(emb).collect()
         .map(r => r.getSeq[Float](1).toArray)
       val hi = cents.count().toInt
       val adaptive = new AdaptiveServingIndex(idx, lo = 1, hi = hi,
         target = 0.95, window = 5, sampleEvery = 1)
       (0 until 10).foreach(_ =>
-        qs.foreach(q => adaptive.search(q, 10, overlay = Some(ovDriver))))
+        qs.foreach(q => adaptive.search(q, 10)))
       val settled = adaptive.currentNprobe
       assert(settled >= 1 && settled <= hi)
       // at the settled nprobe, the adaptive tiered answer IS the direct
       // tiered answer — the controller only picks nprobe, never alters
       // results
       qs.take(4).foreach { q =>
-        val want = idx.search(q, 10, settled, overlay = Some(ovDriver)).toSeq
-        assert(adaptive.search(q, 10, overlay = Some(ovDriver)).toSeq === want
+        val want = idx.search(q, 10, settled).toSeq
+        assert(adaptive.search(q, 10).toSeq === want
           || adaptive.currentNprobe != settled) // controller may step
       }
       // tiered recall at the settled nprobe meets the target vs ceiling
       val recallAt = qs.map { q =>
-        val ref = idx.search(q, 10, hi, overlay = Some(ovDriver))
-          .map(_._1).toSet
-        val got = idx.search(q, 10, settled, overlay = Some(ovDriver))
-          .map(_._1)
+        val ref = idx.search(q, 10, hi).map(_._1).toSet
+        val got = idx.search(q, 10, settled).map(_._1)
         got.count(ref).toDouble / ref.size
       }
       assert(recallAt.sum / recallAt.length >= 0.95,
         s"settled=$settled recall=${recallAt.sum / recallAt.length}")
-      ovDriver.destroy(); idx.unpersist()
+      idx.unpersist()
     } finally {
       entries.unpersist()
       graft.segments.Segments.deleteDir(dir)
@@ -235,8 +234,7 @@ class NprobeTunerSpec extends SparkSpec {
     val hi = 16
     val stub = new RawServingTier {
       def search(q: Array[Float], k: Int, nprobe: Int,
-          filter: ServingFilter = ServingFilter.none,
-          overlay: Option[ServingOverlay] = None): Array[(Long, Double)] = {
+          filter: ServingFilter = ServingFilter.none): Array[(Long, Double)] = {
         calls.incrementAndGet()
         val seed = q(0).toLong
         val rnd = new scala.util.Random(seed * 31 + nprobe)

@@ -153,22 +153,77 @@ class ServingSpec extends SparkSpec {
     posted.unpersist(); dense.unpersist(); entries.unpersist()
   }
 
-  test("overlay capacity cap: an over-cap buffer throws instead of collecting unboundedly") {
-    val buffer = (0 until 64)
-      .map(i => (i.toLong, 100L + i, false, 0L, Seq(1.0, 0.0)))
-      .toDF("vec_id", "epoch", "deleted", "centroid_id", "vec")
-    intercept[OverlayCapacityExceeded] {
-      ServingOverlay.fromDataFrame(buffer, maxRows = 63)
-    }
-    // at exactly the cap it builds fine
-    val ok = ServingOverlay.fromDataFrame(buffer, maxRows = 64)
-    assert(ok.size === 64)
-    ok.destroy()
+  // ---- read-your-writes: a buffer folded into the stored generation
+  // by ServingIndex.patched, checked on the job path, searchBatch and
+  // the driver-resident tier against the live-set brute force ----------
+
+  /** The assigned deterministic mutation log as driver tuples
+    * (vec_id, epoch, deleted, centroid_id, vec), plus its frame.
+    */
+  private lazy val mutationLog = {
+    val entries = Ivf.assign(
+        graft.ingest.MutationLog.deterministicLog(emb)
+          .withColumn("id_hash",
+            graft.functions.VectorFunctions.hashId(col("id")))
+          .withColumn("deleted", col("op") === "DELETE"),
+        cents, vecCol = "vec")
+      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
+      .select("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
+      .cache()
+    val all = entries.collect().map(r => (r.getLong(0), r.getLong(2),
+      r.getBoolean(3), r.getLong(4),
+      if (r.isNullAt(5)) null else r.getSeq[Double](5).toArray))
+    (entries, all)
+  }
+
+  /** Flush the log's rows below `cut` to a fresh store, build its stored
+    * generation, and fold the rows at or above `cut` into it.
+    */
+  private def liveGeneration(dir: String, cut: Long): ServingIndex = {
+    import graft.segments.Segments
+    val entries = mutationLog._1
+    Segments.writeSegment(entries.filter(col("epoch") < cut), dir,
+      "delta-000", isStable = false)
+    val stored = ServingIndex.buildStored(spark, dir, cents, "ip")
+    val live = Patches.fold(stored, entries.filter(col("epoch") >= cut))
+    stored.unpersist()
+    live
+  }
+
+  /** Top-k of the whole log's live set (LWW per id, tombstones masked):
+    * the rows whose live version lies in a `probed` list and passes the
+    * sample gate, scored with the kernel's float-by-double dot.
+    */
+  private def liveTopK(qv: Array[Float], k: Int, probed: Long => Boolean,
+      sampleP: Option[Int] = None): Seq[(Long, Double)] =
+    mutationLog._2.groupBy(_._1).values.map(_.maxBy(_._2))
+      .filter(v => !v._3 && v._5 != null && probed(v._4))
+      .filter(v => sampleP.forall { p =>
+        val m = (v._1 * 2654435761L) % 100L
+        (if (m < 0) m + 100L else m) < p
+      })
+      .map { v =>
+        var s = 0.0; var i = 0
+        while (i < qv.length) { s += qv(i).toDouble * v._5(i); i += 1 }
+        (v._1, s)
+      }
+      .toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
+
+  /** The job path, a one-query searchBatch and the local tier each
+    * answer `want`.
+    */
+  private def assertEveryPath(idx: ServingIndex, local: LocalServingIndex,
+      qv: Array[Float], k: Int, nprobe: Int, f: ServingFilter,
+      want: Seq[(Long, Double)], clue: String): Unit = {
+    assert(idx.search(qv, k, nprobe, f).toSeq === want, s"job $clue")
+    assert(idx.searchBatch(Seq((7L, qv)), k, nprobe, f)(7L).toSeq === want,
+      s"batch $clue")
+    assert(local.search(qv, k, nprobe, f).toSeq === want, s"local $clue")
   }
 
   test("overlay: buffered upserts shadow stored rows, deletes mask, inserts appear") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-serving-overlay-").toString
+      .createTempDirectory("graft-serving-patch-").toString
     try {
       import graft.segments.Segments
       // stored tier: ids 1..3 pointing along x
@@ -187,63 +242,34 @@ class ServingSpec extends SparkSpec {
         (2L, 12L, 200L, true, 0L, null.asInstanceOf[Seq[Double]]),
         (9L, 19L, 200L, false, 0L, Seq(1.0, 0.0)))
         .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
-      val overlay = ServingOverlay.fromDataFrame(buffer)
-      val got = idx.search(Array(1.0f, 0.0f), 10, 1, overlay = Some(overlay))
+      val live = Patches.fold(idx, buffer)
+      assert(live.maxEpoch === 200L)
       // id 9 (buffer insert, score 1.0) first; id 3 stored 0.8; id 1's
       // BUFFERED version scores 0.0 (not the stored 1.0); id 2 gone
-      assert(got.map(_._1).toSeq === Seq(9L, 3L, 1L))
-      assert(got.head._2 === 1.0)
-      assert(got.find(_._1 == 1L).get._2 === 0.0)
-      // same request without the overlay sees the stored world
+      assertEveryPath(live, live.toLocal(), Array(1.0f, 0.0f), 10, 1,
+        ServingFilter.none, Seq((9L, 1.0), (3L, 0.8), (1L, 0.0)), "live")
+      // the same request on the stored generation sees the stored world
       val plain = idx.search(Array(1.0f, 0.0f), 10, 1)
       assert(plain.map(_._1).toSeq === Seq(1L, 2L, 3L))
-      idx.unpersist()
+      idx.unpersist(); live.unpersist()
     } finally graft.segments.Segments.deleteDir(dir)
   }
 
   test("overlay fuzz: random flush/buffer splits match the live-set brute force") {
     val dir0 = java.nio.file.Files
-      .createTempDirectory("graft-overlay-fuzz-").toString
-    import graft.segments.Segments
-    val log = graft.ingest.MutationLog.deterministicLog(emb)
-    val entries = Ivf.assign(
-        log.withColumn("id_hash",
-            graft.functions.VectorFunctions.hashId(col("id")))
-          .withColumn("deleted", col("op") === "DELETE"),
-        cents, vecCol = "vec")
-      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
-      .select("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
-      .cache()
-    val all = entries.collect().map(r => (r.getLong(0), r.getLong(2),
-      r.getBoolean(3), r.getLong(4),
-      if (r.isNullAt(5)) null else r.getSeq[Double](5).toArray))
-    def dotFD(a: Array[Float], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i).toDouble * b(i); i += 1 }
-      s
-    }
+      .createTempDirectory("graft-patch-fuzz-").toString
     (1 to 5).foreach { seed =>
       val rnd = new scala.util.Random(seed * 7)
       // random epoch cut: older rows flushed, newer rows still buffered
       val cut = 1500 + rnd.nextInt(2000)
-      val dir = s"$dir0/t$seed"
-      Segments.writeSegment(entries.filter(col("epoch") < cut), dir,
-        "delta-000", isStable = false)
-      val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
-      val overlay = ServingOverlay.fromDataFrame(
-        entries.filter(col("epoch") >= cut))
+      val live = liveGeneration(s"$dir0/t$seed", cut)
       val k = 5 + rnd.nextInt(20)
       val (qid, qv) = queries(rnd.nextInt(queries.length))
-      val got = idx.search(qv, k, Int.MaxValue, overlay = Some(overlay)).toSeq
-      // brute force: LWW per id over the WHOLE log, live only
-      val live = all.groupBy(_._1).values.map(_.maxBy(_._2))
-        .filter(v => !v._3 && v._5 != null)
-      val expect = live.map(v => (v._1, dotFD(qv, v._5)))
-        .toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
-      assert(got === expect, s"seed=$seed cut=$cut k=$k q=$qid")
-      idx.unpersist()
+      assertEveryPath(live, live.toLocal(), qv, k, Int.MaxValue,
+        ServingFilter.none, liveTopK(qv, k, _ => true),
+        s"seed=$seed cut=$cut k=$k q=$qid")
+      live.unpersist()
     }
-    entries.unpersist()
     graft.segments.Segments.deleteDir(dir0)
   }
 
@@ -254,248 +280,85 @@ class ServingSpec extends SparkSpec {
     // the sample gate applies to both tiers — randomized over epoch cut,
     // nprobe, k, and sample p
     val dir0 = java.nio.file.Files
-      .createTempDirectory("graft-overlay-prune-fuzz-").toString
-    import graft.segments.Segments
-    val log = graft.ingest.MutationLog.deterministicLog(emb)
-    val entries = Ivf.assign(
-        log.withColumn("id_hash",
-            graft.functions.VectorFunctions.hashId(col("id")))
-          .withColumn("deleted", col("op") === "DELETE"),
-        cents, vecCol = "vec")
-      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
-      .select("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
-      .cache()
-    val all = entries.collect().map(r => (r.getLong(0), r.getLong(2),
-      r.getBoolean(3), r.getLong(4),
-      if (r.isNullAt(5)) null else r.getSeq[Double](5).toArray))
-    def dotFD(a: Array[Float], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i).toDouble * b(i); i += 1 }
-      s
-    }
-    def samplePass(id: Long, p: Int): Boolean = {
-      val m = (id * 2654435761L) % 100L
-      (if (m < 0) m + 100L else m) < p
-    }
+      .createTempDirectory("graft-patch-prune-fuzz-").toString
     (1 to 5).foreach { seed =>
       val rnd = new scala.util.Random(seed * 31 + 5)
       val cut = 1500 + rnd.nextInt(2000)
-      val dir = s"$dir0/t$seed"
-      Segments.writeSegment(entries.filter(col("epoch") < cut), dir,
-        "delta-000", isStable = false)
-      val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
-      val overlay = ServingOverlay.fromDataFrame(
-        entries.filter(col("epoch") >= cut))
+      val live = liveGeneration(s"$dir0/t$seed", cut)
       val k = 3 + rnd.nextInt(12)
       val nprobe = 1 + rnd.nextInt(4)
       val pOpt = Seq(None, Some(30), Some(60), Some(90))(rnd.nextInt(4))
       val (qid, qv) = queries(rnd.nextInt(queries.length))
-      val got = idx.search(qv, k, nprobe,
-        ServingFilter(sampleP = pOpt), Some(overlay)).toSeq
-      // driver-side brute force of the tiered + pruned semantics:
-      val probed = idx.probe(qv, nprobe).toSet
-      val buffered = all.filter(_._2 >= cut)
-      val shadow = buffered.map(_._1).toSet
-      // stored tier: store-latest live rows (buildStored's LWW within the
-      // flushed world), probed list only, not shadowed, sample-gated
-      val storedCand = all.filter(_._2 < cut)
-        .groupBy(_._1).values.map(_.maxBy(_._2))
-        .filter(v => !v._3 && v._5 != null)
-        .filter(v => probed.contains(v._4))
-        .filter(v => !shadow.contains(v._1))
-        .filter(v => pOpt.forall(samplePass(v._1, _)))
-      // overlay tier: buffer LWW winners, live, probed list, sample-gated
-      val overlayCand = buffered
-        .groupBy(_._1).values.map(_.maxBy(_._2))
-        .filter(v => !v._3 && v._5 != null)
-        .filter(v => probed.contains(v._4))
-        .filter(v => pOpt.forall(samplePass(v._1, _)))
-      val expect = (storedCand ++ overlayCand)
-        .map(v => (v._1, dotFD(qv, v._5)))
-        .toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
-      assert(got === expect,
+      // candidacy follows each id's LIVE version's list: a stale stored
+      // version in a probed list never competes
+      val probed = live.probe(qv, nprobe).toSet
+      assertEveryPath(live, live.toLocal(), qv, k, nprobe,
+        ServingFilter(sampleP = pOpt), liveTopK(qv, k, probed, pOpt),
         s"seed=$seed cut=$cut k=$k nprobe=$nprobe p=$pOpt q=$qid")
-      idx.unpersist()
+      live.unpersist()
     }
-    entries.unpersist()
     graft.segments.Segments.deleteDir(dir0)
   }
 
   test("searchBatch x overlay: one batch job equals the per-request tiered results") {
     val dir0 = java.nio.file.Files
-      .createTempDirectory("graft-batch-overlay-").toString
-    import graft.segments.Segments
-    val log = graft.ingest.MutationLog.deterministicLog(emb)
-    val entries = Ivf.assign(
-        log.withColumn("id_hash",
-            graft.functions.VectorFunctions.hashId(col("id")))
-          .withColumn("deleted", col("op") === "DELETE"),
-        cents, vecCol = "vec")
-      .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
-      .select("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
-      .cache()
-    val dir = s"$dir0/t"
-    Segments.writeSegment(entries.filter(col("epoch") < 2000), dir,
-      "delta-000", isStable = false)
-    val idx = ServingIndex.buildStored(spark, dir, cents, "ip")
-    val buffer = entries.filter(col("epoch") >= 2000)
-    val driver = ServingOverlay.fromDataFrame(buffer)
+      .createTempDirectory("graft-batch-patch-").toString
+    val live = liveGeneration(s"$dir0/t", 2000)
+    val local = live.toLocal()
     val batch = queries.toSeq
     for {
       nprobe <- Seq(2, Int.MaxValue)
       f <- Seq(ServingFilter.none, ServingFilter(sampleP = Some(60)))
     } {
-      val wantByQ = batch.map { case (qid, qv) =>
-        qid -> idx.search(qv, 7, nprobe, f, Some(driver)).toSeq
-      }.toMap
-      val gotDriver = idx.searchBatch(batch, 7, nprobe, f, Some(driver))
-      batch.foreach { case (qid, _) =>
-        assert(gotDriver(qid).toSeq === wantByQ(qid),
-          s"driver batch nprobe=$nprobe f=$f q=$qid")
+      val got = live.searchBatch(batch, 7, nprobe, f)
+      batch.foreach { case (qid, qv) =>
+        val want = liveTopK(qv, 7, live.probe(qv, nprobe).toSet, f.sampleP)
+        assert(got(qid).toSeq === want, s"batch nprobe=$nprobe f=$f q=$qid")
+        assert(live.search(qv, 7, nprobe, f).toSeq === want,
+          s"job nprobe=$nprobe f=$f q=$qid")
+        assert(local.search(qv, 7, nprobe, f).toSeq === want,
+          s"local nprobe=$nprobe f=$f q=$qid")
       }
     }
-    driver.destroy(); idx.unpersist()
-    entries.unpersist()
-    Segments.deleteDir(dir0)
+    live.unpersist()
+    graft.segments.Segments.deleteDir(dir0)
   }
 
   test("overlay: a fresh insert into a centroid with an EMPTY stored list is returned by search, searchBatch and the local tier (probed set never derived from stored blocks)") {
-    // stored world: one vector, all in centroid 0; centroid 1 exists in
-    // the layout but holds NO stored rows
-    val stored = Seq((1L, Seq(1.0, 0.0)))
-      .toDF("vec_id", "vec")
-      .withColumn("centroid_id", lit(0L))
-    val c = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "cv")
-    val idx = ServingIndex.build(stored, c, "ip",
-      idCol = "vec_id", vecCol = "vec")
-    val local = idx.toLocal()
-    // buffer: a fresh insert assigned to the EMPTY centroid 1
-    val buffer = Seq((5L, 1L, false, 1L, Seq(0.0, 1.0)))
-      .toDF("vec_id", "epoch", "deleted", "centroid_id", "vec")
-    val overlay = ServingOverlay.fromDataFrame(buffer)
-    val q = Array(0.0f, 1.0f)
-    // nprobe 2: both lists probed, the winner ranks above the stored row
-    // on every path
-    assert(idx.search(q, 2, 2, overlay = Some(overlay)).map(_._1).toSeq
-      === Seq(5L, 1L))
-    assert(idx.searchBatch(Seq((0L, q)), 2, 2, overlay = Some(overlay))(0L)
-      .map(_._1).toSeq === Seq(5L, 1L))
-    assert(local.search(q, 2, 2, overlay = Some(overlay)).map(_._1).toSeq
-      === Seq(5L, 1L))
-    // nprobe 1: only the EMPTY list is probed, so no stored row is a
-    // candidate — the probe task for centroid 1 sees an empty block
-    // array, and a stored-derived probed set would silently drop the
-    // overlay winner (read-your-writes violation)
-    assert(idx.probe(q, 1) === Seq(1L))
-    assert(idx.search(q, 2, 1, overlay = Some(overlay)).toSeq
-      === Seq((5L, 1.0)))
-    assert(idx.searchBatch(Seq((0L, q)), 2, 1, overlay = Some(overlay))(0L)
-      .toSeq === Seq((5L, 1.0)))
-    assert(local.search(q, 2, 1, overlay = Some(overlay)).toSeq
-      === Seq((5L, 1.0)))
-    // the empty list is cached (empty), so both local requests served
-    // locally instead of falling through to a probe job
-    assert(local.localServes === 2 && local.fallThroughServes === 0,
-      s"local=${local.localServes} fallThrough=${local.fallThroughServes}")
-    overlay.destroy()
-    idx.unpersist()
-  }
-
-  test("overlay + filter: composite QueryRequest with read-your-writes applies the predicate to BOTH tiers") {
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-overlay-filter-").toString
+      .createTempDirectory("graft-serving-empty-list-").toString
     try {
       import graft.segments.Segments
-      // stored tier with tenants/tags; id 2 will be shadowed by a buffer
-      // upsert that CHANGES its tenant (the composition trap: the stored
-      // version passes the filter, the live buffered version must not)
-      val stored = Seq(
-        (1L, 11L, 100L, false, 0L, Seq(1.0, 0.0), "t1", Seq(3L)),
-        (2L, 12L, 100L, false, 0L, Seq(0.9, 0.1), "t1", Seq(3L)),
-        (3L, 13L, 100L, false, 0L, Seq(0.8, 0.2), "t2", Seq(5L)))
-        .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id",
-          "vec", "tenant", "tags")
+      // stored world: one vector, in centroid 0; centroid 1 exists in
+      // the layout but holds NO stored rows
+      val stored = Seq((1L, 11L, 100L, false, 0L, Seq(1.0, 0.0)))
+        .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id", "vec")
       Segments.writeSegment(stored, dir, "delta-000", isStable = false)
-      val c = Seq((0L, Seq(0.5, 0.5))).toDF("cid", "cv")
-      val all = Segments.readSegments(spark, dir)
-      val idx = ServingIndex.build(all.filter(!col("deleted")), c, "ip",
-        idCol = "vec_id", vecCol = "vec",
-        tenantCol = Some("tenant"), tagsCol = Some("tags"))
-      // buffer: id 2 re-upserted under tenant t2 (filter must now reject
-      // it), id 9 inserted under t1 (filter must admit it)
-      val buffer = Seq(
-        (2L, 12L, 200L, false, 0L, Seq(0.95, 0.0), "t2", Seq(5L)),
-        (9L, 19L, 200L, false, 0L, Seq(0.7, 0.0), "t1", Seq(3L)))
-        .toDF("vec_id", "id_hash", "epoch", "deleted", "centroid_id",
-          "vec", "tenant", "tags")
-      val overlay = ServingOverlay.fromDataFrame(buffer,
-        tenantCol = Some("tenant"), tagsCol = Some("tags"))
-      val got = idx.search(Array(1.0f, 0.0f), 10, 1,
-        ServingFilter(tenant = Some("t1")), Some(overlay))
-      // t1 live world: stored 1 (1.0), buffered 9 (0.7); stored 2 is
-      // shadowed and its live version is t2; stored 3 is t2
-      assert(got.map(_._1).toSeq === Seq(1L, 9L))
-      // filter + overlay through searchAllDF takes the same path
-      val viaDf = idx.searchAllDF(spark, Seq((0L, Array(1.0f, 0.0f))), 10, 1,
-          filter = ServingFilter(tenant = Some("t1")),
-          overlay = Some(overlay))
-        .select("vec_id").as[Long].collect().toSeq
-      assert(viaDf === Seq(1L, 9L))
-      // a tenant filter against an overlay built WITHOUT tenant attributes
-      // is an explicit rejection, not a silent empty result
-      val blindOverlay = ServingOverlay.fromDataFrame(buffer)
-      intercept[IllegalArgumentException] {
-        idx.search(Array(1.0f, 0.0f), 10, 1,
-          ServingFilter(tenant = Some("t1")), Some(blindOverlay))
-      }
-      idx.unpersist(); overlay.destroy(); blindOverlay.destroy()
-    } finally graft.segments.Segments.deleteDir(dir)
-  }
-
-  test("overlay lifecycle: flush -> rebuild -> fresh overlay serves the same live world; destroyed overlay fails fast") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-overlay-drain-").toString
-    try {
-      import graft.segments.Segments
-      val log = graft.ingest.MutationLog.deterministicLog(emb)
-      val entries = Ivf.assign(
-          log.withColumn("id_hash",
-              graft.functions.VectorFunctions.hashId(col("id")))
-            .withColumn("deleted", col("op") === "DELETE"),
-          cents, vecCol = "vec")
-        .withColumn("centroid_id", coalesce(col("centroid_id"), lit(-1L)))
-        .select("vec_id", "id_hash", "epoch", "deleted", "centroid_id",
-          "vec")
-        .cache()
-      val cut = 2500
-      Segments.writeSegment(entries.filter(col("epoch") < cut), dir,
-        "delta-000", isStable = false)
-      val idx1 = ServingIndex.buildStored(spark, dir, cents, "ip")
-      val overlay1 = ServingOverlay.fromDataFrame(
-        entries.filter(col("epoch") >= cut))
-      val qv = queries.head._2
-      val before = idx1.search(qv, 10, Int.MaxValue, overlay = Some(overlay1))
-        .toSeq
-      // flush: buffer becomes a segment, the index refreshes from the
-      // store, the overlay generation is drained (destroyed) and replaced
-      // by an empty one
-      Segments.writeSegment(entries.filter(col("epoch") >= cut), dir,
-        "delta-001", isStable = false)
-      idx1.unpersist(); overlay1.destroy()
-      val idx2 = ServingIndex.buildStored(spark, dir, cents, "ip")
-      val overlay2 = ServingOverlay.fromDataFrame(
-        entries.filter(lit(false)))
-      val after = idx2.search(qv, 10, Int.MaxValue, overlay = Some(overlay2))
-        .toSeq
-      assert(after === before)
-      // plain search (no overlay) over the flushed store agrees too
-      assert(idx2.search(qv, 10, Int.MaxValue).toSeq === before)
-      // the destroyed generation cannot be silently reused
-      intercept[Exception] {
-        idx2.search(qv, 10, Int.MaxValue, overlay = Some(overlay1))
-      }
-      idx2.unpersist(); overlay2.destroy()
-      entries.unpersist()
+      val c = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cid", "cv")
+      val idx = ServingIndex.buildStored(spark, dir, c, "ip")
+      assert(idx.listSizes === Map(0L -> 1))
+      // buffer: a fresh insert assigned to the EMPTY centroid 1
+      val buffer = Seq((5L, 200L, false, 1L, Seq(0.0, 1.0)))
+        .toDF("vec_id", "epoch", "deleted", "centroid_id", "vec")
+      val live = Patches.fold(idx, buffer)
+      idx.unpersist()
+      assert(live.listSizes === Map(0L -> 1, 1L -> 1))
+      val local = live.toLocal()
+      val q = Array(0.0f, 1.0f)
+      // nprobe 2: both lists probed, the insert ranks above the stored
+      // row on every path
+      assertEveryPath(live, local, q, 2, 2, ServingFilter.none,
+        Seq((5L, 1.0), (1L, 0.0)), "nprobe=2")
+      // nprobe 1: only the list that was empty is probed — the insert
+      // is its one row
+      assert(live.probe(q, 1) === Seq(1L))
+      assertEveryPath(live, local, q, 2, 1, ServingFilter.none,
+        Seq((5L, 1.0)), "nprobe=1")
+      // both lists are cached, so both local requests served locally
+      // instead of falling through to a probe job
+      assert(local.localServes === 2 && local.fallThroughServes === 0,
+        s"local=${local.localServes} fallThrough=${local.fallThroughServes}")
+      live.unpersist()
     } finally graft.segments.Segments.deleteDir(dir)
   }
 

@@ -838,6 +838,47 @@ class SegmentsSpec extends SparkSpec {
     Segments.deleteDir(base)
   }
 
+  test("catalog stores file_path relative to the store: byte-equal catalogs at two roots, absolute paths on read, old absolute lines still read") {
+    val root = tmpBase()
+    def desc(base: String, id: String) = Segments.SegmentDescriptor(id,
+      s"$base/${Segments.StoreDir}/segment_id=$id", 10L, 1L, 2L, 3L, 4L,
+      0.5, new java.sql.Timestamp(1234567890123L), false, None)
+    def catalogText(base: String): String = {
+      val dir = java.nio.file.Paths.get(s"$base/${Segments.CatalogDir}")
+      val files = java.nio.file.Files.list(dir).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("desc-"))
+        .sortBy(_.getFileName.toString)
+      files.map(f => java.nio.file.Files.readString(f)).mkString
+    }
+    // two stores whose root names differ in length
+    val bases = Seq(s"$root/a", s"$root/a-much-longer-store-name")
+    bases.foreach(b => Segments.appendCatalog(spark, b,
+      Seq(desc(b, "d0"), desc(b, "d1"))))
+    assert(catalogText(bases(0)) === catalogText(bases(1)))
+    assert(!catalogText(bases(0)).contains(root))
+    // readers still see absolute paths, resolved against their own root
+    bases.foreach(b => assert(Segments.catalogDescriptors(spark, b)
+      === Seq(desc(b, "d0"), desc(b, "d1"))))
+    // a checkpoint rewrites the lines in the same relative form
+    Segments.appendCatalog(spark, bases(0), Seq(desc(bases(0), "d2")))
+    Segments.checkpointCatalog(spark, bases(0))
+    assert(!catalogText(bases(0)).contains(root))
+    assert(Segments.catalogDescriptors(spark, bases(0))
+      === Seq("d0", "d1", "d2").map(desc(bases(0), _)))
+    // a line in the earlier absolute form reads as written
+    val old = s"$root/old"
+    val abs = s"/elsewhere/${Segments.StoreDir}/segment_id=x"
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$old/${Segments.CatalogDir}"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+        s"$old/${Segments.CatalogDir}/desc-00000000000000000001-000001.tsv"),
+      s"x\t$abs\t10\t1\t2\t3\t4\t0.5\t1234567890123\tfalse\t\n")
+    assert(Segments.catalogDescriptors(spark, old).map(_.file_path)
+      === Seq(abs))
+    Segments.deleteDir(root)
+  }
+
   test("catalogStats reports tiers") {
     val base = tmpBase()
     val rows = segmentRows

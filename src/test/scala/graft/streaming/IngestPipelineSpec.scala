@@ -197,12 +197,12 @@ class IngestPipelineSpec extends SparkSpec {
 
   test("streamed ingest feeds the serving tier: stored index + in-flight overlay serve the live world (T5 x Q10)") {
     // the full write->serve loop: wave 1 flushed BY THE STREAM, wave 2
-    // still in flight; the serving tier = stored index over the stream's
-    // segments + an overlay over the buffer, through the job path and
-    // the local tier. Both must serve exactly the full-log live world;
-    // after the stream drains wave 2 and the index rebuilds, a PLAIN
-    // search serves the same world and the drained overlay generation
-    // is destroyed.
+    // still in flight in the stream's pre-publish buffer; the serving
+    // tier = stored index over the stream's segments with the buffer's
+    // snapshot folded in by patched, through the job path and the local
+    // tier. Both must serve exactly the full-log live world; after the
+    // stream drains wave 2 and the index rebuilds from the store, the
+    // rebuilt generation serves the same world.
     val src = tmp("graft-serve-src-")
     val base = tmp("graft-serve-base-")
     val ckpt = tmp("graft-serve-ckpt-")
@@ -211,9 +211,13 @@ class IngestPipelineSpec extends SparkSpec {
     rows.filter(col("epoch") < 2000).coalesce(1).write.mode("append")
       .parquet(src)
     IngestPipeline.runOnce(spark, src, base, ckpt)
-    val buffer = rows.filter(col("epoch") >= 2000)
-    val idx = graft.index.ServingIndex.buildStored(spark, base, cents, "ip")
-    val ovDriver = graft.index.ServingOverlay.fromDataFrame(buffer)
+    val buffer = new BufferOverlay()
+    buffer.publishBatch(rows.filter(col("epoch") >= 2000))
+    val stored = graft.index.ServingIndex.buildStored(spark, base, cents, "ip")
+    val idx = stored.patched(buffer.snapshot.values.toSeq.map(e =>
+      (e.vecId, e.epoch, e.deleted, e.centroidId,
+        if (e.vec == null) null else e.vec.toArray)))
+    stored.unpersist()
     // ground truth: LWW over the WHOLE log, live rows only, exact dot
     val liveRows = graft.ingest.MutationLog
       .live(graft.ingest.MutationLog.deterministicLog(emb))
@@ -228,22 +232,20 @@ class IngestPipelineSpec extends SparkSpec {
     val queries = graft.operators.Knn.defaultQueries(emb)
       .collect().take(4)
       .map(r => r.getSeq[Float](1).toArray)
-    // the LOCAL cache tier rides the same lifecycle: built per stored
-    // generation, tiered with the in-flight overlay, rebuilt after the
-    // drain — a stale local tier would serve the pre-flush world
+    // the LOCAL cache tier rides the same lifecycle: built per
+    // generation, rebuilt after the drain — a stale local tier would
+    // serve the pre-flush world
     val local = idx.toLocal()
     queries.foreach { qv =>
       val want = expectTop(qv, 10)
-      assert(idx.search(qv, 10, Int.MaxValue, overlay = Some(ovDriver))
-        .toSeq === want)
-      assert(local.search(qv, 10, Int.MaxValue, overlay = Some(ovDriver))
-        .toSeq === want)
+      assert(idx.search(qv, 10, Int.MaxValue).toSeq === want)
+      assert(local.search(qv, 10, Int.MaxValue).toSeq === want)
     }
     // flush: the stream drains wave 2; rebuild; plain search = same world
     rows.filter(col("epoch") >= 2000).coalesce(1).write.mode("append")
       .parquet(src)
     IngestPipeline.runOnce(spark, src, base, ckpt)
-    ovDriver.destroy(); idx.unpersist()
+    idx.unpersist()
     val idx2 = graft.index.ServingIndex.buildStored(spark, base, cents, "ip")
     val local2 = idx2.toLocal()
     queries.foreach { qv =>
