@@ -458,13 +458,15 @@ object Bench {
         // only inside this pass. ----
         val tB0 = System.nanoTime()
         val coded = graft.index.Pq.codesBinaryColumn(cb, "embedding")
-        Ivf.assignTwoLevelBulk(
-            gen(spark.range(n100).toDF().repartition(cpus * 4)),
-            tl)
-          .select(col("vec_id"), col("centroid_id"), coded.as("codes"))
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(s"$dir100/codes")
+        graft.segments.Segments.writeListTree(
+          Ivf.assignTwoLevelBulk(
+              gen(spark.range(n100).toDF().repartition(cpus * 4)),
+              tl)
+            .select(col("vec_id"), col("centroid_id"), coded.as("codes")),
+          s"$dir100/codes", exchange = true)
+        // the commit marker the torso check above reads
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(s"$dir100/codes/_SUCCESS"))
         val buildSec = (System.nanoTime() - tB0) / 1e9
         // list-size sidecar (the catalog's per-list row counts): lets
         // every later round's local-tier build skip the 10 GB sizes
@@ -1171,20 +1173,19 @@ object Bench {
         num(pctl(storedLat, 99) / math.max(1e-9, storedCalMed), 2)
       // the TREE-WRITE share of a facade warm at THIS geometry — the
       // ~10 GB pqcodes_g<n> write a stamp-matched re-warm skips since
-      // r14: one hive-partitioned rewrite of the codes relation to a
-      // scratch dir (same repartition+partitionBy shape warmPqTier
-      // uses), deleted after. Composed with ivf_100m_dist_build_sec and
-      // ivf_100m_local_build_sec this prices the 100M facade admission
-      // the box cannot host end-to-end (a 100M raw-vector segment store
-      // is ~600 GB); the REAL end-to-end warm is measured through the
-      // actual facade at the 1M geometry (facade_warm_1m_*).
+      // r14: one list-tree rewrite of the codes relation to a scratch
+      // dir (the writer warmPqTier uses), deleted after. Composed with
+      // ivf_100m_dist_build_sec and ivf_100m_local_build_sec this prices
+      // the 100M facade admission the box cannot host end-to-end (a 100M
+      // raw-vector segment store is ~600 GB); the REAL end-to-end warm is
+      // measured through the actual facade at the 1M geometry
+      // (facade_warm_1m_*).
       locally {
         val scratch = s"$dir100/treewrite_scratch"
         try {
           val tW0 = System.nanoTime()
-          codesDf.repartition(col("centroid_id"))
-            .write.mode("overwrite").partitionBy("centroid_id")
-            .parquet(scratch)
+          graft.segments.Segments.writeListTree(codesDf, scratch,
+            exchange = true)
           extras("ivf_100m_tree_write_sec") =
             num((System.nanoTime() - tW0) / 1e9, 1)
         } catch { case e: Throwable =>
@@ -1293,7 +1294,7 @@ object Bench {
         .select("id", "id_hash", "vec_id", "epoch", "deleted",
           "centroid_id", "vec")
       graft.segments.Segments.writeSegment(rows, base, "delta-00000",
-        isStable = false, expectedNdvPerFile = math.max(64L, n / 4096))
+        isStable = false)
       java.nio.file.Files.write(marker, "ok".getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
     }

@@ -6,8 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType,
-  StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType,
+  DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.index.{AdaptiveServingIndex, HnswHotCache, Ivf, ServingIndex}
 import graft.ingest.IngestGuard
@@ -759,9 +759,7 @@ final class Graft private (
       val built =
         try {
           if (!reuse) {
-            codes.repartition(col("centroid_id"))
-              .write.mode("overwrite").partitionBy("centroid_id")
-              .parquet(codesPath)
+            Segments.writeListTree(codes, codesPath, exchange = true)
             // RESTART-DURABLE sidecars (underscore-named, so the
             // parquet reads above never see them): stamp + codebook +
             // list sizes, each temp+rename — [[recoverOnOpen]] ADOPTS
@@ -921,8 +919,8 @@ final class Graft private (
   private val TreeCodebookFile = "_graft_codebook"
   private val TreeSizesFile = "_graft_sizes"
 
-  private def writeSidecar(dir: String, name: String)(
-      w: java.io.DataOutputStream => Unit): Unit = {
+  private def writeSidecar(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      name: String)(w: java.io.DataOutputStream => Unit): Unit = {
     // temp+rename, the engine's publish discipline: a crash mid-write
     // leaves only a .tmp the adoption scan never reads
     val tmp = new HPath(dir, s".tmp.$name")
@@ -940,20 +938,22 @@ final class Graft private (
         "the tree will not be adopted at the next open")
   }
 
+  // through the tree writer's own filesystem: no forked `chmod`
   private def writeTreeSidecars(dir: String, stamp: String,
-      cb: graft.index.Pq.Codebook, sizes: Map[Long, Long]): Unit = {
-    writeSidecar(dir, TreeStampFile)(o =>
-      o.write(stamp.getBytes(StandardCharsets.UTF_8)))
-    writeSidecar(dir, TreeCodebookFile)(o =>
-      graft.index.Pq.writeCodebook(o, cb))
-    writeSidecar(dir, TreeSizesFile) { o =>
-      val sb = new StringBuilder
-      sizes.toSeq.sortBy(_._1).foreach { case (cid, n) =>
-        sb.append(cid).append('\t').append(n).append('\n')
+      cb: graft.index.Pq.Codebook, sizes: Map[Long, Long]): Unit =
+    Segments.withListFs(spark.sessionState.newHadoopConf()) { fs =>
+      writeSidecar(fs, dir, TreeStampFile)(o =>
+        o.write(stamp.getBytes(StandardCharsets.UTF_8)))
+      writeSidecar(fs, dir, TreeCodebookFile)(o =>
+        graft.index.Pq.writeCodebook(o, cb))
+      writeSidecar(fs, dir, TreeSizesFile) { o =>
+        val sb = new StringBuilder
+        sizes.toSeq.sortBy(_._1).foreach { case (cid, n) =>
+          sb.append(cid).append('\t').append(n).append('\n')
+        }
+        o.write(sb.toString.getBytes(StandardCharsets.UTF_8))
       }
-      o.write(sb.toString.getBytes(StandardCharsets.UTF_8))
     }
-  }
 
   private def readSidecarBytes(dir: String, name: String): Option[Array[Byte]] = {
     val p = new HPath(dir, name)
@@ -1457,9 +1457,7 @@ final class Graft private (
         df => Ivf.assignBulkGemm(df, nextCents, vecCol = "vec")
           .withColumn("centroid_id",
             coalesce(col("centroid_id"), lit(-1L))),
-        rebuildId,
-        // the relayout writes the n live vectors over the new lists
-        expectedNdvPerFile = Segments.ndvPerList(n, nlistFor(n)))
+        rebuildId)
       catch {
         case e: Throwable =>
           fs.delete(new HPath(nextPath), true)
@@ -1547,24 +1545,20 @@ final class Graft private (
     val tail = Wal.replayBinaryRotated(walDir)
       .filter(_._1 > flushedFrontier)
     if (tail.nonEmpty) {
-      import spark.implicits._
-      val recs = tail.map { case (_, payload) =>
+      val rows = tail.map { case (_, payload) =>
         val r = WalRecordFb.decode(payload)
-        (r.id, r.idHash, r.idHash, r.epoch, r.op == 1.toByte,
+        Row(r.id, r.idHash, r.idHash, r.epoch, r.op == 1.toByte,
           if (r.op == 1.toByte) -1L else r.centroidId.toLong,
           if (r.vector.isEmpty) null
           else r.vector.map(_.toDouble).toSeq)
       }
-      val rows = recs.toDF("id", "id_hash", "vec_id", "epoch", "deleted",
-        "centroid_id", "vec")
       val maxEpoch = tail.map(_._1).max
-      // deterministic recovery segment id → a crash DURING recovery
-      // replays into the same segment idempotently
-      Segments.writeSegment(
-        graft.operators.Lww.latestBy(rows, "id_hash", "epoch"),
-        baseDir, s"recover-$maxEpoch", isStable = false,
-        expectedNdvPerFile = Segments.ndvPerList(recs.length.toLong,
-          recs.map(_._6).distinct.length))
+      // the tail is already on the driver: the driver flush applies the
+      // LWW rule and writes it with no Spark job. A deterministic
+      // recovery segment id → a crash DURING recovery replays into the
+      // same segment idempotently
+      Segments.flushRows(spark, baseDir, s"recover-$maxEpoch",
+        Graft.RecoveredRowSchema, rows, maxRowsPerSegment = Long.MaxValue)
       advanceFrontier(maxEpoch)
     }
     // epoch/batch counters resume past everything ever seen
@@ -1733,6 +1727,12 @@ object Graft {
     */
   private final case class BatchRow(id: String, idHash: Long, epoch: Long,
       deleted: Boolean, centroidId: Option[Long], vec: Array[Double])
+
+  /** WAL recovery's rows: tombstones at list -1 with a null `vec`. */
+  private val RecoveredRowSchema = StructType(StructField("id", StringType) +:
+    Seq("id_hash", "vec_id", "epoch", "deleted", "centroid_id").map(c =>
+      StructField(c, if (c == "deleted") BooleanType else LongType, false)) :+
+    StructField("vec", ArrayType(DoubleType, containsNull = false)))
 
   /** One serving generation — the raw-door index under its nprobe
     * controller, plus the HNSW hot cache when enabled — and the

@@ -354,8 +354,9 @@ object SparkEntry {
   /** Shared centroid-partitioned ANN store per sfDir for the declarative
     * planner-rule entries ([[graft.plans.AnnTopKRewrite]]): the embeddings
     * table assigned to the deterministic centroids (the exact `asg` CTE of
-    * the IVF oracle) and written `partitionBy(centroid_id)` — the physical
-    * layout the rewrite prunes against.
+    * the IVF oracle) and written as one file per `centroid_id` list
+    * (`Segments.writeListTree`) — the physical layout the rewrite
+    * prunes against.
     */
   private object AnnStore {
     final case class St(path: String, centsPath: String, nlist: Int)
@@ -366,10 +367,9 @@ object SparkEntry {
       val nlist = cents.count().toInt
       val base = java.nio.file.Files
         .createTempDirectory("graft-annstore-").toString
-      Ivf.assign(e, cents)
-        .select("vec_id", "embedding", "label", "centroid_id")
-        .repartition(col("centroid_id")) // one writer per inverted list
-        .write.partitionBy("centroid_id").parquet(s"$base/store")
+      graft.segments.Segments.writeListTree(Ivf.assign(e, cents)
+        .select("vec_id", "embedding", "label", "centroid_id"),
+        s"$base/store", exchange = true)
       cents.write.parquet(s"$base/cents")
       St(s"$base/store", s"$base/cents", nlist)
     })

@@ -38,9 +38,10 @@ object ExtensionsAnnCheck {
       (i.toLong, Array.tabulate(dim)(j =>
         if (j == g % dim) 10.0 * (g + 1) else 0.0))
     }.toDF("cid", "cv")
-    graft.index.Ivf.assign(rows, cents)
-      .select("vec_id", "embedding", "centroid_id")
-      .write.partitionBy("centroid_id").parquet(s"$base/store")
+    graft.segments.Segments.writeListTree(
+      graft.index.Ivf.assign(rows, cents)
+        .select("vec_id", "embedding", "centroid_id"),
+      s"$base/store", exchange = true)
     cents.write.parquet(s"$base/cents")
 
     graft.plans.GraftAnn.configure(spark, s"$base/store", s"$base/cents",

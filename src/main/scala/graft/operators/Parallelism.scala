@@ -67,34 +67,24 @@ object Parallelism {
     if (bytes >= 0 && bytes < split) df.localCheckpoint(true) else df
   }
 
-  /** Hash-repartition by a partitioned write's key with an EXPLICIT
+  /** Hash-repartition by a list-tree write's key with an EXPLICIT
     * width, pinning the write stage's task count. `repartition(key)`
     * without a count is AQE-coalescible: a segment whose bytes sit under
-    * the advisory partition size collapses to ONE write task that opens,
-    * writes and commits every `partitionBy` directory's file
-    * SEQUENTIALLY (~13-15 ms of fixed writer cost per file on this FS —
-    * the measured "write floor" no writer-level knob could move, r16
-    * `ProfWritePar`: med 1.17 s → 0.52 s at width 32). An explicit count
-    * is never coalesced (AQE leaves user-specified numPartitions alone),
-    * so the per-file fixed cost spreads across the executors. Hash
+    * the advisory partition size collapses to ONE write task that writes
+    * every list's file SEQUENTIALLY. An explicit count is never
+    * coalesced (AQE leaves user-specified numPartitions alone), so the
+    * per-file fixed cost spreads across the executors. Hash
     * partitioning on the key keeps the one-file-per-list invariant at
     * ANY width — a given key lives in exactly one task — so file count
     * and contents are unchanged; width beyond the number of distinct
     * keys just yields empty tasks (no file opened, ~free). The width is
-    * the session's default parallelism — the deployment's actual
-    * executor width, not a local-mode constant — overridable via
-    * `spark.graft.write.exchange.width` for clusters that want write
-    * stages wider than core count (very large segments stream through
-    * per-list writers either way, so width ≈ cores is the natural
-    * production setting too).
+    * the session's default parallelism: the deployment's executor
+    * width, not a local-mode constant.
     */
-  def pinWriteWidth(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val spark = df.sparkSession
-    val w = spark.conf.getOption("spark.graft.write.exchange.width")
-      .map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    df.repartition(math.max(1, w), key)
-  }
+  def pinWriteWidth(df: DataFrame,
+      key: org.apache.spark.sql.Column): DataFrame =
+    df.repartition(
+      math.max(1, df.sparkSession.sparkContext.defaultParallelism), key)
 
   /** Map `f` over requests with a bounded pool (default: enough threads
     * to hide job-dispatch latency, capped at 16), preserving request

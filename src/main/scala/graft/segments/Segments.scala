@@ -77,7 +77,7 @@ object Segments {
     * replaced_by joins. With inference off every partition value
     * arrives as its literal string; `centroid_id` (written from a
     * BIGINT data column) is cast back to long explicitly — lossless,
-    * since partitionBy rendered it from an integer value.
+    * since the list writer rendered it from an integer value.
     */
   // readInferenceOff toggles SESSION-GLOBAL confs; concurrent serve
   // paths (stored routes fan requests through a thread pool since the
@@ -236,7 +236,7 @@ object Segments {
   // at nlist=4096 the per-request listing sweep dominated the facade's
   // stored-door phase 2 (measured ~11.6 s/request over a 3960-file 1M
   // store). Rewrites and DELETES invalidate through the primitives
-  // themselves ([[writeSegment]]'s idempotent recovery replay,
+  // themselves (the segment writers' idempotent replays,
   // [[deleteDir]]) — the invariant is enforced where paths change, not
   // by call-site discipline. Keyed by `sessionUUID`, not the session
   // object (a stopped session's entries age out of the LRU instead of
@@ -265,7 +265,7 @@ object Segments {
 
   /** Drop cached listings (and cached per-file blooms) under `path` —
     * called by the primitives that REWRITE or DELETE a previously
-    * published path ([[writeSegment]]'s idempotent recovery replay,
+    * published path (the segment writers' idempotent replays,
     * [[deleteDir]]); append-shaped catalog changes never need it
     * (a new segment changes the requested path set, hence the key).
     */
@@ -407,7 +407,7 @@ object Segments {
   //
   // SOUNDNESS (the listing cache's argument, enforced by the same
   // primitives): files are immutable once published; the one same-path
-  // rewrite ([[writeSegment]]'s idempotent recovery replay) and every
+  // rewrite (a segment writer's idempotent replay) and every
   // delete ([[deleteDir]]) invalidate through [[invalidateListings]].
   // A bloom can only SKIP a file it proves hashless — false positives
   // cost a wasted scan, false negatives are impossible — and a file
@@ -702,127 +702,49 @@ object Segments {
   }
 
   /** W4: write one immutable segment from rows carrying
-    * (id_hash, epoch, deleted, centroid_id, ...) and append its descriptor.
-    * Returns the descriptor. Bloom filter on id_hash enables point-lookup
-    * row-group skipping (Q5).
-    *
-    * `expectedNdvPerFile` sizes the per-file bloom bitset. Parquet
-    * allocates ~1.2 bytes/ndv whether rows arrive or not, and the
-    * partitionBy(centroid_id) layout splits a segment across nlist files —
-    * so the honest hint is rows-per-inverted-list (reference: 2M vectors /
-    * 1024 lists ≈ 2k rows/file), NOT the segment total. Oversizing it
-    * 1000× is pure write amplification (measured: it pushed WA from ~1.8
-    * to 2.6 at bench scale; a 2000-row, 32-list write is 5.28 MB at the
-    * 100 000 default and 1.09 MB at 63). Callers that know their input
-    * size pass [[ndvPerList]] of it: compaction (its input descriptors),
-    * the layout rebuild (the live row count and the new list count) and
-    * the WAL recovery segment (the tail's rows and lists). The default
-    * stays for writers whose row count is known only after the write.
+    * (id_hash, epoch, deleted, centroid_id, ...) through the one list
+    * writer ([[writeListTree]]; with `repartitionForWrite`, after the
+    * keyed exchange, so the segment holds one file per list) and append
+    * its descriptor, merged from the written files' stats
+    * ([[describe]]). Returns the descriptor. The stream flush's
+    * micro-batch skips the exchange; its files are named by task, so no
+    * name collides. `appendDesc = false` lets compaction and rebuild
+    * publish the new segment and retire its inputs in one atomic
+    * catalog append.
     */
   def writeSegment(rowsIn: DataFrame, baseDir: String, segmentId: String,
-      isStable: Boolean, expectedNdvPerFile: Long = DefaultNdvPerFile,
-      appendDesc: Boolean = true,
+      isStable: Boolean, appendDesc: Boolean = true,
       repartitionForWrite: Boolean = true): SegmentDescriptor = {
-    // provenance (QueryResult.segment_id, types.h:81) is carried by the
-    // directory itself: segments live at `store/segment_id=S/` so the
-    // whole store is ONE hive tree — N live segments load as ONE
-    // multi-path scan (basePath=store) with partition pruning on both
-    // segment_id and centroid_id, instead of an N-way union whose
-    // planning cost grows with the catalog (the plan-size analogue of
-    // the reference's max_segments_per_leaf bound, config.h:56)
+    // provenance (QueryResult.segment_id, types.h:81) is the directory:
+    // the whole store is ONE hive tree, read as one multi-path scan
     val rows = rowsIn.drop("segment_id")
-    val spark = rows.sparkSession
-    val path = s"$baseDir/$StoreDir/segment_id=$segmentId"
-    // descriptor stats ride along with the write action itself (one pass)
-    val obs = new org.apache.spark.sql.Observation(s"seg-$segmentId")
-    // one writer per inverted list — avoids the tasks×centroids small-file
-    // explosion. A latency-bound
-    // caller (the streaming micro-batch flush) passes
-    // repartitionForWrite=false: its input is one AQE-coalesced
-    // aggregate output, so the extra exchange is a whole sequential
-    // query stage bought for nothing — measured ~1/3 of the 100 ms-
-    // trigger freshness latency.
-    val observed = rows.observe(obs,
-        count(lit(1)).as("n"),
-        min(col("id_hash")).as("minh"), max(col("id_hash")).as("maxh"),
-        min(col("epoch")).as("mine"), max(col("epoch")).as("maxe"),
-        avg(col("deleted").cast("double")).as("tr"))
-    // the repartition keeps one writer per inverted list (no tasks×lists
-    // small-file explosion) — with an EXPLICIT width so the write stage
-    // cannot AQE-coalesce to one task that writes all nlist files
-    // sequentially (see Parallelism.pinWriteWidth: the measured ~0.7 s
-    // per-segment "write floor" was exactly that serialization; pinning
-    // the width halves the write wall, incl. for one-partition inputs,
-    // which previously skipped the exchange — r16 ProfWritePar: onePart
-    // noshuffle 0.98 s vs onePart+pinned 0.53 s).
-    (if (repartitionForWrite)
-       Parallelism.pinWriteWidth(observed, col("centroid_id"))
-     else observed).write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("centroid_id")
-      .option("parquet.bloom.filter.enabled#id_hash", "true")
-      .option("parquet.bloom.filter.expected.ndv#id_hash",
-        expectedNdvPerFile.toString)
-      // commit algorithm v2: task commit moves each centroid-dir file
-      // into place directly instead of a second job-commit rename pass.
-      // v1's job-level atomicity buys nothing here — the segment is
-      // invisible until its DESCRIPTOR is appended (the catalog is the
-      // publish point; a torn data dir without one is never read), and
-      // per-list writes mean O(nlist) renames per segment that v2 halves
-      // (guide §6: commit cost scales with file count)
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(path)
+    val path = segmentPath(baseDir, segmentId)
+    val files = writeListTree(rows, path, repartitionForWrite)
     recordSegmentWrite(path, rows.schema)
-    val m = obs.get
-    def longOr(k: String, d: Long): Long =
-      Option(m(k)).map(_.asInstanceOf[Long]).getOrElse(d)
-    val desc = SegmentDescriptor(
-      segmentId, path,
-      longOr("n", 0L),
-      longOr("minh", 0L), longOr("maxh", 0L),
-      longOr("mine", 0L), longOr("maxe", 0L),
-      Option(m("tr")).map(_.asInstanceOf[Double]).getOrElse(0.0),
-      new java.sql.Timestamp(System.currentTimeMillis()),
-      isStable, None)
-    // appendDesc=false lets compaction/rebuild publish the new segment
-    // and retire its inputs in ONE atomic catalog append — a crash can
-    // then never leave both generations active
-    if (appendDesc) appendCatalog(spark, baseDir, Seq(desc))
+    val desc = describe(segmentId, path, isStable, files)
+    if (appendDesc) appendCatalog(rows.sparkSession, baseDir, Seq(desc))
     desc
   }
 
-  /** [[writeSegment]]'s bloom hint when the caller does not know its
-    * rows per list.
-    */
-  val DefaultNdvPerFile = 100000L
+  private def segmentPath(baseDir: String, segmentId: String): String =
+    s"$baseDir/$StoreDir/segment_id=$segmentId"
 
-  /** The per-file id bloom hint for `rows` rows spread over `lists`
-    * inverted lists: twice the mean list size, so a list up to twice
-    * the mean keeps the configured fpp.
-    */
-  def ndvPerList(rows: Long, lists: Int): Long =
-    math.max(1L, 2L * ((rows + lists - 1) / math.max(1, lists)))
-
-  /** Post-write bookkeeping every segment writer shares: a write that
-    * REPLACES an existing segment path (an idempotent replay of a flush
-    * or of the recovery segment) must not leave stale cached listings
-    * or blooms over the old files, and the written data schema
-    * (all columns minus the partition key, in written order) is recorded
-    * so later reads skip footer inference.
+  /** After a segment write: a REPLACED path (an idempotent replay)
+    * drops its cached listings and blooms, and the written data schema
+    * is recorded so later reads skip footer inference.
     */
   private def recordSegmentWrite(path: String,
-      rowsSchema: org.apache.spark.sql.types.StructType): Unit = {
+      schema: org.apache.spark.sql.types.StructType): Unit = {
     invalidateListings(path)
-    memoWrittenSchema(path,
-      org.apache.spark.sql.types.StructType(
-        rowsSchema.filterNot(_.name == "centroid_id")),
+    memoWrittenSchema(path, ListLayout(schema).dataSchema,
       Seq("centroid_id"))
   }
 
   /** W4 for a batch already on the driver: the delta flush of
-    * `IngestPipeline.flushBatch` without a Spark plan, for callers that
-    * hold an RPC-bounded batch (the facade's upsert). `rows` carry
-    * `schema` (at least `id_hash`, `epoch`, `deleted`, `centroid_id`).
+    * `IngestPipeline.flushBatch` without a Spark job, for callers that
+    * hold a bounded batch (the facade's upsert, WAL recovery). `rows`
+    * carry `schema` (at least `id_hash`, `epoch`, `deleted`,
+    * `centroid_id`).
     *
     * Same contract as `flushBatch`:
     *  - within-batch LWW exactly as [[graft.operators.Lww.latestBy]]: a
@@ -834,27 +756,15 @@ object Segments {
     *    `floorMod(id_hash, parts)` into `<segmentId>-PP` segments;
     *  - nothing is visible until ONE catalog append publishes them all.
     *
-    * Files land at `segment_id=S/centroid_id=C/part-…parquet`, one per
-    * list, written concurrently on a bounded pool the call owns
-    * ([[DriverFileThreads]] writers) by Spark's own `ParquetWriteSupport` under the
-    * session's parquet write settings, so footers, Spark schema metadata
-    * and list encoding are those of [[writeSegment]]. Each file's
-    * `id_hash` bloom is sized to that file's row count (the fpp is
-    * parquet's default, as in [[writeSegment]]). Files are created
-    * through a `LocalFileSystem` this call owns, whose permission
-    * setting is in-process ([[InProcessChmodFs]]): the stock one forks
-    * `chmod` for every file, checksum file and directory it creates
-    * when no native Hadoop library is loaded. Bytes still count in
-    * Hadoop's `file` statistics and `.crc` files are kept. Local stores
-    * only. Returns the published descriptors (empty when no row
-    * survives).
+    * Lists are written by [[writeSegment]]'s per-list writer (file
+    * index 0) on a pool of [[DriverFileThreads]] writers, descriptors
+    * merged by the same [[describe]]. Returns the published descriptors
+    * (empty when no row survives).
     */
   private[graft] def flushRows(spark: SparkSession, baseDir: String,
       segmentId: String, schema: org.apache.spark.sql.types.StructType,
       rows: Seq[org.apache.spark.sql.Row],
       maxRowsPerSegment: Long): Seq[SegmentDescriptor] = {
-    require(hfs(spark, baseDir).getScheme == "file",
-      s"flushRows writes local stores only: $baseDir")
     val hi = schema.fieldIndex("id_hash")
     val ei = schema.fieldIndex("epoch")
     val keyed = rows.filter(r => !r.isNullAt(hi) && !r.isNullAt(ei))
@@ -866,7 +776,7 @@ object Segments {
     }
     val latest = keyed.filter(r => r.getLong(ei) == maxEpoch(r.getLong(hi)))
     if (latest.isEmpty) {
-      deleteDir(plainPath(s"$baseDir/$StoreDir/segment_id=$segmentId"))
+      deleteDir(plainPath(segmentPath(baseDir, segmentId)))
       return Seq.empty
     }
     val n = latest.length.toLong
@@ -877,85 +787,196 @@ object Segments {
         (0L until parts).map(p => f"$segmentId%s-$p%02d" ->
           latest.filter(r => java.lang.Math.floorMod(r.getLong(hi), parts) == p))
       }
+    val (layout, conf) = listWriter(spark, schema)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
     val descs = slices.map { case (id, rs) =>
-      writeRowsSegment(spark, baseDir, id, schema, rs)
+      val path = segmentPath(baseDir, id)
+      resetTree(conf, path)
+      val lists = rs.map(r => toRow(r).asInstanceOf[InternalRow])
+        .groupBy(layout.key).toSeq
+      val files = withListFs(conf) { fs =>
+        Parallelism.parRequests(lists, DriverFileThreads) { case (cid, list) =>
+          writeListFile(fs, conf, layout, path, 0, cid, list)
+        }
+      }
+      recordSegmentWrite(path, schema)
+      describe(id, path, isStable = false, files)
     }
     appendCatalog(spark, baseDir, descs)
     descs
   }
 
-  /** One unpublished segment from driver rows (see [[flushRows]]). */
-  private def writeRowsSegment(spark: SparkSession, baseDir: String,
-      segmentId: String, schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row]): SegmentDescriptor = {
+  /** The one writer of list-partitioned Parquet trees — segments and the
+    * PQ codes tree: `path/centroid_id=C/part-NNNNN<codec>.parquet`.
+    * `path` is deleted and re-created; then, after the keyed exchange
+    * when `exchange`, each Spark task sorts its rows by `centroid_id`
+    * and writes its lists one at a time ([[writeListFile]], named by the
+    * task's partition index, so a retried task overwrites its own
+    * earlier attempt) through a filesystem it owns ([[withListFs]], the
+    * write conf shipped as one broadcast). Local stores only. Returns
+    * the written files' stats.
+    */
+  private[graft] def writeListTree(rows: DataFrame, path: String,
+      exchange: Boolean): Seq[FileStats] = {
+    val spark = rows.sparkSession
+    val (layout, conf) = listWriter(spark, rows.schema)
+    resetTree(conf, path)
+    val sorted = (if (exchange) Parallelism.pinWriteWidth(rows,
+      col("centroid_id")) else rows).sortWithinPartitions("centroid_id")
+    val shipped = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(conf))
+    try spark.sparkContext.runJob(sorted.queryExecution.toRdd,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+          val c = shipped.value.value
+          withListFs(c) { fs =>
+            listRuns(it, layout).map { case (cid, list) =>
+              writeListFile(fs, c, layout, path, ctx.partitionId(), cid, list)
+            }.toVector
+          }
+        }).toSeq.flatten
+    finally shipped.destroy()
+  }
+
+  /** One written file's rows, (min, max) of its non-null `id_hash` and
+    * `epoch`, and its non-null `deleted` flags: how many, how many set.
+    */
+  private[graft] final case class FileStats(rows: Long,
+      hashes: Option[(Long, Long)], epochs: Option[(Long, Long)],
+      flagged: Long, deleted: Long)
+
+  /** A segment's descriptor from its files' stats (0 where no value;
+    * the tombstone ratio is the mean of the non-null `deleted` flags).
+    */
+  private def describe(segmentId: String, path: String, isStable: Boolean,
+      files: Seq[FileStats]): SegmentDescriptor = {
+    def range(of: FileStats => Option[(Long, Long)]) = {
+      val rs = files.flatMap(of)
+      if (rs.isEmpty) (0L, 0L) else (rs.map(_._1).min, rs.map(_._2).max)
+    }
+    val (minH, maxH) = range(_.hashes)
+    val (minE, maxE) = range(_.epochs)
+    val flagged = files.map(_.flagged).sum
+    SegmentDescriptor(segmentId, path, files.map(_.rows).sum,
+      minH, maxH, minE, maxE,
+      if (flagged == 0L) 0.0 else files.map(_.deleted).sum.toDouble / flagged,
+      new java.sql.Timestamp(System.currentTimeMillis()), isStable, None)
+  }
+
+  private type InternalRow = org.apache.spark.sql.catalyst.InternalRow
+
+  /** Where a list tree's columns sit in its input rows: the `centroid_id`
+    * key (LONG or INT), the data columns written to the files (all but
+    * the key and `segment_id`, in input order) and the `id_hash`,
+    * `epoch` and `deleted` columns the stats read (-1 when absent).
+    */
+  private final case class ListLayout(
+      schema: org.apache.spark.sql.types.StructType) {
+    private def at(name: String) = schema.fieldNames.indexOf(name)
+    private val keyAt = at("centroid_id")
+    private val intKey = keyAt >= 0 &&
+      schema(keyAt).dataType == org.apache.spark.sql.types.IntegerType
+    val hashAt: Int = at("id_hash")
+    val epochAt: Int = at("epoch")
+    val deletedAt: Int = at("deleted")
+    private val dataAt = schema.fields.indices.filterNot(i =>
+      i == keyAt || schema(i).name == "segment_id").toArray
+    def dataSchema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType(dataAt.map(schema(_)).toSeq)
+    def key(r: InternalRow): Long = {
+      require(!r.isNullAt(keyAt), "null centroid_id in a list-tree write")
+      if (intKey) r.getInt(keyAt).toLong else r.getLong(keyAt)
+    }
+    def data(r: InternalRow): InternalRow =
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        dataAt.map(i => r.get(i, schema(i).dataType)))
+  }
+
+  /** `schema`'s layout and the Hadoop conf its list files are written
+    * under, filled exactly as a Spark parquet write fills it (schema,
+    * legacy format, timestamp type, field ids, rebase modes, codec), so
+    * footers and Spark schema metadata are a Spark write's.
+    */
+  private def listWriter(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType)
+      : (ListLayout, org.apache.hadoop.conf.Configuration) = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetOptions, ParquetUtils}
-    val path = s"$baseDir/$StoreDir/segment_id=$segmentId"
-    deleteDir(plainPath(path))
-    // writeSegment's input drops any segment_id column, then partitions
-    // by centroid_id: the data columns are the rest, in input order
-    val dataIdx = schema.fields.indices.filterNot(i =>
-      schema(i).name == "segment_id" || schema(i).name == "centroid_id")
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      dataIdx.map(schema(_)))
-    val hi = schema.fieldIndex("id_hash")
-    val ei = schema.fieldIndex("epoch")
-    val di = schema.fieldIndex("deleted")
-    val ci = schema.fieldIndex("centroid_id")
-    // the session's parquet write settings, set exactly as a Spark
-    // parquet write sets them (schema, legacy format, timestamp type,
-    // field ids, rebase modes, compression)
     val sqlConf = spark.sessionState.conf
-    val opts = new ParquetOptions(Map.empty[String, String], sqlConf)
+    val layout = ListLayout(schema)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
-    ParquetUtils.prepareWrite(sqlConf, job, dataSchema, opts)
-    val conf = job.getConfiguration
+    ParquetUtils.prepareWrite(sqlConf, job, layout.dataSchema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    (layout, job.getConfiguration)
+  }
+
+  /** Delete `path` and create it empty, as every list-tree write starts. */
+  private def resetTree(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Unit = {
+    require(new HPath(path).getFileSystem(conf).getScheme == "file",
+      s"list trees are written to local stores only: $path")
+    deleteDir(plainPath(path))
+    withListFs(conf)(_.mkdirs(new HPath(path)))
+  }
+
+  /** Rows sorted by `centroid_id`, one list at a time: each list's key
+    * and its rows, copied (the input may reuse its row objects).
+    */
+  private def listRuns(rows: Iterator[InternalRow],
+      layout: ListLayout): Iterator[(Long, Vector[InternalRow])] = {
+    val it = rows.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+      val cid = layout.key(it.head)
+      val list = Vector.newBuilder[InternalRow]
+      while (it.hasNext && layout.key(it.head) == cid)
+        list += it.next().copy()
+      (cid, list.result())
+    }
+  }
+
+  /** Write one list's rows as `dir/centroid_id=C/part-NNNNN<codec>.parquet`
+    * (`part` is the writing task's partition index, 0 on the driver),
+    * replacing any file of that name, and return its stats. The
+    * `id_hash` bloom is on exactly when the rows carry `id_hash`, sized
+    * to this file's row count at parquet's default fpp.
+    */
+  private def writeListFile(fs: FileSystem,
+      conf: org.apache.hadoop.conf.Configuration, layout: ListLayout,
+      dir: String, part: Int, cid: Long,
+      rows: Seq[InternalRow]): FileStats = {
+    import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat}
     val codec = org.apache.parquet.hadoop.metadata.CompressionCodecName
-      .fromConf(opts.compressionCodecClassName)
-    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(dataSchema)
+      .fromConf(conf.get(ParquetOutputFormat.COMPRESSION))
+    val file = new HPath(
+      f"$dir/centroid_id=$cid/part-$part%05d${codec.getExtension}.parquet")
+    val builder = new InternalRowParquetBuilder(new FsOutputFile(fs, file))
+      .withConf(conf)
+      .withCompressionCodec(codec)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+    val w = (if (layout.hashAt < 0) builder
+      else builder.withBloomFilterEnabled("id_hash", true)
+        .withBloomFilterNDV("id_hash", rows.length.toLong)).build()
+    try rows.foreach(r => w.write(layout.data(r)))
+    finally w.close()
+    def present(i: Int) = if (i < 0) Nil else rows.filterNot(_.isNullAt(i))
+    def range(i: Int) = Option(present(i).map(_.getLong(i)))
+      .filter(_.nonEmpty).map(vs => (vs.min, vs.max))
+    val flags = present(layout.deletedAt).map(_.getBoolean(layout.deletedAt))
+    FileStats(rows.length.toLong, range(layout.hashAt),
+      range(layout.epochAt), flags.length.toLong, flags.count(identity).toLong)
+  }
+
+  /** Run `f` with a `LocalFileSystem` over `conf` that it owns, whose
+    * permission setting is in-process ([[InProcessChmodFs]]). Bytes
+    * still count in Hadoop's `file` statistics and `.crc` files are
+    * kept.
+    */
+  private[graft] def withListFs[A](
+      conf: org.apache.hadoop.conf.Configuration)(f: FileSystem => A): A = {
     val fs = new org.apache.hadoop.fs.LocalFileSystem(new InProcessChmodFs)
     fs.initialize(java.net.URI.create("file:///"), conf)
-    try {
-      fs.mkdirs(new HPath(path))
-      val lists = rows.groupBy { r =>
-        require(!r.isNullAt(ci), s"flushRows: null centroid_id in $segmentId")
-        r.getLong(ci)
-      }.toSeq
-      // one file per list, written concurrently on a pool this call owns
-      Parallelism.parRequests(lists, DriverFileThreads) { case (cid, rs) =>
-        val file = new HPath(s"$path/centroid_id=$cid/part-00000-" +
-          s"${java.util.UUID.randomUUID()}.c000${codec.getExtension}.parquet")
-        val w = new InternalRowParquetBuilder(new FsOutputFile(fs, file))
-          .withConf(conf)
-          .withCompressionCodec(codec)
-          .withBloomFilterEnabled("id_hash", true)
-          .withBloomFilterNDV("id_hash", rs.length.toLong)
-          .build()
-        try rs.foreach(r => w.write(toCatalyst(
-            org.apache.spark.sql.Row.fromSeq(dataIdx.map(r.get)))
-          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
-        finally w.close()
-      }
-    } finally fs.close()
-    recordSegmentWrite(path, dataSchema)
-    // writeSegment's observed stats: count, min/max id_hash and epoch
-    // (never null past the LWW), avg(deleted) over non-null values, and
-    // 0 where an empty input leaves an aggregate null
-    def range(i: Int) =
-      if (rows.isEmpty) (0L, 0L)
-      else (rows.iterator.map(_.getLong(i)).min,
-        rows.iterator.map(_.getLong(i)).max)
-    val (minH, maxH) = range(hi)
-    val (minE, maxE) = range(ei)
-    val dels = rows.filter(r => !r.isNullAt(di))
-    SegmentDescriptor(segmentId, path, rows.length.toLong,
-      minH, maxH, minE, maxE,
-      if (dels.isEmpty) 0.0
-      else dels.count(_.getBoolean(di)).toDouble / dels.length,
-      new java.sql.Timestamp(System.currentTimeMillis()),
-      is_stable = false, replaced_by = None)
+    try f(fs) finally fs.close()
   }
 
   /** A parquet-mr writer of Spark rows through Spark's own write support
@@ -964,8 +985,7 @@ object Segments {
   private final class InternalRowParquetBuilder(
       out: org.apache.parquet.io.OutputFile)
       extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-        org.apache.spark.sql.catalyst.InternalRow,
-        InternalRowParquetBuilder](out) {
+        InternalRow, InternalRowParquetBuilder](out) {
     override protected def self(): InternalRowParquetBuilder = this
     override protected def getWriteSupport(
         conf: org.apache.hadoop.conf.Configuration) =
@@ -1206,17 +1226,17 @@ object Segments {
     // does one posting read + one semi-join regardless of how many
     // segments take the sparse branch, instead of one join subtree per
     // segment (the r6 plan-growth residue)
-    // explicit-width exchange for the same reason as writeSegment: a
-    // bench-scale posting set AQE-coalesces to one task writing every
-    // tag dir's file sequentially (Parallelism.pinWriteWidth)
+    // explicit-width exchange: a bench-scale posting set AQE-coalesces
+    // to one task writing every tag dir's file sequentially
+    // (Parallelism.pinWriteWidth)
     val proj =
       rows.select(idCols.map(col) :+ explode(col("tags")).as("tag"): _*)
     Parallelism.pinWriteWidth(proj, col("tag"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("tag")
-      // commit v2 — same argument as writeSegment: per-tag dirs mean
-      // O(tags) renames, and the index is read only after this call
-      // returns (no mid-write reader to protect)
+      // commit v2: task commit moves each tag dir's file into place
+      // directly (per-tag dirs mean O(tags) renames), and the index is
+      // read only after this call returns (no mid-write reader to protect)
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .parquet(s"$baseDir/$TagIndexDir/segment_id=$segmentId")
     memoWrittenSchema(s"$baseDir/$TagIndexDir/segment_id=$segmentId",
@@ -1623,8 +1643,9 @@ object Segments {
   /** W11/W12: compaction — merge all delta segments, resolve
     * last-writer-wins per id_hash (epochs are unique), purge tombstones,
     * write one stable segment, and mark the inputs replaced. The merge is
-    * one hash-aggregate on id_hash (map-side combine) + one partitioned
-    * write — no sort, no window.
+    * one hash-aggregate on id_hash (map-side combine), then
+    * [[writeSegment]]'s keyed exchange and list writer: one file per
+    * list, each task sorting only its own rows by list — no window.
     */
   def compact(spark: SparkSession, baseDir: String,
       stableSegmentId: String,
@@ -1733,17 +1754,8 @@ object Segments {
           }
         live.unionByName(kept)
       }
-    // bloom hint from the inputs: the output holds at most their rows,
-    // over at most the lists their files sit in (a driver-side listing
-    // the read above already made)
-    val inputLists = deltas.inputFiles.iterator
-      .map(f => new HPath(f).getParent.getName)
-      .filter(_.startsWith("centroid_id=")).toSet.size
     val desc = writeSegment(resolved, baseDir, stableSegmentId,
-      isStable = true,
-      expectedNdvPerFile = ndvPerList(deltaDescs.map(_.num_vectors).sum,
-        inputLists),
-      appendDesc = false)
+      isStable = true, appendDesc = false)
     // publish the stable segment AND retire its inputs in one atomic
     // append: a crash before this line leaves only the old world (the
     // orphan data directory is invisible without a descriptor), a crash
@@ -1886,25 +1898,21 @@ object Segments {
     * `Ivf.assign(_, newCentroids, vecCol = "vec")` — the map-side codegen
     * argmin). One pass over the store: tiered scan → narrow LWW →
     * tombstone purge → reassign → centroid-partitioned stable write. No
-    * driver-side data, no sort; at 100 TB this is the background job that
-    * keeps probe pruning aligned with drifting data.
-    * `expectedNdvPerFile` is [[writeSegment]]'s bloom hint: a caller
-    * that knows the live row count and the new layout's list count
-    * passes [[ndvPerList]] of them.
+    * driver-side data; at 100 TB this is the background job that
+    * keeps probe pruning aligned with drifting data. The write is
+    * [[writeSegment]]'s: one file per new list, each with an `id_hash`
+    * bloom sized to its own rows.
     */
   def rebuildLayout(spark: SparkSession, baseDir: String,
       reassign: DataFrame => DataFrame,
-      stableSegmentId: String,
-      expectedNdvPerFile: Long = DefaultNdvPerFile)
-      : Option[SegmentDescriptor] =
+      stableSegmentId: String): Option[SegmentDescriptor] =
     withLease(spark, baseDir, s"rebuild-$stableSegmentId") {
-      rebuildLayoutUnlocked(spark, baseDir, reassign, stableSegmentId,
-        expectedNdvPerFile)
+      rebuildLayoutUnlocked(spark, baseDir, reassign, stableSegmentId)
     }
 
   private def rebuildLayoutUnlocked(spark: SparkSession, baseDir: String,
-      reassign: DataFrame => DataFrame, stableSegmentId: String,
-      expectedNdvPerFile: Long): Option[SegmentDescriptor] = {
+      reassign: DataFrame => DataFrame,
+      stableSegmentId: String): Option[SegmentDescriptor] = {
     val active = catalogDescriptors(spark, baseDir)
     if (active.isEmpty) return None
     val all = readSegments(spark, baseDir)
@@ -1912,8 +1920,7 @@ object Segments {
       .filter(!col("deleted"))
     val relaid = reassign(resolved.drop("centroid_id"))
     val desc = writeSegment(relaid, baseDir, stableSegmentId,
-      isStable = true, expectedNdvPerFile = expectedNdvPerFile,
-      appendDesc = false)
+      isStable = true, appendDesc = false)
     // single atomic append (see compact): rebuilt rows keep their
     // original (id_hash, epoch), so if BOTH generations were ever active
     // the LWW max-epoch join would keep both copies — duplicate

@@ -96,21 +96,17 @@ object IngestPipeline {
     * [[startResolved]]), where a catch-up batch can carry a whole
     * backlog. A caller that already holds an RPC-bounded batch on the
     * driver (the facade's `Graft.upsert`) writes it with
-    * `Segments.flushRows` instead: same contract, no Spark plan. The
-    * WAL recovery segment and compaction write through
-    * `Segments.writeSegment` directly.
-    *
-    * The id bloom keeps `Segments.writeSegment`'s default hint: the
-    * deduped row count (and so the rows per list) is known only after
-    * the write has run, from the write's own observed stats.
+    * `Segments.flushRows` instead: same contract, no Spark job. Both
+    * write each list's file with the same per-list writer, whose
+    * `id_hash` bloom is sized to that file's own rows.
     */
   def flushBatch(batch: DataFrame, baseDir: String, batchId: Long,
       maxRowsPerSegment: Long = 2000000L,
       segmentPrefix: String = "delta"): Unit = {
     val deduped = graft.operators.Lww.latestBy(batch, "id_hash", "epoch")
     // OPTIMISTIC single-pass flush: dedupe flows straight into the
-    // segment write with the descriptor stats riding the write action
-    // (Observation) — the common micro-batch is exactly ONE job. The
+    // segment write, whose tasks return the descriptor stats of the
+    // files they wrote — the common micro-batch is exactly ONE job. The
     // old pre-count pass existed only to decide the multi-segment
     // split, but it cost a whole extra job per flush — at a 100 ms
     // flush trigger that count was ~1/3 of the measured ingest→visible
@@ -128,9 +124,10 @@ object IngestPipeline {
     // output, so the extra stage bought nothing but ~1/3 of the
     // freshness latency — while a bulk/catch-up batch KEEPS it: a
     // many-task input written without the exchange explodes into up to
-    // tasks×nlist small files per segment (the writeSegment contract).
-    // The estimate is pre-dedupe, so it only ever errs toward keeping
-    // the exchange — the safe side.
+    // tasks×nlist small files per segment (the writeSegment contract;
+    // files are named by task, so a list split over tasks never
+    // collides). The estimate is pre-dedupe, so it only ever errs toward
+    // keeping the exchange — the safe side.
     val estBytes = deduped.queryExecution.optimizedPlan.stats.sizeInBytes
     val repart = estBytes > BigInt(microBatchBytesBound)
     // the prefix keys the writer's id space: a streaming pipeline on a

@@ -967,6 +967,54 @@ class SegmentsSpec extends SparkSpec {
       .map(_.toFile).filter(_.getName.endsWith(".parquet")).toSeq
   }
 
+  /** The engine's LWW over `rows`: a null `id_hash` or `epoch` drops,
+    * the max epoch per `id_hash` wins, and every row tied at it stays.
+    */
+  private def lwwModel(rows: Seq[org.apache.spark.sql.Row])
+      : Seq[org.apache.spark.sql.Row] = {
+    val keyed = rows.filter(r => !r.isNullAt(r.fieldIndex("id_hash")) &&
+      !r.isNullAt(r.fieldIndex("epoch")))
+    val top = keyed.groupBy(_.getAs[Long]("id_hash"))
+      .map { case (h, rs) => h -> rs.map(_.getAs[Long]("epoch")).max }
+    keyed.filter(r => r.getAs[Long]("epoch") == top(r.getAs[Long]("id_hash")))
+  }
+
+  /** `row` with column `name` set to `v`. */
+  private def withValue(row: org.apache.spark.sql.Row, name: String,
+      v: Any): org.apache.spark.sql.Row =
+    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      row.toSeq.updated(row.fieldIndex(name), v).toArray, row.schema)
+
+  /** A published segment against its model rows: its stored rows on
+    * `cols`, its descriptor's stats computed from the model, and one
+    * parquet file in each of the model's lists and no other list.
+    */
+  private def assertSegmentIs(base: String, segmentId: String,
+      model: Seq[org.apache.spark.sql.Row], cols: Seq[String]): Unit = {
+    val d = Segments.catalogDescriptors(spark, base)
+      .find(_.segment_id == segmentId).get
+    val hashes = model.map(_.getAs[Long]("id_hash"))
+    val epochs = model.map(_.getAs[Long]("epoch"))
+    val flags = model.map(_.getAs[Boolean]("deleted"))
+    assert((d.num_vectors, d.min_id_hash, d.max_id_hash, d.min_epoch,
+      d.max_epoch, d.tombstone_ratio) === (model.length.toLong, hashes.min,
+      hashes.max, epochs.min, epochs.max,
+      flags.count(identity).toDouble / flags.length), segmentId)
+    val lists = new java.io.File(Segments.plainPath(d.file_path)).listFiles()
+      .filter(_.isDirectory)
+    assert(lists.map(_.getName).toSet === model.map(r =>
+      s"centroid_id=${r.getAs[Long]("centroid_id")}").toSet, segmentId)
+    lists.foreach(l =>
+      assert(l.listFiles().count(_.getName.endsWith(".parquet")) === 1, l))
+    def render(r: org.apache.spark.sql.Row) =
+      cols.map(c => Option(r.getAs[Any](c)).map {
+        case s: scala.collection.Seq[_] => s.toList
+        case v => v
+      }).toString
+    assert(Segments.readPaths(spark, Seq(d.file_path)).collect()
+      .map(render).sorted.toSeq === model.map(render).sorted, segmentId)
+  }
+
   test("driver flush (flushRows) writes what flushBatch writes: descriptors, lists, schema, rows, id evidence; blooms sized to each file") {
     import org.apache.parquet.column.ParquetProperties
     import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
@@ -1067,10 +1115,27 @@ class SegmentsSpec extends SparkSpec {
           else System.setProperty("graft.bloom.exact.bytes", prev)
         }
       }
-      // each driver-written file's id bloom is at most what parquet-mr
+      // compaction and the layout rebuild (task-side writes) store the
+      // LWW model of every flushed batch: compaction (no stable tier)
+      // keeps its live rows, the rebuild moves them to its new lists
+      val cols = Seq("centroid_id", "deleted", "epoch", "id", "id_hash",
+        "tags", "vec", "vec_id")
+      val live = lwwModel(batches.zipWithIndex.flatMap { case ((rs, _), i) =>
+        flushBatchRows(vecType, rs, i).collect().toSeq
+      }).filterNot(_.getAs[Boolean]("deleted"))
+      Segments.compact(spark, b, "stable-00003")
+      assertSegmentIs(b, "stable-00003", live, cols)
+      Segments.rebuildLayout(spark, b,
+        _.withColumn("centroid_id", pmod(col("id_hash"), lit(3L))),
+        "rebuild-00004")
+      assertSegmentIs(b, "rebuild-00004", live.map(r => withValue(r,
+        "centroid_id", java.lang.Math.floorMod(r.getAs[Long]("id_hash"), 3L))),
+        cols)
+      // each written file's id bloom — driver flushes, task-side flushes,
+      // compaction and rebuild alike — is at most what parquet-mr
       // allocates for that file's row count at the default fpp (a fully
       // dictionary-encoded chunk carries none: its dictionary is exact)
-      val files = partFiles(b)
+      val files = partFiles(a) ++ partFiles(b)
       assert(files.nonEmpty)
       files.foreach { f =>
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -1093,5 +1158,145 @@ class SegmentsSpec extends SparkSpec {
       }
       Seq(a, b).foreach(Segments.deleteDir)
     }
+    // WAL recovery: the un-flushed tail (every batch above, one record
+    // per distinct row) becomes one recovery segment holding its LWW
+    // model, written on the driver: opening the store runs no Spark job
+    import graft.streaming.{Wal, WalRecord, WalRecordFb}
+    val c = tmpBase()
+    val recs = batches.zipWithIndex.flatMap { case ((rs, _), salt) =>
+      rs.distinct.map { case (id, epoch, deleted) =>
+        WalRecord(op = if (deleted) 1.toByte else 0.toByte, id = s"f-$id",
+          idHash = lookupHash(id), tenantNsHash = 0L, timestampNanos = epoch,
+          dim = if (deleted) 0 else lookupDim,
+          vector = if (deleted) Array.emptyFloatArray
+            else Array.tabulate(lookupDim)(d =>
+              math.sin(id * 3.0 + d + salt).toFloat),
+          tags = Array.emptyIntArray, flags = 0, epoch = epoch,
+          centroidId = (id % 7).toInt, tenant = "t0", namespace = "default")
+      }
+    }.sortBy(_.epoch)
+    Wal.appendBinaryRotating(s"$c/wal",
+      recs.map(r => (r.epoch, WalRecordFb.encode(r))))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val g = try {
+      val opened = graft.Graft.open(spark, c, graft.GraftConfig.default)
+      // a marker job: once the listener has seen it, it has seen every
+      // job submitted before it
+      spark.sparkContext.setJobDescription("recovery-marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!jobs.contains("recovery-marker") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+      opened
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(jobs.asScala.toSeq === Seq("recovery-marker"),
+      "opening a store with a WAL tail ran Spark jobs")
+    val walRows = recs.map { r =>
+      val deleted = r.op == 1.toByte
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        Array[Any](r.id, r.idHash, r.idHash, r.epoch, deleted,
+          if (deleted) -1L else r.centroidId.toLong,
+          if (deleted) null else r.vector.map(_.toDouble).toSeq),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "id string, id_hash bigint, vec_id bigint, epoch bigint, " +
+            "deleted boolean, centroid_id bigint, vec array<double>"))
+    }
+    assertSegmentIs(c, s"recover-${recs.map(_.epoch).max}", lwwModel(walRows),
+      Seq("centroid_id", "deleted", "epoch", "id", "id_hash", "vec",
+        "vec_id"))
+    g.close()
+    Segments.deleteDir(c)
+  }
+
+  /** Every file and directory under `dir`, `dir` included. */
+  private def treeEntries(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
+      .asScala.toSeq
+  }
+
+  test("a list-tree write replays over a stray partial file: one file per list, the rows of one write") {
+    val rows = (0L until 60L).map(i => (i * 0x9E3779B97F4A7C15L, 100L + i,
+        i, i % 5 == 0, i % 4))
+      .toDF("id_hash", "epoch", "vec_id", "deleted", "centroid_id")
+    def stored(seg: String) = Segments.readPaths(spark, Seq(seg))
+      .select("id_hash", "epoch", "vec_id", "deleted", "centroid_id")
+      .collect().map(_.toString).sorted.toSeq
+    Seq[(String, String) => Unit](
+      (base, id) => Segments.writeSegment(rows, base, id, isStable = false,
+        appendDesc = false),
+      (base, id) => Segments.flushRows(spark, base, id, rows.schema,
+        rows.collect().toSeq, Long.MaxValue)
+    ).foreach { write =>
+      val base = tmpBase()
+      write(base, "delta-00000")
+      // a crashed attempt's leftovers: a truncated part file beside the
+      // list's file, and a second list dir holding only a stray part
+      val seg = s"$base/${Segments.StoreDir}/segment_id=delta-00000"
+      java.nio.file.Files.write(java.nio.file.Paths.get(
+        s"$seg/centroid_id=0/part-00003.snappy.parquet"), Array[Byte](80, 65))
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(s"$seg/centroid_id=9"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(
+        s"$seg/centroid_id=9/part-00000.snappy.parquet"), Array[Byte](80))
+      write(base, "delta-00000")
+      val parquet = treeEntries(seg).filter(_.toString.endsWith(".parquet"))
+      assert(parquet.map(_.getParent.getFileName.toString).sorted ===
+        (0 until 4).map(c => s"centroid_id=$c"), parquet)
+      assert(stored(seg) === rows.collect().map(_.toString).sorted.toSeq)
+      Segments.deleteDir(base)
+    }
+  }
+
+  test("segment and codes-tree files keep the stock mode bits (files 0644, dirs 0755)") {
+    val base = tmpBase()
+    val rows = (0L until 40L).map(i => (i * 31L, 10L + i, i, false, i % 3))
+      .toDF("id_hash", "epoch", "vec_id", "deleted", "centroid_id")
+    Segments.writeSegment(rows, base, "stable-00000", isStable = true)
+    Segments.flushRows(spark, base, "delta-00001", rows.schema,
+      rows.collect().toSeq, Long.MaxValue)
+    Segments.writeListTree(rows.select(col("vec_id"), col("centroid_id"),
+      col("epoch").cast("binary").as("codes")), s"$base/pqcodes_g0",
+      exchange = true)
+    val written = Seq(s"$base/${Segments.StoreDir}", s"$base/pqcodes_g0")
+      .flatMap(treeEntries)
+    assert(written.count(_.toString.endsWith(".parquet")) === 9)
+    written.foreach { p =>
+      val mode = java.nio.file.attribute.PosixFilePermissions.toString(
+        java.nio.file.Files.getPosixFilePermissions(p))
+      assert(mode === (if (java.nio.file.Files.isDirectory(p)) "rwxr-xr-x"
+        else "rw-r--r--"), p)
+    }
+    Segments.deleteDir(base)
+  }
+
+  test("a task-side writeSegment counts every byte it writes in Hadoop's file statistics") {
+    import scala.jdk.CollectionConverters._
+    def written = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesWritten).sum
+    val base = tmpBase()
+    val rows = (0L until 400L).map(i => (i * 0x9E3779B97F4A7C15L, i, i,
+        false, i % 8))
+      .toDF("id_hash", "epoch", "vec_id", "deleted", "centroid_id")
+    val before = written
+    val d = Segments.writeSegment(rows, base, "delta-00000", isStable = false,
+      appendDesc = false)
+    val grew = written - before
+    val files = treeEntries(Segments.plainPath(d.file_path))
+      .filter(java.nio.file.Files.isRegularFile(_))
+    assert(files.count(_.toString.endsWith(".parquet")) === 8)
+    val bytes = files.map(java.nio.file.Files.size).sum
+    assert(grew >= bytes, s"file statistics grew $grew B over $bytes B written")
+    Segments.deleteDir(base)
   }
 }
